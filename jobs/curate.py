@@ -21,9 +21,10 @@ Stages (each pure-DataFrame, composing the ops/ layer):
 
 The CLI runs `curate_resumable`: every stage hand-off commits under
 `<output>/_stages/<stage>/` as bucket-partitioned parquet with per-bucket
-manifests and an atomic stage marker (the extract job's lineage contract,
-lineage.py:111), so a crash mid-near-dup re-pays only the near-dup stage
-and a partially-written stage fills in just its missing buckets.
+manifests and an atomic stage marker (`lineage.StageRunner`, over the same
+bucket writer as the extract job), so a crash mid-near-dup re-pays only
+the near-dup stage and a partially-written stage fills in just its
+missing buckets.
 `--no-resume` forces a clean recompute; `--n-buckets` sets checkpoint
 granularity.
 
@@ -35,6 +36,7 @@ stage is the oracle-checked operator from __spark_entry__.py.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
@@ -42,58 +44,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-STAGES_DIR = "_stages"
 
-
-def _in_cache_scope(fn):
-    """Run ``fn`` inside its own persisted-intermediate scope: the job's
-    internal ``release_caches()`` calls then drain only frames ITS operator
-    calls registered -- never a co-resident caller's (bench loop, notebook)
-    persists on the same thread."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        from nreadspark.ops.dedup import cache_scope
-
-        with cache_scope():
-            return fn(*args, **kwargs)
-
-    return wrapper
-
-
-def _stage_path(output_path: str, stage: str) -> str:
-    return output_path if stage == "final" else os.path.join(output_path, STAGES_DIR, stage)
-
-
-def _commit_stage(
-    spark, df, output_path, stage, n_buckets, stage_stats, resume,
-    id_col="doc_id", rows_stat_key=None, params=None,
-):
-    """Delegates to the shared bucket-commit protocol
-    (``lineage.commit_bucketed_stage`` -- one implementation for both the
-    extraction job and these stage checkpoints): per-bucket manifests,
-    done-bucket skip, per-write dynamic partition overwrite, stale-layout
-    cleaning on ``resume=False`` / ``n_buckets`` change, atomic stage
-    marker last."""
-    from nreadspark import lineage
-
-    return lineage.commit_bucketed_stage(
-        spark, df, _stage_path(output_path, stage), stage, n_buckets,
-        stage_stats, resume, id_col=id_col, rows_stat_key=rows_stat_key,
-        params=params,
-    )
-
-
-def _read_stage(spark, output_path, stage, n_buckets=None, params=None):
-    from nreadspark import lineage
-
-    return lineage.read_bucketed_stage(
-        spark, _stage_path(output_path, stage), n_buckets=n_buckets, params=params
-    )
-
-
-@_in_cache_scope
 def curate_resumable(
     spark,
     docs,
@@ -178,9 +129,11 @@ def curate_resumable(
     the in-memory plan, so within a single run each stage's lineage is one
     scan of its predecessor's files -- the same property resume relies on.
 
-    ``fail_after_stage`` ('quality' | 'model_filter' | 'line_clean' |
-    'decontam' | 'pairs') injects a crash right after that stage's marker
-    commits -- the kill-and-resume test hook.  Returns ``(surviving_df, stats)`` like :func:`curate`,
+    ``fail_after_stage`` ('url_hygiene' | 'quality' | 'model_filter' |
+    'line_clean' | 'decontam' | 'pii_scrub' | 'pairs' | 'final') injects a
+    crash right after that stage's marker commits -- the kill-and-resume
+    test hook; a stage this run does not execute is a ValueError before
+    any work.  Returns ``(surviving_df, stats)`` like :func:`curate`,
     with ``stats['resumed_stages']`` listing the stages loaded from
     checkpoint.
 
@@ -192,48 +145,55 @@ def curate_resumable(
     downstream parameters need the upstream stages intact.  The CLI
     defaults to cleaning (pass ``--keep-stages`` to retain).
     """
-    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
-    from nreadspark import lineage as _lineage
+    from nreadspark import lineage
     from nreadspark.ops.dedup import (
+        _persist,
         keep_canonical,
         line_dedup,
         minhash_lsh_candidates,
-        release_caches,
         verify_jaccard,
     )
     from nreadspark.ops.textstats import c4_quality_filter
 
+    hygiene_enabled = url_col is not None and (
+        blocked_domains is not None
+        or max_docs_per_domain is not None
+        or url_dedup
+    )
+    stage_names = (
+        (["url_hygiene"] if hygiene_enabled else [])
+        + ["quality"]
+        + (["model_filter"] if quality_model is not None else [])
+        + ["line_clean"]
+        + (["decontam"] if decontam_eval is not None else [])
+        + (["pii_scrub"] if pii else [])
+        + ["pairs", "final"]
+    )
+    runner = lineage.StageRunner(
+        spark, output_path, stage_names, n_buckets, resume, fail_after_stage
+    )
     stats: dict = {"resumed_stages": []}
 
     if input_fingerprint is None:
-        input_fingerprint = _lineage.input_fingerprint(docs)
+        input_fingerprint = lineage.input_fingerprint(docs)
     if quality_model is not None:
-        import hashlib
-
         model_fp = hashlib.md5(
             (",".join(f"{w:.17g}" for w in quality_model.weights)
              + f"|{quality_model.bias:.17g}|{quality_model.hash_fn}").encode()
         ).hexdigest()
     else:
         model_fp = None
-    eval_fp = _lineage.input_fingerprint(decontam_eval) if decontam_eval is not None else None
-    hygiene_enabled = url_col is not None and (
-        blocked_domains is not None
-        or max_docs_per_domain is not None
-        or url_dedup
-    )
+    eval_fp = lineage.input_fingerprint(decontam_eval) if decontam_eval is not None else None
     uparams = None
     if hygiene_enabled:
-        import hashlib as _hashlib
-
         if blocked_domains is None:
             bl_fp = None
         elif hasattr(blocked_domains, "schema"):  # a DataFrame blocklist
-            bl_fp = _lineage.input_fingerprint(blocked_domains) or "df"
+            bl_fp = lineage.input_fingerprint(blocked_domains) or "df"
         else:
-            bl_fp = _hashlib.md5(
+            bl_fp = hashlib.md5(
                 "\n".join(sorted(str(d).lower() for d in blocked_domains)).encode()
             ).hexdigest()
         uparams = {
@@ -285,34 +245,29 @@ def curate_resumable(
     # upstream stages at full corpus cost and then discard the result
     # (every final bucket manifest already exists, so nothing would be
     # written).  The final marker carries the full merged stats dict.
-    stage_names = (
-        (["url_hygiene"] if hygiene_enabled else [])
-        + ["quality"]
-        + (["model_filter"] if quality_model is not None else [])
-        + ["line_clean"]
-        + (["decontam"] if decontam_eval is not None else [])
-        + (["pii_scrub"] if pii else [])
-        + ["pairs", "final"]
-    )
-    if resume:
-        done = _read_stage(spark, output_path, "final", n_buckets, fparams)
-        if done is not None:
-            final_df, fstats = done
-            stats.update(fstats)
-            stats["resumed_stages"] = stage_names
-            if clean_stages:
-                # a requested cleanup must happen even on the no-work path
-                # (e.g. run 1 used --keep-stages, or crashed between the
-                # final marker and its own cleanup)
-                from nreadspark import lineage
+    done = runner.committed("final", fparams)
+    if done is not None:
+        final_df, fstats = done
+        stats.update(fstats)
+        stats["resumed_stages"] = stage_names
+        if clean_stages:
+            # a requested cleanup must happen even on the no-work path
+            # (e.g. run 1 used --keep-stages, or crashed between the
+            # final marker and its own cleanup)
+            runner.clean_stages()
+            stats["stages_cleaned"] = True
+        return final_df, stats
 
-                lineage.delete_dir(spark, os.path.join(output_path, STAGES_DIR))
-                stats["stages_cleaned"] = True
-            return final_df, stats
-
-    def _fail_hook(stage: str) -> None:
-        if fail_after_stage == stage:
-            raise RuntimeError(f"injected failure after stage {stage}")
+    def stage(name, params, build, **kw):
+        t0 = time.perf_counter()
+        df, stage_stats, resumed = runner.run(name, params, build, **kw)
+        if resumed:
+            stats["resumed_stages"].append(name)
+        else:
+            # resumed stages report no wall: it describes this run's work
+            stats.setdefault("stage_wall_s", {})[name] = round(time.perf_counter() - t0, 3)
+        stats.update(stage_stats)
+        return df
 
     # -- optional stage 0: URL hygiene (r7) -------------------------------
     # the cheapest drops run FIRST, before any text-shaped work: blocklist
@@ -326,53 +281,27 @@ def curate_resumable(
             keep_canonical_urls,
         )
 
-        st = _read_stage(spark, output_path, "url_hygiene", n_buckets, uparams) if resume else None
-        if st is None:
-            __t0 = time.perf_counter()
-            pinned = []
-            cur = docs.select("doc_id", url_col, text_col).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            pinned.append(cur)
+        def build_url_hygiene():
+            cur = _persist(docs.select("doc_id", url_col, text_col))
             ustats = {"url_input_docs": cur.count()}
             if blocked_domains is not None:
-                cur = drop_blocked_domains(cur, blocked_domains, url_col).persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                pinned.append(cur)
+                cur = _persist(drop_blocked_domains(cur, blocked_domains, url_col))
                 ustats["after_blocklist"] = cur.count()
             if max_docs_per_domain is not None:
-                cur = cap_per_domain(
-                    cur, max_docs_per_domain, url_col
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                pinned.append(cur)
+                cur = _persist(cap_per_domain(cur, max_docs_per_domain, url_col))
                 ustats["after_domain_cap"] = cur.count()
             if url_dedup:
                 cur = keep_canonical_urls(cur, url_col)
                 # the kept count folds into the commit's own row stat
-            _commit_stage(
-                spark, cur.select("doc_id", text_col), output_path,
-                "url_hygiene", n_buckets, ustats, resume, params=uparams,
-            )
-            for df_ in pinned:
-                df_.unpersist()
-            docs, ustats = _read_stage(spark, output_path, "url_hygiene", n_buckets, uparams)
-            stats.setdefault("stage_wall_s", {})["url_hygiene"] = round(
-                time.perf_counter() - __t0, 3
-            )
-        else:
-            docs, ustats = st
-            stats["resumed_stages"].append("url_hygiene")
-        stats.update(ustats)
-        _fail_hook("url_hygiene")
+            return cur.select("doc_id", text_col), ustats
+
+        docs = stage("url_hygiene", uparams, build_url_hygiene)
 
     # -- stage 1: quality filter ------------------------------------------
-    st = _read_stage(spark, output_path, "quality", n_buckets, qparams) if resume else None
-    if st is None:
-        __t0 = time.perf_counter()
-        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-        qstats = {"input_docs": docs.count()}
-        verdicts = c4_quality_filter(docs, text_col=text_col, min_words=min_words)
+    def build_quality():
+        src = _persist(docs)
+        qstats = {"input_docs": src.count()}
+        verdicts = c4_quality_filter(src, text_col=text_col, min_words=min_words)
         reason_counts = {
             r["reasons"]: r["n"]
             for r in verdicts.filter(~F.col("keep"))
@@ -382,119 +311,69 @@ def curate_resumable(
         }
         qstats["quality_dropped"] = sum(reason_counts.values())
         qstats["quality_drop_reasons"] = reason_counts
-        kept = docs.join(verdicts.filter("keep").select("doc_id"), "doc_id").select(
-            "doc_id", text_col
-        )
-        _commit_stage(spark, kept, output_path, "quality", n_buckets, qstats, resume, params=qparams)
-        docs.unpersist()
-        kept, qstats = _read_stage(spark, output_path, "quality", n_buckets, qparams)
-        stats.setdefault("stage_wall_s", {})["quality"] = round(time.perf_counter() - __t0, 3)
-    else:
-        kept, qstats = st
-        stats["resumed_stages"].append("quality")
-    stats.update(qstats)
-    _fail_hook("quality")
+        kept = src.join(verdicts.filter("keep").select("doc_id"), "doc_id")
+        return kept.select("doc_id", text_col), qstats
+
+    kept = stage("quality", qparams, build_quality)
 
     # -- optional stage: model-based quality filter -----------------------
     if quality_model is not None:
         from nreadspark.ops.quality_model import score_quality
 
-        st = _read_stage(spark, output_path, "model_filter", n_buckets, mparams) if resume else None
-        if st is None:
-            __t0 = time.perf_counter()
+        def build_model_filter():
             # persist: the dropped-count action and the stage commit both
             # consume the scoring plan (explode + broadcast join + aggs
             # over the corpus) -- one evaluation, not two
-            scored = score_quality(
+            scored = _persist(score_quality(
                 kept, quality_model, text_col=text_col, threshold=model_threshold
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            ))
             filtered = kept.join(scored.filter("keep").select("doc_id"), "doc_id")
-            mstats = {
-                "model_dropped": scored.filter(~F.col("keep")).count(),
-            }
-            _commit_stage(
-                spark, filtered, output_path, "model_filter", n_buckets,
-                mstats, resume, params=mparams,
-            )
-            scored.unpersist()
-            kept, mstats = _read_stage(spark, output_path, "model_filter", n_buckets, mparams)
-            stats.setdefault("stage_wall_s", {})["model_filter"] = round(time.perf_counter() - __t0, 3)
-        else:
-            kept, mstats = st
-            stats["resumed_stages"].append("model_filter")
-        stats.update(mstats)
-        _fail_hook("model_filter")
+            return filtered, {"model_dropped": scored.filter(~F.col("keep")).count()}
+
+        kept = stage("model_filter", mparams, build_model_filter)
 
     # -- stage 2: boilerplate line removal --------------------------------
-    st = _read_stage(spark, output_path, "line_clean", n_buckets, lparams) if resume else None
-    if st is None:
-        __t0 = time.perf_counter()
-        cleaned = line_dedup(
+    def build_line_clean():
+        cleaned = _persist(line_dedup(
             kept,
             text_col=text_col,
             delimiter=line_delimiter,
             min_repeats=line_min_repeats,
             keep_all_docs=True,
-        ).select(
-            "doc_id", F.col("clean_text").alias(text_col), "n_removed"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        lstats = {
+        ).select("doc_id", F.col("clean_text").alias(text_col), "n_removed"))
+        return cleaned, {
             "boilerplate_lines_removed": int(
                 cleaned.agg(F.sum("n_removed")).collect()[0][0] or 0
             ),
             "emptied_by_line_dedup": cleaned.filter(F.length(text_col) == 0).count(),
         }
-        _commit_stage(spark, cleaned, output_path, "line_clean", n_buckets, lstats, resume, params=lparams)
-        cleaned.unpersist()
-        release_caches()  # line_dedup's auto-mode boilerplate set is spent
-        cleaned, lstats = _read_stage(spark, output_path, "line_clean", n_buckets, lparams)
-        stats.setdefault("stage_wall_s", {})["line_clean"] = round(time.perf_counter() - __t0, 3)
-    else:
-        cleaned, lstats = st
-        stats["resumed_stages"].append("line_clean")
-    stats.update(lstats)
-    _fail_hook("line_clean")
+
+    cleaned = stage("line_clean", lparams, build_line_clean)
 
     # -- optional stage: eval-set decontamination -------------------------
     if decontam_eval is not None:
         from nreadspark.ops.dedup import decontaminate
 
-        st = _read_stage(spark, output_path, "decontam", n_buckets, dparams) if resume else None
-        if st is None:
-            __t0 = time.perf_counter()
+        def build_decontam():
             # persist the (tiny) contaminated-id set: the count and the
             # anti-join both consume the full n-gram overlap plan
-            bad_ids = decontaminate(
+            bad_ids = _persist(decontaminate(
                 cleaned, decontam_eval, text_col=text_col,
                 eval_text_col=text_col, n=decontam_n,
-            ).filter("contaminated").select("doc_id").persist(StorageLevel.MEMORY_AND_DISK)
+            ).filter("contaminated").select("doc_id"))
             stripped = cleaned.join(bad_ids, "doc_id", "left_anti")
-            dstats = {"decontaminated_dropped": bad_ids.count()}
-            _commit_stage(
-                spark, stripped, output_path, "decontam", n_buckets,
-                dstats, resume, params=dparams,
-            )
-            bad_ids.unpersist()
-            cleaned, dstats = _read_stage(spark, output_path, "decontam", n_buckets, dparams)
-            stats.setdefault("stage_wall_s", {})["decontam"] = round(time.perf_counter() - __t0, 3)
-        else:
-            cleaned, dstats = st
-            stats["resumed_stages"].append("decontam")
-        stats.update(dstats)
-        _fail_hook("decontam")
+            return stripped, {"decontaminated_dropped": bad_ids.count()}
+
+        cleaned = stage("decontam", dparams, build_decontam)
 
     # -- optional stage: PII scrubbing ------------------------------------
     if pii:
         from nreadspark.ops.pii import PII_PATTERNS, pii_scrub
 
-        st = _read_stage(spark, output_path, "pii_scrub", n_buckets, sparams) if resume else None
-        if st is None:
-            __t0 = time.perf_counter()
+        def build_pii_scrub():
             # persist: the per-category totals and the stage commit both
             # consume the scrub projection -- one evaluation, not two
-            scrubbed = pii_scrub(cleaned, text_col=text_col).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
+            scrubbed = _persist(pii_scrub(cleaned, text_col=text_col))
             totals = scrubbed.agg(
                 *[F.sum(f"n_{name}").alias(name) for name, _, _ in PII_PATTERNS]
             ).collect()[0]
@@ -502,25 +381,13 @@ def curate_resumable(
                 scrubbed.select("doc_id", F.col("clean_text").alias(text_col)),
                 "doc_id",
             )
-            sstats = {"pii_redactions": {name: int(totals[name] or 0)
-                                         for name, _, _ in PII_PATTERNS}}
-            _commit_stage(
-                spark, replaced, output_path, "pii_scrub", n_buckets,
-                sstats, resume, params=sparams,
-            )
-            scrubbed.unpersist()
-            cleaned, sstats = _read_stage(spark, output_path, "pii_scrub", n_buckets, sparams)
-            stats.setdefault("stage_wall_s", {})["pii_scrub"] = round(time.perf_counter() - __t0, 3)
-        else:
-            cleaned, sstats = st
-            stats["resumed_stages"].append("pii_scrub")
-        stats.update(sstats)
-        _fail_hook("pii_scrub")
+            return replaced, {"pii_redactions": {name: int(totals[name] or 0)
+                                                 for name, _, _ in PII_PATTERNS}}
+
+        cleaned = stage("pii_scrub", sparams, build_pii_scrub)
 
     # -- stage 3: near-dup pair verification ------------------------------
-    st = _read_stage(spark, output_path, "pairs", n_buckets, pparams) if resume else None
-    if st is None:
-        __t0 = time.perf_counter()
+    def build_pairs():
         # docs emptied by line dedup bypass the pair graph (all empty texts
         # tokenize identically -- they are not duplicates of each other)
         dedup_input = cleaned.filter(F.length(text_col) > 0).select("doc_id", text_col)
@@ -528,41 +395,25 @@ def curate_resumable(
         verified = verify_jaccard(
             dedup_input, candidates, text_col=text_col, threshold=minhash_threshold
         ).select("doc_id_a", "doc_id_b")
-        _commit_stage(
-            spark, verified, output_path, "pairs", n_buckets,
-            {}, resume, id_col="doc_id_a", rows_stat_key="near_dup_pairs",
-            params=pparams,
-        )
-        release_caches()  # the banded/token-set persists are spent now
-        pairs, pstats = _read_stage(spark, output_path, "pairs", n_buckets, pparams)
-        stats.setdefault("stage_wall_s", {})["pairs"] = round(time.perf_counter() - __t0, 3)
-    else:
-        pairs, pstats = st
-        stats["resumed_stages"].append("pairs")
-    stats.update(pstats)
-    _fail_hook("pairs")
+        return verified, {}
+
+    pairs = stage(
+        "pairs", pparams, build_pairs, id_col="doc_id_a", rows_stat_key="near_dup_pairs"
+    )
 
     # -- stage 4: survivors (final output at the root) --------------------
-    surviving = keep_canonical(cleaned.drop("n_removed"), pairs)
-    # the final marker carries the FULL merged stats so a completed job's
-    # rerun can short-circuit with them (resumed_stages excluded: it
-    # describes a particular run, not the output)
-    __t0 = time.perf_counter()
-    _commit_stage(
-        spark, surviving, output_path, "final", n_buckets,
-        # resumed_stages / stage_wall_s describe a particular RUN, not the
-        # output -- they stay out of the committed marker
-        {k: v for k, v in stats.items()
-         if k not in ("resumed_stages", "stage_wall_s")},
-        resume, rows_stat_key="surviving_docs", params=fparams,
-    )
-    stats.setdefault("stage_wall_s", {})["final"] = round(time.perf_counter() - __t0, 3)
-    final_df, fstats = _read_stage(spark, output_path, "final", n_buckets, fparams)
-    stats.update(fstats)
-    if clean_stages:
-        from nreadspark import lineage
+    def build_final():
+        # the final marker carries the FULL merged stats so a completed
+        # job's rerun can short-circuit with them; resumed_stages /
+        # stage_wall_s describe a particular RUN, not the output -- they
+        # stay out of the committed marker
+        return keep_canonical(cleaned.drop("n_removed"), pairs), {
+            k: v for k, v in stats.items() if k not in ("resumed_stages", "stage_wall_s")
+        }
 
-        lineage.delete_dir(spark, os.path.join(output_path, STAGES_DIR))
+    final_df = stage("final", fparams, build_final, rows_stat_key="surviving_docs")
+    if clean_stages:
+        runner.clean_stages()
         stats["stages_cleaned"] = True
     return final_df, stats
 

@@ -16,27 +16,21 @@ oracle-checked operator chain from __spark_entry__.py:
    is the surviving rows of the hash table (undecodable/header-tier
    rows never pair, so they survive untouched -- counted, not dropped).
 
-Every stage commits under ``<output>/_stages/<stage>/`` with the same
-per-bucket manifests + atomic markers as the extraction and text-curation
-jobs (``lineage.commit_bucketed_stage``), and each stage's params fold
-into every DOWNSTREAM fingerprint: re-tuning ``max_hamming`` re-pays the
-pair join and survivors but never the decode.
+Every stage runs through ``lineage.StageRunner``, the stage runner the
+text-curation job uses too: it commits under ``<output>/_stages/<stage>/``
+with the same per-bucket manifests + atomic markers as the extraction
+job's bucket writer, and each stage's params fold into every DOWNSTREAM
+fingerprint: re-tuning ``max_hamming`` re-pays the pair join and
+survivors but never the decode.
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import functions as F
 
 from nreadspark import lineage
-
-STAGES_DIR = "_stages"
-
-
-def _stage_path(output_path: str, stage: str) -> str:
-    return output_path if stage == "final" else os.path.join(output_path, STAGES_DIR, stage)
 
 
 def curate_media_resumable(
@@ -54,8 +48,9 @@ def curate_media_resumable(
 ) -> dict:
     """Run the 3-stage media dedup with per-stage bucketed checkpoints;
     returns the stats dict (per-stage rows/wall, per-decoder counts,
-    resumed stages).  ``fail_after_stage`` is the crash-injection hook
-    the resume tests use."""
+    resumed stages).  ``fail_after_stage`` ('hashes' | 'pairs' |
+    'final') is the crash-injection hook the resume tests use; any other
+    name is a ValueError before any work."""
     from nreadspark.ops.audio import audio_cover_hashes
     from nreadspark.ops.dedup import keep_canonical
     from nreadspark.ops.images import (
@@ -65,6 +60,10 @@ def curate_media_resumable(
         video_keyframe_hashes,
     )
 
+    runner = lineage.StageRunner(
+        spark, output_path, ("hashes", "pairs", "final"), n_buckets, resume,
+        fail_after_stage,
+    )
     if input_fingerprint is None:
         input_fingerprint = lineage.input_fingerprint(media)
     stats: dict = {"resumed_stages": [], "stage_wall_s": {}}
@@ -73,20 +72,19 @@ def curate_media_resumable(
         "max_decode_pixels": max_decode_pixels,
     }
 
-    def _fail_hook(stage: str) -> None:
-        if fail_after_stage == stage:
-            raise RuntimeError(f"injected failure after stage {stage}")
+    def stage(name, params, build, id_col, rows_stat_key):
+        t0 = time.perf_counter()
+        df, stats[name], resumed = runner.run(
+            name, params, lambda: (build(), {}), id_col=id_col,
+            rows_stat_key=rows_stat_key,
+        )
+        if resumed:
+            stats["resumed_stages"].append(name)
+        stats["stage_wall_s"][name] = round(time.perf_counter() - t0, 3)
+        return df
 
     # --- stage 1: hashes (route by kind; the decode stage) ---------------
-    t0 = time.perf_counter()
-    st = (
-        lineage.read_bucketed_stage(
-            spark, _stage_path(output_path, "hashes"), n_buckets, hparams
-        )
-        if resume
-        else None
-    )
-    if st is None:
+    def build_hashes():
         routed = [
             image_hashes(
                 media.filter(F.col("media_kind") == "image"),
@@ -108,83 +106,31 @@ def curate_media_resumable(
         hdf = routed[0]
         for r in routed[1:] + [other]:
             hdf = hdf.unionByName(r)
-        hstats: dict = {}
-        lineage.commit_bucketed_stage(
-            spark, hdf, _stage_path(output_path, "hashes"), "hashes", n_buckets,
-            hstats, resume, id_col="media_ref", rows_stat_key="n_hashed",
-            params=hparams,
-        )
-        hdf, hstats = lineage.read_bucketed_stage(
-            spark, _stage_path(output_path, "hashes"), n_buckets, hparams
-        )
-        stats["hashes"] = hstats
-    else:
-        hdf, stats["hashes"] = st
-        stats["resumed_stages"].append("hashes")
+        return hdf
+
+    hdf = stage("hashes", hparams, build_hashes, "media_ref", "n_hashed")
     stats["decoder_counts"] = {
         r["decoder"]: r["n"]
         for r in hdf.groupBy("decoder").agg(F.count("*").alias("n")).collect()
     }
-    stats["stage_wall_s"]["hashes"] = round(time.perf_counter() - t0, 3)
-    _fail_hook("hashes")
 
     # --- stage 2: banded near-dup pairs ----------------------------------
     pparams = {**hparams, "which": which, "max_hamming": max_hamming, "n_bands": n_bands}
-    t0 = time.perf_counter()
-    st = (
-        lineage.read_bucketed_stage(
-            spark, _stage_path(output_path, "pairs"), n_buckets, pparams
-        )
-        if resume
-        else None
-    )
-    if st is None:
-        pairs = near_dup_image_pairs(
+    pairs = stage(
+        "pairs", pparams,
+        lambda: near_dup_image_pairs(
             hdf, max_hamming=max_hamming, which=which, n_bands=n_bands
-        )
-        pstats: dict = {}
-        lineage.commit_bucketed_stage(
-            spark, pairs, _stage_path(output_path, "pairs"), "pairs", n_buckets,
-            pstats, resume, id_col="ref_a", rows_stat_key="n_pairs",
-            params=pparams,
-        )
-        pairs, pstats = lineage.read_bucketed_stage(
-            spark, _stage_path(output_path, "pairs"), n_buckets, pparams
-        )
-        stats["pairs"] = pstats
-    else:
-        pairs, stats["pairs"] = st
-        stats["resumed_stages"].append("pairs")
-    stats["stage_wall_s"]["pairs"] = round(time.perf_counter() - t0, 3)
-    _fail_hook("pairs")
+        ),
+        "ref_a", "n_pairs",
+    )
 
     # --- stage 3: survivors (final) ---------------------------------------
-    t0 = time.perf_counter()
-    st = (
-        lineage.read_bucketed_stage(
-            spark, _stage_path(output_path, "final"), n_buckets, pparams
-        )
-        if resume
-        else None
-    )
-    if st is None:
+    def build_final():
         survivors = keep_canonical(
             hdf.select("media_ref"), pairs,
             id_col="media_ref", src_col="ref_a", dst_col="ref_b",
         )
-        final = hdf.join(survivors, "media_ref", "left_semi")
-        fstats: dict = {}
-        lineage.commit_bucketed_stage(
-            spark, final, _stage_path(output_path, "final"), "final", n_buckets,
-            fstats, resume, id_col="media_ref", rows_stat_key="n_survivors",
-            params=pparams,
-        )
-        _, fstats = lineage.read_bucketed_stage(
-            spark, _stage_path(output_path, "final"), n_buckets, pparams
-        )
-        stats["final"] = fstats
-    else:
-        stats["final"] = st[1]
-        stats["resumed_stages"].append("final")
-    stats["stage_wall_s"]["final"] = round(time.perf_counter() - t0, 3)
+        return hdf.join(survivors, "media_ref", "left_semi")
+
+    stage("final", pparams, build_final, "media_ref", "n_survivors")
     return stats

@@ -16,7 +16,10 @@ driver (ADVICE r7); stale-context entries are evicted on the next build.
 
 from __future__ import annotations
 
+import threading
+
 _MEMO: dict = {}
+_LOCK = threading.Lock()
 
 
 def memo_cols(key: tuple, builder):
@@ -32,7 +35,11 @@ def memo_cols(key: tuple, builder):
     full = (sc.applicationId,) + key
     hit = _MEMO.get(full)
     if hit is None:
-        for stale in [k for k in _MEMO if k[0] != full[0]]:
-            del _MEMO[stale]
-        hit = _MEMO[full] = builder()
+        built = builder()  # py4j-bound: outside the lock
+        # the sweep iterates _MEMO while other threads may insert; the
+        # first insert wins so every racing caller gets one object
+        with _LOCK:
+            for stale in [k for k in _MEMO if k[0] != full[0]]:
+                del _MEMO[stale]
+            hit = _MEMO.setdefault(full, built)
     return hit

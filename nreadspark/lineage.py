@@ -18,6 +18,7 @@ North-rule requirement: "resumable from checkpoint with per-partition lineage
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -51,13 +52,16 @@ def input_fingerprint(df: DataFrame) -> str | None:
     O(files) metadata storm at 10^12-document scale for marginal extra
     discrimination -- an in-place rewrite of the same file names is not a
     supported input mutation."""
-    import hashlib
-
     files = df.inputFiles()
-    if not files:
-        return None
-    digest = hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()
-    return f"files:{len(files)}:{digest}"
+    return _listing_fingerprint(files) if files else None
+
+
+def _md5_lines(lines) -> str:
+    return hashlib.md5("\n".join(lines).encode()).hexdigest()
+
+
+def _listing_fingerprint(files) -> str:
+    return f"files:{len(files)}:{_md5_lines(sorted(files))}"
 
 
 def md5_bucket_col(n_buckets: int, doc_id_col: str = "doc_id"):
@@ -264,6 +268,73 @@ def resolve_bucket_layout(
     return done
 
 
+def _skip_done(df: DataFrame, done: set[int]) -> DataFrame:
+    return df.filter(~F.col("bucket").isin(list(done))) if done else df
+
+
+def _write_buckets(
+    spark, df: DataFrame, output_path: str, n_buckets: int, done: set[int], *aggs
+) -> list[dict]:
+    """The bucket commit every bucketed writer shares.  ``df`` carries a
+    ``bucket`` column and already excludes the ``done`` buckets.
+
+    It is persisted once, so the write and the per-bucket aggregation
+    scan the input and run the kernel ONCE, with no read-back of the
+    just-committed parquet.  If an executor loses cached blocks Spark
+    recomputes just those partitions deterministically, so manifests
+    still describe exactly the committed rows.  Dynamic partition
+    overwrite is a per-WRITE option, not session conf: replaying a
+    bucket replaces only its partition, and the caller's session
+    overwrite semantics stay untouched.
+
+    One manifest (``aggs`` per bucket + ``committed_at``) commits for
+    EVERY processed bucket, zero-row ones included with zeros typed from
+    the aggregate schema: a bucket with no output rows (no ids hash to
+    it, or its crawl files hold no responses) would otherwise be
+    recomputed on every resume forever.  Every non-done bucket IS fully
+    processed by construction, so the processed set is exact and free.
+    Marking a no-input bucket done never hides future work: the input
+    fingerprint in the layout params forces a clean recompute when the
+    input changes.  Returns the committed manifests."""
+    from pyspark import StorageLevel
+    from pyspark.sql.types import DoubleType, FloatType
+
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        (
+            df.write.option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .mode("overwrite")
+            .parquet(output_path)
+        )
+        per_bucket = df.groupBy("bucket").agg(*aggs)
+        rows = {int(r["bucket"]): r.asDict() for r in per_bucket.collect()}
+    finally:
+        df.unpersist()
+    zero = {
+        f.name: 0.0 if isinstance(f.dataType, (DoubleType, FloatType)) else 0
+        for f in per_bucket.schema.fields[1:]
+    }
+    manifests = []
+    for b in sorted(set(range(n_buckets)) - done):
+        manifest = rows.get(b) or {"bucket": b, **zero}
+        manifest["committed_at"] = time.time()
+        _write_manifest(output_path, b, manifest, spark=spark)
+        manifests.append(manifest)
+    return manifests
+
+
+def _run_summary(started, done, manifests, total=("docs_computed", "docs"), **head) -> dict:
+    key, field = total
+    return {
+        **head,
+        "buckets_skipped": len(done),
+        "buckets_computed": len(manifests),
+        key: int(sum(m[field] for m in manifests)),
+        "wall_ms": (time.perf_counter() - started) * 1000.0,
+    }
+
+
 def commit_bucketed_stage(
     spark,
     df: DataFrame,
@@ -276,19 +347,17 @@ def commit_bucketed_stage(
     rows_stat_key: str | None = None,
     params: dict | None = None,
 ) -> int:
-    """The bucket-commit protocol shared by the extraction job and the
-    curation job's stage checkpoints: write ``df`` partitioned by the
+    """A job stage's bucket commit (the same :func:`_write_buckets` as
+    the extraction and ingestion jobs): write ``df`` partitioned by the
     deterministic id bucket with one manifest per bucket, then commit an
     atomic stage marker (stats + total rows + schema) LAST, so a marker's
     existence proves the whole stage.
 
     Buckets whose manifest already exists are SKIPPED (their partition is
-    already committed; the write is idempotent via per-write dynamic
-    partition overwrite -- the writer OPTION, not the session conf, so the
-    caller's session semantics are untouched).  ``resume=False``, or an
-    existing marker whose ``n_buckets`` differs from the request, first
-    CLEANS the stage's data+lineage: stale partitions from a previous
-    layout must not survive into the re-read.
+    already committed).  ``resume=False``, or an existing layout whose
+    ``n_buckets`` differs from the request, first CLEANS the stage's
+    data+lineage: stale partitions from a previous layout must not
+    survive into the re-read.
 
     ``params`` fingerprints the computation that produced ``df`` (see
     :func:`resolve_bucket_layout`): a resume under different params cleans
@@ -297,31 +366,12 @@ def commit_bucketed_stage(
 
     Returns the stage's total row count (pre-existing + new buckets)."""
     done = resolve_bucket_layout(spark, stage_out, n_buckets, resume, params=params)
-    bucketed = df.withColumn("bucket", bucket_col(n_buckets, id_col))
-    todo = bucketed.filter(~F.col("bucket").isin(list(done))) if done else bucketed
-
-    from pyspark import StorageLevel
-
-    todo = todo.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        rows = [
-            r.asDict()
-            for r in todo.groupBy("bucket")
-            .agg(F.count("*").cast("bigint").alias("docs"))
-            .collect()
-        ]
-        (
-            todo.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(stage_out)
-        )
-        for r in rows:
-            r["committed_at"] = time.time()
-            write_marker(stage_out, f"bucket={int(r['bucket'])}.json", r, spark=spark)
-    finally:
-        todo.unpersist()
-    total = sum(r["docs"] for r in rows) + sum(
+    todo = _skip_done(df.withColumn("bucket", bucket_col(n_buckets, id_col)), done)
+    manifests = _write_buckets(
+        spark, todo, stage_out, n_buckets, done,
+        F.count("*").cast("bigint").alias("docs"),
+    )
+    total = sum(m["docs"] for m in manifests) + sum(
         (read_marker(stage_out, f"bucket={b}.json", spark=spark) or {}).get("docs", 0)
         for b in done
     )
@@ -371,6 +421,115 @@ def read_bucketed_stage(
     return spark.read.parquet(stage_out).drop("bucket"), marker["stats"]
 
 
+STAGES_DIR = "_stages"
+
+
+class StageRunner:
+    """The per-stage checkpoint cycle of a multi-stage job (the text and
+    media curation jobs), written once.
+
+    Stage ``final`` commits at ``output_path`` itself, every other stage
+    under ``<output_path>/_stages/<stage>/``.  ``stages`` lists the
+    stages this run executes; ``fail_after_stage`` must name one of them
+    (else ValueError up front, before any work -- a typo must not turn a
+    kill-and-resume test into a silent full run), and :meth:`run` raises
+    right after that stage commits."""
+
+    def __init__(
+        self, spark, output_path: str, stages, n_buckets: int,
+        resume: bool = True, fail_after_stage: str | None = None,
+    ):
+        if fail_after_stage is not None and fail_after_stage not in stages:
+            raise ValueError(
+                f"fail_after_stage={fail_after_stage!r} is not a stage of this "
+                f"run: {list(stages)}"
+            )
+        self.spark = spark
+        self.output_path = output_path
+        self.n_buckets = n_buckets
+        self.resume = resume
+        self.fail_after_stage = fail_after_stage
+
+    def _path(self, stage: str) -> str:
+        if stage == "final":
+            return self.output_path
+        return os.path.join(self.output_path, STAGES_DIR, stage)
+
+    def committed(self, stage: str, params: dict):
+        """(frame, stats) of ``stage`` committed under ``params`` and this
+        layout, else None -- always None when not resuming."""
+        if not self.resume:
+            return None
+        return read_bucketed_stage(self.spark, self._path(stage), self.n_buckets, params)
+
+    def run(
+        self, stage: str, params: dict, build, id_col: str = "doc_id",
+        rows_stat_key: str | None = None,
+    ):
+        """``(frame, stats, resumed)`` for one stage: its committed
+        checkpoint when resuming, else ``build() -> (frame, stats)`` run
+        inside its own ``cache_scope`` and committed via
+        :func:`commit_bucketed_stage`.  Either way the frame returned is
+        the RE-READ committed parquet, never the in-memory plan, so the
+        next stage's lineage is one scan of these files -- the property
+        resume relies on -- and the build's persisted intermediates are
+        all released once the commit is done."""
+        from .ops.dedup import cache_scope
+
+        out = self.committed(stage, params)
+        resumed = out is not None
+        if not resumed:
+            with cache_scope():
+                df, stage_stats = build()
+                commit_bucketed_stage(
+                    self.spark, df, self._path(stage), stage, self.n_buckets,
+                    stage_stats, self.resume, id_col=id_col,
+                    rows_stat_key=rows_stat_key, params=params,
+                )
+            out = read_bucketed_stage(self.spark, self._path(stage), self.n_buckets, params)
+        if stage == self.fail_after_stage:
+            raise RuntimeError(f"injected failure after stage {stage}")
+        return out[0], out[1], resumed
+
+    def clean_stages(self) -> None:
+        """Delete every checkpoint but the final output's."""
+        delete_dir(self.spark, os.path.join(self.output_path, STAGES_DIR))
+
+
+def _doc_aggs():
+    """Manifest aggregates of the span-table writers."""
+    return (
+        F.count("*").alias("docs"),
+        F.sum(F.col("content_extracted").cast("int")).alias("docs_extracted"),
+        F.sum(F.col("metrics.fallback_rerun").cast("int")).alias("fallback_reruns"),
+        F.sum(F.col("metrics.parse_retried").cast("int")).alias("parse_retries"),
+        F.sum((F.col("metrics.n_candidates") < 0).cast("int")).alias("kernel_failures"),
+        F.sum(F.col("metrics.truncated").cast("int")).alias("docs_truncated"),
+        F.sum("metrics.in_bytes").alias("in_bytes"),
+        F.sum("metrics.ms").alias("kernel_ms"),
+        F.max("metrics.ms").alias("max_doc_ms"),
+    )
+
+
+def _file_bucket_col(n_buckets: int):
+    """Bucket of a crawl-file doc (doc_id = '<file>#<record idx|offset>'):
+    the hash of its file, recomputed from the doc_id so it survives the
+    Arrow boundary."""
+    return bucket_col(n_buckets, F.regexp_replace("doc_id", r"#[0-9]+$", ""))
+
+
+def _list_files(spark, pattern: str, what: str) -> list[str]:
+    """Sorted file names matching ``pattern`` (driver-small: names only)."""
+    from .warc import warc_path_table
+
+    listing = sorted(
+        r["path"] for r in warc_path_table(spark, pattern).select("path").collect()
+    )
+    if not listing:
+        raise ValueError(f"no {what} files match {pattern!r}")
+    return listing
+
+
 def run_extraction(
     spark,
     input_df: DataFrame,
@@ -407,79 +566,16 @@ def run_extraction(
         params={"max_doc_bytes": max_doc_bytes, "url_col": url_col,
                 "input": in_fingerprint},
     )
-    df = input_df.withColumn("bucket", bucket_col(n_buckets))
-    todo_df = df.filter(~F.col("bucket").isin(list(done))) if done else df
-
-    extracted = extract(todo_df, url_col=url_col, max_doc_bytes=max_doc_bytes)
+    # done buckets drop on the kernel's INPUT side: Spark cannot push a
+    # filter through mapInArrow, so filtering its output would re-extract
+    # every committed bucket on resume
+    todo = _skip_done(input_df.withColumn("bucket", bucket_col(n_buckets)), done)
+    extracted = extract(todo, url_col=url_col, max_doc_bytes=max_doc_bytes)
     # bucket is deterministic from doc_id: recompute on the output side so it
-    # survives the mapInPandas schema boundary without widening the kernel IO
+    # survives the mapInArrow schema boundary without widening the kernel IO
     extracted = extracted.withColumn("bucket", bucket_col(n_buckets))
-
-    # persist the kernel output once: the write below and the per-bucket
-    # manifest aggregation both read it, so the input is scanned ONCE and
-    # the kernel runs ONCE -- no read-back of the just-committed parquet
-    # (which at fleet scale is a second full pass over the output).  If an
-    # executor loses cached blocks Spark recomputes just those partitions
-    # deterministically, so manifests still describe exactly the committed
-    # rows.
-    from pyspark import StorageLevel
-
-    extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # dynamic partition overwrite as a per-WRITE option (not session
-        # conf): replaying a bucket replaces only its partition, and the
-        # caller's session overwrite semantics stay untouched
-        (
-            extracted.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(output_path)
-        )
-        stats = _bucket_stats(extracted)
-    finally:
-        extracted.unpersist()
-
-    for row in stats:
-        payload = row.asDict()
-        payload["committed_at"] = time.time()
-        _write_manifest(output_path, int(row["bucket"]), payload, spark=spark)
-    # a bucket that yields ZERO output rows (no docs hash to it, or -- in
-    # the WARC twin -- its files are all non-response/damaged) produces no
-    # stats row; without a manifest every later resume would recompute it
-    # forever.  Every non-skipped bucket IS fully processed this run by
-    # construction (todo = everything outside ``done``), so the processed
-    # set is exact and free -- no second scan of the input.
-    processed = _commit_zero_doc_manifests(
-        spark, output_path, n_buckets, done, stats
-    )
-
-    return {
-        "n_buckets": n_buckets,
-        "buckets_skipped": len(done),
-        "buckets_computed": len(processed),
-        "docs_computed": int(sum(r["docs"] for r in stats)),
-        "wall_ms": (time.perf_counter() - started) * 1000.0,
-    }
-
-
-def _commit_zero_doc_manifests(spark, output_path, n_buckets, done, stats):
-    """Write explicit zero-doc manifests for processed-but-empty buckets
-    and return the processed set (all buckets not skipped via ``done``).
-    Safe for empty-because-no-input buckets too: the input fingerprint in
-    the layout params already forces a clean recompute if the corpus
-    changes, so marking them done never hides future work."""
-    processed = set(range(n_buckets)) - {int(b) for b in done}
-    nonempty = {int(r["bucket"]) for r in stats}
-    for b in sorted(processed - nonempty):
-        _write_manifest(
-            output_path, b,
-            {"bucket": b, "docs": 0, "docs_extracted": 0, "fallback_reruns": 0,
-             "parse_retries": 0, "kernel_failures": 0, "docs_truncated": 0,
-             "in_bytes": 0, "kernel_ms": 0.0, "max_doc_ms": 0.0,
-             "committed_at": time.time()},
-            spark=spark,
-        )
-    return processed
+    manifests = _write_buckets(spark, extracted, output_path, n_buckets, done, *_doc_aggs())
+    return _run_summary(started, done, manifests, n_buckets=n_buckets)
 
 
 def run_warc_ingestion(
@@ -508,27 +604,20 @@ def run_warc_ingestion(
 
     Returns the same summary dict shape as :func:`run_extraction`.
     """
-    from .warc import extract_warc_paths, warc_path_table
+    from .warc import extract_warc_paths
 
     started = time.perf_counter()
-    paths = warc_path_table(spark, pattern).select("path")
-    listing = sorted(r["path"] for r in paths.collect())  # driver-small: file names
-    if not listing:
-        raise ValueError(f"no WARC files match {pattern!r}")
-    import hashlib
-
-    fingerprint = "files:%d:%s" % (
-        len(listing), hashlib.md5("\n".join(listing).encode()).hexdigest()
-    )
+    listing = _list_files(spark, pattern, "WARC")
     done = resolve_bucket_layout(
         spark, output_path, n_buckets, resume,
-        params={"max_doc_bytes": max_doc_bytes, "input": fingerprint,
+        params={"max_doc_bytes": max_doc_bytes, "input": _listing_fingerprint(listing),
                 "unit": "warc_file"},
     )
-    bucketed = spark.createDataFrame(
-        [(p,) for p in listing], "path string"
-    ).withColumn("bucket", bucket_col(n_buckets, "path"))
-    todo = bucketed.filter(~F.col("bucket").isin(list(done))) if done else bucketed
+    todo = _skip_done(
+        spark.createDataFrame([(p,) for p in listing], "path string")
+        .withColumn("bucket", bucket_col(n_buckets, "path")),
+        done,
+    )
     # spread FILES across the executor cores (the exchange moves only path
     # strings).  Partitioning need not align with the bucket commit unit:
     # manifests are aggregated from the written rows AFTER the write, so
@@ -538,48 +627,13 @@ def run_warc_ingestion(
     n_part = max(
         1, min(n_todo, max(n_buckets, spark.sparkContext.defaultParallelism))
     )
-    todo = todo.repartition(n_part, "path")
-
-    extracted = extract_warc_paths(todo, max_doc_bytes=max_doc_bytes)
-    # recompute the bucket from the doc_id's path prefix (doc_id is
-    # '<path>#<record idx>'): deterministic, survives the Arrow boundary
-    extracted = extracted.withColumn(
-        "bucket",
-        F.pmod(
-            F.xxhash64(F.regexp_replace("doc_id", r"#[0-9]+$", "")),
-            F.lit(n_buckets),
-        ).cast("int"),
+    extracted = extract_warc_paths(
+        todo.repartition(n_part, "path"), max_doc_bytes=max_doc_bytes
+    ).withColumn("bucket", _file_bucket_col(n_buckets))
+    manifests = _write_buckets(spark, extracted, output_path, n_buckets, done, *_doc_aggs())
+    return _run_summary(
+        started, done, manifests, n_buckets=n_buckets, n_files=len(listing)
     )
-    from pyspark import StorageLevel
-
-    extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        (
-            extracted.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(output_path)
-        )
-        stats = _bucket_stats(extracted)
-    finally:
-        extracted.unpersist()
-    for row in stats:
-        payload = row.asDict()
-        payload["committed_at"] = time.time()
-        _write_manifest(output_path, int(row["bucket"]), payload, spark=spark)
-    # crawl files with zero extractable responses (warcinfo/request-only,
-    # damaged) must still commit their bucket, or resume re-streams them
-    processed = _commit_zero_doc_manifests(
-        spark, output_path, n_buckets, done, stats
-    )
-    return {
-        "n_buckets": n_buckets,
-        "n_files": len(listing),
-        "buckets_skipped": len(done),
-        "buckets_computed": len(processed),
-        "docs_computed": int(sum(r["docs"] for r in stats)),
-        "wall_ms": (time.perf_counter() - started) * 1000.0,
-    }
 
 
 def run_cdx_ingestion(
@@ -605,22 +659,14 @@ def run_cdx_ingestion(
     the selection (prefixes, base dir), so changing either recomputes
     instead of trusting stale buckets."""
     from .cdx import cdx_lines, extract_cdx_ranges, plan_fetches
-    from .warc import warc_path_table
 
     started = time.perf_counter()
-    idx_paths = warc_path_table(spark, cdx_pattern).select("path")
-    listing = sorted(r["path"] for r in idx_paths.collect())  # index shard names
-    if not listing:
-        raise ValueError(f"no CDX index files match {cdx_pattern!r}")
+    listing = _list_files(spark, cdx_pattern, "CDX index")
     if not urlkey_prefixes:
         raise ValueError("urlkey_prefixes must be non-empty (select something)")
-    import hashlib
-
-    fingerprint = "cdx:%d:%s:%s:%s" % (
-        len(listing),
-        hashlib.md5("\n".join(listing).encode()).hexdigest(),
-        hashlib.md5("\n".join(sorted(urlkey_prefixes)).encode()).hexdigest(),
-        warc_base_dir or "",
+    fingerprint = (
+        f"cdx:{len(listing)}:{_md5_lines(listing)}:"
+        f"{_md5_lines(sorted(urlkey_prefixes))}:{warc_base_dir or ''}"
     )
     done = resolve_bucket_layout(
         spark, output_path, n_buckets, resume,
@@ -629,10 +675,7 @@ def run_cdx_ingestion(
     )
     lines = spark.read.text(listing).withColumnRenamed("value", "line")
     plan = plan_fetches(cdx_lines(lines), urlkey_prefixes)
-    plan = plan.withColumn(
-        "bucket", F.pmod(F.xxhash64("filename"), F.lit(n_buckets)).cast("int")
-    )
-    todo = plan.filter(~F.col("bucket").isin(list(done))) if done else plan
+    todo = _skip_done(plan.withColumn("bucket", bucket_col(n_buckets, "filename")), done)
     # spread plans across cores; warc_records_from_ranges sorts within
     # partitions so each file still opens once per partition
     todo = todo.drop("bucket").repartition(
@@ -640,43 +683,11 @@ def run_cdx_ingestion(
     )
     extracted = extract_cdx_ranges(
         todo, base_dir=warc_base_dir, max_doc_bytes=max_doc_bytes
+    ).withColumn("bucket", _file_bucket_col(n_buckets))
+    manifests = _write_buckets(spark, extracted, output_path, n_buckets, done, *_doc_aggs())
+    return _run_summary(
+        started, done, manifests, n_buckets=n_buckets, n_index_files=len(listing)
     )
-    # bucket from the doc_id's filename prefix ('<filename>#<offset>')
-    extracted = extracted.withColumn(
-        "bucket",
-        F.pmod(
-            F.xxhash64(F.regexp_replace("doc_id", r"#[0-9]+$", "")),
-            F.lit(n_buckets),
-        ).cast("int"),
-    )
-    from pyspark import StorageLevel
-
-    extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        (
-            extracted.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(output_path)
-        )
-        stats = _bucket_stats(extracted)
-    finally:
-        extracted.unpersist()
-    for row in stats:
-        payload = row.asDict()
-        payload["committed_at"] = time.time()
-        _write_manifest(output_path, int(row["bucket"]), payload, spark=spark)
-    processed = _commit_zero_doc_manifests(
-        spark, output_path, n_buckets, done, stats
-    )
-    return {
-        "n_buckets": n_buckets,
-        "n_index_files": len(listing),
-        "buckets_skipped": len(done),
-        "buckets_computed": len(processed),
-        "docs_computed": int(sum(r["docs"] for r in stats)),
-        "wall_ms": (time.perf_counter() - started) * 1000.0,
-    }
 
 
 def run_crawl_planning(
@@ -718,29 +729,14 @@ def run_crawl_planning(
     from .cdx import cdx_lines, plan_fetches, schedule_frontier
 
     started = time.perf_counter()
-    from .warc import warc_path_table
-
-    idx_paths = warc_path_table(spark, cdx_pattern).select("path")
-    listing = sorted(r["path"] for r in idx_paths.collect())
-    if not listing:
-        raise ValueError(f"no CDX index files match {cdx_pattern!r}")
+    listing = _list_files(spark, cdx_pattern, "CDX index")
     if not urlkey_prefixes:
         raise ValueError("urlkey_prefixes must be non-empty (select something)")
-    import hashlib
-
-    sitemap_listing: list[str] = []
-    if sitemap_glob:
-        sitemap_listing = sorted(
-            r["path"] for r in warc_path_table(spark, sitemap_glob).select("path").collect()
-        )
-        if not sitemap_listing:
-            raise ValueError(f"no sitemap files match {sitemap_glob!r}")
-    fingerprint = "plan:%s:%s:%s:%d:%d" % (
-        hashlib.md5("\n".join(listing).encode()).hexdigest(),
-        hashlib.md5("\n".join(sorted(urlkey_prefixes)).encode()).hexdigest(),
-        hashlib.md5("\n".join(sitemap_listing).encode()).hexdigest(),
-        per_domain_per_slot,
-        int(fetch_unmodified_unknown),
+    sitemap_listing = _list_files(spark, sitemap_glob, "sitemap") if sitemap_glob else []
+    fingerprint = (
+        f"plan:{_md5_lines(listing)}:{_md5_lines(sorted(urlkey_prefixes))}:"
+        f"{_md5_lines(sitemap_listing)}:{int(per_domain_per_slot)}:"
+        f"{int(fetch_unmodified_unknown)}"
     )
     done = resolve_bucket_layout(
         spark, plan_output, n_buckets, resume,
@@ -775,70 +771,19 @@ def run_crawl_planning(
         plan = caps
         out_cols = ["urlkey", "timestamp", "url", "filename", "offset", "length"]
     slotted = schedule_frontier(plan, per_domain_per_slot=per_domain_per_slot)
-    slotted = slotted.withColumn(
-        "bucket", F.pmod(F.xxhash64("domain"), F.lit(n_buckets)).cast("int")
-    ).select(*out_cols, "domain", "slot", "bucket")
-    todo = slotted.filter(~F.col("bucket").isin(list(done))) if done else slotted
-
-    from pyspark import StorageLevel
-
-    todo = todo.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        (
-            todo.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(plan_output)
-        )
-        stats = (
-            todo.groupBy("bucket")
-            .agg(
-                F.count("*").alias("urls"),
-                F.countDistinct("domain").alias("domains"),
-                (F.max("slot") + 1).alias("max_slots"),
-            )
-            .collect()
-        )
-    finally:
-        todo.unpersist()
-    for row in stats:
-        payload = row.asDict()
-        payload["committed_at"] = time.time()
-        _write_manifest(plan_output, int(row["bucket"]), payload, spark=spark)
-    processed = set(range(n_buckets)) - {int(b) for b in done}
-    nonempty = {int(r["bucket"]) for r in stats}
-    for b in sorted(processed - nonempty):
-        _write_manifest(
-            plan_output, b,
-            {"bucket": b, "urls": 0, "domains": 0, "max_slots": 0,
-             "committed_at": time.time()},
-            spark=spark,
-        )
-    return {
-        "mode": "refresh" if sitemap_glob else "archival",
-        "n_buckets": n_buckets,
-        "n_index_files": len(listing),
-        "n_sitemap_files": len(sitemap_listing),
-        "buckets_skipped": len(done),
-        "buckets_computed": len(processed),
-        "urls_planned": int(sum(r["urls"] for r in stats)),
-        "wall_ms": (time.perf_counter() - started) * 1000.0,
-    }
-
-
-def _bucket_stats(extracted: DataFrame):
-    return (
-        extracted.groupBy("bucket")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum(F.col("content_extracted").cast("int")).alias("docs_extracted"),
-            F.sum(F.col("metrics.fallback_rerun").cast("int")).alias("fallback_reruns"),
-            F.sum(F.col("metrics.parse_retried").cast("int")).alias("parse_retries"),
-            F.sum((F.col("metrics.n_candidates") < 0).cast("int")).alias("kernel_failures"),
-            F.sum(F.col("metrics.truncated").cast("int")).alias("docs_truncated"),
-            F.sum("metrics.in_bytes").alias("in_bytes"),
-            F.sum("metrics.ms").alias("kernel_ms"),
-            F.max("metrics.ms").alias("max_doc_ms"),
-        )
-        .collect()
+    slotted = slotted.withColumn("bucket", bucket_col(n_buckets, "domain")).select(
+        *out_cols, "domain", "slot", "bucket"
+    )
+    manifests = _write_buckets(
+        spark, _skip_done(slotted, done), plan_output, n_buckets, done,
+        F.count("*").alias("urls"),
+        F.countDistinct("domain").alias("domains"),
+        (F.max("slot") + 1).alias("max_slots"),
+    )
+    return _run_summary(
+        started, done, manifests, total=("urls_planned", "urls"),
+        mode="refresh" if sitemap_glob else "archival",
+        n_buckets=n_buckets,
+        n_index_files=len(listing),
+        n_sitemap_files=len(sitemap_listing),
     )

@@ -35,10 +35,11 @@ from pyspark.sql import DataFrame, functions as F
 # Scoping: the registry is a THREAD-LOCAL stack of scopes, not one global
 # list -- release_caches() drains only the calling thread's innermost open
 # :func:`cache_scope` (or that thread's default scope).  A composite job
-# like ``jobs/curate.py`` wraps itself in ``with cache_scope():`` so its
-# internal release calls can never unpersist frames registered by another
-# in-flight caller (e.g. a bench loop driving other operators in the same
-# session), and concurrent threads never see each other's registries.
+# wraps each of its stages in ``with cache_scope():`` (``lineage.StageRunner``
+# does, for the curation jobs) so its releases can never unpersist frames
+# registered by another in-flight caller (e.g. a bench loop driving other
+# operators in the same session), and concurrent threads never see each
+# other's registries.
 _TLS = threading.local()
 # Every scope currently holding frames, across all threads (guarded by
 # _ALL_LOCK): the escape hatch for multi-threaded drivers where a worker

@@ -61,9 +61,10 @@ def create_documents_table(
 
     The table is bucket-partitioned on ``doc_id`` (Iceberg hidden
     partitioning -- readers never see the bucket column), matching the
-    lineage layer's deterministic doc-id bucketing (lineage.py:32): scans
-    of a resumed bucket prune to its files, and the hash layout spreads
-    mega-document skew exactly like ``repartition_for_extraction``.
+    lineage layer's deterministic doc-id bucketing
+    (``lineage.bucket_col``): scans of a resumed bucket prune to its
+    files, and the hash layout spreads mega-document skew exactly like
+    ``repartition_for_extraction``.
     Requires the Iceberg runtime (guard with :func:`iceberg_available`);
     exercised by the availability-guarded round-trip smoke in
     tests/test_sources_metrics.py wherever the jar exists."""

@@ -169,3 +169,38 @@ def test_colmemo_memoizes_and_evicts(spark):
     colmemo._MEMO[stale_key] = "stale"
     colmemo.memo_cols(("t_other",), build)
     assert stale_key not in colmemo._MEMO
+
+    # racing first builds of one key (each sweeping stale entries while
+    # the others insert) raise nothing and all get the same object
+    import sys
+    import threading
+    import time
+
+    def slow_build():
+        time.sleep(0.05)  # a py4j-bound build: every racer misses the memo
+        return F.lit(42)
+
+    colmemo._MEMO[("app-gone", "t_race_stale")] = "stale"
+    start = threading.Barrier(8)
+    got, errors = [], []
+
+    def race():
+        try:
+            start.wait(timeout=30)
+            got.append(colmemo.memo_cols(("t_race",), slow_build))
+        except Exception as exc:  # pragma: no cover - the failure mode
+            errors.append(exc)
+
+    threads = [threading.Thread(target=race) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(got) == 8
+    assert all(g is got[0] for g in got)

@@ -106,3 +106,23 @@ def test_curate_media_end_to_end_and_resume(spark, tmp_path):
     # re-tuning the radius re-pays pairs+final but never the decode
     stats3 = cm.curate_media_resumable(spark, media, out, max_hamming=2, n_buckets=4)
     assert stats3["resumed_stages"] == ["hashes"]
+
+
+def test_unknown_fail_after_stage_is_rejected_before_any_work(spark, tmp_path):
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "curate_media",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "jobs", "curate_media.py"),
+    )
+    cm = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cm)
+
+    out = str(tmp_path / "curated")
+    with pytest.raises(ValueError, match="hash"):
+        cm.curate_media_resumable(
+            spark, _media(spark, tmp_path), out, n_buckets=4, fail_after_stage="hash"
+        )
+    assert not os.path.exists(out)

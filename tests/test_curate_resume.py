@@ -103,6 +103,16 @@ def test_kill_after_line_clean_resumes_without_recompute(spark, tmp_path, monkey
     assert {r["doc_id"] for r in got_df.select("doc_id").collect()} == ref_ids
 
 
+def test_unknown_fail_after_stage_is_rejected_before_any_work(spark, tmp_path):
+    """A crash hook naming no stage of this run (a typo) must fail up
+    front, not run to completion and let a kill-and-resume test pass
+    without ever crashing."""
+    out = str(tmp_path / "curated")
+    with pytest.raises(ValueError, match="line-clean"):
+        _run(spark, _docs(spark), out, fail_after_stage="line-clean")
+    assert not os.path.exists(out)
+
+
 def test_partial_final_stage_fills_missing_buckets_only(spark, tmp_path):
     docs = _docs(spark)
     out = str(tmp_path / "curated")
@@ -146,6 +156,10 @@ def test_zero_pair_stage_resumes_from_empty_schema(spark, tmp_path):
     out = str(tmp_path / "curated")
     with pytest.raises(RuntimeError, match="injected failure after stage pairs"):
         _run(spark, docs, out, line_min_repeats=3, fail_after_stage="pairs")
+    from nreadspark.lineage import completed_buckets
+
+    # a zero-row stage still commits a manifest for every processed bucket
+    assert completed_buckets(os.path.join(out, "_stages", "pairs")) == set(range(4))
     got_df, got_stats = _run(spark, docs, out, line_min_repeats=3)
     assert got_stats["near_dup_pairs"] == 0
     assert got_stats["resumed_stages"] == ["quality", "line_clean", "pairs"]
