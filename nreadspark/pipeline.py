@@ -24,7 +24,9 @@ Design (Spark-first, not a port of the reference's single-document loop):
 
 from __future__ import annotations
 
+import sys
 import time
+import zipimport
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -135,9 +137,10 @@ def _extract_batches(iterator, max_doc_bytes: int | None = None):
     into flat columnar builders (kind/text/media_ref/offset + list offsets)
     and wrapped as ``ListArray(StructArray)`` directly -- no per-span Python
     dicts, no pandas block manager.  This halves the Python-side overhead vs
-    a mapInPandas list-of-dict encoding, which matters because the exchange
-    boundary -- not the extraction kernel -- is the hot path at high core
-    counts.
+    a mapInPandas list-of-dict encoding.  The per-task cost outside the
+    kernel, though, was measured to come mostly from PySpark re-reading its
+    zip archives on every task, not from the Arrow exchange; see the finder
+    prune below.
 
     ``max_doc_bytes`` is the per-document byte budget (see :func:`extract`):
     documents over it are truncated to exactly that many UTF-8 bytes before
@@ -151,6 +154,17 @@ def _extract_batches(iterator, max_doc_bytes: int | None = None):
 
     from .kernel import Options, transcode
     from .spans import extract_spans_flat
+
+    # PySpark calls importlib.invalidate_caches() at the start of every task,
+    # and before Python 3.13 every cached zipimporter then re-reads its whole
+    # archive directory (pyspark.zip's packages, py4j, a --py-files archive):
+    # ~50 ms per task on a reused worker.  The finders are a pure cache -- a
+    # later import rebuilds one from zipimport's directory cache without
+    # reading the archive, and loaded modules keep their loaders -- and any
+    # new top-level import re-creates them, so drop them on every task.
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            sys.path_importer_cache.pop(path, None)
 
     opts = Options()
     schema = _arrow_output_schema()
@@ -205,6 +219,7 @@ def _extract_batches(iterator, max_doc_bytes: int | None = None):
                         html = encoded[:max_doc_bytes].decode("utf-8", errors="ignore")
                         truncated = True
                 m_trunc[i] = truncated
+            base = len(s_kind)
             try:
                 result = transcode(html, urls[i], opts)
                 extract_spans_flat(result.article_content, s_kind, s_text, s_ref, s_off)
@@ -221,7 +236,13 @@ def _extract_batches(iterator, max_doc_bytes: int | None = None):
             except Exception:
                 # a poisoned document must never kill a 10^12-doc job: emit an
                 # empty, clearly-flagged row instead (content_extracted=False,
-                # n_candidates=-1 marks kernel failure for the lineage metrics)
+                # n_candidates=-1 marks kernel failure for the lineage metrics).
+                # Roll back what it appended to the shared span builders: a
+                # partial span would misalign the struct's children.
+                for builder in (s_kind, s_text, s_ref, s_off):
+                    del builder[base:]
+                titles[i], extracted[i], next_urls[i] = None, False, None
+                m_top[i], m_fall[i], m_retry[i] = 0.0, False, False
                 m_cand[i] = -1
                 m_bytes[i] = len(html.encode("utf-8", errors="replace"))
                 m_ms[i] = (time.perf_counter() - started) * 1000.0

@@ -145,3 +145,95 @@ def test_poisoned_document_does_not_kill_job(spark):
     assert len(out) == 3
     assert out["empty"]["content_extracted"] is False
     assert out["null_spans"]["content_extracted"] is False
+
+
+def _run_kernel(htmls):
+    """The extraction kernel over one in-process batch, as rows."""
+    import pyarrow as pa
+
+    from nreadspark.pipeline import _extract_batches
+
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": [f"d{i}" for i in range(len(htmls))], "__html": htmls}
+    )
+    (out,) = _extract_batches(iter([batch]))
+    return out.to_pylist()
+
+
+@pytest.mark.parametrize("appended", ["kind", "span"])
+def test_failed_document_leaves_an_empty_row(monkeypatch, appended):
+    """A document whose span emission raises after appending part of a span
+    (``kind``) or a whole one (``span``) leaves an empty flagged row, and the
+    documents around it keep their spans."""
+    import nreadspark.spans as spans_mod
+
+    paragraph = "<p>Paragraph {} of story {}, with words, commas, and text.</p>"
+    htmls = [
+        f"<html><head><title>Story {i}</title></head><body><div>"
+        + "".join(paragraph.format(j, i) for j in range(6))
+        + f'<img src="/img/{i}.png"></div></body></html>'
+        for i in range(3)
+    ]
+    clean = _run_kernel(htmls)
+    real = spans_mod.extract_spans_flat
+    calls = []
+
+    def poisoned(article_content, kinds, texts, refs, offs):
+        calls.append(1)
+        if len(calls) != 2:
+            return real(article_content, kinds, texts, refs, offs)
+        kinds.append("text")
+        if appended == "span":
+            texts.append("leaked")
+            refs.append(None)
+            offs.append(0)
+        raise RuntimeError("poisoned span emission")
+
+    monkeypatch.setattr(spans_mod, "extract_spans_flat", poisoned)
+    rows = _run_kernel(htmls)
+    assert rows[1]["spans"] == []
+    assert rows[1]["metrics"]["n_candidates"] == -1
+    assert rows[1]["title"] is None
+    assert rows[1]["content_extracted"] is False
+    assert rows[1]["next_page_url"] is None
+    for i in (0, 2):
+        assert rows[i]["spans"] == clean[i]["spans"] != []
+        assert rows[i]["title"] == clean[i]["title"] == f"Story {i}"
+
+
+def test_kernel_drops_cached_zip_finders(monkeypatch, tmp_path):
+    """PySpark calls importlib.invalidate_caches() on every task; a cached
+    zipimporter re-reads its whole archive then.  After an extraction task no
+    zip finder is left to re-read, and the zip still imports."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    archive = tmp_path / "zpkg.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zpkg/__init__.py", "")
+        zf.writestr("zpkg/first.py", "VALUE = 1\n")
+        zf.writestr("zpkg/second.py", "VALUE = 2\n")
+    saved_cache = dict(sys.path_importer_cache)
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        importlib.import_module("zpkg.first")
+        _run_kernel(["<html><body><p>One paragraph of text, long enough.</p></body></html>"])
+
+        rereads = []
+        real = zipimport.zipimporter.invalidate_caches
+
+        def counting(self):
+            rereads.append(self.archive)
+            return real(self)
+
+        monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", counting)
+        importlib.invalidate_caches()
+        assert rereads == []
+        assert importlib.import_module("zpkg.second").VALUE == 2
+    finally:
+        for name in ("zpkg", "zpkg.first", "zpkg.second"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved_cache)
