@@ -27,30 +27,9 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import CPUS, SF_DIR, _force, _session  # noqa: E402
+
 RUNS = int(os.environ.get("BENCH_EXTRA_RUNS", "3"))
-
-
-def _session():
-    from pyspark.sql import SparkSession
-
-    from nreadspark.pipeline import configure_session_defaults
-
-    builder = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName(f"nreadspark-bench-extra-{CPUS}")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.driver.extraJavaOptions", "-Xms8g -XX:+AlwaysPreTouch")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-    )
-    return configure_session_defaults(builder).getOrCreate()
-
-
-def _force(df):
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -70,7 +49,7 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
 
-    spark = _session()
+    spark = _session(CPUS)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     from nreadspark.ops.dedup import release_caches

@@ -5,8 +5,9 @@ Driver-side plan construction is py4j round-trip bound: every
 large expression tree costs 100s of milliseconds PER BUILD even though
 the resulting Column is an immutable, endlessly reusable unresolved
 expression.  Ops whose trees depend only on fixed column names and
-literal parameters build them once per SparkContext through this helper
-(the ``_psl_join_bundle`` / ``_xml_unescape_cached`` pattern, shared).
+literal parameters build them once per SparkContext through this helper,
+the one per-SparkContext memo in the library (``urls._psl_join_bundle``,
+``sitemap._xml_unescape_cached``, minhash, CDX and the entry queries).
 
 Keyed on the ACTIVE SparkContext's applicationId, not process-wide: a
 plain ``lru_cache`` would keep handing out Columns whose py4j refs point
@@ -25,8 +26,8 @@ _LOCK = threading.Lock()
 def memo_cols(key: tuple, builder):
     """Return ``builder()`` memoized under ``key`` for the active
     SparkContext.  ``builder`` must be a zero-arg callable returning an
-    immutable value (a Column, or a tuple/dict of Columns) derived only
-    from ``key`` and fixed literals."""
+    immutable value (Columns or DataFrames, alone or in a tuple/dict)
+    derived only from ``key`` and fixed literals."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context

@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..colmemo import memo_cols
 from ..urlutil import TRACKING_PARAMS
 
 # same absolute-URL test as urlutil._ABSOLUTE_RE
@@ -389,14 +390,6 @@ def _lastk_col(labels: Column, k: int) -> Column:
     )
 
 
-# PSL rule DataFrames keyed by (applicationId, extra_suffixes,
-# include_private): cached per SparkContext so a stopped/relaunched JVM
-# gateway never gets served stale py4j references (ADVICE r7), and
-# entries owned by dead contexts are evicted on the next build.
-_PSL_FRAME_CACHE: dict = {}
-_PSL_BUNDLE_CACHE: dict = {}
-
-
 def _psl_rule_frames(spark, extra_suffixes=(), include_private: bool = True):
     """``{k: DataFrame(suffix, exact, wild, exc)}`` -- one small frame
     per rule label count ``k`` over the loaded PSL (:func:`load_psl`)
@@ -405,14 +398,8 @@ def _psl_rule_frames(spark, extra_suffixes=(), include_private: bool = True):
     of ``*.platform.sh``), hence booleans rather than a kind enum.
     Wildcard rules are keyed by their PARENT labels (the join probe is
     the host's last-k labels; the wildcard's own extra label is the
-    host's (k+1)-th)."""
-    app = spark.sparkContext.applicationId
-    key = (app, tuple(extra_suffixes), include_private)
-    hit = _PSL_FRAME_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for stale in [k for k in _PSL_FRAME_CACHE if k[0] != app]:
-        del _PSL_FRAME_CACHE[stale]
+    host's (k+1)-th).  Built once per :func:`_psl_join_bundle` memo
+    entry."""
     exact, wildcards, exceptions = load_psl(include_private)
     rows: dict = {}
 
@@ -457,9 +444,7 @@ def _psl_rule_frames(spark, extra_suffixes=(), include_private: bool = True):
             f"SELECT * FROM VALUES {rows_sql} AS t(suffix, exact, wild, exc)"
         )
 
-    frames = {k: values_frame(v) for k, v in by_k.items()}
-    _PSL_FRAME_CACHE[key] = frames
-    return frames
+    return {k: values_frame(v) for k, v in by_k.items()}
 
 
 def with_registrable_domain(
@@ -508,7 +493,7 @@ def with_registrable_domain(
 
 def _psl_join_bundle(spark, extra_suffixes: tuple, include_private: bool = True):
     """The per-call-invariant pieces of :func:`with_registrable_domain`,
-    memoized per SparkContext alongside the rule frames: the
+    memoized per SparkContext (:func:`..colmemo.memo_cols`): the
     broadcast-marked renamed rule frames, the staged last-k key
     expressions, and the prevailing-rule decision Column.  Building the
     decision is a few hundred driver-side py4j round trips -- paying it
@@ -516,13 +501,13 @@ def _psl_join_bundle(spark, extra_suffixes: tuple, include_private: bool = True)
     a ~0.1 s and a ~1 s `domain_cap` at sf0.1 (the r7 CASE was memoized
     for the same reason; Column objects are immutable unresolved
     expressions over FIXED staged names, shareable across DataFrames)."""
-    app = spark.sparkContext.applicationId
-    key = (app, extra_suffixes, include_private)
-    hit = _PSL_BUNDLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for stale in [k for k in _PSL_BUNDLE_CACHE if k[0] != app]:
-        del _PSL_BUNDLE_CACHE[stale]
+    return memo_cols(
+        ("psl_bundle", extra_suffixes, include_private),
+        lambda: _build_psl_join_bundle(spark, extra_suffixes, include_private),
+    )
+
+
+def _build_psl_join_bundle(spark, extra_suffixes, include_private):
     frames = _psl_rule_frames(spark, extra_suffixes, include_private)
     ks = sorted(frames)
     renamed = {
@@ -566,9 +551,7 @@ def _psl_join_bundle(spark, extra_suffixes: tuple, include_private: bool = True)
         host.isNotNull(),
         F.when(is_ip, host).otherwise(F.coalesce(best.getField("d"), default)),
     )
-    bundle = (renamed, key_cols, decision, ks)
-    _PSL_BUNDLE_CACHE[key] = bundle
-    return bundle
+    return renamed, key_cols, decision, ks
 
 
 def tag_blocked_domains(

@@ -100,35 +100,6 @@ def repartition_for_extraction(df: DataFrame, num_partitions: int | None = None)
     return df.repartition(num_partitions, F.xxhash64("doc_id"))
 
 
-def _arrow_output_schema():
-    import pyarrow as pa
-
-    from .spans import arrow_span_struct
-
-    span = arrow_span_struct()
-    metrics = pa.struct(
-        [
-            pa.field("n_candidates", pa.int32()),
-            pa.field("top_score", pa.float64()),
-            pa.field("fallback_rerun", pa.bool_()),
-            pa.field("parse_retried", pa.bool_()),
-            pa.field("in_bytes", pa.int64()),
-            pa.field("ms", pa.float64()),
-            pa.field("truncated", pa.bool_()),
-        ]
-    )
-    return pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("spans", pa.list_(span)),
-            pa.field("title", pa.string()),
-            pa.field("content_extracted", pa.bool_()),
-            pa.field("next_page_url", pa.string()),
-            pa.field("metrics", metrics),
-        ]
-    )
-
-
 def _extract_batches(iterator, max_doc_bytes: int | None = None):
     """mapInArrow kernel: (doc_id, __html[, __url]) -> OUTPUT_SCHEMA
     batches.
@@ -151,6 +122,7 @@ def _extract_batches(iterator, max_doc_bytes: int | None = None):
     capped transfer.
     """
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from .kernel import Options, transcode
     from .spans import extract_spans_flat
@@ -167,7 +139,7 @@ def _extract_batches(iterator, max_doc_bytes: int | None = None):
             sys.path_importer_cache.pop(path, None)
 
     opts = Options()
-    schema = _arrow_output_schema()
+    schema = to_arrow_schema(OUTPUT_SCHEMA)
     span_type = schema.field("spans").type.value_type
     metrics_type = schema.field("metrics").type
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .colmemo import memo_cols
+
 # one <url>/<sitemap> block per array element; (?s) so blocks span lines
 _URL_BLOCK = r"(?s)<url>(.*?)</url>"
 _SITEMAP_BLOCK = r"(?s)<sitemap>(.*?)</sitemap>"
@@ -177,27 +179,8 @@ def sitemap_entries(
     )
 
 
-# keyed on the ACTIVE SparkContext's applicationId, not process-wide: a
-# plain lru_cache would keep handing out Columns whose py4j refs point
-# into a stopped JVM gateway after a SparkContext relaunch in a
-# long-lived driver (ADVICE r7); stale-context entries are evicted on
-# the next build.
-_XML_UNESCAPE_MEMO: dict = {}
-
-
 def _xml_unescape_cached(colname: str) -> Column:
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:  # no gateway to cache against; build fresh
-        return xml_unescape_col(F.col(colname))
-    key = (sc.applicationId, colname)
-    hit = _XML_UNESCAPE_MEMO.get(key)
-    if hit is None:
-        for stale in [k for k in _XML_UNESCAPE_MEMO if k[0] != key[0]]:
-            del _XML_UNESCAPE_MEMO[stale]
-        hit = _XML_UNESCAPE_MEMO[key] = xml_unescape_col(F.col(colname))
-    return hit
+    return memo_cols(("xml_unescape", colname), lambda: xml_unescape_col(F.col(colname)))
 
 
 def lastmod_ts_col(lastmod) -> Column:

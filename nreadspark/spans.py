@@ -31,9 +31,9 @@ __all__ = ["spans_to_html", "extract_spans", "flatten_spans_text", "arrow_span_s
 
 
 def arrow_span_struct():
-    """The engine-wide span struct as a pyarrow type -- the single source
-    for every Arrow-side builder (pipeline, pdf, ...), twinned with
-    pipeline.SPAN_TYPE on the Spark side."""
+    """The engine-wide span struct as a pyarrow type for Arrow-side
+    builders outside the extraction kernel (pdf, ...), twinned with
+    pipeline.SPAN_TYPE, from which the kernel derives its own."""
     import pyarrow as pa
 
     return pa.struct(

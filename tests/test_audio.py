@@ -78,22 +78,6 @@ def test_identical_samples_identical_hash():
     assert ghash64(_samples(7)) == ghash64(_samples(7))
 
 
-@pytest.fixture(scope="module")
-def spark():
-    pytest.importorskip("pyspark")
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("audio-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def test_audio_fingerprints_kernel_and_containment(spark):
     from pyspark.sql import Row
     from nreadspark.ops.audio import audio_fingerprints

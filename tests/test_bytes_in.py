@@ -6,8 +6,6 @@ extractions to the pre-decoded string path."""
 import gzip
 import zlib
 
-import pytest
-
 from nreadspark.pipeline import decode_html_bytes
 
 PAGE = (
@@ -71,22 +69,6 @@ def test_unknown_charset_falls_back():
 def test_no_signal_uses_fallback():
     body = "<html><body><p>plain ascii</p></body></html>"
     assert decode_html_bytes(body.encode(), fallback_encoding="utf-8") == body
-
-
-@pytest.fixture(scope="module")
-def spark():
-    pytest.importorskip("pyspark")
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("bytes-in-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
 
 
 def test_bytes_path_matches_string_path(spark):

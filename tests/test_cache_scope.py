@@ -8,21 +8,6 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[2]")
-        .appName("cache-scope-tests")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def _is_cached(df) -> bool:
     lvl = df.storageLevel
     return lvl.useMemory or lvl.useDisk
@@ -97,13 +82,6 @@ def test_curate_internal_releases_do_not_drain_caller_cache(spark, tmp_path):
     """The end-to-end guarantee the scoping exists for: curate_resumable's
     internal release_caches() calls leave a caller's pre-registered frame
     cached."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"),
-    )
     from curate import curate_resumable
 
     from nreadspark.ops.dedup import _persist, release_caches

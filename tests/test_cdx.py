@@ -46,22 +46,6 @@ def test_build_warc_with_index_offsets_are_exact():
         assert key == surt_key(meta["url"])
 
 
-@pytest.fixture(scope="module")
-def spark():
-    pytest.importorskip("pyspark")
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("cdx-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def test_surt_col_matches_python_twin(spark):
     from pyspark.sql import Row
     from nreadspark.cdx import surt_key_col

@@ -7,21 +7,6 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("chunking-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def test_chunk_windows_cover_and_overlap(spark):
     from nreadspark.ops.chunking import chunk_documents
 

@@ -4,31 +4,9 @@ both stages checkpoint/resume like the core four, toggling a stage or
 swapping the model invalidates downstream checkpoints, and the default
 (no optional stages) path is byte-identical to before."""
 
-import os
-import sys
-
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
-
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
-)
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("curate-extended-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
 
 
 GOOD = "the committee published a careful report, with several findings, and it ends well."

@@ -7,28 +7,7 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("curate-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def test_curate_pipeline_stages(spark):
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
-    )
     from curate import curate
 
     body = (
@@ -72,12 +51,6 @@ def test_curate_emptied_docs_are_not_cross_clustered(spark):
     """Docs fully emptied by boilerplate removal must NOT be treated as
     near-duplicates of each other (all empty texts tokenize identically);
     they bypass the pair graph and survive with the count exposed."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
-    )
     from curate import curate
 
     rows = [

@@ -6,21 +6,6 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("curate-media-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def _media(spark, tmp_path):
     """Mixed media table written to parquet (file lineage for the input
     fingerprint): 12 images + 12 videos + 12 audio + 2 unsupported rows;
@@ -57,13 +42,7 @@ def _media(spark, tmp_path):
 
 
 def test_curate_media_end_to_end_and_resume(spark, tmp_path):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "curate_media", "/root/repo/jobs/curate_media.py"
-    )
-    cm = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cm)
+    import curate_media as cm
 
     media = _media(spark, tmp_path)
     out = str(tmp_path / "curated")
@@ -109,16 +88,9 @@ def test_curate_media_end_to_end_and_resume(spark, tmp_path):
 
 
 def test_unknown_fail_after_stage_is_rejected_before_any_work(spark, tmp_path):
-    import importlib.util
     import os
 
-    spec = importlib.util.spec_from_file_location(
-        "curate_media",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "jobs", "curate_media.py"),
-    )
-    cm = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cm)
+    import curate_media as cm
 
     out = str(tmp_path / "curated")
     with pytest.raises(ValueError, match="hash"):

@@ -6,30 +6,10 @@ duplicate or lost doc_ids (mirrors lineage.run_extraction's contract)."""
 
 import os
 import shutil
-import sys
 
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
-
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
-)
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("curate-resume-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
 
 
 def _docs(spark):

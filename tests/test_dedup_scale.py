@@ -8,21 +8,6 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("dedup-scale-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def _boilerplate_corpus(spark, n=10_000):
     from pyspark.sql import functions as F
 

@@ -13,21 +13,6 @@ DIM = 16
 SEED = 1234
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("semantic-dedup-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def _clustered_corpus(n_clusters=5, per_cluster=24, n_dups=6):
     """Deterministic corpus: orthogonal-ish cluster centroids, members =
     centroid + noise small enough that intra-cluster non-dup cosines stay

@@ -20,21 +20,6 @@ TABLES = (
 
 
 @pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("entry-contract")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield session
-    session.stop()
-
-
-@pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
     for t in TABLES:

@@ -97,22 +97,6 @@ def test_identical_pixels_identical_hash_and_local_edit_is_near():
     assert 1 <= hamming <= 8
 
 
-@pytest.fixture(scope="module")
-def spark():
-    pytest.importorskip("pyspark")
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("images-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def test_image_hashes_kernel_and_containment(spark):
     """Spark kernel hashes match the pure-Python twins; corrupt payloads
     and oversized images take their tags with NULL hashes, not failures."""

@@ -24,23 +24,23 @@ PER_DOC_MS_CEILING = 60_000.0
 MEGA_BYTES = 50 * 1024 * 1024
 BUDGET = 1024 * 1024
 
+_CONFS = {
+    "spark.sql.shuffle.partitions": "8",
+    # cap Arrow batches so one batch cannot collect several tail docs
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "16",
+}
+
 
 @pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("mega-doc-soak")
-        .config("spark.sql.shuffle.partitions", "8")
-        # cap Arrow batches so one batch cannot collect several tail docs
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
+def spark(spark):
+    # restore the shared session's values (conf.unset would fall back to
+    # Spark's built-in defaults instead)
+    saved = {k: spark.conf.get(k) for k in _CONFS}
+    for k, v in _CONFS.items():
+        spark.conf.set(k, v)
+    yield spark
+    for k, v in saved.items():
+        spark.conf.set(k, v)
 
 
 def _corpus(spark, n_normal=64):

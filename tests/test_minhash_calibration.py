@@ -20,21 +20,6 @@ SHARED = {0.7: 48, 0.8: 52, 0.9: 55}
 
 
 @pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[8]")
-        .appName("minhash-calibration")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
-@pytest.fixture(scope="module")
 def planted(spark):
     """(df, truth): per similarity level, the planted (a, b, exact shingle
     Jaccard) pairs.  Pair vocabularies are disjoint, so cross-pair

@@ -268,22 +268,6 @@ def test_synthetic_wav_payload_round_trips():
         assert parse_wav_header(bytes.fromhex(hx)) == ("wav", 1, 1000, 8, 3 * k)
 
 
-@pytest.fixture(scope="module")
-def spark():
-    pytest.importorskip("pyspark")
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("multimodal-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def test_extract_features_decodes_real_images(spark):
     """A real PNG flowing through the Spark kernel gets real dimensions and
     a 'real decoder' tag (pil when importable, header parse otherwise)."""

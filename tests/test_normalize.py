@@ -17,21 +17,6 @@ from nreadspark.ops.normalize import (  # noqa: E402
 )
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("normalize-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 # ---------------------------------------------------------------------------
 # table invariants (the chain's correctness rests on these)
 # ---------------------------------------------------------------------------

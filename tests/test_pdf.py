@@ -130,22 +130,6 @@ def test_flate_corruption_is_an_error_not_a_hang():
         parse_pdf_spans(bytes(pdf))
 
 
-@pytest.fixture(scope="module")
-def spark():
-    pytest.importorskip("pyspark")
-    from pyspark.sql import SparkSession
-
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("nreadspark-pdf-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield session
-    session.stop()
-
-
 def test_spark_extract_pdf(spark):
     from pyspark.sql import functions as F
 

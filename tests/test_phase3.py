@@ -160,25 +160,6 @@ def test_transcode_web_single_page():
 # ---------------------------------------------------------------------------
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    from nreadspark.pipeline import configure_session_defaults
-
-    s = (
-        configure_session_defaults(
-            SparkSession.builder.master("local[4]")
-            .appName("phase3-tests")
-            .config("spark.sql.shuffle.partitions", "4")
-            .config("spark.ui.enabled", "false")
-        )
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def test_resolve_chains_and_extract_multipage(spark):
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 

@@ -8,21 +8,6 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("pii-domains-render-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing
 # ---------------------------------------------------------------------------
@@ -361,6 +346,15 @@ def test_registrable_domain_psl_rules(spark):
         assert got[i] == want, (u, got[i], want)
 
 
+def _drop_psl_memo():
+    """Forget the memoized PSL join bundles so the next call rebuilds
+    them from the (patched) rule list."""
+    from nreadspark import colmemo
+
+    for key in [k for k in colmemo._MEMO if k[1] == "psl_bundle"]:
+        del colmemo._MEMO[key]
+
+
 def test_registrable_domain_full_psl_scale(spark, monkeypatch):
     """The full-list proof (r8): a synthetic ~10k-rule PSL must still
     plan and execute -- impossible in the old literal-CASE form, which
@@ -378,8 +372,7 @@ def test_registrable_domain_full_psl_scale(spark, monkeypatch):
     wild = {2: frozenset(f"w{i}.zz" for i in range(150))}
     exc = {3: frozenset(f"ok{i}.w{i}.zz" for i in range(50))}
     monkeypatch.setattr(urls, "load_psl", lambda include_private=True: (exact, wild, exc))
-    urls._PSL_FRAME_CACHE.clear()
-    urls._PSL_BUNDLE_CACHE.clear()
+    _drop_psl_memo()
     try:
         rows = [
             (0, "http://a.r17.zz/"),            # 2-label exact -> 3 labels
@@ -406,8 +399,7 @@ def test_registrable_domain_full_psl_scale(spark, monkeypatch):
             6: "example.com",
         }
     finally:
-        urls._PSL_FRAME_CACHE.clear()
-        urls._PSL_BUNDLE_CACHE.clear()
+        _drop_psl_memo()
 
 
 def test_registrable_domain_extra_suffixes_hook(spark):

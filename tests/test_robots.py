@@ -5,20 +5,6 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("robots-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-
-
 from nreadspark.ops.robots import (  # noqa: E402
     filter_robots_disallowed,
     parse_robots_rules,

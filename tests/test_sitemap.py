@@ -2,24 +2,6 @@
 urlset/sitemapindex explode, lastmod normalization, and the
 inventory-vs-capture fetch reasoning."""
 
-import pytest
-
-
-@pytest.fixture(scope="module")
-def spark():
-    pytest.importorskip("pyspark")
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("sitemap-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
 
 def test_sitemap_entries_urlset_and_index(spark):
     from pyspark.sql import Row

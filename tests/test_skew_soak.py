@@ -29,23 +29,6 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("skew-soak-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        # UI on: the status REST API is where task-level skew metrics live
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "0")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def _api(spark, path):
     base = spark.sparkContext.uiWebUrl
     app = spark.sparkContext.applicationId

@@ -5,22 +5,6 @@ from __future__ import annotations
 import pytest
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    from nreadspark.pipeline import configure_session_defaults
-
-    s = configure_session_defaults(
-        SparkSession.builder.master("local[4]")
-        .appName("sources-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    yield s
-    s.stop()
-
-
 def test_load_documents_parquet_path(spark, tmp_path):
     from nreadspark.corpus import build_corpus_df
     from nreadspark.sources import load_documents, write_documents

@@ -16,22 +16,17 @@ from nreadspark.pipeline import extract, html_from_spans_col  # noqa: E402
 from nreadspark.spans import spans_to_html  # noqa: E402
 
 N_DOCS = 48
+ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 @pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("nreadspark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
-        .getOrCreate()
-    )
-    yield session
-    session.stop()
+def spark(spark):
+    # this module runs with 16-row Arrow batches; set back (not unset) so
+    # later modules keep the shared session's value
+    saved = spark.conf.get(ARROW_BATCH)
+    spark.conf.set(ARROW_BATCH, "16")
+    yield spark
+    spark.conf.set(ARROW_BATCH, saved)
 
 
 @pytest.fixture(scope="module")

@@ -7,22 +7,6 @@ from __future__ import annotations
 import pytest
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    from nreadspark.pipeline import configure_session_defaults
-
-    s = configure_session_defaults(
-        SparkSession.builder.master("local[4]")
-        .appName("stream-window-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    yield s
-    s.stop()
-
-
 def test_windowed_counts_stream_equals_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 

@@ -1,0 +1,69 @@
+"""The suite's shared set-up lives in conftest.py only: one SparkSession for
+the whole run, the jobs/ directory on sys.path, and no absolute path into a
+particular checkout (a test must exercise the tree it sits in)."""
+
+import ast
+import glob
+import os
+
+TESTS = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(TESTS)
+
+
+def _path_into_repo(literal: str) -> bool:
+    """True for an absolute path that ends in a dir/file of this tree."""
+    if literal == REPO:
+        return True
+    if not literal.startswith("/"):
+        return False
+    parts = literal.strip("/").split("/")
+    return any(
+        os.path.exists(os.path.join(REPO, *parts[i:])) for i in range(len(parts) - 1)
+    )
+
+
+def _violations(path: str):
+    tree = ast.parse(open(path, encoding="utf-8").read(), path)
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr == "builder"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "SparkSession"
+        ):
+            yield node.lineno, "builds a SparkSession (use the conftest `spark` fixture)"
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "stop"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "spark"
+        ):
+            yield node.lineno, "stops the shared SparkSession"
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("insert", "append")
+            and ast.unparse(node.func.value) == "sys.path"
+            and any(
+                isinstance(c, ast.Constant) and c.value == "jobs"
+                for c in ast.walk(node)
+            )
+        ):
+            yield node.lineno, "puts jobs/ on sys.path (conftest does)"
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and _path_into_repo(node.value)
+        ):
+            yield node.lineno, f"names an absolute path into the checkout: {node.value!r}"
+
+
+def test_session_and_paths_are_set_up_in_conftest_only():
+    found = [
+        f"{os.path.basename(p)}:{line}: {why}"
+        for p in sorted(glob.glob(os.path.join(TESTS, "*.py")))
+        if os.path.basename(p) != "conftest.py"
+        for line, why in _violations(p)
+    ]
+    assert found == [], "\n".join(found)

@@ -8,21 +8,6 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("tokenize-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 TRAIN = [
     "the lower the newer the lowest level, the newest level.",
     "wider windows lower the newest lowest widest levels.",

@@ -17,21 +17,6 @@ RTL = "النص العربي هنا، مع فواصل، وكلمات كثيرة 
 COMBINING = "Zaz̩ółć gęślą jaźń, avec des accents, et encore des mots pour le score."
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("unicode-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 def _html(body: str) -> str:
     return (
         "<html><head><title>Ünïcode Tïtle | Site</title></head><body>"

@@ -10,21 +10,6 @@ pyspark = pytest.importorskip("pyspark")
 from nreadspark.urlutil import canonical_url  # noqa: E402
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("url-canonical-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 # (input, expected) -- the urlutil.find_base_url-style unit table
 CASES = [
     ("HTTP://Example.COM/a", "http://example.com/a"),

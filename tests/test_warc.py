@@ -16,21 +16,6 @@ from nreadspark.warc import (  # noqa: E402
 )
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("warc-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-    s.stop()
-
-
 PAGES = [
     (f"http://ex.com/p/{i}", f"<html><body><p>page {i} body</p></body></html>".encode(), "text/html")
     for i in range(4)
