@@ -362,6 +362,7 @@ def warc_records_from_ranges(
 
     def batches(iterator):
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         open_name, fh = None, None
 
@@ -427,22 +428,7 @@ def warc_records_from_ranges(
                             error=f"{type(exc).__name__}: {exc}"[:200],
                         )
 
-        arrow_schema = pa.schema(
-            [
-                pa.field("urlkey", pa.string()),
-                pa.field("url", pa.string()),
-                pa.field("filename", pa.string()),
-                pa.field("offset", pa.int64()),
-                pa.field("warc_type", pa.string()),
-                pa.field("target_uri", pa.string()),
-                pa.field("payload", pa.binary()),
-                pa.field("http_status", pa.int32()),
-                pa.field("http_headers", pa.list_(pa.string())),
-                pa.field("content_type", pa.string()),
-                pa.field("content_encoding", pa.string()),
-                pa.field("error", pa.string()),
-            ]
-        )
+        arrow_schema = to_arrow_schema(_RANGE_SCHEMA)
         # try/finally, not a trailing close: if Spark abandons the iterator
         # early (limit/take, task kill, downstream error) the generator gets
         # GeneratorExit instead of running to completion, and the open file

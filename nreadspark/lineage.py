@@ -77,18 +77,23 @@ def md5_bucket_col(n_buckets: int, doc_id_col: str = "doc_id"):
     ).cast("int")
 
 
-def completed_buckets(output_path: str) -> set[int]:
-    lineage_path = os.path.join(output_path, LINEAGE_DIR)
-    if not os.path.isdir(lineage_path):
-        return set()
+def _manifest_buckets(names) -> set[int]:
+    """Bucket numbers of the ``bucket=<n>.json`` manifests among ``names``."""
     done = set()
-    for name in os.listdir(lineage_path):
+    for name in names:
         if name.startswith("bucket=") and name.endswith(".json"):
             try:
                 done.add(int(name[len("bucket=") : -len(".json")]))
             except ValueError:
                 continue
     return done
+
+
+def completed_buckets(output_path: str) -> set[int]:
+    lineage_path = os.path.join(output_path, LINEAGE_DIR)
+    if not os.path.isdir(lineage_path):
+        return set()
+    return _manifest_buckets(os.listdir(lineage_path))
 
 
 def _is_local_path(path: str) -> bool:
@@ -112,15 +117,7 @@ def completed_buckets_fs(spark, output_path: str) -> set[int]:
     lineage = jvm.org.apache.hadoop.fs.Path(output_path + "/" + LINEAGE_DIR)
     if not fs.exists(lineage):
         return set()
-    done = set()
-    for status in fs.listStatus(lineage):
-        name = status.getPath().getName()
-        if name.startswith("bucket=") and name.endswith(".json"):
-            try:
-                done.add(int(name[len("bucket=") : -len(".json")]))
-            except ValueError:
-                continue
-    return done
+    return _manifest_buckets(status.getPath().getName() for status in fs.listStatus(lineage))
 
 
 def write_marker(output_path: str, name: str, payload: dict, spark=None) -> None:

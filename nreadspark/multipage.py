@@ -35,7 +35,7 @@ import re
 
 from .dom import inner_html
 from .kernel import Options, transcode
-from .spans import extract_spans
+from .spans import extract_spans, flatten_spans_text
 
 MAX_PAGES = 30  # NReadabilityWebTranscoder.cs:34
 PAGE_ID_PREFIX = "readability-page-"  # :35
@@ -58,10 +58,6 @@ def _page_result(html: str, url: str | None, opts: Options) -> dict:
         "first_p_inner_len": len(inner_html(first_p)) if first_p is not None else 0,
         "url": url,
     }
-
-
-def _flatten_text(spans) -> str:
-    return "".join(s["text"] or "" for s in spans if s["kind"] == "text")
 
 
 def _text_span(text: str) -> dict:
@@ -88,7 +84,7 @@ def merge_page_results(pages: list[dict]) -> dict:
     first = pages[0]
     out_spans: list[dict] = list(first["spans"])
     # accumulated text for the duplicate gate = contentDiv.Value (:257)
-    acc_parts = [_flatten_text(first["spans"])]
+    acc_parts = [flatten_spans_text(first["spans"])]
     appended_urls = [first["url"]]
     cur_page = 1
 
@@ -112,7 +108,7 @@ def merge_page_results(pages: list[dict]) -> dict:
         # article content, so the page's spans are appended unmodified
         out_spans.append(_text_span(PAGE_SEPARATOR_TEXT))
         out_spans.extend(page["spans"])
-        acc_parts.append(PAGE_SEPARATOR_TEXT + _flatten_text(page["spans"]))
+        acc_parts.append(PAGE_SEPARATOR_TEXT + flatten_spans_text(page["spans"]))
         appended_urls.append(page["url"])
 
     for i, span in enumerate(out_spans):
@@ -267,9 +263,6 @@ def resolve_chains(extracted, url_col: str = "url", max_pages: int = MAX_PAGES):
     return out
 
 
-PAGES_SCHEMA = None  # built lazily (needs pyspark types)
-
-
 def _pages_schema():
     from pyspark.sql.types import (
         ArrayType,
@@ -301,32 +294,14 @@ def extract_pages(df, url_col: str = "url", spans_col: str = "spans"):
     once, emitting article spans + next-page edge + first-paragraph probe."""
     import pyarrow as pa
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from .pipeline import html_from_spans_col
 
     schema = _pages_schema()
-    span = pa.struct(
-        [
-            pa.field("kind", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("media_ref", pa.string()),
-            pa.field("offset", pa.int32()),
-        ]
-    )
-    arrow_schema = pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("url", pa.string()),
-            pa.field("spans", pa.list_(span)),
-            pa.field("title", pa.string()),
-            pa.field("content_extracted", pa.bool_()),
-            pa.field("next_page_url", pa.string()),
-            pa.field("first_p_value", pa.string()),
-            pa.field("first_p_inner_len", pa.int32()),
-        ]
-    )
 
     def batches(iterator):
+        arrow_schema = to_arrow_schema(schema)
         opts = Options()
         for batch in iterator:
             rows = []
@@ -366,6 +341,7 @@ def extract_multipage(df, url_col: str = "url", spans_col: str = "spans"):
     """
     import pyarrow as pa
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import (
         ArrayType,
         BooleanType,
@@ -421,29 +397,8 @@ def extract_multipage(df, url_col: str = "url", spans_col: str = "spans"):
         ]
     )
 
-    arrow_schema = pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field(
-                "spans",
-                pa.list_(
-                    pa.struct(
-                        [
-                            pa.field("kind", pa.string()),
-                            pa.field("text", pa.string()),
-                            pa.field("media_ref", pa.string()),
-                            pa.field("offset", pa.int32()),
-                        ]
-                    )
-                ),
-            ),
-            pa.field("title", pa.string()),
-            pa.field("content_extracted", pa.bool_()),
-            pa.field("n_pages", pa.int32()),
-        ]
-    )
-
     def batches(iterator):
+        arrow_schema = to_arrow_schema(out_schema)
         for batch in iterator:
             rows = []
             for row in batch.to_pylist():

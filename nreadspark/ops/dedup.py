@@ -41,15 +41,6 @@ from pyspark.sql import DataFrame, functions as F
 # operators in the same session), and concurrent threads never see each
 # other's registries.
 _TLS = threading.local()
-# Every scope currently holding frames, across all threads (guarded by
-# _ALL_LOCK): the escape hatch for multi-threaded drivers where a worker
-# thread registered persists and exited without draining -- its frames
-# would otherwise be unreleasable from any other thread (thread-local
-# registries).  Registration is lazy (a scope is added when it first
-# receives a frame, identity-checked) and release_all_caches prunes
-# drained scopes, so thread churn cannot grow the registry unboundedly.
-_ALL_LOCK = threading.Lock()
-_ALL_SCOPES: list[list[DataFrame]] = []
 
 
 def _scope_stack() -> list[list[DataFrame]]:
@@ -62,26 +53,14 @@ def _scope_stack() -> list[list[DataFrame]]:
 
 def _persist(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> DataFrame:
     df = df.persist(level)
-    scope = _scope_stack()[-1]
-    with _ALL_LOCK:
-        # identity check, not `in`: empty lists compare EQUAL to each other
-        if not any(s is scope for s in _ALL_SCOPES):
-            _ALL_SCOPES.append(scope)
-    scope.append(df)
+    _scope_stack()[-1].append(df)
     return df
 
 
 def _drain(scope: list[DataFrame]) -> int:
     n = 0
-    while True:
-        # pop-with-catch, not check-then-pop: release_all_caches may drain
-        # a scope concurrently with its owner thread's cache_scope exit,
-        # and list.pop is atomic under the GIL while `while scope: pop()`
-        # races to IndexError
-        try:
-            df = scope.pop()
-        except IndexError:
-            break
+    while scope:
+        df = scope.pop()
         try:
             df.unpersist()
             n += 1
@@ -104,11 +83,6 @@ def cache_scope():
     finally:
         stack.pop()
         _drain(scope)
-        with _ALL_LOCK:
-            for i, s in enumerate(_ALL_SCOPES):
-                if s is scope:
-                    del _ALL_SCOPES[i]
-                    break
 
 
 def release_caches() -> int:
@@ -118,24 +92,6 @@ def release_caches() -> int:
     materialized (collected / written / counted); returns the number of
     frames released."""
     return _drain(_scope_stack()[-1])
-
-
-def release_all_caches() -> int:
-    """Drain EVERY live scope across all threads -- the teardown hook for
-    multi-threaded drivers (ThreadPoolExecutor job fan-out) where a worker
-    thread registered persists and exited without calling
-    :func:`release_caches`; thread-local scoping makes those frames
-    invisible to other threads' release calls.  Safe to call whenever no
-    operator results are still pending materialization anywhere.  Drained
-    scopes are pruned from the registry (a later persist re-registers
-    them), bounding it by the number of scopes currently holding
-    frames."""
-    with _ALL_LOCK:
-        scopes = list(_ALL_SCOPES)
-    n = sum(_drain(s) for s in scopes)
-    with _ALL_LOCK:
-        _ALL_SCOPES[:] = [s for s in _ALL_SCOPES if s]
-    return n
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:
@@ -309,17 +265,15 @@ def minhash_lsh_candidates(
     n_bands: int = _N_BANDS,
     hash_fn: str = "xxhash64",
     max_bucket_size: int | None = 256,
-    persist_bands: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding: docs sharing any band
     bucket.  Returns (doc_id_a, doc_id_b) with a < b, distinct.
 
-    ``persist_bands`` (default True) materializes the banded-signature frame
-    once (MEMORY_AND_DISK): the band self-join consumes it from BOTH sides
-    and the hot-bucket guard counts it a third time, so without persistence
-    the expensive signature pass (shingle hashing + n_hashes min-reductions)
-    runs ~3x.  Measured at sf0.1: candidates 3.3s -> ~1.3s.  Pass False to
-    trade CPU for storage on corpora too large to spill.
+    The banded-signature frame is persisted once (MEMORY_AND_DISK): the
+    band self-join consumes it from BOTH sides and the hot-bucket guard
+    counts it a third time, so without persistence the expensive signature
+    pass (shingle hashing + n_hashes min-reductions) runs ~3x.  Measured at
+    sf0.1: candidates 3.3s -> ~1.3s.
 
     Skew guard: a boilerplate-heavy web corpus puts millions of
     near-identical docs into ONE band bucket, and a naive self-join makes
@@ -334,9 +288,7 @@ def minhash_lsh_candidates(
     restore exact all-pairs banding when k^2 blowup is acceptable.  Use
     ``lsh_bucket_overflow`` for the monitoring metric.
     """
-    banded = _banded_signatures(df, text_col, k, n_hashes, n_bands, hash_fn)
-    if persist_bands:
-        banded = _persist(banded)
+    banded = _persist(_banded_signatures(df, text_col, k, n_hashes, n_bands, hash_fn))
 
     if max_bucket_size is not None:
         # per-bucket size + canonical doc: partial-aggregated (map-side
@@ -392,18 +344,14 @@ def lsh_bucket_overflow(
 
 def verify_jaccard(
     df: DataFrame, candidates: DataFrame, text_col: str = "text", threshold: float = 0.7,
-    persist_tokens: bool = True,
 ) -> DataFrame:
     """Exact token-set Jaccard for candidate pairs (JVM set functions).
 
-    The token-set frame is consumed by BOTH join sides; ``persist_tokens``
-    (default True) materializes it once instead of re-tokenizing the corpus
-    per side."""
-    toks = tokenize(df, text_col).select(
+    The token-set frame is consumed by BOTH join sides, so it is persisted
+    once instead of re-tokenizing the corpus per side."""
+    toks = _persist(tokenize(df, text_col).select(
         "doc_id", F.array_distinct("__tokens").alias("token_set")
-    )
-    if persist_tokens:
-        toks = _persist(toks)
+    ))
     a = toks.select(F.col("doc_id").alias("doc_id_a"), F.col("token_set").alias("set_a"))
     b = toks.select(F.col("doc_id").alias("doc_id_b"), F.col("token_set").alias("set_b"))
     joined = candidates.join(a, "doc_id_a").join(b, "doc_id_b")
@@ -456,56 +404,23 @@ def simhash(
     text_col: str = "text",
     bits: int = 64,
     hash_fn: str = "xxhash64",
-    engine: str = "arrow",
 ) -> DataFrame:
     """SimHash over tokens: per bit, the sign of the sum of ±1 contributions
     decided by that bit of hash(token).
 
     Token hashing is one JVM pass (xxhash64 default; 'md5' = 60-bit md5
     prefix, SQL-replicable for oracles -- use bits<=60 with it).  The bit
-    math then runs either as
-
-    * ``engine='arrow'`` (default): ONE vectorized numpy pass inside
-      ``mapInArrow`` -- (tokens x bits) sign matrix + segment-sum per doc.
-      The expression form below compiles a 64-aggregate Catalyst tree whose
-      whole-stage-codegen unit takes seconds to JIT and rescans the hash
-      array per bit; the GEMM-shaped kernel replaces that with Arrow batch
-      transfer + O(tokens*bits) SIMD work.
-    * ``engine='expr'``: the all-JVM expression form (no Python workers
-      needed; useful where Arrow transfer is undesirable).
+    math then runs as ONE vectorized numpy pass inside ``mapInArrow`` --
+    (tokens x bits) sign matrix + segment-sum per doc.  An all-JVM
+    expression form compiles a 64-aggregate Catalyst tree whose
+    whole-stage-codegen unit takes seconds to JIT and rescans the hash
+    array per bit; on 5000 sf0.1 docs (``local[4]``) it took 3.17 s
+    against 0.58 s here.
     """
-    toks = _simhash_token_hashes(df, text_col, hash_fn)
-    if engine == "arrow":
-        return _simhash_arrow(toks, bits)
-
-    def bit_merge(i: int):
-        def merge(acc, h):
-            return acc + F.when(
-                F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-
-        return merge
-
-    bit_cols = []
-    for i in range(bits):
-        contrib = F.aggregate("__h", F.lit(0).cast("bigint"), bit_merge(i))
-        # shiftleft wraps bit 63 into the sign bit instead of overflowing
-        bit_cols.append(
-            F.when(contrib > 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    value = bit_cols[0]
-    for c in bit_cols[1:]:
-        value = value + c
-    return toks.select("doc_id", value.alias("simhash"))
-
-
-def _simhash_arrow(toks: DataFrame, bits: int) -> DataFrame:
-    """Vectorized SimHash bit math over pre-hashed tokens."""
     import pyarrow as pa
     from pyspark.sql.types import LongType, StructField, StructType
 
+    toks = _simhash_token_hashes(df, text_col, hash_fn)
     id_field = toks.schema["doc_id"]
     out_schema = StructType(
         [StructField("doc_id", id_field.dataType), StructField("simhash", LongType())]
@@ -523,9 +438,9 @@ def _simhash_arrow(toks: DataFrame, bits: int) -> DataFrame:
             if n == 0:
                 continue
             lengths_arr = pc.list_value_length(harr)
-            # NULL text -> NULL token list: those rows get a NULL simhash
-            # (the expression engine's behavior); list_flatten skips null
-            # lists, so `values` stays aligned with the non-null segments
+            # NULL text -> NULL token list: those rows get a NULL simhash;
+            # list_flatten skips null lists, so `values` stays aligned with
+            # the non-null segments
             null_mask = pc.is_null(lengths_arr).to_numpy(zero_copy_only=False)
             lengths = (
                 pc.fill_null(lengths_arr, 0)
@@ -569,7 +484,6 @@ def embedding_near_duplicates_lsh(
     vec_col: str = "embedding",
     planes: str = "random",
     max_bucket_size: int = 4096,
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """The 100 TB embedding near-dup route: LSH banding prunes candidates,
     then each bucket is verified with ONE numpy float64 GEMM.
@@ -612,15 +526,12 @@ def embedding_near_duplicates_lsh(
         emb_df.schema[id_col].dataType, (LongType, IntegerType, ShortType, ByteType)
     )
 
-    sigs = lsh_signatures(emb_df, dim, n_bits, n_bands, id_col, vec_col, planes)
-    if persist_signatures:
-        # the pre-split consumes sigs from several subplans (bucket counts,
-        # the anti-joined normal path, and -- when hot buckets exist -- the
-        # canonical-vector and star-member joins); without persistence each
-        # consumer would re-run the signature GEMM over the corpus.  One
-        # spill-to-disk materialization beats 2-4 recomputes; pass False to
-        # trade CPU for storage on corpora too large to spill.
-        sigs = _persist(sigs)
+    # the pre-split consumes sigs from several subplans (bucket counts, the
+    # anti-joined normal path, and -- when hot buckets exist -- the
+    # canonical-vector and star-member joins); without persistence each
+    # consumer would re-run the signature GEMM over the corpus.  One
+    # spill-to-disk materialization beats 2-4 recomputes.
+    sigs = _persist(lsh_signatures(emb_df, dim, n_bits, n_bands, id_col, vec_col, planes))
     return _verify_bucketed_pairs(sigs, threshold, max_bucket_size, numeric_ids)
 
 
@@ -769,7 +680,6 @@ def embedding_near_duplicates(
     vec_col: str = "embedding",
     block_size: int = 512,
     n_blocks: int | None = None,
-    persist_blocks: bool = True,
 ) -> DataFrame:
     """All-pairs cosine near-dup via blocked matrix multiply.
 
@@ -803,13 +713,11 @@ def embedding_near_duplicates(
             F.collect_list("vec").alias("vecs"),
         )
     )
-    if persist_blocks:
-        # both tile sides consume the packed frame: materialize the
-        # block-pack (scan + collect_list) once instead of twice.  The cache
-        # is session-scoped (Spark pins it until the session ends or the
-        # LRU evicts; release_caches() frees it explicitly) -- pass False
-        # on frames too large to spill.
-        packed = _persist(packed)
+    # both tile sides consume the packed frame: materialize the block-pack
+    # (scan + collect_list) once instead of twice.  The cache is
+    # session-scoped (Spark pins it until the session ends or the LRU
+    # evicts; release_caches() frees it explicitly).
+    packed = _persist(packed)
     a = packed.select(
         F.col("blk").alias("blk_a"), F.col("ids").alias("ids_a"), F.col("vecs").alias("vecs_a")
     )
@@ -1039,9 +947,8 @@ def line_boilerplate_set_size(
 ) -> DataFrame:
     """Monitoring metric for :func:`line_dedup`'s broadcast assumption: ONE
     row ``(boilerplate_set_size bigint)`` = number of distinct lines repeated
-    across >= min_repeats documents.  Run it (or let line_dedup's ``auto``
-    mode measure it) before trusting the broadcast membership join on a new
-    corpus."""
+    across >= min_repeats documents; line_dedup measures the same set
+    before choosing between the broadcast and the shuffle membership join."""
     lines = _line_explode(df, text_col, delimiter)
     boiler = (
         lines.groupBy(F.xxhash64("line").alias("line_key"))
@@ -1057,7 +964,6 @@ def line_dedup(
     delimiter: str = ",",
     min_repeats: int = 2,
     exact: bool = False,
-    broadcast: bool | str = "auto",
     broadcast_limit: int = 4_000_000,
     keep_all_docs: bool = False,
 ) -> DataFrame:
@@ -1090,11 +996,10 @@ def line_dedup(
 
     Broadcast fallback: a pathological corpus (min_repeats=1, or a mirror
     farm where most lines repeat) can make the membership set too large to
-    broadcast.  ``broadcast='auto'`` (default) persists the set, measures it
-    (the measured size is the ``boilerplate_set_size`` metric -- see
-    :func:`line_boilerplate_set_size`), and degrades to a shuffle join when
-    it exceeds ``broadcast_limit`` keys; ``True``/``False`` force either
-    path without the measuring action.
+    broadcast.  The set is therefore persisted and measured (the measured
+    size is the ``boilerplate_set_size`` metric -- see
+    :func:`line_boilerplate_set_size`), and the join degrades to a shuffle
+    join when it exceeds ``broadcast_limit`` keys.
     """
     lines = _line_explode(df, text_col, delimiter)
 
@@ -1109,15 +1014,11 @@ def line_dedup(
         .select("line_key")
     )
 
-    use_broadcast = broadcast
-    if broadcast == "auto":
-        # measure-then-choose: the set is persisted so the measuring count
-        # and the membership join share one corpus aggregation pass
-        # (registered: release_caches() frees it after the caller
-        # materializes the result)
-        boiler = _persist(boiler)
-        use_broadcast = boiler.count() <= broadcast_limit
-    right = F.broadcast(boiler) if use_broadcast else boiler
+    # measure-then-choose: the set is persisted so the measuring count and
+    # the membership join share one corpus aggregation pass (registered:
+    # release_caches() frees it after the caller materializes the result)
+    boiler = _persist(boiler)
+    right = F.broadcast(boiler) if boiler.count() <= broadcast_limit else boiler
 
     flagged = lines.join(right, key_of("line") == boiler["line_key"], "left")
 
@@ -1252,7 +1153,6 @@ def dedup_lines_within_doc(
 
 def ngram_duplicate_stats(
     df: DataFrame, text_col: str = "text", n: int = 8, exact: bool = False,
-    persist_ngrams: bool = True,
 ) -> DataFrame:
     """Corpus-wide exact-substring duplication signal (Lee et al. 2021,
     'Deduplicating Training Data Makes Language Models Better'): for each
@@ -1282,12 +1182,12 @@ def ngram_duplicate_stats(
         gram_key = lambda g: g  # noqa: E731
     else:
         gram_key = F.xxhash64  # fixed-width shuffle keys
-    exploded = _exploded_grams(df.select("doc_id", text_col), text_col, n, gram_key, "h")
-    if persist_ngrams:
-        # the exploded n-gram frame feeds the doc-frequency aggregation AND
-        # the join back -- materialize once instead of rebuilding the
-        # (slice + concat_ws + hash) n-gram construction per consumer
-        exploded = _persist(exploded)
+    # the exploded n-gram frame feeds the doc-frequency aggregation AND the
+    # join back -- materialize once instead of rebuilding the (slice +
+    # concat_ws + hash) n-gram construction per consumer
+    exploded = _persist(
+        _exploded_grams(df.select("doc_id", text_col), text_col, n, gram_key, "h")
+    )
 
     docfreq = exploded.groupBy("h").agg(F.count_distinct("doc_id").alias("nd"))
     return (
@@ -1860,7 +1760,6 @@ def minhash_near_dups_against_reference(
     hash_fn: str = "xxhash64",
     threshold: float = 0.7,
     max_ref_bucket_size: int | None = 256,
-    persist: bool = True,
 ) -> DataFrame:
     """(doc_id, ref_doc_id, jaccard): NEW-snapshot documents whose exact
     token-set Jaccard against some PREVIOUS-snapshot document clears
@@ -1895,13 +1794,11 @@ def minhash_near_dups_against_reference(
         F.col(ref_text_col or text_col).alias(text_col),
     )
     new_bands = _banded_signatures(corpus, text_col, k, n_hashes, n_bands, hash_fn)
-    ref_bands = _banded_signatures(
+    # ref bands feed the hot-bucket count AND the join; new bands feed the
+    # join once but the signature pass is the expensive part
+    ref_bands = _persist(_banded_signatures(
         ref.withColumnRenamed("ref_doc_id", "doc_id"), text_col, k, n_hashes, n_bands, hash_fn
-    ).withColumnRenamed("doc_id", "ref_doc_id")
-    if persist:
-        # ref bands feed the hot-bucket count AND the join; new bands feed
-        # the join once but the signature pass is the expensive part
-        ref_bands = _persist(ref_bands)
+    ).withColumnRenamed("doc_id", "ref_doc_id"))
 
     if max_ref_bucket_size is not None:
         counts = ref_bands.groupBy("band", "band_key").agg(

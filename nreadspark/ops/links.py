@@ -129,7 +129,6 @@ def domain_pagerank(
     edges: DataFrame,
     n_iter: int = 3,
     damping_pct: int = 85,
-    checkpoint: bool = True,
     unique_edges: bool = False,
 ) -> DataFrame:
     """(domain, rank_scaled): fixed-point PageRank over the domain graph.
@@ -148,6 +147,11 @@ def domain_pagerank(
     Edge multiplicity is intentionally IGNORED (one domain's 10^6 footer
     links to a partner count once): the graph is treated as simple; weight
     or pre-filter the edge frame upstream to change that.
+    ``unique_edges=True`` promises that the frame already holds each
+    (src, dst) pair once and skips that de-duplication; if the input does
+    repeat a pair, every copy then counts in the source's out-degree and
+    adds its own contribution to the destination, so the ranks become
+    those of the multigraph.
 
     Shape: per iteration ONE join (ranks x edges on src) + ONE agg on
     dst + a left join back onto the node set -- the same bulk-shuffle
@@ -172,17 +176,15 @@ def domain_pagerank(
     # checkpointed frame: deriving both from the raw plan would recompute
     # the (possibly corpus-scan-expensive) upstream twice -- at crawl
     # scale that is two full passes over the HTML instead of one.
-    if checkpoint:
-        simple = simple.localCheckpoint(eager=True)
+    simple = simple.localCheckpoint(eager=True)
     nodes = (
         simple.select(F.col("src_domain").alias("domain"))
         .unionByName(simple.select(F.col("dst_domain").alias("domain")))
         .distinct()
-    )
-    if checkpoint:
         # lazy: first materialization computes it once off the simple
         # checkpoint and caches the blocks; no standalone eager job
-        nodes = nodes.localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)
+    )
     # attach the out-degree to the edge frame ONCE (r9, opt guide §2.4):
     # it is loop-invariant, and joining it per iteration cost one extra
     # shuffle round every pass (3 joins/iter -> 2 joins/iter)
@@ -191,9 +193,7 @@ def domain_pagerank(
             F.count("*").alias("__outdeg")
         ),
         simple["src_domain"] == F.col("__deg_src"),
-    ).select("src_domain", "dst_domain", "__outdeg")
-    if checkpoint:
-        edges_deg = edges_deg.localCheckpoint(eager=False)
+    ).select("src_domain", "dst_domain", "__outdeg").localCheckpoint(eager=False)
     base = (100 - damping_pct) * PAGERANK_SCALE // 100
     ranks = nodes.withColumn("rank_scaled", F.lit(PAGERANK_SCALE))
     for _ in range(n_iter):
@@ -217,11 +217,10 @@ def domain_pagerank(
                 + F.expr(f"(coalesce(__s, 0L) div 100) * {damping_pct}")
             ).alias("rank_scaled"),
         )
-        if checkpoint:
-            # lazy: lineage still truncates at each round's checkpoint, but
-            # the whole fixed-iteration loop materializes in the consumer's
-            # single action instead of one eager job per round
-            ranks = ranks.localCheckpoint(eager=False)
+        # lazy: lineage still truncates at each round's checkpoint, but the
+        # whole fixed-iteration loop materializes in the consumer's single
+        # action instead of one eager job per round
+        ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 

@@ -557,6 +557,7 @@ def extract_pdf(df, pdf_col: str = "pdf"):
     rule, pipeline.py)."""
     import pyarrow as pa
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import (
         ArrayType,
         BooleanType,
@@ -569,7 +570,6 @@ def extract_pdf(df, pdf_col: str = "pdf"):
     # the engine-wide span model, shared with the HTML pipeline so unions
     # across tiers (e.g. the mixed_pipeline query) can never diverge
     from .pipeline import SPAN_TYPE
-    from .spans import arrow_span_struct
 
     out_type = StructType(
         [
@@ -581,19 +581,10 @@ def extract_pdf(df, pdf_col: str = "pdf"):
             StructField("error", StringType()),
         ]
     )
-    pa_span = arrow_span_struct()
-    schema = pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("spans", pa.list_(pa_span)),
-            pa.field("title", pa.string()),
-            pa.field("content_extracted", pa.bool_()),
-            pa.field("n_pages", pa.int32()),
-            pa.field("error", pa.string()),
-        ]
-    )
 
     def batches(it):
+        schema = to_arrow_schema(out_type)
+        pa_span = schema.field("spans").type.value_type
         for batch in it:
             names = batch.schema.names
             ids = batch.column(names.index("doc_id"))

@@ -90,13 +90,11 @@ def html_from_spans_col(spans_col: str = "spans"):
     return F.expr(_HTML_FROM_SPANS_SQL.format(spans=spans_col))
 
 
-def repartition_for_extraction(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Uniform deterministic spread on xxhash64(doc_id).  Use ~4x the core
-    count so the mega-doc tail averages out across task waves instead of
+def repartition_for_extraction(df: DataFrame) -> DataFrame:
+    """Uniform deterministic spread on xxhash64(doc_id) over ~4x the core
+    count, so the mega-doc tail averages out across task waves instead of
     serializing behind one straggler."""
-    if num_partitions is None:
-        sc = df.sparkSession.sparkContext
-        num_partitions = max(sc.defaultParallelism * 4, 8)
+    num_partitions = max(df.sparkSession.sparkContext.defaultParallelism * 4, 8)
     return df.repartition(num_partitions, F.xxhash64("doc_id"))
 
 
@@ -277,7 +275,6 @@ def extract(
     url_col: str | None = None,
     spans_col: str = "spans",
     repartition: bool = False,
-    num_partitions: int | None = None,
     max_doc_bytes: int | None = None,
 ) -> DataFrame:
     """Extract main content for every document of an interleaved-spans table.
@@ -303,7 +300,7 @@ def extract(
         cols.append(F.col(url_col).alias("__url"))
     prepared = df.select(*cols)
     if repartition:
-        prepared = repartition_for_extraction(prepared, num_partitions)
+        prepared = repartition_for_extraction(prepared)
     kernel = lambda it: _extract_batches(it, max_doc_bytes)  # noqa: E731
     return prepared.mapInArrow(kernel, OUTPUT_SCHEMA)
 

@@ -132,6 +132,7 @@ def transcode_to_html_column(df, html_col: str = "html", url_col: str | None = N
     (pipeline.extract) is the production path."""
     import pyarrow as pa
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StringType, StructField, StructType
 
     cols = [F.col("doc_id"), F.col(html_col).alias("__html")]
@@ -143,6 +144,7 @@ def transcode_to_html_column(df, html_col: str = "html", url_col: str | None = N
     )
 
     def batches(iterator):
+        schema = to_arrow_schema(out_schema)
         for batch in iterator:
             names = batch.schema.names
             htmls = batch.column(names.index("__html")).to_pylist()
@@ -159,9 +161,7 @@ def transcode_to_html_column(df, html_col: str = "html", url_col: str | None = N
                     out.append(None)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(names.index("doc_id")), pa.array(out, pa.string())],
-                schema=pa.schema(
-                    [pa.field("doc_id", pa.string()), pa.field("debug_html", pa.string())]
-                ),
+                schema=schema,
             )
 
     return df.select(*cols).mapInArrow(batches, out_schema)

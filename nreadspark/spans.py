@@ -31,19 +31,15 @@ __all__ = ["spans_to_html", "extract_spans", "flatten_spans_text", "arrow_span_s
 
 
 def arrow_span_struct():
-    """The engine-wide span struct as a pyarrow type for Arrow-side
-    builders outside the extraction kernel (pdf, ...), twinned with
-    pipeline.SPAN_TYPE, from which the kernel derives its own."""
-    import pyarrow as pa
+    """The engine-wide span struct as a pyarrow type, derived from
+    pipeline.SPAN_TYPE, for code that builds span columns outside a Spark
+    kernel (e.g. writing span-table inputs with pyarrow).  Kernels derive
+    theirs from their own Spark output schema."""
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    return pa.struct(
-        [
-            pa.field("kind", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("media_ref", pa.string()),
-            pa.field("offset", pa.int32()),
-        ]
-    )
+    from .pipeline import SPAN_TYPE
+
+    return to_arrow_type(SPAN_TYPE)
 
 _MEDIA_TAGS = ("embed", "object", "iframe")
 

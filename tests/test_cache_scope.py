@@ -100,30 +100,6 @@ def test_curate_internal_releases_do_not_drain_caller_cache(spark, tmp_path):
     assert release_caches() == 1
 
 
-def test_release_all_caches_reaches_other_threads_scopes(spark):
-    """A worker thread that persists and exits without draining leaves its
-    frames invisible to other threads' release_caches(); the
-    release_all_caches() teardown hook must still free them."""
-    import threading
-
-    from nreadspark.ops.dedup import _persist, release_all_caches, release_caches
-
-    leaked = {}
-
-    def worker():
-        df = _persist(spark.range(60))
-        df.count()
-        leaked["df"] = df  # exits WITHOUT releasing
-
-    t = threading.Thread(target=worker)
-    t.start()
-    t.join(timeout=30)
-    assert _is_cached(leaked["df"])
-    assert release_caches() == 0  # invisible to this thread's scope
-    assert release_all_caches() >= 1
-    assert not _is_cached(leaked["df"])
-
-
 def test_colmemo_memoizes_and_evicts(spark):
     """memo_cols returns the SAME Column object for a key within one
     SparkContext and rebuilds after the app id changes (stale py4j refs

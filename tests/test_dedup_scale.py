@@ -72,12 +72,21 @@ def test_star_guard_keeps_planted_near_dups(spark):
     assert verified.count() == 499
 
 
+def _simhash_reference(hashes, bits):
+    """Plain-Python SimHash of one doc's signed 64-bit token hashes."""
+    value = 0
+    for i in range(bits):
+        if sum(1 if (h >> i) & 1 else -1 for h in hashes) > 0:
+            value |= 1 << i
+    return value - (1 << 64) if value >= 1 << 63 else value
+
+
 def test_simhash_arrow_matches_expr(spark):
-    """The vectorized Arrow bit kernel and the all-JVM expression form must
-    produce identical fingerprints (both hash families, incl. bit 63)."""
+    """The vectorized Arrow bit kernel must equal a plain-Python bit loop
+    over the same JVM token hashes (both hash families, incl. bit 63)."""
     from pyspark.sql import functions as F
 
-    from nreadspark.ops.dedup import simhash
+    from nreadspark.ops.dedup import _simhash_token_hashes, simhash
 
     corpus = spark.range(64).select(
         F.col("id").alias("doc_id"),
@@ -89,9 +98,14 @@ def test_simhash_arrow_matches_expr(spark):
         ).alias("text"),
     )
     for bits, hash_fn in ((64, "xxhash64"), (60, "md5")):
-        a = dict(simhash(corpus, bits=bits, hash_fn=hash_fn, engine="arrow").collect())
-        e = dict(simhash(corpus, bits=bits, hash_fn=hash_fn, engine="expr").collect())
-        assert a == e, f"engine mismatch for bits={bits}, hash_fn={hash_fn}"
+        got = dict(simhash(corpus, bits=bits, hash_fn=hash_fn).collect())
+        ref = {
+            r["doc_id"]: _simhash_reference(r["__h"], bits)
+            for r in _simhash_token_hashes(corpus, "text", hash_fn).collect()
+        }
+        assert got == ref, f"mismatch for bits={bits}, hash_fn={hash_fn}"
+        if bits == 64:
+            assert any(v < 0 for v in ref.values())  # bit 63 is exercised
 
 
 def test_embedding_lsh_finds_planted_near_dups(spark):
@@ -190,20 +204,19 @@ def test_line_dedup_fallback_exact_and_keep_all_docs(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
 
-    base = {tuple(r) for r in line_dedup(df, broadcast=True).collect()}
+    base = {tuple(r) for r in line_dedup(df).collect()}
     # exact mode (string join keys) and the shuffle fallback must agree
     assert {tuple(r) for r in line_dedup(df, exact=True).collect()} == base
-    assert {tuple(r) for r in line_dedup(df, broadcast=False).collect()} == base
-    # auto mode with a zero limit is forced onto the fallback path -- the
-    # membership join must not carry a broadcast hint, and results agree
-    auto = line_dedup(df, broadcast="auto", broadcast_limit=0)
-    assert "ResolvedHint" not in auto._jdf.queryExecution().analyzed().toString()
-    assert {tuple(r) for r in auto.collect()} == base
+    # a zero limit forces the fallback path -- the membership join must not
+    # carry a broadcast hint, and results agree
+    shuffled = line_dedup(df, broadcast_limit=0)
+    assert "ResolvedHint" not in shuffled._jdf.queryExecution().analyzed().toString()
+    assert {tuple(r) for r in shuffled.collect()} == base
 
     # worst case per the guard's purpose: min_repeats=1 makes EVERY line
     # boilerplate; the fallback path must still complete correctly
     worst = {r["doc_id"]: r for r in line_dedup(
-        df, min_repeats=1, broadcast="auto", broadcast_limit=0).collect()}
+        df, min_repeats=1, broadcast_limit=0).collect()}
     assert worst["a"]["clean_text"] == "" and worst["a"]["n_removed"] == 3
 
     # metric: 1 boilerplate line at min_repeats=2, 6 distinct lines at 1

@@ -1,6 +1,7 @@
 """The suite's shared set-up lives in conftest.py only: one SparkSession for
 the whole run, the jobs/ directory on sys.path, and no absolute path into a
-particular checkout (a test must exercise the tree it sits in)."""
+particular checkout (a test must exercise the tree it sits in).  Library
+kernels state their Arrow output schema once, as a Spark StructType."""
 
 import ast
 import glob
@@ -66,4 +67,20 @@ def test_session_and_paths_are_set_up_in_conftest_only():
         if os.path.basename(p) != "conftest.py"
         for line, why in _violations(p)
     ]
+    assert found == [], "\n".join(found)
+
+
+def test_library_derives_arrow_schemas_from_spark_schemas():
+    """A hand-written ``pa.schema(...)`` is a second copy of a kernel's
+    Spark output schema that can drift from it; kernels derive theirs with
+    ``pyspark.sql.pandas.types.to_arrow_schema``."""
+    found = []
+    for path in sorted(glob.glob(os.path.join(REPO, "nreadspark", "**", "*.py"), recursive=True)):
+        tree = ast.parse(open(path, encoding="utf-8").read(), path)
+        found += [
+            f"{os.path.relpath(path, REPO)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and ast.unparse(node.func) in ("pa.schema", "pyarrow.schema")
+        ]
     assert found == [], "\n".join(found)
