@@ -2121,7 +2121,7 @@ def _q_dedup_image_survivors(spark, sf_dir):
     )
     # eager localCheckpoint: hdf feeds BOTH the pair join and the node set;
     # without it the node-set branch re-runs the synth + PNG decode (two
-    # mapInPandas crossings -- measured as ~half this query's cost, the
+    # mapInArrow crossings -- measured as ~half this query's cost, the
     # most expensive in the battery).  connected_components checkpoints
     # the PAIRS, not this frame.  In production the hash table is a
     # materialized parquet artifact and this is a plain read.

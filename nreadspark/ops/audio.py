@@ -24,8 +24,9 @@ fingerprint table directly (``which='ehash'``) because any 64-bit hash
 packed as two int32-range halves speaks the same banded-hamming
 protocol.
 
-Scale shape: fingerprinting is ONE ``mapInPandas`` crossing (payload in,
-16 bytes of hash out, zero shuffles); pair generation is the shared
+Scale shape: fingerprinting is ONE ``mapInArrow`` crossing, the one every
+media kernel shares (``ops.multimodal._map_rows``: payload in, 16 bytes of
+hash out, zero shuffles); pair generation is the shared
 banded self-join (exact for hamming < n_bands by pigeonhole).
 
 The PCM parser is pure stdlib, per-payload error containment throughout;
@@ -38,7 +39,7 @@ from __future__ import annotations
 
 import struct
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -47,7 +48,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .images import GRID, _pack
+from .images import _NO_HASH, GRID, HASH_SCHEMA, _block_values, _gated_hashes, _pack
+from .multimodal import _map_rows, _synthesize_media, parse_image_header
 
 N_WINDOWS = GRID * GRID  # 64 windows -> 64-bit hashes, shared band math
 
@@ -99,15 +101,6 @@ def wav_pcm_samples(raw: bytes):
     if bits == 16 and len(data) % 2:
         raise ValueError("odd data length for 16-bit PCM")
     return rate, bits, data
-
-
-def wav_pcm8_samples(raw: bytes):
-    """(sample_rate, samples: bytes) -- the original 8-bit-only entry
-    point, kept for callers that specifically want PCM8 semantics."""
-    rate, bits, data = wav_pcm_samples(raw)
-    if bits != 8:
-        raise ValueError(f"unsupported WAV (bits={bits})")
-    return rate, data
 
 
 # MPEG-1/2 Layer III frame-header constants (public ISO 11172-3 / 13818-3
@@ -238,56 +231,28 @@ def audio_fingerprints(
     64 samples, ``capped`` past ``max_decode_samples`` (~1M samples = 17
     minutes of phone-quality mono; production swaps in a native
     decoder), ``undecodable`` otherwise -- NULL hashes, never failures."""
+    no_hash = (None,) * 4
 
-    def batches(iterator):
-        import pandas as pd
+    def row(ref, raw):
+        raw = raw or b""
+        try:
+            rate, bits, data = wav_pcm_samples(raw)
+        except ValueError:
+            # counted-not-dropped tier for the dominant compressed format:
+            # an MP3 frame header yields the sample rate (hashes stay NULL
+            # -- synthesis decoding is the native seam's job)
+            mp3 = parse_mp3_header(raw)
+            if mp3 is None:
+                return [(ref, None, None, *no_hash, "undecodable")]
+            return [(ref, None, mp3[0], *no_hash, "header:mp3")]
+        n = len(data) // (bits // 8)
+        if n < N_WINDOWS:
+            return [(ref, n, rate, *no_hash, "too-short")]
+        if max_decode_samples is not None and n > max_decode_samples:
+            return [(ref, n, rate, *no_hash, "capped")]
+        return [(ref, n, rate, *ehash64(data, bits), *ghash64(data, bits), f"pcm{bits}")]
 
-        for pdf in iterator:
-            out = {
-                "media_ref": pdf[ref_col],
-                "n_samples": [],
-                "sample_rate": [],
-                "ehash_hi": [],
-                "ehash_lo": [],
-                "ghash_hi": [],
-                "ghash_lo": [],
-                "decoder": [],
-            }
-            for p in pdf[payload_col].tolist():
-                raw = bytes(p) if p is not None else b""
-                n = rate = None
-                hashes = None
-                decoder = "undecodable"
-                try:
-                    rate, bits, data = wav_pcm_samples(raw)
-                    n = len(data) // (bits // 8)
-                    if n < N_WINDOWS:
-                        decoder = "too-short"
-                    elif max_decode_samples is not None and n > max_decode_samples:
-                        decoder = "capped"
-                    else:
-                        hashes = ehash64(data, bits) + ghash64(data, bits)
-                        decoder = f"pcm{bits}"
-                except ValueError:
-                    n = rate = None
-                    # counted-not-dropped tier for the dominant compressed
-                    # format: an MP3 frame header yields the sample rate
-                    # (hashes stay NULL -- synthesis decoding is the
-                    # native seam's job)
-                    mp3 = parse_mp3_header(raw)
-                    if mp3 is not None:
-                        rate = mp3[0]
-                        decoder = "header:mp3"
-                out["n_samples"].append(n)
-                out["sample_rate"].append(rate)
-                out["ehash_hi"].append(hashes[0] if hashes else None)
-                out["ehash_lo"].append(hashes[1] if hashes else None)
-                out["ghash_hi"].append(hashes[2] if hashes else None)
-                out["ghash_lo"].append(hashes[3] if hashes else None)
-                out["decoder"].append(decoder)
-            yield pd.DataFrame(out)
-
-    return media_df.select(ref_col, payload_col).mapInPandas(batches, AFP_SCHEMA)
+    return _map_rows(media_df, [ref_col, payload_col], AFP_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
@@ -347,36 +312,18 @@ def synthesize_wav_corpus(
     if bits not in (8, 16):
         raise ValueError("bits must be 8 or 16")
 
-    def batches(iterator):
-        import pandas as pd
+    def make(doc_id):
+        base = int(doc_id) % n_bases
+        vals = [synth_sample(base, t) for t in range(n_samples)]
+        if bits == 8:
+            raw = encode_pcm8_wav(bytes(vals))
+        else:
+            raw = encode_pcm16_wav([v * 257 - 32768 for v in vals])
+        if int(doc_id) % corrupt_mod == 7:
+            raw = raw[:10]
+        return f"aud://{doc_id}", raw
 
-        for pdf in iterator:
-            refs, payloads = [], []
-            for doc_id in pdf["doc_id"].tolist():
-                base = int(doc_id) % n_bases
-                vals = [synth_sample(base, t) for t in range(n_samples)]
-                if bits == 8:
-                    raw = encode_pcm8_wav(bytes(vals))
-                else:
-                    raw = encode_pcm16_wav([v * 257 - 32768 for v in vals])
-                if int(doc_id) % corrupt_mod == 7:
-                    raw = raw[:10]
-                refs.append(f"aud://{doc_id}")
-                payloads.append(raw)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "media_ref": refs, "payload": payloads}
-            )
-
-    from pyspark.sql.types import BinaryType
-
-    schema = StructType(
-        [
-            docs_df.schema["doc_id"],
-            StructField("media_ref", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-    return docs_df.select("doc_id").mapInPandas(batches, schema)
+    return _synthesize_media(docs_df, make)
 
 
 # ---------------------------------------------------------------------------
@@ -460,73 +407,25 @@ def audio_cover_hashes(
     against the standalone crawl image corpus (same ``HASH_SCHEMA``,
     same banded pair join).
 
-    Tiers: ``cover:jpeg`` / ``cover:png`` (decoded), ``capped`` /
-    ``too-small`` (header-gated), ``header:<codec>`` (recognized image,
-    undecodable pixels), ``no-cover`` (an ID3 tag without an APIC
-    frame), ``no-id3`` (payloads without an ID3v2 tag at all -- WAVs
-    land here), ``undecodable`` (an APIC whose picture no header parser
-    recognizes) -- every audio row is accounted for."""
-    from .images import HASH_SCHEMA, hash_six
-    from .jpeg import decode_jpeg_luma_milli
-    from .multimodal import parse_image_header, png_luma_milli
+    Tiers: ``cover:jpeg`` / ``cover:png`` / ``cover:gif`` (decoded),
+    ``capped`` / ``too-small`` (header-gated), ``header:<codec>``
+    (recognized image, undecodable pixels), ``no-cover`` (an ID3 tag
+    without an APIC frame), ``no-id3`` (payloads without an ID3v2 tag at
+    all -- WAVs land here), ``undecodable`` (an APIC whose picture no
+    header parser recognizes) -- every audio row is accounted for."""
+    def row(ref, raw):
+        raw = raw or b""
+        if raw[:3] != b"ID3":
+            return [(ref, None, None, *_NO_HASH, "no-id3")]
+        cover = extract_id3_cover(raw)
+        if cover is None:
+            return [(ref, None, None, *_NO_HASH, "no-cover")]
+        parsed = parse_image_header(cover)
+        if parsed is None:
+            return [(ref, None, None, *_NO_HASH, "undecodable")]
+        return [(ref, *_gated_hashes(cover, parsed, max_decode_pixels, "cover"))]
 
-    def batches(iterator):
-        import pandas as pd
-
-        for pdf in iterator:
-            out = {k: [] for k in (
-                "media_ref", "width", "height", "ahash_hi", "ahash_lo",
-                "ghash_hi", "ghash_lo", "phash_hi", "phash_lo", "decoder",
-            )}
-            for ref, p in zip(pdf[ref_col], pdf[payload_col].tolist()):
-                raw = bytes(p) if p is not None else b""
-                w = h = None
-                hashes = None
-                if raw[:3] != b"ID3":
-                    decoder = "no-id3"
-                else:
-                    cover = extract_id3_cover(raw)
-                    if cover is None:
-                        decoder = "no-cover"
-                    else:
-                        decoder = "undecodable"
-                        parsed = parse_image_header(cover)
-                        if parsed is not None:
-                            codec, w, h = parsed
-                            if (
-                                max_decode_pixels is not None
-                                and w * h > max_decode_pixels
-                            ):
-                                decoder = "capped"
-                            elif w < GRID or h < GRID:
-                                decoder = "too-small"
-                            else:
-                                dw = lumas = None
-                                try:
-                                    if codec == "jpeg":
-                                        dw, dh, lumas = decode_jpeg_luma_milli(
-                                            cover, max_pixels=max_decode_pixels
-                                        )
-                                    elif codec == "png":
-                                        dw, dh, lumas = png_luma_milli(cover)
-                                except ValueError:
-                                    dw = None
-                                if dw is not None:
-                                    hashes = hash_six(dw, dh, lumas)
-                                    w, h, decoder = dw, dh, f"cover:{codec}"
-                                else:
-                                    decoder = f"header:{codec}"
-                out["media_ref"].append(ref)
-                out["width"].append(w)
-                out["height"].append(h)
-                for i, c in enumerate(
-                    ("ahash_hi", "ahash_lo", "ghash_hi", "ghash_lo", "phash_hi", "phash_lo")
-                ):
-                    out[c].append(hashes[i] if hashes else None)
-                out["decoder"].append(decoder)
-            yield pd.DataFrame(out)
-
-    return media_df.select(ref_col, payload_col).mapInPandas(batches, HASH_SCHEMA)
+    return _map_rows(media_df, [ref_col, payload_col], HASH_SCHEMA, row)
 
 
 def synthesize_id3_corpus(
@@ -544,9 +443,6 @@ def synthesize_id3_corpus(
     and aud://X's cover hashes equal jpg://X's (cross-modality dedup).
     ``% nocover_mod == 7`` rows carry a tag WITHOUT an APIC (no-cover);
     ``% wav_mod == 11`` rows are plain WAVs (no-id3)."""
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
-
-    from .images import synth_pixel
     from .jpeg import encode_blocky_jpeg
 
     def ss(n: int) -> bytes:
@@ -554,47 +450,22 @@ def synthesize_id3_corpus(
 
     mp3_frame = bytes([0xFF, 0xFB, 0x90, 0x00]) + bytes(413)
 
-    def batches(iterator):
-        import pandas as pd
+    def make(doc_id):
+        d = int(doc_id)
+        if d % wav_mod == 11:
+            return f"aud://{d}", encode_pcm8_wav(bytes(128 for _ in range(64)))
+        ver = 4 if d % 2 else 3
+        if d % nocover_mod == 7:
+            body = bytes(16)  # padding only: tag, no APIC
+        else:
+            jpeg = encode_blocky_jpeg(GRID, GRID, _block_values(d % n_bases))
+            if d % 3 == 0:
+                desc = bytes([1]) + "cover".encode("utf-16-le") + b"\x00\x00"
+            else:
+                desc = bytes([0]) + b"cover\x00"
+            apic = desc[:1] + b"image/jpeg\x00" + bytes([3]) + desc[1:] + jpeg
+            fsize = ss(len(apic)) if ver >= 4 else len(apic).to_bytes(4, "big")
+            body = b"APIC" + fsize + b"\x00\x00" + apic + bytes(8)
+        return f"aud://{d}", b"ID3" + bytes([ver, 0, 0]) + ss(len(body)) + body + mp3_frame
 
-        for pdf in iterator:
-            refs, payloads = [], []
-            for doc_id in pdf["doc_id"].tolist():
-                d = int(doc_id)
-                if d % wav_mod == 11:
-                    raw = encode_pcm8_wav(bytes(128 for _ in range(64)))
-                else:
-                    ver = 4 if d % 2 else 3
-                    if d % nocover_mod == 7:
-                        body = bytes(16)  # padding only: tag, no APIC
-                    else:
-                        vals = [
-                            synth_pixel(d % n_bases, bx, by)
-                            for by in range(GRID)
-                            for bx in range(GRID)
-                        ]
-                        jpeg = encode_blocky_jpeg(GRID, GRID, vals)
-                        if d % 3 == 0:
-                            desc = bytes([1]) + "cover".encode("utf-16-le") + b"\x00\x00"
-                        else:
-                            desc = bytes([0]) + b"cover\x00"
-                        apic = (
-                            desc[:1] + b"image/jpeg\x00" + bytes([3]) + desc[1:] + jpeg
-                        )
-                        fsize = ss(len(apic)) if ver >= 4 else len(apic).to_bytes(4, "big")
-                        body = b"APIC" + fsize + b"\x00\x00" + apic + bytes(8)
-                    raw = b"ID3" + bytes([ver, 0, 0]) + ss(len(body)) + body + mp3_frame
-                refs.append(f"aud://{d}")
-                payloads.append(raw)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "media_ref": refs, "payload": payloads}
-            )
-
-    schema = StructType(
-        [
-            docs_df.schema["doc_id"],
-            StructField("media_ref", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-    return docs_df.select("doc_id").mapInPandas(batches, schema)
+    return _synthesize_media(docs_df, make)

@@ -36,8 +36,9 @@ TWO non-negative int32-range BIGINTs ``(hi, lo)`` -- bits 32..63 and
 0..31 -- sidestepping 64-bit sign traps in both engines; hamming distance
 is ``bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)``.
 
-Scale shape: hashing is ONE ``mapInPandas`` crossing (payload bytes cross
-Arrow once, 16 bytes of hash come back); pair generation bands the 64
+Scale shape: hashing is ONE ``mapInArrow`` crossing, the one every media
+kernel shares (``ops.multimodal._map_rows``: payload bytes cross Arrow
+once, 16 bytes of hash come back); pair generation bands the 64
 bits into four 16-bit keys and self-joins the (ref, band, key) frame --
 by pigeonhole any pair within hamming 3 agrees on at least one of 4
 bands, so the band join is EXACT for ``max_hamming <= 3``, never
@@ -63,9 +64,8 @@ import math
 import zlib
 import struct
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -73,7 +73,17 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .multimodal import png_luma_milli
+from .jpeg import decode_jpeg_luma_milli
+from .multimodal import (
+    _map_rows,
+    _synthesize_media,
+    encode_gif,
+    extract_mp4_keyframe,
+    gif_luma_milli,
+    parse_image_header,
+    parse_mp4_header,
+    png_luma_milli,
+)
 
 GRID = 8  # 8x8 blocks -> 64-bit hashes; fixed so band math stays exact
 
@@ -274,6 +284,60 @@ def hash_six(w: int, h: int, lumas: list[int]) -> tuple[int, int, int, int, int,
     )
 
 
+# The vendored pixel tiers, by the codec ``parse_image_header`` names: each
+# returns ``(w, h, lumas)`` at scale 1000 or raises ValueError.  JPEG and
+# GIF take the pixel cap THROUGH (defense in depth): the header gate reads
+# the first SOFn / the logical screen, and a corrupt payload could desync
+# that from the frame the decoder actually uses.
+_LUMA_DECODERS = {
+    "png": lambda raw, max_pixels: png_luma_milli(raw),
+    "jpeg": lambda raw, max_pixels: decode_jpeg_luma_milli(raw, max_pixels=max_pixels),
+    "gif": lambda raw, max_pixels: gif_luma_milli(raw, max_pixels=max_pixels),
+}
+
+_NO_HASH = (None,) * 6
+
+
+def _decode_luma(codec: str, raw: bytes, max_pixels: int | None):
+    """``(w, h, lumas)`` through the codec table, or None when the codec
+    has no vendored decoder or its decoder refuses the payload."""
+    decode = _LUMA_DECODERS.get(codec)
+    if decode is None:
+        return None
+    try:
+        return decode(raw, max_pixels)
+    except ValueError:
+        return None
+
+
+def _gated_hashes(raw: bytes, parsed, max_pixels: int | None, tier: str, native=None):
+    """``(width, height, <six hashes>, decoder)`` for an image payload whose
+    header parsed as ``(codec, w, h)`` -- the one header gate of every
+    perceptual-hash container: ``capped`` past ``max_pixels`` and
+    ``too-small`` under the 8x8 grid (header dims, nothing decoded), else
+    decoded -- by ``native`` first when given (tagged ``native:<codec>``),
+    then the codec table -- and hashed as ``<tier>:<codec>`` with the
+    DECODED dims; a recognized codec whose pixels do not decode keeps its
+    header dims as ``header:<codec>``."""
+    codec, w, h = parsed
+    if max_pixels is not None and w * h > max_pixels:
+        return (w, h, *_NO_HASH, "capped")
+    if w < GRID or h < GRID:
+        return (w, h, *_NO_HASH, "too-small")
+    decoded = None
+    if native is not None:
+        try:
+            decoded, tier = native(raw), "native"
+        except (ValueError, NotImplementedError):
+            pass
+    if decoded is None:
+        decoded = _decode_luma(codec, raw, max_pixels)
+    if decoded is None:
+        return (w, h, *_NO_HASH, f"header:{codec}")
+    dw, dh, lumas = decoded
+    return (dw, dh, *hash_six(dw, dh, lumas), f"{tier}:{codec}")
+
+
 def image_hashes(
     media_df: DataFrame,
     ref_col: str = "media_ref",
@@ -288,109 +352,26 @@ def image_hashes(
     Decode tiers per payload (mirrors ``extract_media_features``):
     ``native:<codec>`` when ``use_native`` and PIL imports (the
     production path -- C decoders, every format PIL knows);
-    ``pixels:png`` / ``pixels:jpeg`` via the vendored pure-Python
-    decoders (PNG unfilter; baseline-JPEG Huffman+IDCT in
-    ``ops.jpeg``); dimensions are read O(1) from the header FIRST, so
-    oversized payloads cost nothing and take ``capped``, images smaller
-    than the 8x8 grid take ``too-small``.  A payload whose codec is
-    recognized but whose pixels are not decodable by the active tiers
-    (GIF, progressive JPEG, ...) keeps its parsed dimensions with
-    ``header:<codec>`` -- counted and cap-able rather than lumped
+    ``pixels:png`` / ``pixels:jpeg`` / ``pixels:gif`` via the vendored
+    pure-Python decoders (PNG unfilter; baseline-JPEG Huffman+IDCT in
+    ``ops.jpeg``; GIF LZW); dimensions are read O(1) from the header
+    FIRST, so oversized payloads cost nothing and take ``capped``, images
+    smaller than the 8x8 grid take ``too-small``.  A payload whose codec
+    is recognized but whose pixels are not decodable by the active tiers
+    (WebP, a scanless progressive JPEG, ...) keeps its parsed dimensions
+    with ``header:<codec>`` -- counted and cap-able rather than lumped
     ``undecodable``.  Non-hashed rows keep NULL hash columns --
     containment, never a task failure."""
-    from .multimodal import parse_image_header
+    native = _native_luma_milli if use_native else None
 
-    def batches(iterator):
-        import pandas as pd
+    def row(ref, raw):
+        raw = raw or b""
+        parsed = parse_image_header(raw)
+        if parsed is None:
+            return [(ref, None, None, *_NO_HASH, "undecodable")]
+        return [(ref, *_gated_hashes(raw, parsed, max_decode_pixels, "pixels", native))]
 
-        native_luma = _native_luma_milli if use_native else None
-
-        for pdf in iterator:
-            out = {
-                "media_ref": pdf[ref_col],
-                "width": [],
-                "height": [],
-                "ahash_hi": [],
-                "ahash_lo": [],
-                "ghash_hi": [],
-                "ghash_lo": [],
-                "phash_hi": [],
-                "phash_lo": [],
-                "decoder": [],
-            }
-            for p in pdf[payload_col].tolist():
-                raw = bytes(p) if p is not None else b""
-                w = h = None
-                hashes = None
-                decoder = "undecodable"
-                parsed = parse_image_header(raw)
-                if parsed is not None:
-                    codec, w, h = parsed
-                    if (
-                        max_decode_pixels is not None
-                        and w * h > max_decode_pixels
-                    ):
-                        decoder = "capped"
-                    elif w < GRID or h < GRID:
-                        decoder = "too-small"
-                    else:
-                        dw = dh = lumas = None
-                        tier = None
-                        if native_luma is not None:
-                            try:
-                                dw, dh, lumas = native_luma(raw)
-                                tier = f"native:{codec}"
-                            except (ValueError, NotImplementedError):
-                                dw = None
-                        if dw is None and codec == "png":
-                            try:
-                                dw, dh, lumas = png_luma_milli(raw)
-                                tier = "pixels:png"
-                            except ValueError:
-                                dw = None
-                        if dw is None and codec == "jpeg":
-                            from .jpeg import decode_jpeg_luma_milli
-
-                            # cap passed THROUGH (defense in depth): the
-                            # header gate above reads the first SOFn, and
-                            # a corrupt payload could desync that from the
-                            # frame the decoder actually uses
-                            try:
-                                dw, dh, lumas = decode_jpeg_luma_milli(
-                                    raw, max_pixels=max_decode_pixels
-                                )
-                                tier = "pixels:jpeg"
-                            except ValueError:
-                                dw = None
-                        if dw is None and codec == "gif":
-                            from .multimodal import gif_luma_milli
-
-                            try:
-                                dw, dh, lumas = gif_luma_milli(
-                                    raw, max_pixels=max_decode_pixels
-                                )
-                                tier = "pixels:gif"
-                            except ValueError:
-                                dw = None
-                        if dw is not None:
-                            hashes = hash_six(dw, dh, lumas)
-                            w, h, decoder = dw, dh, tier
-                        else:
-                            # recognized container, undecodable pixels:
-                            # keep the parsed dims for counting/capping
-                            decoder = f"header:{codec}"
-                out["width"].append(w)
-                out["height"].append(h)
-                out["ahash_hi"].append(hashes[0] if hashes else None)
-                out["ahash_lo"].append(hashes[1] if hashes else None)
-                out["ghash_hi"].append(hashes[2] if hashes else None)
-                out["ghash_lo"].append(hashes[3] if hashes else None)
-                out["phash_hi"].append(hashes[4] if hashes else None)
-                out["phash_lo"].append(hashes[5] if hashes else None)
-                out["decoder"].append(decoder)
-            yield pd.DataFrame(out)
-
-    return media_df.select(ref_col, payload_col).mapInPandas(batches, HASH_SCHEMA)
+    return _map_rows(media_df, [ref_col, payload_col], HASH_SCHEMA, row)
 
 
 def _native_luma_milli(raw: bytes):
@@ -435,67 +416,24 @@ def video_keyframe_hashes(
     decoded -- width/height are the FRAME's), ``capped`` (frame found,
     dims over ``max_decode_pixels``), ``header:mp4`` (valid BMFF
     container, no decodable embedded JPEG -- H.264-family codecs land
-    here, counted-not-dropped), ``undecodable`` (not BMFF).  ONE Arrow
-    crossing, zero shuffles; all decode work is bounded by the O(1)
-    header gate + the per-box scan cap in
-    :func:`..multimodal.extract_mp4_keyframe`."""
-    from .jpeg import decode_jpeg_luma_milli
-    from .multimodal import extract_mp4_keyframe, parse_image_header, parse_mp4_header
+    here, counted-not-dropped, as do frames under the 8x8 grid; NULL
+    dims), ``undecodable`` (not BMFF).  ONE Arrow crossing, zero
+    shuffles; all decode work is bounded by the O(1) header gate + the
+    per-box scan cap in :func:`..multimodal.extract_mp4_keyframe`."""
 
-    def batches(iterator):
-        import pandas as pd
+    def row(ref, raw):
+        raw = raw or b""
+        if parse_mp4_header(raw) is None:
+            return [(ref, None, None, *_NO_HASH, "undecodable")]
+        kf = extract_mp4_keyframe(raw)
+        parsed = parse_image_header(kf) if kf is not None else None
+        if parsed is not None and parsed[0] == "jpeg":
+            out = _gated_hashes(kf, parsed, max_decode_pixels, "keyframe")
+            if out[-1] in ("capped", "keyframe:jpeg"):
+                return [(ref, *out)]
+        return [(ref, None, None, *_NO_HASH, "header:mp4")]
 
-        for pdf in iterator:
-            out = {
-                "media_ref": pdf[ref_col],
-                "width": [],
-                "height": [],
-                "ahash_hi": [],
-                "ahash_lo": [],
-                "ghash_hi": [],
-                "ghash_lo": [],
-                "phash_hi": [],
-                "phash_lo": [],
-                "decoder": [],
-            }
-            for p in pdf[payload_col].tolist():
-                raw = bytes(p) if p is not None else b""
-                w = h = None
-                hashes = None
-                decoder = "undecodable"
-                if parse_mp4_header(raw) is not None:
-                    decoder = "header:mp4"
-                    kf = extract_mp4_keyframe(raw)
-                    parsed = parse_image_header(kf) if kf is not None else None
-                    if parsed is not None and parsed[0] == "jpeg":
-                        _, cw, ch = parsed
-                        if (
-                            max_decode_pixels is not None
-                            and cw * ch > max_decode_pixels
-                        ):
-                            w, h, decoder = cw, ch, "capped"
-                        elif cw >= GRID and ch >= GRID:
-                            try:
-                                dw, dh, lumas = decode_jpeg_luma_milli(
-                                    kf, max_pixels=max_decode_pixels
-                                )
-                            except ValueError:
-                                dw = None  # stays header:mp4
-                            if dw is not None:
-                                hashes = hash_six(dw, dh, lumas)
-                                w, h, decoder = dw, dh, "keyframe:jpeg"
-                out["width"].append(w)
-                out["height"].append(h)
-                out["ahash_hi"].append(hashes[0] if hashes else None)
-                out["ahash_lo"].append(hashes[1] if hashes else None)
-                out["ghash_hi"].append(hashes[2] if hashes else None)
-                out["ghash_lo"].append(hashes[3] if hashes else None)
-                out["phash_hi"].append(hashes[4] if hashes else None)
-                out["phash_lo"].append(hashes[5] if hashes else None)
-                out["decoder"].append(decoder)
-            yield pd.DataFrame(out)
-
-    return media_df.select(ref_col, payload_col).mapInPandas(batches, HASH_SCHEMA)
+    return _map_rows(media_df, [ref_col, payload_col], HASH_SCHEMA, row)
 
 
 def pdf_image_hashes(
@@ -513,89 +451,48 @@ def pdf_image_hashes(
     Tiers: ``pdfimg:jpeg`` (DCTDecode stream -- a complete T.81 payload
     -- decoded by the vendored decoder), ``pdfimg:gray`` (uncompressed /
     Flate 8-bit DeviceGray samples hashed directly), ``capped`` /
-    ``too-small`` (header-gated), ``header:pdfimg`` (recognized image
-    object, pixels not decodable -- counted, never dropped).  A document
-    whose walk raises emits ONE ``pdf://<doc_id>`` row tagged
-    ``undecodable``; a document with no image objects at all (including
-    truncated payloads whose object walk finds nothing) emits one
-    ``no-images`` row, so every input document is accounted for.  ONE
+    ``too-small`` (gated on the image dictionary's dims), ``header:pdfimg``
+    (recognized image object, pixels not decodable -- counted, never
+    dropped).  A document whose walk raises emits ONE ``pdf://<doc_id>``
+    row tagged ``undecodable``; a document with no image objects at all
+    (including truncated payloads whose object walk finds nothing) emits
+    one ``no-images`` row, so every input document is accounted for.  ONE
     Arrow crossing, zero shuffles."""
     from ..pdf import extract_pdf_images
-    from .jpeg import decode_jpeg_luma_milli
-    from .multimodal import parse_image_header
 
-    def batches(iterator):
-        import pandas as pd
+    def rows(doc_id, raw):
+        try:
+            imgs = extract_pdf_images(raw or b"")
+        except ValueError:
+            yield (f"pdf://{doc_id}", None, None, *_NO_HASH, "undecodable")
+            return
+        if not imgs:
+            # truncated/object-less documents land here too: the object
+            # walk finds nothing rather than raising
+            yield (f"pdf://{doc_id}", None, None, *_NO_HASH, "no-images")
+        for nm, data, filt, w, h, gray, bpc in imgs:
+            ref = f"pdf://{doc_id}/{nm}"
+            dims_known = w is not None and h is not None
+            if dims_known and max_decode_pixels is not None and w * h > max_decode_pixels:
+                yield (ref, w, h, *_NO_HASH, "capped")
+                continue
+            if dims_known and (w < GRID or h < GRID):
+                yield (ref, w, h, *_NO_HASH, "too-small")
+                continue
+            decoded = tier = None
+            if data is not None and filt == "DCTDecode":
+                parsed = parse_image_header(data)
+                if parsed is not None and parsed[0] == "jpeg":
+                    decoded, tier = _decode_luma("jpeg", data, max_decode_pixels), "pdfimg:jpeg"
+            elif data is not None and gray and bpc == 8 and dims_known and len(data) >= w * h:
+                decoded, tier = (w, h, [b * 1000 for b in data[: w * h]]), "pdfimg:gray"
+            if decoded is None:
+                yield (ref, w, h, *_NO_HASH, "header:pdfimg")
+            else:
+                dw, dh, lumas = decoded
+                yield (ref, dw, dh, *hash_six(dw, dh, lumas), tier)
 
-        for pdf_batch in iterator:
-            out = {k: [] for k in (
-                "media_ref", "width", "height", "ahash_hi", "ahash_lo",
-                "ghash_hi", "ghash_lo", "phash_hi", "phash_lo", "decoder",
-            )}
-
-            def emit(ref, w, h, hashes, decoder):
-                out["media_ref"].append(ref)
-                out["width"].append(w)
-                out["height"].append(h)
-                for i, c in enumerate(
-                    ("ahash_hi", "ahash_lo", "ghash_hi", "ghash_lo", "phash_hi", "phash_lo")
-                ):
-                    out[c].append(hashes[i] if hashes else None)
-                out["decoder"].append(decoder)
-
-            for doc_id, payload in zip(
-                pdf_batch[id_col].tolist(), pdf_batch[pdf_col].tolist()
-            ):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    imgs = extract_pdf_images(raw)
-                except ValueError:
-                    emit(f"pdf://{doc_id}", None, None, None, "undecodable")
-                    continue
-                if not imgs:
-                    # truncated/object-less documents land here too: the
-                    # object walk finds nothing rather than raising
-                    emit(f"pdf://{doc_id}", None, None, None, "no-images")
-                    continue
-                for nm, data, filt, w, h, gray, bpc in imgs:
-                    ref = f"pdf://{doc_id}/{nm}"
-                    dims_known = w is not None and h is not None
-                    if dims_known and max_decode_pixels is not None and w * h > max_decode_pixels:
-                        emit(ref, w, h, None, "capped")
-                        continue
-                    if dims_known and (w < GRID or h < GRID):
-                        emit(ref, w, h, None, "too-small")
-                        continue
-                    dw = dh = lumas = None
-                    tier = None
-                    if data is not None and filt == "DCTDecode":
-                        parsed = parse_image_header(data)
-                        if parsed is not None and parsed[0] == "jpeg":
-                            try:
-                                dw, dh, lumas = decode_jpeg_luma_milli(
-                                    data, max_pixels=max_decode_pixels
-                                )
-                                tier = "pdfimg:jpeg"
-                            except ValueError:
-                                dw = None
-                    elif (
-                        data is not None
-                        and gray
-                        and bpc == 8
-                        and dims_known
-                        and len(data) >= w * h
-                    ):
-                        dw, dh = w, h
-                        lumas = [b * 1000 for b in data[: w * h]]
-                        tier = "pdfimg:gray"
-                    if dw is not None:
-                        hashes = hash_six(dw, dh, lumas)
-                        emit(ref, dw, dh, hashes, tier)
-                    else:
-                        emit(ref, w, h, None, "header:pdfimg")
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, pdf_col).mapInPandas(batches, HASH_SCHEMA)
+    return _map_rows(df, [id_col, pdf_col], HASH_SCHEMA, rows)
 
 
 def near_dup_image_pairs(
@@ -739,35 +636,15 @@ def synthesize_png_corpus(
     7`` rows are truncated to 16 bytes to exercise the containment
     tier."""
 
-    def batches(iterator):
-        import pandas as pd
+    def make(doc_id):
+        base = int(doc_id) % n_bases
+        px = bytes(synth_pixel(base, x, y) for y in range(size) for x in range(size))
+        raw = encode_gray_png(size, size, px, interlaced=bool(int(doc_id) % 2))
+        if int(doc_id) % corrupt_mod == 7:
+            raw = raw[:16]
+        return f"img://{doc_id}", raw
 
-        for pdf in iterator:
-            refs, payloads = [], []
-            for doc_id in pdf["doc_id"].tolist():
-                base = int(doc_id) % n_bases
-                px = bytes(
-                    synth_pixel(base, x, y) for y in range(size) for x in range(size)
-                )
-                raw = encode_gray_png(
-                    size, size, px, interlaced=bool(int(doc_id) % 2)
-                )
-                if int(doc_id) % corrupt_mod == 7:
-                    raw = raw[:16]
-                refs.append(f"img://{doc_id}")
-                payloads.append(raw)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "media_ref": refs, "payload": payloads}
-            )
-
-    schema = StructType(
-        [
-            docs_df.schema["doc_id"],
-            StructField("media_ref", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-    return docs_df.select("doc_id").mapInPandas(batches, schema)
+    return _synthesize_media(docs_df, make)
 
 
 def synthesize_gif_corpus(
@@ -784,40 +661,18 @@ def synthesize_gif_corpus(
     doc_ids are INTERLACED (same pixels, same hashes -- the
     de-interlace path under oracle test); ``doc_id % corrupt_mod == 7``
     rows are truncated."""
-    from .multimodal import encode_gif
-
     gray_palette = bytes(v for i in range(256) for v in (i, i, i))
 
-    def batches(iterator):
-        import pandas as pd
+    def make(doc_id):
+        d = int(doc_id)
+        base = d % n_bases
+        px = bytes(synth_pixel(base, x, y) for y in range(size) for x in range(size))
+        raw = encode_gif(size, size, px, gray_palette, interlaced=bool(d % 2))
+        if d % corrupt_mod == 7:
+            raw = raw[:8]
+        return f"gif://{d}", raw
 
-        for pdf in iterator:
-            refs, payloads = [], []
-            for doc_id in pdf["doc_id"].tolist():
-                d = int(doc_id)
-                base = d % n_bases
-                px = bytes(
-                    synth_pixel(base, x, y) for y in range(size) for x in range(size)
-                )
-                raw = encode_gif(
-                    size, size, px, gray_palette, interlaced=bool(d % 2)
-                )
-                if d % corrupt_mod == 7:
-                    raw = raw[:8]
-                refs.append(f"gif://{d}")
-                payloads.append(raw)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "media_ref": refs, "payload": payloads}
-            )
-
-    schema = StructType(
-        [
-            docs_df.schema["doc_id"],
-            StructField("media_ref", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-    return docs_df.select("doc_id").mapInPandas(batches, schema)
+    return _synthesize_media(docs_df, make)
 
 
 # a minimal SOF2 (progressive) JPEG prefix: parse_image_header reads real
@@ -830,6 +685,12 @@ _PROGRESSIVE_STUB = (
     + bytes([3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1])
     + b"\xff\xd9"
 )
+
+
+def _block_values(base: int) -> list[int]:
+    """The 64 constant 8x8-block values of the synthetic 64x64 JPEGs:
+    ``block(bx, by) = synth_pixel(base, bx, by)``, row-major."""
+    return [synth_pixel(base, bx, by) for by in range(GRID) for bx in range(GRID)]
 
 
 def synthesize_jpeg_corpus(
@@ -857,52 +718,26 @@ def synthesize_jpeg_corpus(
     dims (the ``header:jpeg`` tier -- dims without decodable pixels)."""
     from .jpeg import encode_blocky_jpeg, encode_gray_jpeg_progressive
 
-    def batches(iterator):
-        import pandas as pd
-
-        for pdf in iterator:
-            refs, payloads = [], []
-            for doc_id in pdf["doc_id"].tolist():
-                d = int(doc_id)
-                base = d % n_bases
-                vals = [
-                    synth_pixel(base, bx, by)
-                    for by in range(GRID)
-                    for bx in range(GRID)
-                ]
-                if d % progressive_mod == 11:
-                    raw = _PROGRESSIVE_STUB
-                else:
-                    layout = d % 3
-                    if layout == 2:
-                        px = bytes(
-                            vals[(y // 8) * GRID + (x // 8)]
-                            for y in range(8 * GRID)
-                            for x in range(8 * GRID)
-                        )
-                        raw = encode_gray_jpeg_progressive(
-                            8 * GRID, 8 * GRID, px
-                        )
-                    else:
-                        raw = encode_blocky_jpeg(
-                            GRID, GRID, vals, color_420=(layout == 1)
-                        )
-                    if d % corrupt_mod == 7:
-                        raw = raw[:16]
-                refs.append(f"jpg://{d}")
-                payloads.append(raw)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "media_ref": refs, "payload": payloads}
+    def make(doc_id):
+        d = int(doc_id)
+        if d % progressive_mod == 11:
+            return f"jpg://{d}", _PROGRESSIVE_STUB
+        vals = _block_values(d % n_bases)
+        layout = d % 3
+        if layout == 2:
+            px = bytes(
+                vals[(y // 8) * GRID + (x // 8)]
+                for y in range(8 * GRID)
+                for x in range(8 * GRID)
             )
+            raw = encode_gray_jpeg_progressive(8 * GRID, 8 * GRID, px)
+        else:
+            raw = encode_blocky_jpeg(GRID, GRID, vals, color_420=(layout == 1))
+        if d % corrupt_mod == 7:
+            raw = raw[:16]
+        return f"jpg://{d}", raw
 
-    schema = StructType(
-        [
-            docs_df.schema["doc_id"],
-            StructField("media_ref", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-    return docs_df.select("doc_id").mapInPandas(batches, schema)
+    return _synthesize_media(docs_df, make)
 
 
 def synthesize_mp4_corpus(
@@ -928,46 +763,20 @@ def synthesize_mp4_corpus(
     def box(btype: bytes, body: bytes) -> bytes:
         return (8 + len(body)).to_bytes(4, "big") + btype + body
 
-    def batches(iterator):
-        import pandas as pd
+    mvhd_body = bytes(12) + (1000).to_bytes(4, "big") + (4000).to_bytes(4, "big") + bytes(80)
+    head = box(b"ftyp", b"isom" + bytes(4) + b"isomiso2") + box(b"moov", box(b"mvhd", mvhd_body))
 
-        for pdf in iterator:
-            refs, payloads = [], []
-            for doc_id in pdf["doc_id"].tolist():
-                d = int(doc_id)
-                base = d % n_bases
-                vals = [
-                    synth_pixel(base, bx, by)
-                    for by in range(GRID)
-                    for bx in range(GRID)
-                ]
-                if d % opaque_mod == 11:
-                    # opaque codec stand-in: NAL-ish bytes, no SOI
-                    mdat = bytes([0, 0, 0, 1, 0x65]) + bytes(64)
-                else:
-                    jpeg = encode_blocky_jpeg(GRID, GRID, vals)
-                    mdat = jpeg * 2 if d % 2 == 0 else jpeg
-                mvhd_body = bytes(12) + (1000).to_bytes(4, "big") + (
-                    4000
-                ).to_bytes(4, "big") + bytes(80)
-                raw = (
-                    box(b"ftyp", b"isom" + bytes(4) + b"isomiso2")
-                    + box(b"moov", box(b"mvhd", mvhd_body))
-                    + box(b"mdat", mdat)
-                )
-                if d % corrupt_mod == 7:
-                    raw = raw[:10]
-                refs.append(f"vid://{d}")
-                payloads.append(raw)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "media_ref": refs, "payload": payloads}
-            )
+    def make(doc_id):
+        d = int(doc_id)
+        if d % opaque_mod == 11:
+            # opaque codec stand-in: NAL-ish bytes, no SOI
+            mdat = bytes([0, 0, 0, 1, 0x65]) + bytes(64)
+        else:
+            jpeg = encode_blocky_jpeg(GRID, GRID, _block_values(d % n_bases))
+            mdat = jpeg * 2 if d % 2 == 0 else jpeg
+        raw = head + box(b"mdat", mdat)
+        if d % corrupt_mod == 7:
+            raw = raw[:10]
+        return f"vid://{d}", raw
 
-    schema = StructType(
-        [
-            docs_df.schema["doc_id"],
-            StructField("media_ref", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-    return docs_df.select("doc_id").mapInPandas(batches, schema)
+    return _synthesize_media(docs_df, make)

@@ -1,5 +1,7 @@
 """Multimodal column plumbing: images/audio/video as opaque binary columns
-with typed metadata, processed through Arrow-batched ``mapInPandas`` kernels.
+with typed metadata, processed per row behind ONE Arrow crossing
+(:func:`_map_rows`, which every media kernel in ``ops.images`` and
+``ops.audio`` also runs through).
 
 Decode strategy (three tiers, best available wins):
 
@@ -26,6 +28,7 @@ real code path AND an external SQL engine can reconstruct the exact bytes
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 
@@ -67,6 +70,48 @@ FEATURES_SCHEMA = StructType(
         StructField("features", ArrayType(DoubleType())),
     ]
 )
+
+
+def _map_rows(df: DataFrame, in_cols: list, schema: StructType, row_fn) -> DataFrame:
+    """The media kernels' one ``mapInArrow`` crossing: select ``in_cols``,
+    call ``row_fn(*values)`` per row with the values as Python objects
+    (``to_pylist``: NULL is None, BINARY is bytes), and build each output
+    batch from the tuples ``row_fn`` returns -- zero or more per row, in
+    ``schema`` order -- against ``to_arrow_schema(schema)``."""
+
+    def batches(iterator):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        for batch in iterator:
+            rows = [
+                out
+                for values in zip(*(c.to_pylist() for c in batch.columns))
+                for out in row_fn(*values)
+            ]
+            cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return df.select(*in_cols).mapInArrow(batches, schema)
+
+
+def _synthesize_media(docs_df: DataFrame, make) -> DataFrame:
+    """(doc_id, media_ref, payload): one row per input row, ``doc_id`` in
+    its input type and ``make(doc_id) -> (media_ref, payload)`` -- the
+    shape every ``synthesize_*_corpus`` function returns."""
+    schema = StructType(
+        [
+            docs_df.schema["doc_id"],
+            StructField("media_ref", StringType()),
+            StructField("payload", BinaryType()),
+        ]
+    )
+    return _map_rows(docs_df, ["doc_id"], schema, lambda d: [(d, *make(d))])
+
 
 _PNG_SIG_HEX = "89504e470d0a1a0a"
 _PNG_IHDR_PRE_HEX = "0000000d49484452"  # IHDR length + type
@@ -385,6 +430,7 @@ def parse_wav_header(raw: bytes):
     return ("wav", n_channels, sample_rate, bits, duration_ms)
 
 
+@functools.cache
 def _pil_available() -> bool:
     try:
         import PIL.Image  # noqa: F401
@@ -887,89 +933,72 @@ def extract_media_features(
     pass ``None`` to opt in to full decode at any size (or install PIL,
     whose C loops need no cap)."""
 
-    def batches(iterator):
-        import pandas as pd
-
-        use_pil = allow_pil and _pil_available()
-        for pdf in iterator:
-            out = {
-                "media_ref": pdf["media_ref"],
-                "media_kind": pdf["media_kind"],
-                "n_bytes": [],
-                "sha256": [],
-                "payload_md5": [],
-                "decoded_width": [],
-                "decoded_height": [],
-                "decoded_duration_ms": [],
-                "decoder": [],
-                "features": [],
-            }
-            for p in pdf["payload"].tolist():
-                raw = bytes(p) if p is not None else b""
-                out["n_bytes"].append(len(raw))
-                out["sha256"].append(hashlib.sha256(raw).hexdigest())
-                out["payload_md5"].append(hashlib.md5(raw.hex().encode()).hexdigest())
+    def row(ref, kind, raw):
+        raw = raw or b""
+        w = h = feats = dur_ms = None
+        decoder = "stub"
+        if allow_pil and _pil_available():  # pragma: no cover - env has no PIL
+            try:
+                _, w, h, mean_pixel = decode_image_real(raw)
+                decoder = "pil"
+                feats = [mean_pixel / 255.0] * 8
+            except Exception:
                 w = h = None
-                decoder = "stub"
-                feats = None
-                if use_pil:  # pragma: no cover - env has no PIL
-                    try:
-                        _, w, h, mean_pixel = decode_image_real(raw)
-                        decoder = "pil"
-                        feats = [mean_pixel / 255.0] * 8
-                    except Exception:
-                        w = h = None
-                parsed = parse_image_header(raw) if w is None else None
-                png_capped = False
-                if w is None and parsed is not None and parsed[0] in (
-                    "png", "jpeg", "gif"
-                ):
-                    # vendored pure-Python pixel tiers (PNG unfilter, T.81
-                    # JPEG, GIF LZW) -- only below the pixel cap, sized
-                    # from the O(1) header parse above
-                    if max_decode_pixels is None or parsed[1] * parsed[2] <= max_decode_pixels:
-                        try:
-                            if parsed[0] == "png":
-                                _, w, h, mean_pixel = decode_png_pixels(raw)
-                            elif parsed[0] == "jpeg":
-                                from .jpeg import decode_jpeg_luma_milli
+        parsed = parse_image_header(raw) if w is None else None
+        png_capped = False
+        if w is None and parsed is not None and parsed[0] in ("png", "jpeg", "gif"):
+            # vendored pure-Python pixel tiers (PNG unfilter, T.81 JPEG, GIF
+            # LZW) -- only below the pixel cap, sized from the O(1) header
+            # parse above
+            if max_decode_pixels is None or parsed[1] * parsed[2] <= max_decode_pixels:
+                try:
+                    if parsed[0] == "png":
+                        _, w, h, mean_pixel = decode_png_pixels(raw)
+                    elif parsed[0] == "jpeg":
+                        from .jpeg import decode_jpeg_luma_milli
 
-                                w, h, lumas = decode_jpeg_luma_milli(raw)
-                                mean_pixel = sum(lumas) / 1000 / (w * h)
-                            else:
-                                w, h, lumas = gif_luma_milli(raw)
-                                mean_pixel = sum(lumas) / 1000 / (w * h)
-                            decoder = f"pixels:{parsed[0]}"
-                            feats = [mean_pixel / 255.0] * 8
-                        except Exception:
-                            w = h = None
+                        w, h, lumas = decode_jpeg_luma_milli(raw)
+                        mean_pixel = sum(lumas) / 1000 / (w * h)
                     else:
-                        # the cap (not undecodability) skipped the pixel
-                        # tier: surface that in the decoder tag so callers
-                        # can tell capped payloads (stub features, not
-                        # mean-luma) from genuinely header-only ones
-                        png_capped = True
-                dur_ms = None
-                if w is None:
-                    if parsed is not None:
-                        codec, w, h = parsed
-                        decoder = f"header:{codec}:capped" if png_capped else f"header:{codec}"
-                    else:  # container metadata tiers
-                        mp4 = parse_mp4_header(raw)
-                        wav = None if mp4 else parse_wav_header(raw)
-                        if mp4 is not None:
-                            decoder, dur_ms = "header:mp4", mp4[2]
-                        elif wav is not None:
-                            decoder, dur_ms = "header:wav", wav[4]
-                out["decoded_width"].append(w)
-                out["decoded_height"].append(h)
-                out["decoded_duration_ms"].append(dur_ms)
-                out["decoder"].append(decoder)
-                out["features"].append(feats if feats is not None else _fake_features(raw))
-            yield pd.DataFrame(out)
+                        w, h, lumas = gif_luma_milli(raw)
+                        mean_pixel = sum(lumas) / 1000 / (w * h)
+                    decoder = f"pixels:{parsed[0]}"
+                    feats = [mean_pixel / 255.0] * 8
+                except Exception:
+                    w = h = None
+            else:
+                # the cap (not undecodability) skipped the pixel tier:
+                # surface that in the decoder tag so callers can tell capped
+                # payloads (stub features, not mean-luma) from genuinely
+                # header-only ones
+                png_capped = True
+        if w is None:
+            if parsed is not None:
+                codec, w, h = parsed
+                decoder = f"header:{codec}:capped" if png_capped else f"header:{codec}"
+            else:  # container metadata tiers
+                mp4 = parse_mp4_header(raw)
+                wav = None if mp4 else parse_wav_header(raw)
+                if mp4 is not None:
+                    decoder, dur_ms = "header:mp4", mp4[2]
+                elif wav is not None:
+                    decoder, dur_ms = "header:wav", wav[4]
+        return [
+            (
+                ref,
+                kind,
+                len(raw),
+                hashlib.sha256(raw).hexdigest(),
+                hashlib.md5(raw.hex().encode()).hexdigest(),
+                w,
+                h,
+                dur_ms,
+                decoder,
+                feats if feats is not None else _fake_features(raw),
+            )
+        ]
 
-    cols = ["media_ref", "media_kind", "payload"]
-    return media_df.select(*cols).mapInPandas(batches, FEATURES_SCHEMA)
+    return _map_rows(media_df, ["media_ref", "media_kind", "payload"], FEATURES_SCHEMA, row)
 
 
 RESIZE_SCHEMA = StructType(
@@ -994,61 +1023,32 @@ def resize_images(media_df: DataFrame, target_w: int, target_h: int, allow_pil: 
     schema and metadata flow are exactly what the PIL kernel uses).
     Non-image payloads pass through unchanged with ``resized=false``."""
     filler_len = max(16, (target_w * target_h) // 256)
-
-    def batches(iterator):
-        import pandas as pd
-
-        use_pil = allow_pil and _pil_available()
-        header = (
-            bytes.fromhex(_PNG_SIG_HEX + _PNG_IHDR_PRE_HEX)
-            + struct.pack(">II", target_w, target_h)
-            + bytes.fromhex(_PNG_IHDR_POST_HEX)
-        )
-        filler = (b"\xab\xcd\xef" * (filler_len // 3 + 1))[:filler_len]
-        for pdf in iterator:
-            payloads, widths, heights, resized = [], [], [], []
-            for p in pdf["payload"].tolist():
-                raw = bytes(p) if p is not None else b""
-                if use_pil:  # pragma: no cover - env has no PIL
-                    try:
-                        import io
-
-                        from PIL import Image
-
-                        img = Image.open(io.BytesIO(raw)).resize((target_w, target_h))
-                        buf = io.BytesIO()
-                        img.save(buf, format="PNG")
-                        payloads.append(buf.getvalue())
-                        widths.append(target_w)
-                        heights.append(target_h)
-                        resized.append(True)
-                        continue
-                    except Exception:
-                        pass
-                if parse_image_header(raw) is not None:
-                    payloads.append(header + filler)
-                    widths.append(target_w)
-                    heights.append(target_h)
-                    resized.append(True)
-                else:
-                    payloads.append(raw)
-                    widths.append(None)
-                    heights.append(None)
-                    resized.append(False)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "media_kind": pdf["media_kind"],
-                    "payload": payloads,
-                    "width": widths,
-                    "height": heights,
-                    "resized": resized,
-                }
-            )
-
-    return media_df.select("media_ref", "media_kind", "payload").mapInPandas(
-        batches, RESIZE_SCHEMA
+    resized_png = (
+        bytes.fromhex(_PNG_SIG_HEX + _PNG_IHDR_PRE_HEX)
+        + struct.pack(">II", target_w, target_h)
+        + bytes.fromhex(_PNG_IHDR_POST_HEX)
+        + (b"\xab\xcd\xef" * (filler_len // 3 + 1))[:filler_len]
     )
+
+    def row(ref, kind, raw):
+        raw = raw or b""
+        if allow_pil and _pil_available():  # pragma: no cover - env has no PIL
+            try:
+                import io
+
+                from PIL import Image
+
+                img = Image.open(io.BytesIO(raw)).resize((target_w, target_h))
+                buf = io.BytesIO()
+                img.save(buf, format="PNG")
+                return [(ref, kind, buf.getvalue(), target_w, target_h, True)]
+            except Exception:
+                pass
+        if parse_image_header(raw) is not None:
+            return [(ref, kind, resized_png, target_w, target_h, True)]
+        return [(ref, kind, raw, None, None, False)]
+
+    return _map_rows(media_df, ["media_ref", "media_kind", "payload"], RESIZE_SCHEMA, row)
 
 
 FRAME_SCHEMA = StructType(
@@ -1076,55 +1076,20 @@ def sample_video_frames(media_df: DataFrame, every_ms: int = 1000, max_frames: i
     ``<payload hex>:<frame idx>`` -- reconstructable by a SQL oracle; a real
     ffmpeg kernel swaps only that inner function (no ffmpeg in this env)."""
 
-    def batches(iterator):
-        import pandas as pd
-
-        for pdf in iterator:
-            refs, idxs, tss, frames, decs = [], [], [], [], []
-            for ref, kind, payload, dur in zip(
-                pdf["media_ref"], pdf["media_kind"], pdf["payload"], pdf["duration_ms"]
-            ):
-                if kind != "video":
-                    continue
-                raw = bytes(payload) if payload is not None else b""
-                parsed = parse_mp4_header(raw)
-                if parsed is not None and parsed[2] is not None:
-                    dur_ms, decoder = parsed[2], "header:mp4"
-                else:
-                    # nullable ints arrive as float64 NaN through Arrow --
-                    # NaN is truthy, so guard with a self-equality check
-                    dur_ms = int(dur) if dur is not None and dur == dur else 0
-                    decoder = "stub"
-                if not dur_ms:
-                    continue
-                n = min(dur_ms // every_ms + 1, max_frames)
-                for i in range(n):
-                    refs.append(ref)
-                    idxs.append(i)
-                    tss.append(i * every_ms)
-                    frames.append(
-                        hashlib.md5(f"{raw.hex()}:{i}".encode()).hexdigest().encode()
-                    )
-                    decs.append(decoder)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "frame_idx": idxs,
-                    "ts_ms": tss,
-                    "frame_payload": frames,
-                    "decoder": decs,
-                }
-            )
+    def rows(ref, kind, raw, dur):
+        if kind != "video":
+            return
+        raw = raw or b""
+        parsed = parse_mp4_header(raw)
+        if parsed is not None and parsed[2] is not None:
+            dur_ms, decoder = parsed[2], "header:mp4"
+        else:
+            dur_ms, decoder = int(dur or 0), "stub"
+        if not dur_ms:
+            return
+        for i in range(min(dur_ms // every_ms + 1, max_frames)):
+            frame = hashlib.md5(f"{raw.hex()}:{i}".encode()).hexdigest().encode()
+            yield (ref, i, i * every_ms, frame, decoder)
 
     cols = ["media_ref", "media_kind", "payload", "duration_ms"]
-    return media_df.select(*cols).mapInPandas(batches, FRAME_SCHEMA)
-
-
-def media_stats(media_df: DataFrame) -> DataFrame:
-    """JVM-side metadata aggregation (no decode): per kind, byte/size stats."""
-    return media_df.groupBy("media_kind").agg(
-        F.count("*").cast("bigint").alias("n_media"),
-        F.sum(F.length("payload")).cast("bigint").alias("total_bytes"),
-        F.round(F.avg("width"), 2).alias("avg_width"),
-        F.round(F.avg("height"), 2).alias("avg_height"),
-    )
+    return _map_rows(media_df, cols, FRAME_SCHEMA, rows)

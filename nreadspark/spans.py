@@ -61,52 +61,22 @@ def spans_to_html(spans) -> str:
 
 def extract_spans(article_content: Node) -> list[dict]:
     """Serialize the extracted article element into the output span sequence,
-    document order, 0-based offsets."""
-    spans: list[dict] = []
-    stack = list(reversed(article_content.children))
-    while stack:
-        node = stack.pop()
-        if node.is_text:
-            spans.append(
-                {
-                    "kind": "text",
-                    "text": node.value,
-                    "media_ref": None,
-                    "offset": len(spans),
-                }
-            )
-        elif node.is_element:
-            if node.tag == "img":
-                spans.append(
-                    {
-                        "kind": "image",
-                        "text": "",
-                        "media_ref": node.get_attribute("src", "") or "",
-                        "offset": len(spans),
-                    }
-                )
-            elif node.tag in _MEDIA_TAGS:
-                ref = node.get_attribute("src") or node.get_attribute("data") or ""
-                spans.append(
-                    {
-                        "kind": "embed",
-                        "text": "",
-                        "media_ref": ref,
-                        "offset": len(spans),
-                    }
-                )
-                # an <object> wrapping its own <embed> should not double-count
-                continue
-            else:
-                if node.children:
-                    stack.extend(reversed(node.children))
-        # comments are dropped
-    return spans
+    document order, 0-based offsets: :func:`extract_spans_flat`'s columns as
+    one dict per span."""
+    kinds: list = []
+    texts: list = []
+    refs: list = []
+    offs: list = []
+    extract_spans_flat(article_content, kinds, texts, refs, offs)
+    return [
+        {"kind": k, "text": t, "media_ref": r, "offset": o}
+        for k, t, r, o in zip(kinds, texts, refs, offs)
+    ]
 
 
 def extract_spans_flat(article_content: Node, kinds: list, texts: list, refs: list, offs: list) -> int:
-    """Columnar twin of :func:`extract_spans`: append the span sequence of one
-    document directly onto shared flat builders (kind/text/media_ref/offset).
+    """The span emitter: append the span sequence of one document directly
+    onto shared flat column lists (kind/text/media_ref/offset).
     Returns the number of spans appended.  Used by the Arrow-native pipeline
     so no per-span Python dicts are ever materialized."""
     base = len(kinds)

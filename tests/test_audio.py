@@ -12,7 +12,7 @@ from nreadspark.ops.audio import (
     encode_pcm8_wav,
     ghash64,
     synth_sample,
-    wav_pcm8_samples,
+    wav_pcm_samples,
 )
 
 
@@ -24,18 +24,18 @@ def test_wav_round_trip_and_header_parity():
     from nreadspark.ops.multimodal import parse_wav_header
 
     raw = encode_pcm8_wav(_samples(5))
-    rate, data = wav_pcm8_samples(raw)
-    assert (rate, data) == (1000, _samples(5))
+    rate, bits, data = wav_pcm_samples(raw)
+    assert (rate, bits, data) == (1000, 8, _samples(5))
     # the fingerprint parser and the feature-tier header parser agree
     assert parse_wav_header(raw) == ("wav", 1, 1000, 8, 2048)
 
 
 def test_wav_parse_rejections():
     with pytest.raises(ValueError):
-        wav_pcm8_samples(b"RIFF1234WAV")  # truncated
+        wav_pcm_samples(b"RIFF1234WAV")  # truncated
     with pytest.raises(ValueError):
-        wav_pcm8_samples(b"\x89PNG\r\n\x1a\n" + bytes(16))
-    # stereo/16-bit formats are refused, not mis-fingerprinted
+        wav_pcm_samples(b"\x89PNG\r\n\x1a\n" + bytes(16))
+    # stereo formats are refused, not mis-fingerprinted
     import struct
 
     fmt = struct.pack("<HHIIHH", 1, 2, 1000, 2000, 2, 8)
@@ -45,7 +45,7 @@ def test_wav_parse_rejections():
         + b"data" + struct.pack("<I", 4) + bytes(4)
     )
     with pytest.raises(ValueError):
-        wav_pcm8_samples(stereo)
+        wav_pcm_samples(stereo)
 
 
 def test_hash_bits_match_brute_force():
@@ -139,7 +139,6 @@ def test_pcm16_decode_and_fingerprint():
         ghash64,
         pcm_energies,
         wav_pcm_samples,
-        wav_pcm8_samples,
     )
 
     vals = [((37 * 3 + 13 * t + (t * t) % 251) % 256) * 257 - 32768 for t in range(256)]
@@ -161,9 +160,6 @@ def test_pcm16_decode_and_fingerprint():
     got = [(lo >> j) & 1 for j in range(32)] + [(hi >> j) & 1 for j in range(32)]
     assert got == expect
     assert ghash64(data, 16) != (0, 0)
-    # the pcm8-only entry point refuses 16-bit payloads
-    with pytest.raises(ValueError):
-        wav_pcm8_samples(raw)
     # odd data length for 16-bit is rejected
     bad = bytearray(raw)
     bad[-12:-8] = (int.from_bytes(bad[-12:-8], "little") - 1).to_bytes(4, "little")
@@ -315,3 +311,26 @@ def test_audio_cover_hashes_cross_modality(spark):
         assert a["decoder"] == "cover:jpeg", d
         for c in ("ahash_hi", "ahash_lo", "ghash_hi", "ghash_lo", "phash_hi", "phash_lo"):
             assert a[c] == j[c], (d, c)
+
+
+def test_audio_cover_hashes_decode_gif_covers(spark):
+    """A GIF cover goes through the same codec table as a standalone image:
+    it hashes as ``cover:gif``, equal to the GIF image of the same base."""
+    from nreadspark.ops.audio import audio_cover_hashes
+    from nreadspark.ops.images import image_hashes, synth_pixel
+    from nreadspark.ops.multimodal import encode_gif
+
+    base = 5
+    palette = bytes(v for i in range(256) for v in (i, i, i))
+    px = bytes(synth_pixel(base, x, y) for y in range(16) for x in range(16))
+    gif = encode_gif(16, 16, px, palette)
+    apic = bytes([0]) + b"image/gif\x00" + bytes([3]) + b"cover\x00" + gif
+    rows = [("aud", _id3_tag(apic, 3)), ("gif", gif)]
+    df = spark.createDataFrame(rows, "media_ref string, payload binary")
+    cover = audio_cover_hashes(df.filter("media_ref = 'aud'")).collect()[0]
+    image = image_hashes(df.filter("media_ref = 'gif'")).collect()[0]
+    assert image["decoder"] == "pixels:gif"
+    assert cover["decoder"] == "cover:gif"
+    assert (cover["width"], cover["height"]) == (16, 16)
+    for c in ("ahash_hi", "ahash_lo", "ghash_hi", "ghash_lo", "phash_hi", "phash_lo"):
+        assert cover[c] == image[c], c

@@ -104,7 +104,7 @@ def test_image_hash_invariant_under_reencoding(base, level):
 def test_audio_fingerprint_tolerates_extra_chunks(base, n):
     """An extra (LIST) chunk between fmt and data leaves the fingerprint
     unchanged -- the chunk walk takes fields wherever they sit."""
-    from nreadspark.ops.audio import ehash64, encode_pcm8_wav, synth_sample, wav_pcm8_samples
+    from nreadspark.ops.audio import ehash64, encode_pcm8_wav, synth_sample, wav_pcm_samples
 
     samples = bytes(synth_sample(base, t) for t in range(n))
     plain = encode_pcm8_wav(samples)
@@ -114,5 +114,6 @@ def test_audio_fingerprint_tolerates_extra_chunks(base, n):
     padded = plain[:insert_at] + extra + plain[insert_at:]
     # RIFF size field should grow, but the parser never checks it -- both
     # decode to the same samples
-    assert wav_pcm8_samples(padded)[1] == samples
-    assert ehash64(wav_pcm8_samples(padded)[1]) == ehash64(samples)
+    rate, bits, data = wav_pcm_samples(padded)
+    assert (bits, data) == (8, samples)
+    assert ehash64(data) == ehash64(samples)

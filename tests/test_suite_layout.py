@@ -1,7 +1,8 @@
 """The suite's shared set-up lives in conftest.py only: one SparkSession for
 the whole run, the jobs/ directory on sys.path, and no absolute path into a
 particular checkout (a test must exercise the tree it sits in).  Library
-kernels state their Arrow output schema once, as a Spark StructType."""
+kernels state their Arrow output schema once, as a Spark StructType, and the
+media kernels share one Arrow crossing."""
 
 import ast
 import glob
@@ -84,3 +85,21 @@ def test_library_derives_arrow_schemas_from_spark_schemas():
             and ast.unparse(node.func) in ("pa.schema", "pyarrow.schema")
         ]
     assert found == [], "\n".join(found)
+
+
+def test_media_kernels_share_one_arrow_crossing():
+    """The image, audio and multimodal kernels are per-row functions behind
+    ``ops.multimodal._map_rows``; a second ``mapInPandas``/``mapInArrow``
+    call in these modules is a second copy of its batch plumbing."""
+    found = []
+    for name in ("images", "audio", "multimodal"):
+        path = os.path.join(REPO, "nreadspark", "ops", f"{name}.py")
+        tree = ast.parse(open(path, encoding="utf-8").read(), path)
+        found += [
+            f"ops/{name}.py:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("mapInPandas", "mapInArrow")
+        ]
+    assert len(found) <= 1, "\n".join(found)
