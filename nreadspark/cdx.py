@@ -355,13 +355,13 @@ def warc_records_from_ranges(
     discipline).  Per-range containment: a bad offset/member yields an
     ``error`` row, never a task failure.  ``base_dir`` prefixes relative
     filenames (Common Crawl indexes carry segment-relative paths)."""
+    from .pipeline import map_batches, rows_to_batch
     from .warc import iter_warc_records, parse_http_response
 
     plans = plans_df.select("urlkey", "url", "filename", "offset", "length")
     plans = plans.sortWithinPartitions("filename", "offset")
 
     def batches(iterator):
-        import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
         open_name, fh = None, None
@@ -369,16 +369,12 @@ def warc_records_from_ranges(
         def rows():
             nonlocal open_name, fh
             for batch in iterator:
-                cols = {n: batch.column(n).to_pylist() for n in (
-                    "urlkey", "url", "filename", "offset", "length")}
                 for urlkey, url, fname, off, length in zip(
-                    cols["urlkey"], cols["url"], cols["filename"],
-                    cols["offset"], cols["length"],
+                    *(c.to_pylist() for c in batch.columns)
                 ):
                     path = (
                         f"{base_dir.rstrip('/')}/{fname}" if base_dir else fname
                     )
-                    base = dict(urlkey=urlkey, url=url, filename=fname, offset=off)
                     try:
                         if open_name != path:
                             if fh is not None:
@@ -404,28 +400,15 @@ def warc_records_from_ranges(
                             )
                             ctype = hdr_map.get("content-type")
                             cenc = hdr_map.get("content-encoding")
-                        yield dict(
-                            base,
-                            warc_type=wtype,
-                            target_uri=hdrs.get("warc-target-uri"),
-                            payload=payload,
-                            http_status=status,
-                            http_headers=list(http_hdrs),
-                            content_type=ctype,
-                            content_encoding=cenc,
-                            error=None,
+                        yield (
+                            urlkey, url, fname, off, wtype,
+                            hdrs.get("warc-target-uri"), payload, status,
+                            http_hdrs, ctype, cenc, None,
                         )
                     except Exception as exc:  # per-range containment
-                        yield dict(
-                            base,
-                            warc_type=None,
-                            target_uri=None,
-                            payload=None,
-                            http_status=None,
-                            http_headers=None,
-                            content_type=None,
-                            content_encoding=None,
-                            error=f"{type(exc).__name__}: {exc}"[:200],
+                        yield (
+                            urlkey, url, fname, off, *(None,) * 7,
+                            f"{type(exc).__name__}: {exc}"[:200],
                         )
 
         arrow_schema = to_arrow_schema(_RANGE_SCHEMA)
@@ -439,15 +422,15 @@ def warc_records_from_ranges(
             for r in rows():
                 buf.append(r)
                 if len(buf) >= 256:
-                    yield pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
+                    yield rows_to_batch(buf, arrow_schema)
                     buf = []
             if buf:
-                yield pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
+                yield rows_to_batch(buf, arrow_schema)
         finally:
             if fh is not None:
                 fh.close()
 
-    return plans.mapInArrow(batches, _RANGE_SCHEMA)
+    return map_batches(plans, _RANGE_SCHEMA, batches)
 
 
 def schedule_frontier(

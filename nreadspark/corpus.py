@@ -2,7 +2,7 @@
 
 Documents are generated purely from ``(seed, doc index)`` so any row can be
 re-created independently on any executor -- generation is distributed via
-``mapInPandas`` over ``spark.range`` (no driver-side materialization, no
+``mapInArrow`` over ``spark.range`` (no driver-side materialization, no
 collected state), which is what makes the generator usable at bench scale
 and beyond.
 
@@ -220,45 +220,21 @@ def generate_rows(start: int, end: int, seed: int = 42):
 def build_corpus_df(spark, n_docs: int, seed: int = 42, num_partitions: int | None = None):
     """Distributed corpus: one generator task per range partition; no data
     leaves the executors until the consumer asks for it."""
-    from pyspark.sql import functions as F  # noqa: F401
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-    span_type = StructType(
-        [
-            StructField("kind", StringType()),
-            StructField("text", StringType()),
-            StructField("media_ref", StringType()),
-            StructField("offset", IntegerType()),
-        ]
-    )
+    from .pipeline import SPAN_TYPE, map_rows
+
     schema = StructType(
         [
             StructField("doc_id", StringType(), False),
-            StructField("spans", ArrayType(span_type), False),
+            StructField("spans", ArrayType(SPAN_TYPE), False),
         ]
     )
 
     num_partitions = num_partitions or max(spark.sparkContext.defaultParallelism, 8)
-
-    def gen(iterator):
-        import pandas as pd
-
-        for pdf in iterator:
-            ids = []
-            spans_col = []
-            for i in pdf["id"]:
-                doc_id, spans, _family = generate_document(int(i), seed)
-                ids.append(doc_id)
-                spans_col.append(spans)
-            yield pd.DataFrame({"doc_id": ids, "spans": spans_col})
-
-    return (
-        spark.range(0, n_docs, numPartitions=num_partitions)
-        .mapInPandas(gen, schema)
+    return map_rows(
+        spark.range(0, n_docs, numPartitions=num_partitions),
+        ["id"],
+        schema,
+        lambda i: [generate_document(i, seed)[:2]],
     )

@@ -292,43 +292,37 @@ def _pages_schema():
 def extract_pages(df, url_col: str = "url", spans_col: str = "spans"):
     """THE extraction pass of the multipage pipeline: every page transcoded
     once, emitting article spans + next-page edge + first-paragraph probe."""
-    import pyarrow as pa
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from .pipeline import html_from_spans_col
+    from .pipeline import html_from_spans_col, map_rows
 
-    schema = _pages_schema()
+    opts = Options()
 
-    def batches(iterator):
-        arrow_schema = to_arrow_schema(schema)
-        opts = Options()
-        for batch in iterator:
-            rows = []
-            for row in batch.to_pylist():
-                try:
-                    res = dict(_page_result(row["__html"], row["url"], opts))
-                except Exception:
-                    # poisoned page: emit a flagged empty row, never kill the job
-                    res = {
-                        "spans": [],
-                        "title": None,
-                        "content_extracted": False,
-                        "next_page_url": None,
-                        "first_p_value": None,
-                        "first_p_inner_len": 0,
-                        "url": row["url"],
-                    }
-                res["doc_id"] = row["doc_id"]
-                rows.append(res)
-            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+    def row(doc_id, url, html):
+        try:
+            res = _page_result(html, url, opts)
+        except Exception:
+            # poisoned page: emit a flagged empty row, never kill the job
+            return [(doc_id, url, [], None, False, None, None, 0)]
+        return [
+            (
+                doc_id,
+                url,
+                res["spans"],
+                res["title"],
+                res["content_extracted"],
+                res["next_page_url"],
+                res["first_p_value"],
+                res["first_p_inner_len"],
+            )
+        ]
 
-    prepared = df.select(
+    cols = [
         "doc_id",
         F.col(url_col).alias("url"),
         html_from_spans_col(spans_col).alias("__html"),
-    )
-    return prepared.mapInArrow(batches, schema)
+    ]
+    return map_rows(df, cols, _pages_schema(), row)
 
 
 def extract_multipage(df, url_col: str = "url", spans_col: str = "spans"):
@@ -339,9 +333,7 @@ def extract_multipage(df, url_col: str = "url", spans_col: str = "spans"):
     Output: one row per chain root --
     ``(doc_id, spans, title, content_extracted, n_pages)``.
     """
-    import pyarrow as pa
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import (
         ArrayType,
         BooleanType,
@@ -351,7 +343,7 @@ def extract_multipage(df, url_col: str = "url", spans_col: str = "spans"):
         StructType,
     )
 
-    from .pipeline import SPAN_TYPE
+    from .pipeline import SPAN_TYPE, map_rows
 
     # single extraction pass, materialized once (lineage truncation: both
     # the chain walk and the assembly join read it; at warehouse scale this
@@ -397,32 +389,28 @@ def extract_multipage(df, url_col: str = "url", spans_col: str = "spans"):
         ]
     )
 
-    def batches(iterator):
-        arrow_schema = to_arrow_schema(out_schema)
-        for batch in iterator:
-            rows = []
-            for row in batch.to_pylist():
-                page_dicts = [
-                    {
-                        "spans": [dict(s) for s in p["spans"]],
-                        "title": p["title"],
-                        "content_extracted": p["content_extracted"],
-                        "first_p_value": p["first_p_value"],
-                        "first_p_inner_len": p["first_p_inner_len"] or 0,
-                        "url": p["url"],
-                    }
-                    for p in row["pages"]
-                ]
-                merged = merge_page_results(page_dicts)
-                rows.append(
-                    {
-                        "doc_id": row["root_doc_id"],
-                        "spans": merged["spans"],
-                        "title": merged["title"],
-                        "content_extracted": merged["content_extracted"],
-                        "n_pages": merged["n_pages"],
-                    }
-                )
-            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+    def row(root_doc_id, pages):
+        merged = merge_page_results(
+            [
+                {
+                    "spans": [dict(s) for s in p["spans"]],
+                    "title": p["title"],
+                    "content_extracted": p["content_extracted"],
+                    "first_p_value": p["first_p_value"],
+                    "first_p_inner_len": p["first_p_inner_len"] or 0,
+                    "url": p["url"],
+                }
+                for p in pages
+            ]
+        )
+        return [
+            (
+                root_doc_id,
+                merged["spans"],
+                merged["title"],
+                merged["content_extracted"],
+                merged["n_pages"],
+            )
+        ]
 
-    return grouped.mapInArrow(batches, out_schema)
+    return map_rows(grouped, ["root_doc_id", "pages"], out_schema, row)

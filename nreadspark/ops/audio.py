@@ -25,7 +25,7 @@ packed as two int32-range halves speaks the same banded-hamming
 protocol.
 
 Scale shape: fingerprinting is ONE ``mapInArrow`` crossing, the one every
-media kernel shares (``ops.multimodal._map_rows``: payload in, 16 bytes of
+media kernel shares (``pipeline.map_rows``: payload in, 16 bytes of
 hash out, zero shuffles); pair generation is the shared
 banded self-join (exact for hamming < n_bands by pigeonhole).
 
@@ -48,8 +48,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pipeline import map_rows
 from .images import _NO_HASH, GRID, HASH_SCHEMA, _block_values, _gated_hashes, _pack
-from .multimodal import _map_rows, _synthesize_media, parse_image_header
+from .multimodal import _synthesize_media, parse_image_header
 
 N_WINDOWS = GRID * GRID  # 64 windows -> 64-bit hashes, shared band math
 
@@ -98,6 +99,8 @@ def wav_pcm_samples(raw: bytes):
     bits = int.from_bytes(fmt[14:16], "little")
     if audio_fmt != 1 or channels != 1 or bits not in (8, 16):
         raise ValueError(f"unsupported WAV (fmt={audio_fmt}, ch={channels}, bits={bits})")
+    if rate >= 1 << 31:  # corrupt: past the int32 sample_rate column
+        raise ValueError(f"sample rate out of range: {rate}")
     if bits == 16 and len(data) % 2:
         raise ValueError("odd data length for 16-bit PCM")
     return rate, bits, data
@@ -252,7 +255,7 @@ def audio_fingerprints(
             return [(ref, n, rate, *no_hash, "capped")]
         return [(ref, n, rate, *ehash64(data, bits), *ghash64(data, bits), f"pcm{bits}")]
 
-    return _map_rows(media_df, [ref_col, payload_col], AFP_SCHEMA, row)
+    return map_rows(media_df, [ref_col, payload_col], AFP_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
@@ -425,7 +428,7 @@ def audio_cover_hashes(
             return [(ref, None, None, *_NO_HASH, "undecodable")]
         return [(ref, *_gated_hashes(cover, parsed, max_decode_pixels, "cover"))]
 
-    return _map_rows(media_df, [ref_col, payload_col], HASH_SCHEMA, row)
+    return map_rows(media_df, [ref_col, payload_col], HASH_SCHEMA, row)
 
 
 def synthesize_id3_corpus(

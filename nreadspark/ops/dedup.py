@@ -23,6 +23,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve in globals
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
+from ..pipeline import map_batches
+
 # -- persisted-intermediate registry ----------------------------------------
 # Several operators persist frames consumed by 2+ downstream subplans (band
 # self-joins, token sets on both join sides).  Those frames are only safe to
@@ -471,7 +473,7 @@ def simhash(
                 names=["doc_id", "simhash"],
             )
 
-    return toks.mapInArrow(batches, out_schema)
+    return map_batches(toks, out_schema, batches)
 
 
 def embedding_near_duplicates_lsh(
@@ -852,8 +854,10 @@ def dedup_semantic(
 
         C = _train_ivf_centroids(emb_df, n_lists, sample_size, id_col, vec_col)
         bc = emb_df.sparkSession.sparkContext.broadcast(C.tolist())
-        probes = _ivf_prep(emb_df, id_col, vec_col).mapInArrow(
-            _ivf_assign_fn(bc, n_probe), _ivf_assign_schema()
+        probes = map_batches(
+            _ivf_prep(emb_df, id_col, vec_col),
+            _ivf_assign_schema(),
+            _ivf_assign_fn(bc, n_probe),
         )
         sigs = _persist(
             probes.select("id", "vec", F.col("list_id").cast("string").alias("bucket"))
@@ -900,7 +904,7 @@ def dedup_semantic_from_index(
             F.col("corpus_id").alias("id"), F.col("corpus_vec").alias("vec")
         )
         bc = corpus.sparkSession.sparkContext.broadcast(cents)
-        probes = corpus.mapInArrow(_ivf_assign_fn(bc, n_probe), _ivf_assign_schema())
+        probes = map_batches(corpus, _ivf_assign_schema(), _ivf_assign_fn(bc, n_probe))
         sigs = _persist(
             probes.select("id", "vec", F.col("list_id").cast("string").alias("bucket"))
         )

@@ -37,7 +37,7 @@ TWO non-negative int32-range BIGINTs ``(hi, lo)`` -- bits 32..63 and
 is ``bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)``.
 
 Scale shape: hashing is ONE ``mapInArrow`` crossing, the one every media
-kernel shares (``ops.multimodal._map_rows``: payload bytes cross Arrow
+kernel shares (``pipeline.map_rows``: payload bytes cross Arrow
 once, 16 bytes of hash come back); pair generation bands the 64
 bits into four 16-bit keys and self-joins the (ref, band, key) frame --
 by pigeonhole any pair within hamming 3 agrees on at least one of 4
@@ -73,9 +73,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pipeline import map_rows
 from .jpeg import decode_jpeg_luma_milli
 from .multimodal import (
-    _map_rows,
     _synthesize_media,
     encode_gif,
     extract_mp4_keyframe,
@@ -371,7 +371,7 @@ def image_hashes(
             return [(ref, None, None, *_NO_HASH, "undecodable")]
         return [(ref, *_gated_hashes(raw, parsed, max_decode_pixels, "pixels", native))]
 
-    return _map_rows(media_df, [ref_col, payload_col], HASH_SCHEMA, row)
+    return map_rows(media_df, [ref_col, payload_col], HASH_SCHEMA, row)
 
 
 def _native_luma_milli(raw: bytes):
@@ -433,7 +433,7 @@ def video_keyframe_hashes(
                 return [(ref, *out)]
         return [(ref, None, None, *_NO_HASH, "header:mp4")]
 
-    return _map_rows(media_df, [ref_col, payload_col], HASH_SCHEMA, row)
+    return map_rows(media_df, [ref_col, payload_col], HASH_SCHEMA, row)
 
 
 def pdf_image_hashes(
@@ -492,7 +492,7 @@ def pdf_image_hashes(
                 dw, dh, lumas = decoded
                 yield (ref, dw, dh, *hash_six(dw, dh, lumas), tier)
 
-    return _map_rows(df, [id_col, pdf_col], HASH_SCHEMA, rows)
+    return map_rows(df, [id_col, pdf_col], HASH_SCHEMA, rows)
 
 
 def near_dup_image_pairs(

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: images/audio/video as opaque binary columns
-with typed metadata, processed per row behind ONE Arrow crossing
-(:func:`_map_rows`, which every media kernel in ``ops.images`` and
-``ops.audio`` also runs through).
+with typed metadata, processed per row behind the library's one Arrow
+crossing (:func:`nreadspark.pipeline.map_rows`, which every media kernel in
+``ops.images`` and ``ops.audio`` also runs through).
 
 Decode strategy (three tiers, best available wins):
 
@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pipeline import map_rows
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_ref", StringType()),
@@ -72,33 +74,6 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def _map_rows(df: DataFrame, in_cols: list, schema: StructType, row_fn) -> DataFrame:
-    """The media kernels' one ``mapInArrow`` crossing: select ``in_cols``,
-    call ``row_fn(*values)`` per row with the values as Python objects
-    (``to_pylist``: NULL is None, BINARY is bytes), and build each output
-    batch from the tuples ``row_fn`` returns -- zero or more per row, in
-    ``schema`` order -- against ``to_arrow_schema(schema)``."""
-
-    def batches(iterator):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(schema)
-        for batch in iterator:
-            rows = [
-                out
-                for values in zip(*(c.to_pylist() for c in batch.columns))
-                for out in row_fn(*values)
-            ]
-            cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
-                schema=arrow_schema,
-            )
-
-    return df.select(*in_cols).mapInArrow(batches, schema)
-
-
 def _synthesize_media(docs_df: DataFrame, make) -> DataFrame:
     """(doc_id, media_ref, payload): one row per input row, ``doc_id`` in
     its input type and ``make(doc_id) -> (media_ref, payload)`` -- the
@@ -110,7 +85,7 @@ def _synthesize_media(docs_df: DataFrame, make) -> DataFrame:
             StructField("payload", BinaryType()),
         ]
     )
-    return _map_rows(docs_df, ["doc_id"], schema, lambda d: [(d, *make(d))])
+    return map_rows(docs_df, ["doc_id"], schema, lambda d: [(d, *make(d))])
 
 
 _PNG_SIG_HEX = "89504e470d0a1a0a"
@@ -242,7 +217,9 @@ def parse_image_header(raw: bytes):
     GIF logical-screen little-endian u16s, JPEG SOFn scan)."""
     if len(raw) >= 24 and raw[:8] == b"\x89PNG\r\n\x1a\n" and raw[12:16] == b"IHDR":
         w, h = struct.unpack(">II", raw[16:24])
-        return ("png", w, h)
+        # the PNG spec caps both at 2^31-1; past that the header is corrupt
+        # (and would not fit the int32 dimension columns)
+        return ("png", w, h) if max(w, h) < 1 << 31 else None
     if len(raw) >= 10 and raw[:6] in (b"GIF87a", b"GIF89a"):
         w, h = struct.unpack("<HH", raw[6:10])
         return ("gif", w, h)
@@ -998,7 +975,7 @@ def extract_media_features(
             )
         ]
 
-    return _map_rows(media_df, ["media_ref", "media_kind", "payload"], FEATURES_SCHEMA, row)
+    return map_rows(media_df, ["media_ref", "media_kind", "payload"], FEATURES_SCHEMA, row)
 
 
 RESIZE_SCHEMA = StructType(
@@ -1048,7 +1025,7 @@ def resize_images(media_df: DataFrame, target_w: int, target_h: int, allow_pil: 
             return [(ref, kind, resized_png, target_w, target_h, True)]
         return [(ref, kind, raw, None, None, False)]
 
-    return _map_rows(media_df, ["media_ref", "media_kind", "payload"], RESIZE_SCHEMA, row)
+    return map_rows(media_df, ["media_ref", "media_kind", "payload"], RESIZE_SCHEMA, row)
 
 
 FRAME_SCHEMA = StructType(
@@ -1092,4 +1069,4 @@ def sample_video_frames(media_df: DataFrame, every_ms: int = 1000, max_frames: i
             yield (ref, i, i * every_ms, frame, decoder)
 
     cols = ["media_ref", "media_kind", "payload", "duration_ms"]
-    return _map_rows(media_df, cols, FRAME_SCHEMA, rows)
+    return map_rows(media_df, cols, FRAME_SCHEMA, rows)

@@ -166,49 +166,45 @@ def nfc_normalize_text(
     it cannot implement canonical composition.  The fast path is
     ``unicodedata.is_normalized``: already-normalized strings (the
     overwhelming case in a real corpus) are detected without allocating a
-    copy, and the batch is returned with only the `changed` flags
-    computed.  Strings cross the Arrow boundary once per batch; zero
-    shuffles -- scan-stage work at 100 TB, like the extraction tier.
+    copy and pass through unchanged.  Strings cross the Arrow boundary
+    once per batch; zero shuffles -- scan-stage work at 100 TB, like the
+    extraction tier.
     ``form`` is NFC (default) / NFD / NFKC / NFKD; the DuckDB oracle twin
     exists for NFC (``nfc_normalize``).  NULL text stays NULL with
     ``changed`` false."""
-    import pyarrow as pa
+    import unicodedata
+
+    from pyspark.sql.types import (
+        BooleanType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from ..pipeline import map_rows
 
     if form not in ("NFC", "NFD", "NFKC", "NFKD"):
         raise ValueError(f"unknown normalization form: {form!r}")
 
     out_name = "text_nfc" if form == "NFC" else f"text_{form.lower()}"
-    out_schema = f"doc_id bigint, {out_name} string, changed boolean"
+    out_schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField(out_name, StringType()),
+            StructField("changed", BooleanType()),
+        ]
+    )
 
-    def kernel(batches):
-        import unicodedata
+    def row(doc_id, s):
+        if s is None:
+            return [(doc_id, None, False)]
+        if unicodedata.is_normalized(form, s):
+            return [(doc_id, s, False)]
+        return [(doc_id, unicodedata.normalize(form, s), True)]
 
-        is_norm = unicodedata.is_normalized
-        norm = unicodedata.normalize
-        for b in batches:
-            out, changed = [], []
-            for s in b.column(1).to_pylist():
-                if s is None:
-                    out.append(None)
-                    changed.append(False)
-                elif is_norm(form, s):
-                    out.append(s)
-                    changed.append(False)
-                else:
-                    out.append(norm(form, s))
-                    changed.append(True)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(out, pa.string()),
-                    pa.array(changed, pa.bool_()),
-                ],
-                names=["doc_id", out_name, "changed"],
-            )
-
-    return df.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), F.col(text_col).alias("text")
-    ).mapInArrow(kernel, out_schema)
+    cols = [F.col("doc_id").cast("bigint").alias("doc_id"), F.col(text_col)]
+    return map_rows(df, cols, out_schema, row)
 
 
 def nfc_normalize_sql(text_expr: str = "text") -> dict[str, str]:

@@ -15,6 +15,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..pipeline import map_batches
+
 
 def _as_double_vec(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -166,7 +168,7 @@ def lsh_signatures(
         F.col(id_col).cast("string").alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-    return prepared.mapInArrow(batches, out_schema)
+    return map_batches(prepared, out_schema, batches)
 
 
 def _train_ivf_centroids(corpus, n_lists, sample_size, id_col, vec_col, iters=8):
@@ -336,8 +338,11 @@ def ivf_build(
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast(C.tolist())
     assignments = (
-        _ivf_prep(corpus, id_col, vec_col)
-        .mapInArrow(_ivf_assign_fn(bc, 1), _ivf_assign_schema())
+        map_batches(
+            _ivf_prep(corpus, id_col, vec_col),
+            _ivf_assign_schema(),
+            _ivf_assign_fn(bc, 1),
+        )
         .select(
             F.col("id").alias("corpus_id"),
             F.col("vec").alias("corpus_vec"),
@@ -373,8 +378,10 @@ def ivf_query(
     spark = queries.sparkSession
     bc = spark.sparkContext.broadcast(cents)
 
-    query_probes = _ivf_prep(queries, id_col, vec_col).mapInArrow(
-        _ivf_assign_fn(bc, n_probe), _ivf_assign_schema()
+    query_probes = map_batches(
+        _ivf_prep(queries, id_col, vec_col),
+        _ivf_assign_schema(),
+        _ivf_assign_fn(bc, n_probe),
     )
     q = query_probes.select(
         F.col("id").alias("query_id"), F.col("vec").alias("query_vec"), "list_id"

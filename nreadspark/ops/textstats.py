@@ -37,10 +37,7 @@ LANG_MARKERS = {
     "zh": ["的", "是", "了", "在", "我"],
     "ja": ["の", "は", "を", "です", "した"],
     # round 6: four more languages, each a DISTINCT script (Hangul,
-    # Arabic, Devanagari, Thai) so the single-pass charset-disjointness
-    # invariant holds by construction -- and the single combined scan
-    # means 14 languages cost barely more than 10 (the r5 per-language
-    # form would have added four more full-text regex passes)
+    # Arabic, Devanagari, Thai)
     "ko": ["이", "그", "을", "는", "하다"],
     "ar": ["في", "من", "على", "أن", "هذا"],
     # r7: 'यह' -> 'से' (both top-frequency function words): the suffix of
@@ -253,60 +250,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _single_pass_safe() -> bool:
-    """True when counting marker hits in ONE consuming regex scan equals
-    the independent per-language scans :func:`lang_pattern` defines.
-    Sufficient conditions, each checked:
-
-    * every marker is a plain literal (no regex metacharacters);
-    * markers are globally distinct, so marker -> language is a function;
-    * no marker is a PREFIX of another marker in the same language (two
-      same-position matches would make alternation order observable);
-    * non-Latin languages use disjoint character sets and contain no
-      ASCII word characters, so substring-counted matches can never
-      overlap each other or a ``\\b``-bounded Latin word.
-
-    Latin markers can't collide among themselves: two whole-word matches
-    at the same position would be the same word.  If a future marker set
-    breaks any condition, :func:`lang_id` silently falls back to the
-    per-language scans -- correctness never depends on this optimization.
-    """
-    import re as _re
-
-    all_markers = [m for ms in LANG_MARKERS.values() for m in ms]
-    if len(set(all_markers)) != len(all_markers):
-        return False
-    if any(_re.escape(m) != m for m in all_markers):
-        return False
-    for ms in LANG_MARKERS.values():
-        for a in ms:
-            if any(a != b and b.startswith(a) for b in ms):
-                return False
-    non_latin = [ms for l, ms in LANG_MARKERS.items() if l not in _LATIN_LANGS]
-    charsets = [set("".join(ms)) for ms in non_latin]
-    for i, cs in enumerate(charsets):
-        if any(_re.match(r"[0-9A-Za-z_]", c) for c in cs):
-            return False
-        for other in charsets[i + 1:]:
-            if cs & other:
-                return False
-    return True
-
-
-def combined_lang_pattern() -> str:
-    """All languages' markers as ONE alternation (longest-first, so a
-    longer marker can never be shadowed at a shared position), each
-    alternative carrying its language's anchoring from
-    :func:`lang_pattern` (``\\b`` for Latin scripts, bare substring
-    otherwise)."""
-    alts = []
-    for lang, ms in LANG_MARKERS.items():
-        for m in ms:
-            alts.append((m, rf"\b{m}\b" if lang in _LATIN_LANGS else m))
-    alts.sort(key=lambda p: (-len(p[0]), p[0]))
-    return "|".join(a for _, a in alts)
-
-
 def _split_scan_safe() -> bool:
     """True when the regex-free scoring path (:func:`lang_id`'s default)
     equals the independent per-language regex scans the generated oracle
@@ -333,8 +276,8 @@ def _split_scan_safe() -> bool:
     Cross-LANGUAGE collisions need no check: the contract (and the
     oracle) is independent per-language scans, so a marker shared by two
     languages legitimately scores both.  If a future marker set breaks a
-    condition, :func:`lang_id` falls back to the combined-alternation
-    scan -- correctness never depends on this optimization."""
+    condition, :func:`lang_id` raises ``ValueError`` rather than count
+    something the oracle does not."""
     import re as _re
 
     for lang in _LATIN_LANGS:
@@ -407,111 +350,71 @@ def lang_id(
     codegen, independent of marker-set regex complexity.
 
     Equivalence to the per-language regex scans the generated DuckDB
-    oracle runs is validated by :func:`_split_scan_safe` (combined-
-    alternation scan via :func:`_single_pass_safe`, then per-language
-    scans, as fallbacks), so it is re-proven on every driver run.
+    oracle runs is validated by :func:`_split_scan_safe` on every driver
+    run; a marker set that fails it raises ``ValueError``.
 
     ``carry_cols`` ride through the scoring projections unchanged --
     :func:`lang_id_eval` uses this to attach the label column without a
     join (scoring is per-row; a join here was pure shuffle waste)."""
     carry = list(carry_cols)
     langs = sorted(LANG_MARKERS.keys())
-    latin = sorted(l for l in langs if l in _LATIN_LANGS)
-    # greatest(size, 0): NULL text makes the arrays NULL and F.size(NULL)
-    # is -1 (legacy sizeOfNull) -- without the clamp a null-text row would
-    # predict the first language with best_score -1 instead of 'und' (and
-    # diverge from the SQL twin, whose CASE arms all go NULL).  The
-    # generated oracle applies the same COALESCE(..., 0).
-    if _split_scan_safe():
-        # the two prepared strings + their lengths, staged in child
-        # projections so the 70 replace counts slice column refs instead
-        # of re-running the regexp_replace per use (multiply-referenced-
-        # expression rule)
-        staged = df.select(
-            "doc_id",
-            *carry,
-            F.concat(
-                F.lit("  "),
-                F.regexp_replace(F.col(text_col), r"[^0-9A-Za-z_]+", "  "),
-                F.lit("  "),
-            ).alias("__lt"),
-            F.regexp_replace(F.col(text_col), r"[\x00-\x7f]+", " ").alias("__na"),
-        ).withColumn("__lt_len", F.length("__lt")).withColumn(
-            "__na_len", F.length("__na")
+    if not _split_scan_safe():
+        raise ValueError(
+            "LANG_MARKERS breaks the split-scan conditions (see _split_scan_safe)"
         )
+    # the two prepared strings + their lengths, staged in child
+    # projections so the 70 replace counts slice column refs instead
+    # of re-running the regexp_replace per use (multiply-referenced-
+    # expression rule)
+    staged = df.select(
+        "doc_id",
+        *carry,
+        F.concat(
+            F.lit("  "),
+            F.regexp_replace(F.col(text_col), r"[^0-9A-Za-z_]+", "  "),
+            F.lit("  "),
+        ).alias("__lt"),
+        F.regexp_replace(F.col(text_col), r"[\x00-\x7f]+", " ").alias("__na"),
+    ).withColumn("__lt_len", F.length("__lt")).withColumn(
+        "__na_len", F.length("__na")
+    )
 
-        def replace_score_sql(lang: str) -> str:
-            # generated as ONE SQL string per language: at 20 languages the
-            # DSL form was ~800 py4j round-trips and ~2 s of DRIVER time
-            # per build (execution itself is ~0.2 s); F.expr parses
-            # JVM-side in one call
-            if lang in _LATIN_LANGS:
-                src, slen = "__lt", "__lt_len"
-                needles = [f" {m} " for m in LANG_MARKERS[lang]]
-            else:
-                src, slen = "__na", "__na_len"
-                needles = list(LANG_MARKERS[lang])
-            terms = [
-                "cast(({slen} - length(replace({src}, '{m}', ''))) / {k} as bigint)".format(
-                    slen=slen, src=src, m=n.replace("'", "''"), k=len(n)
-                )
-                for n in needles
-            ]
-            return f"coalesce({' + '.join(terms)}, 0L) AS score_{lang}"
-
-        scored = staged.selectExpr(
-            "doc_id",
-            *carry,
-            *[replace_score_sql(lang) for lang in langs],
-            # script histogram (r8): latin letters live in the word-run
-            # string, every other family is ASCII-free so it survives the
-            # ASCII condensation intact -- the non-latin counts scan the
-            # NEAR-EMPTY remainder for the Latin-script majority of a web
-            # corpus instead of the full text
-            *[
-                _script_count_sql("__lt" if f == "latin" else "__na", f)
-                + f" AS __sc_{f}"
-                for f in sorted(SCRIPT_RANGES)
-            ],
-        )
-    elif _single_pass_safe():  # pragma: no cover - shipped set is split-safe
-        hits = F.regexp_extract_all(
-            F.col(text_col), F.lit(combined_lang_pattern()), 0
-        )
-        scored = df.select(
-            "doc_id", *carry, hits.alias("__hits"), F.col(text_col).alias("__t")
-        ).select(
-            "doc_id",
-            *carry,
-            *[
-                F.greatest(
-                    F.size(F.filter(F.col("__hits"), lambda h: h.isin(*LANG_MARKERS[lang]))),
-                    F.lit(0),
-                ).alias(f"score_{lang}")
-                for lang in langs
-            ],
-            *[
-                F.expr(_script_count_sql("__t", f)).alias(f"__sc_{f}")
-                for f in sorted(SCRIPT_RANGES)
-            ],
-        )
-    else:  # pragma: no cover - shipped marker set is single-pass safe
-        score_cols = [
-            F.greatest(
-                F.size(F.regexp_extract_all(F.col(text_col), F.lit(lang_pattern(lang)), 0)),
-                F.lit(0),
-            ).alias(f"score_{lang}")
-            for lang in langs
+    def replace_score_sql(lang: str) -> str:
+        # generated as ONE SQL string per language: at 20 languages the
+        # DSL form was ~800 py4j round-trips and ~2 s of DRIVER time
+        # per build (execution itself is ~0.2 s); F.expr parses
+        # JVM-side in one call
+        if lang in _LATIN_LANGS:
+            src, slen = "__lt", "__lt_len"
+            needles = [f" {m} " for m in LANG_MARKERS[lang]]
+        else:
+            src, slen = "__na", "__na_len"
+            needles = list(LANG_MARKERS[lang])
+        terms = [
+            "cast(({slen} - length(replace({src}, '{m}', ''))) / {k} as bigint)".format(
+                slen=slen, src=src, m=n.replace("'", "''"), k=len(n)
+            )
+            for n in needles
         ]
-        scored = df.withColumn("__t", F.col(text_col)).select(
-            "doc_id",
-            *carry,
-            *score_cols,
-            *[
-                F.expr(_script_count_sql("__t", f)).alias(f"__sc_{f}")
-                for f in sorted(SCRIPT_RANGES)
-            ],
-        )
+        # NULL text makes every count NULL: the coalesce scores it 0, so it
+        # predicts 'und' like the generated oracle's COALESCE(..., 0)
+        return f"coalesce({' + '.join(terms)}, 0L) AS score_{lang}"
+
+    scored = staged.selectExpr(
+        "doc_id",
+        *carry,
+        *[replace_score_sql(lang) for lang in langs],
+        # script histogram (r8): latin letters live in the word-run
+        # string, every other family is ASCII-free so it survives the
+        # ASCII condensation intact -- the non-latin counts scan the
+        # NEAR-EMPTY remainder for the Latin-script majority of a web
+        # corpus instead of the full text
+        *[
+            _script_count_sql("__lt" if f == "latin" else "__na", f)
+            + f" AS __sc_{f}"
+            for f in sorted(SCRIPT_RANGES)
+        ],
+    )
     # argmax with tie-break on language code order -- SQL-generated like
     # the score columns (py4j build cost), best staged in its own
     # projection so the CASE arms read a column ref

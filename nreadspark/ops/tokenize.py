@@ -31,6 +31,7 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..pipeline import map_batches
 from .textstats import TOKEN_PATTERN
 
 _TOKEN_RE = re.compile(TOKEN_PATTERN)
@@ -239,4 +240,4 @@ def count_tokens_bpe(
                 [ids, pa.array(counts, pa.int64())], names=["doc_id", "bpe_tokens"]
             )
 
-    return df.select("doc_id", text_col).mapInArrow(batches, out_schema)
+    return map_batches(df.select("doc_id", text_col), out_schema, batches)

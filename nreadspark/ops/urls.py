@@ -143,12 +143,6 @@ def with_canonical_url(
     return df.drop(*[c for c in df.columns if c.startswith("__cu_")])
 
 
-def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Add ``canonical_url`` next to the raw column -- the projection a
-    crawl frontier or dedup stage composes over (staged fast form)."""
-    return with_canonical_url(df, url_col)
-
-
 def dedup_by_url(df: DataFrame, url_col: str = "url") -> DataFrame:
     """URL-level duplicate groups: one row per canonical URL with its
     fetch count and canonical (minimum) doc_id -- the

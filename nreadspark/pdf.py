@@ -26,8 +26,8 @@ Output is the engine-wide span sequence ``(kind, text, media_ref, offset)``
 documents.
 
 Scale shape: ``extract_pdf`` is one ``mapInArrow`` stage over a binary
-column, no shuffle, flat columnar span builders, per-document error
-containment (a damaged PDF yields a flagged row, never a failed task).
+column, no shuffle, per-document error containment (a damaged PDF yields
+a flagged row, never a failed task).
 """
 
 from __future__ import annotations
@@ -550,14 +550,10 @@ def extract_pdf(df, pdf_col: str = "pdf"):
     """(doc_id, pdf binary) -> (doc_id, spans, title, content_extracted,
     n_pages, error).
 
-    One ``mapInArrow`` stage, no shuffle; flat columnar span builders (one
-    Arrow ListArray per batch, no per-span Python dicts); per-document error
-    containment -- a corrupt PDF produces a row with ``error`` set and an
-    empty span list, never a failed task (the HTML pipeline's poisoned-doc
-    rule, pipeline.py)."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
+    One ``mapInArrow`` stage (:func:`nreadspark.pipeline.map_rows`), no
+    shuffle; per-document error containment -- a corrupt PDF produces a
+    row with ``error`` set and an empty span list, never a failed task (the
+    HTML pipeline's poisoned-doc rule, pipeline.py)."""
     from pyspark.sql.types import (
         ArrayType,
         BooleanType,
@@ -569,7 +565,7 @@ def extract_pdf(df, pdf_col: str = "pdf"):
 
     # the engine-wide span model, shared with the HTML pipeline so unions
     # across tiers (e.g. the mixed_pipeline query) can never diverge
-    from .pipeline import SPAN_TYPE
+    from .pipeline import SPAN_TYPE, map_rows
 
     out_type = StructType(
         [
@@ -582,66 +578,25 @@ def extract_pdf(df, pdf_col: str = "pdf"):
         ]
     )
 
-    def batches(it):
-        schema = to_arrow_schema(out_type)
-        pa_span = schema.field("spans").type.value_type
-        for batch in it:
-            names = batch.schema.names
-            ids = batch.column(names.index("doc_id"))
-            pdfs = batch.column(names.index("__pdf")).to_pylist()
-            # flat builders
-            offsets = [0]
-            kinds: list[str] = []
-            texts: list[str | None] = []
-            refs: list[str | None] = []
-            offs: list[int] = []
-            titles: list[str | None] = []
-            extracted: list[bool] = []
-            n_pages_col: list[int] = []
-            errors: list[str | None] = []
-            for raw in pdfs:
-                try:
-                    spans, n_pages, title = parse_pdf_spans(raw or b"")
-                except Exception as exc:  # poisoned-doc containment
-                    spans, n_pages, title = [], 0, None
-                    errors.append(f"{type(exc).__name__}: {exc}"[:200])
-                else:
-                    errors.append(None)
-                for i, (k, t, r) in enumerate(spans):
-                    kinds.append(k)
-                    texts.append(t)
-                    refs.append(r)
-                    offs.append(i)
-                offsets.append(len(kinds))
-                titles.append(title)
-                extracted.append(any(k == "text" for k, _, _ in spans))
-                n_pages_col.append(n_pages)
-            spans_arr = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()),
-                pa.StructArray.from_arrays(
-                    [
-                        pa.array(kinds, pa.string()),
-                        pa.array(texts, pa.string()),
-                        pa.array(refs, pa.string()),
-                        pa.array(offs, pa.int32()),
-                    ],
-                    fields=list(pa_span),
-                ),
+    def row(doc_id, raw):
+        error = None
+        try:
+            spans, n_pages, title = parse_pdf_spans(raw or b"")
+        except Exception as exc:  # poisoned-doc containment
+            spans, n_pages, title = [], 0, None
+            error = f"{type(exc).__name__}: {exc}"[:200]
+        return [
+            (
+                doc_id,
+                [(k, t, r, i) for i, (k, t, r) in enumerate(spans)],
+                title,
+                any(k == "text" for k, _, _ in spans),
+                n_pages,
+                error,
             )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    spans_arr,
-                    pa.array(titles, pa.string()),
-                    pa.array(extracted, pa.bool_()),
-                    pa.array(n_pages_col, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                schema=schema,
-            )
+        ]
 
-    prepared = df.select(F.col("doc_id"), F.col(pdf_col).alias("__pdf"))
-    return prepared.mapInArrow(batches, out_type)
+    return map_rows(df, ["doc_id", pdf_col], out_type, row)
 
 
 # ---------------------------------------------------------------------------

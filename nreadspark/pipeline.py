@@ -98,6 +98,65 @@ def repartition_for_extraction(df: DataFrame) -> DataFrame:
     return df.repartition(num_partitions, F.xxhash64("doc_id"))
 
 
+def map_batches(df: DataFrame, schema, fn) -> DataFrame:
+    """The library's one ``mapInArrow`` crossing: ``fn(iterator)`` maps a
+    task's Arrow batches to output batches of ``schema``.
+
+    PySpark calls importlib.invalidate_caches() at the start of every task,
+    and before Python 3.13 every cached zipimporter then re-reads its whole
+    archive directory (pyspark.zip's packages, py4j, a --py-files archive):
+    ~50 ms per task on a reused worker.  The finders are a pure cache -- a
+    later import rebuilds one from zipimport's directory cache without
+    reading the archive, and loaded modules keep their loaders -- and any
+    new top-level import re-creates them, so the task drops them every
+    time before ``fn`` runs."""
+
+    def task(iterator):
+        for path, finder in list(sys.path_importer_cache.items()):
+            if isinstance(finder, zipimport.zipimporter):
+                sys.path_importer_cache.pop(path, None)
+        yield from fn(iterator)
+
+    return df.mapInArrow(task, schema)
+
+
+def rows_to_batch(rows: list, arrow_schema):
+    """The one row-batch builder: an Arrow batch of ``arrow_schema`` from
+    output tuples in its column order (``pa.array`` per column, so NULL is
+    None and a ``list<struct>`` column takes lists of tuples or dicts)."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
+def map_rows(df: DataFrame, in_cols: list, schema: StructType, row_fn) -> DataFrame:
+    """Per-row kernels on :func:`map_batches`: select ``in_cols``, call
+    ``row_fn(*values)`` per row with the values as Python objects
+    (``to_pylist``: NULL is None, BINARY is bytes), and build each output
+    batch from the tuples ``row_fn`` returns -- zero or more per row, in
+    ``schema`` order -- against ``to_arrow_schema(schema)``."""
+
+    def batches(iterator):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        for batch in iterator:
+            yield rows_to_batch(
+                [
+                    out
+                    for values in zip(*(c.to_pylist() for c in batch.columns))
+                    for out in row_fn(*values)
+                ],
+                arrow_schema,
+            )
+
+    return map_batches(df.select(*in_cols), schema, batches)
+
+
 def _extract_batches(iterator, max_doc_bytes: int | None = None):
     """mapInArrow kernel: (doc_id, __html[, __url]) -> OUTPUT_SCHEMA
     batches.
@@ -108,8 +167,8 @@ def _extract_batches(iterator, max_doc_bytes: int | None = None):
     dicts, no pandas block manager.  This halves the Python-side overhead vs
     a mapInPandas list-of-dict encoding.  The per-task cost outside the
     kernel, though, was measured to come mostly from PySpark re-reading its
-    zip archives on every task, not from the Arrow exchange; see the finder
-    prune below.
+    zip archives on every task, not from the Arrow exchange; see
+    :func:`map_batches`.
 
     ``max_doc_bytes`` is the per-document byte budget (see :func:`extract`):
     documents over it are truncated to exactly that many UTF-8 bytes before
@@ -124,17 +183,6 @@ def _extract_batches(iterator, max_doc_bytes: int | None = None):
 
     from .kernel import Options, transcode
     from .spans import extract_spans_flat
-
-    # PySpark calls importlib.invalidate_caches() at the start of every task,
-    # and before Python 3.13 every cached zipimporter then re-reads its whole
-    # archive directory (pyspark.zip's packages, py4j, a --py-files archive):
-    # ~50 ms per task on a reused worker.  The finders are a pure cache -- a
-    # later import rebuilds one from zipimport's directory cache without
-    # reading the archive, and loaded modules keep their loaders -- and any
-    # new top-level import re-creates them, so drop them on every task.
-    for path, finder in list(sys.path_importer_cache.items()):
-        if isinstance(finder, zipimport.zipimporter):
-            sys.path_importer_cache.pop(path, None)
 
     opts = Options()
     schema = to_arrow_schema(OUTPUT_SCHEMA)
@@ -302,7 +350,7 @@ def extract(
     if repartition:
         prepared = repartition_for_extraction(prepared)
     kernel = lambda it: _extract_batches(it, max_doc_bytes)  # noqa: E731
-    return prepared.mapInArrow(kernel, OUTPUT_SCHEMA)
+    return map_batches(prepared, OUTPUT_SCHEMA, kernel)
 
 
 def extract_from_html(
@@ -317,7 +365,7 @@ def extract_from_html(
     if url_col:
         cols.append(F.col(url_col).alias("__url"))
     kernel = lambda it: _extract_batches(it, max_doc_bytes)  # noqa: E731
-    return df.select(*cols).mapInArrow(kernel, OUTPUT_SCHEMA)
+    return map_batches(df.select(*cols), OUTPUT_SCHEMA, kernel)
 
 
 # ---------------------------------------------------------------------------
@@ -488,7 +536,7 @@ def extract_from_html_bytes(
             _decode_bytes_batches(iterator, fallback_encoding), max_doc_bytes
         )
 
-    return df.select(*cols).mapInArrow(kernel, OUTPUT_SCHEMA)
+    return map_batches(df.select(*cols), OUTPUT_SCHEMA, kernel)
 
 
 def extraction_metrics(df: DataFrame) -> DataFrame:

@@ -130,38 +130,21 @@ def transcode_to_html_column(df, html_col: str = "html", url_col: str | None = N
     """Spark surface: (doc_id, html[, url]) -> (doc_id, debug_html) via the
     Arrow-batched kernel.  Debug/golden tooling -- the span pipeline
     (pipeline.extract) is the production path."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StringType, StructField, StructType
 
-    cols = [F.col("doc_id"), F.col(html_col).alias("__html")]
-    if url_col:
-        cols.append(F.col(url_col).alias("__url"))
+    from .pipeline import map_rows
+
+    cols = ["doc_id", html_col] + ([url_col] if url_col else [])
 
     out_schema = StructType(
         [StructField("doc_id", StringType()), StructField("debug_html", StringType())]
     )
 
-    def batches(iterator):
-        schema = to_arrow_schema(out_schema)
-        for batch in iterator:
-            names = batch.schema.names
-            htmls = batch.column(names.index("__html")).to_pylist()
-            urls = (
-                batch.column(names.index("__url")).to_pylist()
-                if "__url" in names
-                else [None] * batch.num_rows
-            )
-            out = []
-            for h, u in zip(htmls, urls):
-                try:
-                    out.append(transcode_to_html(h, u) if h and h.strip() else None)
-                except Exception:
-                    out.append(None)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(names.index("doc_id")), pa.array(out, pa.string())],
-                schema=schema,
-            )
+    def row(doc_id, html, url=None):
+        try:
+            out = transcode_to_html(html, url) if html and html.strip() else None
+        except Exception:
+            out = None
+        return [(doc_id, out)]
 
-    return df.select(*cols).mapInArrow(batches, out_schema)
+    return map_rows(df, cols, out_schema, row)

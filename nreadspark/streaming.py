@@ -189,6 +189,15 @@ def dedup_stream(
     state size with :func:`state_store_metrics`.
     """
     from pyspark.sql import functions as F
+
+    hashed = stream_df.withColumn("__text_hash", F.sha2(F.col(text_col), 256))
+    return _first_wins(hashed, ttl_minutes, emit_suppressed)
+
+
+def _first_wins(hashed: DataFrame, ttl_minutes: int | None, emit_suppressed: bool):
+    """The stateful step both stream dedups share: group ``hashed`` on
+    ``__text_hash`` and run :func:`_make_dedup_fn` through
+    ``applyInPandasWithState`` -> ``(text_hash, doc_id, n_prior)``."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     if ttl_minutes is not None and ttl_minutes <= 0:
@@ -199,19 +208,18 @@ def dedup_stream(
             f"ttl_minutes must be positive (got {ttl_minutes}); pass None "
             "to keep state forever"
         )
-    hashed = stream_df.withColumn("__text_hash", F.sha2(F.col(text_col), 256))
-    out_schema = "text_hash string, doc_id string, n_prior bigint"
-    state_schema = "n_seen bigint"
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if ttl_minutes is not None
         else GroupStateTimeout.NoTimeout
     )
     ttl_ms = int((ttl_minutes or 0) * 60_000)
-
     return hashed.groupBy("__text_hash").applyInPandasWithState(
-        _make_dedup_fn(emit_suppressed, ttl_ms), out_schema, state_schema,
-        "update", timeout,
+        _make_dedup_fn(emit_suppressed, ttl_ms),
+        "text_hash string, doc_id string, n_prior bigint",
+        "n_seen bigint",
+        "update",
+        timeout,
     )
 
 
@@ -238,13 +246,7 @@ def dedup_media_stream(
     Same state-store guidance as :func:`dedup_stream`
     (:data:`ROCKSDB_STATE_STORE_CONF`, TTL for unbounded streams)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if ttl_minutes is not None and ttl_minutes <= 0:
-        raise ValueError(
-            f"ttl_minutes must be positive (got {ttl_minutes}); pass None "
-            "to keep state forever"
-        )
     hi, lo = f"{which}_hi", f"{which}_lo"
     hashed = (
         stream_df.filter(F.col(hi).isNotNull() & F.col(lo).isNotNull())
@@ -256,18 +258,7 @@ def dedup_media_stream(
     )
     # the kernel's column names are its contract -- rename AFTER the
     # stateful operator rather than risking name-vs-position drift
-    out_schema = "text_hash string, doc_id string, n_prior bigint"
-    state_schema = "n_seen bigint"
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_minutes is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    ttl_ms = int((ttl_minutes or 0) * 60_000)
-    out = hashed.groupBy("__text_hash").applyInPandasWithState(
-        _make_dedup_fn(emit_suppressed, ttl_ms), out_schema, state_schema,
-        "update", timeout,
-    )
+    out = _first_wins(hashed, ttl_minutes, emit_suppressed)
     return out.select(
         F.col("text_hash").alias("hash_key"),
         F.col("doc_id").alias(ref_col),

@@ -15,7 +15,7 @@ why crawls use it).  For ``WARC-Type: response`` records the block is an
 HTTP/1.1 response: status line + headers + ``\\r\\n\\r\\n`` + payload;
 charset and content-encoding ride in the HTTP headers.
 
-Everything here is pure stdlib (``zlib``) with per-record error
+The parsers are pure stdlib (``zlib``) with per-record error
 containment: a malformed record yields an ``error``-tagged row and
 parsing continues at the next record boundary -- one poisoned record must
 never kill a 100 TB scan.  The Spark surface is ONE ``mapInArrow`` pass
@@ -31,6 +31,14 @@ from __future__ import annotations
 
 import hashlib
 import zlib
+
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 _CRLF = b"\r\n"
 _SEP = b"\r\n\r\n"
@@ -365,30 +373,29 @@ def parse_http_response(block: bytes):
 # Spark surface
 # ---------------------------------------------------------------------------
 
-WARC_RECORDS_SCHEMA = (
-    "doc_id string, record_idx int, warc_type string, url string, "
-    "http_status int, content_type string, content_encoding string, "
-    "content binary, error string"
+WARC_RECORDS_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType()),
+        StructField("record_idx", IntegerType()),
+        StructField("warc_type", StringType()),
+        StructField("url", StringType()),
+        StructField("http_status", IntegerType()),
+        StructField("content_type", StringType()),
+        StructField("content_encoding", StringType()),
+        StructField("content", BinaryType()),
+        StructField("error", StringType()),
+    ]
 )
 
 
-_RECORD_COLS = (
-    "doc_id", "record_idx", "warc_type", "url", "http_status",
-    "content_type", "content_encoding", "content", "error",
-)
-
-
-def _new_rows() -> dict:
-    return {k: [] for k in _RECORD_COLS}
-
-
-def _append_record_row(out: dict, did: str, idx: int, hdrs, block, err) -> int:
-    """Route one parsed WARC record into the output columns (response
+def _record_row(did, idx: int, hdrs, block, err) -> tuple:
+    """One parsed WARC record as a :data:`WARC_RECORDS_SCHEMA` row (response
     blocks split into HTTP headers; non-response records -- resource,
     conversion, warcinfo, request, metadata -- keep their whole block with
     the WARC-level content type: this table is the reusable routing
-    surface, so no record's bytes are dropped).  Returns the payload size
-    for the caller's batch-size accounting."""
+    surface, so no record's bytes are dropped).  With ``err`` set the row
+    carries no payload; ``_record_row(did, -1, {}, b"", err)`` is the
+    failure row of a blob or file that raised."""
     wtype = hdrs.get("warc-type")
     status, ctype, cenc, payload = None, None, None, None
     if err is None and wtype == "response":
@@ -398,45 +405,14 @@ def _append_record_row(out: dict, did: str, idx: int, hdrs, block, err) -> int:
     elif err is None:
         payload = block
         ctype = hdrs.get("content-type")
-    out["doc_id"].append(str(did))
-    out["record_idx"].append(idx)
-    out["warc_type"].append(wtype)
-    out["url"].append(hdrs.get("warc-target-uri"))
-    out["http_status"].append(status)
-    out["content_type"].append(ctype)
-    out["content_encoding"].append(cenc)
-    out["content"].append(payload)
-    out["error"].append(err)
-    return len(payload) if payload is not None else 0
-
-
-def _append_failure_row(out: dict, did: str, exc: Exception) -> None:
-    out["doc_id"].append(str(did))
-    out["record_idx"].append(-1)
-    for k in ("warc_type", "url", "content_type", "content_encoding"):
-        out[k].append(None)
-    out["http_status"].append(None)
-    out["content"].append(None)
-    out["error"].append(f"{type(exc).__name__}: {exc}")
-
-
-def _rows_to_batch(out: dict):
-    import pyarrow as pa
-
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(out["doc_id"], pa.string()),
-            pa.array(out["record_idx"], pa.int32()),
-            pa.array(out["warc_type"], pa.string()),
-            pa.array(out["url"], pa.string()),
-            pa.array(out["http_status"], pa.int32()),
-            pa.array(out["content_type"], pa.string()),
-            pa.array(out["content_encoding"], pa.string()),
-            pa.array(out["content"], pa.binary()),
-            pa.array(out["error"], pa.string()),
-        ],
-        names=list(_RECORD_COLS),
+    return (
+        str(did), idx, wtype, hdrs.get("warc-target-uri"), status, ctype, cenc,
+        payload, err,
     )
+
+
+def _error(exc: Exception) -> str:
+    return f"{type(exc).__name__}: {exc}"
 
 
 def warc_records(df, warc_col: str = "warc", doc_id_col: str = "doc_id"):
@@ -446,23 +422,19 @@ def warc_records(df, warc_col: str = "warc", doc_id_col: str = "doc_id"):
     bytes).  Malformed records surface as ``error`` rows instead of
     failing the task.  No shuffle: records inherit the blob partitioning,
     exactly like the PDF tier."""
+    from .pipeline import map_rows
 
-    def batches(iterator):
-        for batch in iterator:
-            names = batch.schema.names
-            ids = batch.column(names.index(doc_id_col)).to_pylist()
-            blobs = batch.column(names.index(warc_col)).to_pylist()
-            out = _new_rows()
-            for did, blob in zip(ids, blobs):
-                raw = bytes(blob) if blob is not None else b""
-                try:
-                    for idx, (hdrs, block, err) in enumerate(iter_warc_records(raw)):
-                        _append_record_row(out, did, idx, hdrs, block, err)
-                except Exception as exc:  # blob-level containment
-                    _append_failure_row(out, did, exc)
-            yield _rows_to_batch(out)
+    def row(did, blob):
+        raw = bytes(blob) if blob is not None else b""
+        rows = []
+        try:
+            for idx, (hdrs, block, err) in enumerate(iter_warc_records(raw)):
+                rows.append(_record_row(did, idx, hdrs, block, err))
+        except Exception as exc:  # blob-level containment
+            rows.append(_record_row(did, -1, {}, b"", _error(exc)))
+        return rows
 
-    return df.select(doc_id_col, warc_col).mapInArrow(batches, WARC_RECORDS_SCHEMA)
+    return map_rows(df, [doc_id_col, warc_col], WARC_RECORDS_SCHEMA, row)
 
 
 # records per output batch from the file-path source; payload bytes are
@@ -524,39 +496,40 @@ def warc_records_from_paths(paths_df, path_col: str = "path"):
     :data:`_PATH_BATCH_BYTES` payload bytes) so a million-record file
     doesn't accumulate either.  ``doc_id`` is the file path (composite
     ``<path>#<idx>`` ids downstream stay collision-free across files)."""
+    from .pipeline import map_batches, rows_to_batch
 
     def batches(iterator):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(WARC_RECORDS_SCHEMA)
         for batch in iterator:
-            paths = batch.column(batch.schema.names.index(path_col)).to_pylist()
-            out = _new_rows()
-            pending_bytes = 0
-            for path in paths:
+            rows, pending_bytes = [], 0
+            for path in batch.column(0).to_pylist():
                 try:
                     fh = _open_warc_path(path)
                 except Exception as exc:
-                    _append_failure_row(out, path, exc)
+                    rows.append(_record_row(path, -1, {}, b"", _error(exc)))
                     continue
                 try:
                     with fh:
                         for idx, (hdrs, block, err) in enumerate(
                             iter_warc_records_stream(fh)
                         ):
-                            pending_bytes += _append_record_row(
-                                out, path, idx, hdrs, block, err
-                            )
+                            row = _record_row(path, idx, hdrs, block, err)
+                            rows.append(row)
+                            pending_bytes += len(row[7] or b"")  # content
                             if (
-                                len(out["doc_id"]) >= _PATH_BATCH_RECORDS
+                                len(rows) >= _PATH_BATCH_RECORDS
                                 or pending_bytes >= _PATH_BATCH_BYTES
                             ):
-                                yield _rows_to_batch(out)
-                                out = _new_rows()
-                                pending_bytes = 0
+                                yield rows_to_batch(rows, arrow_schema)
+                                rows, pending_bytes = [], 0
                 except Exception as exc:  # file-level containment
-                    _append_failure_row(out, path, exc)
-            if out["doc_id"]:
-                yield _rows_to_batch(out)
+                    rows.append(_record_row(path, -1, {}, b"", _error(exc)))
+            if rows:
+                yield rows_to_batch(rows, arrow_schema)
 
-    return paths_df.select(path_col).mapInArrow(batches, WARC_RECORDS_SCHEMA)
+    return map_batches(paths_df.select(path_col), WARC_RECORDS_SCHEMA, batches)
 
 
 def extract_warc(

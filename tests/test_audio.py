@@ -334,3 +334,37 @@ def test_audio_cover_hashes_decode_gif_covers(spark):
     assert (cover["width"], cover["height"]) == (16, 16)
     for c in ("ahash_hi", "ahash_lo", "ghash_hi", "ghash_lo", "phash_hi", "phash_lo"):
         assert cover[c] == image[c], c
+
+
+def test_out_of_range_header_fields_are_contained(spark):
+    """A PNG whose IHDR width is 2^31 and a WAV whose sample rate is 2^31
+    (corrupt: the specs cap both below, and neither fits its int32 output
+    column) take the undecodable tiers with NULL hashes in every media
+    operator -- standalone, and the PNG as an ID3 cover -- instead of
+    failing the task."""
+    import struct
+
+    from nreadspark.ops.audio import audio_cover_hashes, audio_fingerprints
+    from nreadspark.ops.images import image_hashes
+    from nreadspark.ops.multimodal import extract_media_features
+
+    ihdr = struct.pack(">IIBBBBB", 1 << 31, 64, 8, 0, 0, 0, 0)
+    png = b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR" + ihdr + bytes(4)
+    wav = encode_pcm8_wav(_samples(3), rate=1 << 31)
+    apic = bytes([0]) + b"image/png\x00" + bytes([3]) + b"cover\x00" + png
+    rows = [("png", "image", png), ("wav", "audio", wav), ("id3", "audio", _id3_tag(apic))]
+    df = spark.createDataFrame(rows, "media_ref string, media_kind string, payload binary")
+    hashes = ("ahash_hi", "ahash_lo", "ghash_hi", "ghash_lo", "phash_hi", "phash_lo")
+    images = {r["media_ref"]: r for r in image_hashes(df).collect()}
+    covers = {r["media_ref"]: r for r in audio_cover_hashes(df).collect()}
+    afp = {r["media_ref"]: r for r in audio_fingerprints(df).collect()}
+    feats = {r["media_ref"]: r for r in extract_media_features(df).collect()}
+    assert images["png"]["decoder"] == covers["id3"]["decoder"] == "undecodable"
+    assert afp["wav"]["decoder"] == "undecodable"
+    for r in (images["png"], covers["id3"]):
+        assert [r[c] for c in ("width", "height", *hashes)] == [None] * 8
+    afp_cols = ("n_samples", "sample_rate", "ehash_hi", "ehash_lo", "ghash_hi", "ghash_lo")
+    assert [afp["wav"][c] for c in afp_cols] == [None] * 6
+    assert feats["png"]["decoder"] == "stub"
+    assert feats["png"]["decoded_width"] is feats["png"]["decoded_height"] is None
+    assert feats["wav"]["decoder"] == "header:wav"

@@ -238,60 +238,26 @@ def test_null_text_predicts_und_with_zero_score(spark):
     assert out[2]["predicted_lang"] == "en"
 
 
-def test_single_pass_equals_per_language_scans(spark, monkeypatch):
-    """The combined-alternation single scan (round 6) must yield exactly
-    the per-language independent-scan scores -- forced fallback vs default
-    path on a corpus with dense, adjacent, and cross-script markers."""
-    import nreadspark.ops.textstats as T
-
-    texts = [
-        "the fast cat and the slow dog of the house",
-        "el perro pero como una casa los dias",
-        "der zug und die bahn ist nicht da",
-        "di che per della sono di che",
-        "это не как и что это не",
-        "的是了在我的是了",
-        "のはをですしたのは",
-        "the der les di uma het и 的 の",  # one marker per language
-        "",
-        "no markers whatsoever xyzzy",
-        "thethe andand derder",  # markers glued: \b must reject
-        "ですしたのは das ist die der und",  # mixed scripts in one doc
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    assert T._single_pass_safe()
-    fast = sorted(map(tuple, T.lang_id(df).collect()))
-    monkeypatch.setattr(T, "_single_pass_safe", lambda: False)
-    slow = sorted(map(tuple, T.lang_id(df).collect()))
-    assert fast == slow
-
-
-def test_single_pass_validator_rejects_unsafe_sets(monkeypatch):
-    """Marker sets that would make the consuming scan observable must
-    disable the optimization: same-language prefixes, cross-language
-    duplicate markers, shared non-Latin character sets, regex metachars."""
+def test_split_scan_validator_rejects_unsafe_sets(spark, monkeypatch):
+    """Marker sets on which the regex-free scoring path would diverge from
+    the per-language regex scans fail :func:`_split_scan_safe`, and
+    ``lang_id`` refuses them instead of counting something else."""
     import nreadspark.ops.textstats as T
 
     base = {k: list(v) for k, v in T.LANG_MARKERS.items()}
-    assert T._single_pass_safe()
-
-    unsafe = {**base, "ja": base["ja"] + ["です、"]}  # "です" prefix of "です、"
-    monkeypatch.setattr(T, "LANG_MARKERS", unsafe)
-    assert not T._single_pass_safe()
-
-    dup = {**base, "es": base["es"][:-1] + ["the"]}  # duplicate of en marker
-    monkeypatch.setattr(T, "LANG_MARKERS", dup)
-    assert not T._single_pass_safe()
-
-    shared = {**base, "zh": base["zh"][:-1] + ["のだ"]}  # shares chars with ja
-    monkeypatch.setattr(T, "LANG_MARKERS", shared)
-    assert not T._single_pass_safe()
-
-    meta = {**base, "en": base["en"][:-1] + ["a.b"]}  # regex metachar
-    monkeypatch.setattr(T, "LANG_MARKERS", meta)
-    assert not T._single_pass_safe()
+    assert T._split_scan_safe()
+    unsafe_sets = [
+        {**base, "en": base["en"] + ["a.b"]},  # Latin marker, non-word char
+        {**base, "zh": base["zh"] + ["的x"]},  # non-Latin marker with ASCII
+        {**base, "ja": base["ja"] + ["です、"]},  # "です" inside "です、"
+        {**base, "hi": base["hi"] + ["यह"]},  # suffix of यह = prefix of है
+    ]
+    df = spark.createDataFrame([(1, "the cat")], "doc_id long, text string")
+    for markers in unsafe_sets:
+        monkeypatch.setattr(T, "LANG_MARKERS", markers)
+        assert not T._split_scan_safe()
+        with pytest.raises(ValueError, match="split-scan"):
+            T.lang_id(df)
 
 
 def test_split_scan_path_equals_per_language_regex(spark):
@@ -300,13 +266,8 @@ def test_split_scan_path_equals_per_language_regex(spark):
     exact semantics the generated DuckDB oracle runs -- on adversarial
     inputs: markers inside longer words, punctuation/digit adjacency,
     mixed scripts in one document, empty and NULL text."""
-    from pyspark.sql import Row, functions as F
-    from nreadspark.ops.textstats import (
-        LANG_MARKERS,
-        _split_scan_safe,
-        lang_id,
-        lang_pattern,
-    )
+    from pyspark.sql import Row
+    from nreadspark.ops.textstats import _split_scan_safe, lang_id
 
     assert _split_scan_safe()  # the shipped marker set must stay on it
     texts = [
@@ -331,7 +292,16 @@ def test_split_scan_path_equals_per_language_regex(spark):
         r["doc_id"]: (r["predicted_lang"], r["best_score"])
         for r in lang_id(df).collect()
     }
-    # reference: independent per-language regex scans (the oracle form)
+    for doc_id, want in _per_language_regex_reference(df).items():
+        assert got[doc_id] == want, (doc_id, texts[doc_id], got[doc_id], want)
+
+
+def _per_language_regex_reference(df):
+    """``{doc_id: (predicted_lang, best_score)}`` from independent
+    per-language regexp scans -- the form the generated oracle runs."""
+    from pyspark.sql import functions as F
+    from nreadspark.ops.textstats import LANG_MARKERS, lang_pattern
+
     langs = sorted(LANG_MARKERS.keys())
     ref_scored = df.select(
         "doc_id",
@@ -345,17 +315,45 @@ def test_split_scan_path_equals_per_language_regex(spark):
             for l in langs
         ],
     )
+    ref = {}
     for r in ref_scored.collect():
         best = max(r[f"score_{l}"] for l in langs)
         pred = "und" if best == 0 else next(
             l for l in langs if r[f"score_{l}"] == best
         )
-        assert got[r["doc_id"]] == (pred, best), (
-            r["doc_id"],
-            texts[r["doc_id"]],
-            got[r["doc_id"]],
-            (pred, best),
-        )
+        ref[r["doc_id"]] = (pred, best)
+    return ref
+
+
+def test_single_pass_equals_per_language_scans(spark):
+    """``lang_id``'s single scoring projection must yield exactly the
+    per-language independent-scan results on a corpus with dense,
+    adjacent, and cross-script markers."""
+    from nreadspark.ops.textstats import lang_id
+
+    texts = [
+        "the fast cat and the slow dog of the house",
+        "el perro pero como una casa los dias",
+        "der zug und die bahn ist nicht da",
+        "di che per della sono di che",
+        "это не как и что это не",
+        "的是了在我的是了",
+        "のはをですしたのは",
+        "the der les di uma het и 的 の",  # one marker per language
+        "",
+        "no markers whatsoever xyzzy",
+        "thethe andand derder",  # markers glued: \b must reject
+        "ですしたのは das ist die der und",  # mixed scripts in one doc
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    got = {
+        r["doc_id"]: (r["predicted_lang"], r["best_score"])
+        for r in lang_id(df).collect()
+    }
+    assert got == _per_language_regex_reference(df)
+
 
 
 def test_script_family_histogram(spark):

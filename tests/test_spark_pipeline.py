@@ -196,39 +196,77 @@ def test_failed_document_leaves_an_empty_row(monkeypatch, appended):
         assert rows[i]["title"] == clean[i]["title"] == f"Story {i}"
 
 
+class _CapturedCrossing:
+    """Stands in for a DataFrame: keeps the task function a kernel hands to
+    ``mapInArrow``, so the task runs in-process as a Spark worker runs it."""
+
+    def select(self, *cols):
+        return self
+
+    def mapInArrow(self, task, schema):
+        self.task = task
+        return self
+
+
 def test_kernel_drops_cached_zip_finders(monkeypatch, tmp_path):
     """PySpark calls importlib.invalidate_caches() on every task; a cached
-    zipimporter re-reads its whole archive then.  After an extraction task no
-    zip finder is left to re-read, and the zip still imports."""
+    zipimporter re-reads its whole archive then.  After a task entered
+    through ``map_batches`` -- the extraction kernel's, and a ``map_rows``
+    kernel's (``image_hashes``) -- no zip finder is left to re-read, and the
+    zip still imports."""
     import importlib
     import sys
     import zipfile
     import zipimport
 
+    import pyarrow as pa
+
+    from nreadspark.ops.images import image_hashes
+    from nreadspark.pipeline import OUTPUT_SCHEMA, _extract_batches, map_batches
+
     archive = tmp_path / "zpkg.zip"
     with zipfile.ZipFile(archive, "w") as zf:
         zf.writestr("zpkg/__init__.py", "")
-        zf.writestr("zpkg/first.py", "VALUE = 1\n")
-        zf.writestr("zpkg/second.py", "VALUE = 2\n")
+        for i in range(2):
+            zf.writestr(f"zpkg/first{i}.py", "VALUE = 1\n")
+            zf.writestr(f"zpkg/second{i}.py", f"VALUE = {i}\n")
+    html = "<html><body><p>One paragraph of text, long enough.</p></body></html>"
+    tasks = [
+        (
+            map_batches(_CapturedCrossing(), OUTPUT_SCHEMA, _extract_batches).task,
+            pa.RecordBatch.from_pydict({"doc_id": ["d0"], "__html": [html]}),
+        ),
+        (
+            image_hashes(_CapturedCrossing()).task,
+            pa.RecordBatch.from_pydict({"media_ref": ["m0"], "payload": [b"\x89PNG"]}),
+        ),
+    ]
     saved_cache = dict(sys.path_importer_cache)
     monkeypatch.syspath_prepend(str(archive))
+    real = zipimport.zipimporter.invalidate_caches
     try:
-        importlib.import_module("zpkg.first")
-        _run_kernel(["<html><body><p>One paragraph of text, long enough.</p></body></html>"])
+        for i, (task, batch) in enumerate(tasks):
+            importlib.import_module(f"zpkg.first{i}")
+            assert any(
+                isinstance(f, zipimport.zipimporter)
+                for f in sys.path_importer_cache.values()
+            )
+            (out,) = task(iter([batch]))
+            assert out.num_rows == 1
 
-        rereads = []
-        real = zipimport.zipimporter.invalidate_caches
+            rereads = []
 
-        def counting(self):
-            rereads.append(self.archive)
-            return real(self)
+            def counting(self):
+                rereads.append(self.archive)
+                return real(self)
 
-        monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", counting)
-        importlib.invalidate_caches()
-        assert rereads == []
-        assert importlib.import_module("zpkg.second").VALUE == 2
+            with monkeypatch.context() as m:
+                m.setattr(zipimport.zipimporter, "invalidate_caches", counting)
+                importlib.invalidate_caches()
+            assert rereads == []
+            assert importlib.import_module(f"zpkg.second{i}").VALUE == i
     finally:
-        for name in ("zpkg", "zpkg.first", "zpkg.second"):
+        for name in [m for m in sys.modules if m == "zpkg" or m.startswith("zpkg.")]:
             sys.modules.pop(name, None)
         sys.path_importer_cache.clear()
         sys.path_importer_cache.update(saved_cache)

@@ -1,8 +1,8 @@
 """The suite's shared set-up lives in conftest.py only: one SparkSession for
 the whole run, the jobs/ directory on sys.path, and no absolute path into a
 particular checkout (a test must exercise the tree it sits in).  Library
-kernels state their Arrow output schema once, as a Spark StructType, and the
-media kernels share one Arrow crossing."""
+kernels state their Arrow output schema once, as a Spark StructType, and
+cross into Python through one ``mapInArrow`` call."""
 
 import ast
 import glob
@@ -87,19 +87,20 @@ def test_library_derives_arrow_schemas_from_spark_schemas():
     assert found == [], "\n".join(found)
 
 
-def test_media_kernels_share_one_arrow_crossing():
-    """The image, audio and multimodal kernels are per-row functions behind
-    ``ops.multimodal._map_rows``; a second ``mapInPandas``/``mapInArrow``
-    call in these modules is a second copy of its batch plumbing."""
-    found = []
-    for name in ("images", "audio", "multimodal"):
-        path = os.path.join(REPO, "nreadspark", "ops", f"{name}.py")
+def test_library_has_one_arrow_crossing():
+    """Every ``mapInArrow`` kernel runs through ``pipeline.map_batches``,
+    whose task entry drops PySpark's cached zip finders; a second
+    ``mapInArrow`` call, or a ``mapInPandas`` outside ``ops/dedup.py``'s
+    group-shaped kernels, is a crossing that skips it."""
+    lib = os.path.join(REPO, "nreadspark")
+    arrow, pandas = [], []
+    for path in sorted(glob.glob(os.path.join(lib, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, lib)
         tree = ast.parse(open(path, encoding="utf-8").read(), path)
-        found += [
-            f"ops/{name}.py:{node.lineno}"
-            for node in ast.walk(tree)
-            if isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr in ("mapInPandas", "mapInArrow")
-        ]
-    assert len(found) <= 1, "\n".join(found)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                if node.func.attr == "mapInArrow":
+                    arrow.append(f"{rel}:{node.lineno}")
+                elif node.func.attr == "mapInPandas" and rel != "ops/dedup.py":
+                    pandas.append(f"{rel}:{node.lineno}")
+    assert len(arrow) == 1 and pandas == [], "\n".join(arrow + pandas)
