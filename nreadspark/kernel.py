@@ -3,7 +3,7 @@
 This is a from-scratch reimplementation of the *behaviour* of
 ``NReadability/NReadabilityTranscoder.cs`` (reference paths cited per
 function), shaped as a pure function over one document so it can run
-batch-vectorized inside a Spark ``mapInPandas`` worker.  It is NOT a port of
+batch-vectorized inside a Spark ``mapInArrow`` worker.  It is NOT a port of
 the C# execution model: the reference keeps mutable instance state
 (``_elementsScores`` dict, ``_dontStripUnlikelys`` flip, cs:145,158); here all
 state is function-local so one Python worker can process documents from many

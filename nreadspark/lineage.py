@@ -25,7 +25,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from .pipeline import extract
+from .pipeline import extract, kernel_metric_aggs
 
 LINEAGE_DIR = "_lineage"
 
@@ -496,13 +496,7 @@ class StageRunner:
 def _doc_aggs():
     """Manifest aggregates of the span-table writers."""
     return (
-        F.count("*").alias("docs"),
-        F.sum(F.col("content_extracted").cast("int")).alias("docs_extracted"),
-        F.sum(F.col("metrics.fallback_rerun").cast("int")).alias("fallback_reruns"),
-        F.sum(F.col("metrics.parse_retried").cast("int")).alias("parse_retries"),
-        F.sum((F.col("metrics.n_candidates") < 0).cast("int")).alias("kernel_failures"),
-        F.sum(F.col("metrics.truncated").cast("int")).alias("docs_truncated"),
-        F.sum("metrics.in_bytes").alias("in_bytes"),
+        *kernel_metric_aggs(),
         F.sum("metrics.ms").alias("kernel_ms"),
         F.max("metrics.ms").alias("max_doc_ms"),
     )

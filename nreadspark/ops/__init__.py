@@ -1,3 +1,4 @@
 """Large-scale training-data pipeline operators (dedup, similarity search,
 text analysis, multimodal plumbing) built Spark-first: JVM-side built-in
-functions wherever expressible, Arrow-batched pandas UDFs only where not."""
+functions wherever expressible, Arrow batch kernels (``pipeline.map_batches``)
+only where not."""

@@ -18,12 +18,20 @@ from __future__ import annotations
 import threading
 from contextlib import contextmanager
 
-import pandas as pd  # module-level: pandas_udf type hints resolve in globals
-
+import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    IntegralType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from ..pipeline import map_batches
+from ..pipeline import map_batches, rows_to_batch
 
 # -- persisted-intermediate registry ----------------------------------------
 # Several operators persist frames consumed by 2+ downstream subplans (band
@@ -476,6 +484,79 @@ def simhash(
     return map_batches(toks, out_schema, batches)
 
 
+def _integral_ids(df: DataFrame, id_col: str) -> bool:
+    """Whether pair ids come out as bigint: integral ids pass through with
+    their natural type, anything else (e.g. 'doc-123') rides as string --
+    ordering for the canonical member / pair normalization is the type's
+    natural order."""
+    return isinstance(df.schema[id_col].dataType, IntegralType)
+
+
+def _norms(X):
+    """Row norms floored at 1e-300: a zero vector scores cosine 0.0
+    against a non-zero one (and NaN, never a pair, against another zero
+    vector) in every path."""
+    return np.maximum(np.linalg.norm(X, axis=1), 1e-300)
+
+
+def _matrix(vecs):
+    """``(rows, dim)`` float64 matrix of a ``list<double>`` Arrow array
+    (NULL elements read as NaN); vectors of different lengths raise."""
+    import pyarrow.compute as pc
+
+    dims = set(pc.list_value_length(vecs).to_pylist())
+    if len(dims) > 1:
+        raise ValueError(f"embedding vectors of different lengths in one block: {dims}")
+    flat = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return flat.reshape(len(vecs), dims.pop() if dims else 0)
+
+
+def _score_pairs(df: DataFrame, id_type, threshold: float, blocks) -> DataFrame:
+    """The one cosine-pair scorer of the embedding dedups: a
+    ``map_batches`` pass over ``df`` returning ``(id_a, id_b, cosine)``.
+
+    ``blocks(batch)`` yields ``(dots, norms_a, norms_b, ids_a, ids_b,
+    same_block)`` per scored block: the dot products of the ``ids_a``
+    vectors with the ``ids_b`` ones (1-D for row-wise pairs, a matrix for
+    a GEMM) and their :func:`_norms`, shaped to broadcast against
+    ``dots``.  cosine = dots / (norms_a * norms_b) rounded to 6 places;
+    every cell at or over ``threshold`` comes out oriented id_a < id_b.
+    ``same_block``: both sides hold the same vectors, so each pair sits in
+    two cells and only its (lo, hi) cell is kept."""
+    schema = StructType(
+        [
+            StructField("id_a", id_type),
+            StructField("id_b", id_type),
+            StructField("cosine", DoubleType()),
+        ]
+    )
+
+    def batches(iterator):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        for batch in iterator:
+            parts = []
+            for dots, norms_a, norms_b, ids_a, ids_b, same_block in blocks(batch):
+                sim = np.round(dots / (norms_a * norms_b), 6)
+                hit = np.nonzero(sim >= threshold)
+                a, b, cos = ids_a[hit[0]], ids_b[hit[-1]], sim[hit]
+                if same_block:
+                    keep = a < b
+                    parts.append((a[keep], b[keep], cos[keep]))
+                else:
+                    swap = b < a
+                    parts.append((np.where(swap, b, a), np.where(swap, a, b), cos))
+            cols = [np.concatenate(c) for c in zip(*parts)] if parts else [[]] * 3
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return map_batches(df, schema, batches)
+
+
 def embedding_near_duplicates_lsh(
     emb_df: DataFrame,
     threshold: float = 0.95,
@@ -508,25 +589,7 @@ def embedding_near_duplicates_lsh(
     packed for the per-bucket GEMM kernel, bounding the largest grouped row
     at max_bucket_size * dim * 8 bytes by construction.
     """
-    from pyspark.sql.types import (
-        ByteType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from .similarity import lsh_signatures
-
-    # ids pass through with their natural type: numeric ids stay bigint,
-    # anything else (e.g. 'doc-123') rides as string -- ordering for the
-    # canonical member / pair normalization is the type's natural order
-    numeric_ids = isinstance(
-        emb_df.schema[id_col].dataType, (LongType, IntegerType, ShortType, ByteType)
-    )
 
     # the pre-split consumes sigs from several subplans (bucket counts, the
     # anti-joined normal path, and -- when hot buckets exist -- the
@@ -534,7 +597,7 @@ def embedding_near_duplicates_lsh(
     # consumer would re-run the signature GEMM over the corpus.  One
     # spill-to-disk materialization beats 2-4 recomputes.
     sigs = _persist(lsh_signatures(emb_df, dim, n_bits, n_bands, id_col, vec_col, planes))
-    return _verify_bucketed_pairs(sigs, threshold, max_bucket_size, numeric_ids)
+    return _verify_bucketed_pairs(sigs, threshold, max_bucket_size, _integral_ids(emb_df, id_col))
 
 
 def _verify_bucketed_pairs(
@@ -554,12 +617,8 @@ def _verify_bucketed_pairs(
     boilerplate blobs) or ``'error'`` (raise eagerly with the offending
     sizes: right when buckets are arbitrary partitions -- IVF cells --
     where the star would silently drop non-canonical pairs)."""
-    from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
-
     if on_oversized not in ("star", "error"):
         raise ValueError(f"on_oversized must be 'star' or 'error', got {on_oversized!r}")
-    id_type = LongType() if numeric_ids else StringType()
-    _coerce = int if numeric_ids else str
 
     # -- hot-bucket pre-split: count first (map-side combine), so oversized
     # buckets are routed to the star path BEFORE any collect_list sees them
@@ -600,73 +659,34 @@ def _verify_bucketed_pairs(
     )
     normal = sigs.join(F.broadcast(hot.select("bucket")), ["bucket"], "left_anti")
     packed = normal.groupBy("bucket").agg(
-        F.collect_list("id").alias("ids"), F.collect_list("vec").alias("vecs")
+        F.collect_list(key).alias("ids"), F.collect_list("vec").alias("vecs")
     )
 
-    out_schema = StructType(
-        [
-            StructField("id_a", id_type),
-            StructField("id_b", id_type),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def star_cosines(iterator):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in iterator:
-            if pdf.empty:
-                continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["vec"]], dtype=np.float64
-            )
-            C = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["canon_vec"]],
-                dtype=np.float64,
-            )
-            nx = np.maximum(np.linalg.norm(X, axis=1), 1e-300)
-            nc = np.maximum(np.linalg.norm(C, axis=1), 1e-300)
-            sim = np.einsum("ij,ij->i", X, C) / (nx * nc)
-            np.round(sim, 6, out=sim)
-            m = sim >= threshold
+    def star_rows(batch):
+        if batch.num_rows:
+            X, C = _matrix(batch.column("vec")), _matrix(batch.column("canon_vec"))
             # canon_id is the bucket minimum, so (canon, member) is already
             # the normalized (lo, hi) pair orientation
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["canon_id"].to_numpy()[m],
-                    "id_b": pdf["member_id"].to_numpy()[m],
-                    "cosine": sim[m],
-                }
+            yield (
+                np.einsum("ij,ij->i", X, C), _norms(C), _norms(X),
+                batch.column("canon_id").to_numpy(zero_copy_only=False),
+                batch.column("member_id").to_numpy(zero_copy_only=False), False,
             )
 
-    star_scored = star_members.mapInPandas(star_cosines, out_schema)
+    def buckets(batch):
+        for ids, vecs in zip(batch.column("ids"), batch.column("vecs")):
+            # buckets here are <= max_bucket_size by construction (the
+            # pre-split routed oversized ones to the star path upstream)
+            if len(ids) >= 2:
+                X = _matrix(vecs.values)
+                norms = _norms(X)
+                ids = ids.values.to_numpy(zero_copy_only=False)
+                yield X @ X.T, norms[:, None], norms[None, :], ids, ids, True
 
-    def score_buckets(iterator):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in iterator:
-            ids_a, ids_b, cos = [], [], []
-            for row in pdf.itertuples(index=False):
-                ids = [_coerce(i) for i in row.ids]
-                if len(ids) < 2:
-                    continue
-                # buckets here are <= max_bucket_size by construction (the
-                # pre-split routed oversized ones to the star path upstream)
-                X = np.asarray([np.asarray(v) for v in row.vecs], dtype=np.float64)
-                norms = np.maximum(np.linalg.norm(X, axis=1), 1e-300)
-                sim = (X @ X.T) / np.outer(norms, norms)
-                np.round(sim, 6, out=sim)
-                ii, jj = np.nonzero(np.triu(sim >= threshold, k=1))
-                for i, j in zip(ii, jj):
-                    lo, hi = sorted((ids[int(i)], ids[int(j)]))
-                    ids_a.append(lo)
-                    ids_b.append(hi)
-                    cos.append(float(sim[i, j]))
-            yield pd.DataFrame({"id_a": ids_a, "id_b": ids_b, "cosine": cos})
-
-    scored = packed.mapInPandas(score_buckets, out_schema).unionByName(star_scored)
+    id_type = LongType() if numeric_ids else StringType()
+    scored = _score_pairs(packed, id_type, threshold, buckets).unionByName(
+        _score_pairs(star_members, id_type, threshold, star_rows)
+    )
     # a pair can collide in several bands: keep one row (cosines agree to
     # 1e-6 by construction; max() makes the reduction associative anyway)
     return (
@@ -690,8 +710,8 @@ def embedding_near_duplicates(
     Instead we tile: pack vectors into ~block_size blocks (bigint-hash of the
     id => deterministic, uniform), cross-join the upper-triangular block
     pairs, and compute each tile's full cosine matrix with one numpy float64
-    GEMM inside an Arrow-batched ``mapInPandas``.  Shuffle volume is one copy
-    of the packed table per block-pair side.
+    GEMM inside an Arrow batch kernel.  Shuffle volume is one copy of the
+    packed table per block-pair side.
 
     This is the *verification-scale* kernel (tiles are O(n^2/B^2) by
     design): at 100TB use :func:`embedding_near_duplicates_lsh`, which
@@ -728,53 +748,32 @@ def embedding_near_duplicates(
     )
     tiles = a.join(b, F.col("blk_a") <= F.col("blk_b"))
 
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    def tile_blocks(batch):
+        names = ("blk_a", "ids_a", "vecs_a", "blk_b", "ids_b", "vecs_b")
+        for blk_a, ids_a, vecs_a, blk_b, ids_b, vecs_b in zip(*map(batch.column, names)):
+            ma, mb = _matrix(vecs_a.values), _matrix(vecs_b.values)
+            yield (
+                ma @ mb.T, _norms(ma)[:, None], _norms(mb)[None, :],
+                ids_a.values.to_numpy(zero_copy_only=False),
+                ids_b.values.to_numpy(zero_copy_only=False),
+                # a diagonal tile holds every pair of its block twice
+                blk_a.as_py() == blk_b.as_py(),
+            )
 
-    out_schema = StructType(
-        [
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
+    return _score_pairs(tiles, LongType(), threshold, tile_blocks)
 
-    def score_tiles(iterator):
-        import numpy as np
-        import pandas as pd
 
-        for pdf in iterator:
-            ids_a_out, ids_b_out, cos_out = [], [], []
-            for row in pdf.itertuples(index=False):
-                ia = np.asarray(row.ids_a, dtype=np.int64)
-                ib = np.asarray(row.ids_b, dtype=np.int64)
-                ma = np.asarray([np.asarray(v) for v in row.vecs_a], dtype=np.float64)
-                mb = np.asarray([np.asarray(v) for v in row.vecs_b], dtype=np.float64)
-                na = np.linalg.norm(ma, axis=1)
-                nb = np.linalg.norm(mb, axis=1)
-                sim = (ma @ mb.T) / np.outer(na, nb)
-                np.round(sim, 6, out=sim)
-                ii, jj = np.nonzero(sim >= threshold)
-                pa, pb = ia[ii], ib[jj]
-                # canonical orientation + strict upper triangle by id
-                lo = np.minimum(pa, pb)
-                hi = np.maximum(pa, pb)
-                keep = lo < hi
-                pairs = np.unique(np.stack([lo[keep], hi[keep]], axis=1), axis=0)
-                if len(pairs) == 0:
-                    continue
-                # recover cosines for the deduped canonical pairs
-                cmap = {}
-                for x, y, c in zip(pa, pb, sim[ii, jj]):
-                    key = (min(x, y), max(x, y))
-                    cmap[key] = c
-                for x, y in pairs:
-                    ids_a_out.append(int(x))
-                    ids_b_out.append(int(y))
-                    cos_out.append(float(cmap[(x, y)]))
-            yield pd.DataFrame({"id_a": ids_a_out, "id_b": ids_b_out, "cosine": cos_out})
-
-    return tiles.mapInPandas(score_tiles, out_schema).select(
-        "id_a", "id_b", F.round("cosine", 6).alias("cosine")
+def _dedup_lists(
+    lists: DataFrame, threshold: float, max_cluster_size: int, numeric_ids: bool,
+    on_oversized: str,
+) -> DataFrame:
+    """Within-list pair verification over IVF list assignments ``(id, vec,
+    list_id)`` -- one row per (vector, probed list)."""
+    # the assignment frame feeds bucket counts + the normal/star joins, the
+    # same multi-consumer shape as the LSH signatures
+    sigs = _persist(lists.select("id", "vec", F.col("list_id").cast("string").alias("bucket")))
+    return _verify_bucketed_pairs(
+        sigs, threshold, max_cluster_size, numeric_ids, on_oversized=on_oversized
     )
 
 
@@ -834,37 +833,16 @@ def dedup_semantic(
     still sum(k_c^2), nothing quadratic in n.  The pair output is
     deduplicated across probes, so results are a superset of n_probe=1.
     """
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+    from .similarity import _ivf_probe, _train_ivf_centroids, ivf_build
 
-    from .similarity import ivf_build
-
-    numeric_ids = isinstance(
-        emb_df.schema[id_col].dataType, (LongType, IntegerType, ShortType, ByteType)
-    )
+    numeric_ids = _integral_ids(emb_df, id_col)
     if n_probe > 1:
         # multi-probe dedup wants every vector in n_probe lists; assign
         # ONCE with the multi-probe GEMM instead of reusing the index's
         # single-probe assignment and re-probing (one corpus pass, not two)
-        from .similarity import (
-            _ivf_assign_fn,
-            _ivf_assign_schema,
-            _ivf_prep,
-            _train_ivf_centroids,
-        )
-
-        C = _train_ivf_centroids(emb_df, n_lists, sample_size, id_col, vec_col)
-        bc = emb_df.sparkSession.sparkContext.broadcast(C.tolist())
-        probes = map_batches(
-            _ivf_prep(emb_df, id_col, vec_col),
-            _ivf_assign_schema(),
-            _ivf_assign_fn(bc, n_probe),
-        )
-        sigs = _persist(
-            probes.select("id", "vec", F.col("list_id").cast("string").alias("bucket"))
-        )
-        return _verify_bucketed_pairs(
-            sigs, threshold, max_cluster_size, numeric_ids, on_oversized=on_oversized
-        )
+        cents = _train_ivf_centroids(emb_df, n_lists, sample_size, id_col, vec_col).tolist()
+        lists = _ivf_probe(emb_df, cents, n_probe, id_col, vec_col)
+        return _dedup_lists(lists, threshold, max_cluster_size, numeric_ids, on_oversized)
     index = ivf_build(emb_df, dim, n_lists, sample_size, id_col, vec_col)
     return dedup_semantic_from_index(
         index, threshold, max_cluster_size, numeric_ids=numeric_ids,
@@ -892,36 +870,17 @@ def dedup_semantic_from_index(
     since the stored assignment is single-probe, this re-probes the
     stored corpus vectors against the index centroids -- one extra
     corpus GEMM, the price of reusing a prebuilt index."""
-    if n_probe > 1:
-        from .similarity import _ivf_assign_fn, _ivf_assign_schema
+    from .similarity import _ivf_probe
 
-        if index.centroid_list is not None:
-            cents = index.centroid_list
-        else:
-            rows = index.centroids.orderBy("list_id").collect()
-            cents = [list(r["centroid"]) for r in rows]
-        corpus = index.assignments.select(
-            F.col("corpus_id").alias("id"), F.col("corpus_vec").alias("vec")
+    if n_probe > 1:
+        lists = _ivf_probe(
+            index.assignments, index.centroid_rows(), n_probe, "corpus_id", "corpus_vec"
         )
-        bc = corpus.sparkSession.sparkContext.broadcast(cents)
-        probes = map_batches(corpus, _ivf_assign_schema(), _ivf_assign_fn(bc, n_probe))
-        sigs = _persist(
-            probes.select("id", "vec", F.col("list_id").cast("string").alias("bucket"))
+    else:
+        lists = index.assignments.select(
+            F.col("corpus_id").alias("id"), F.col("corpus_vec").alias("vec"), "list_id"
         )
-        return _verify_bucketed_pairs(
-            sigs, threshold, max_cluster_size, numeric_ids, on_oversized=on_oversized
-        )
-    sigs = index.assignments.select(
-        F.col("corpus_id").alias("id"),
-        F.col("corpus_vec").alias("vec"),
-        F.col("list_id").cast("string").alias("bucket"),
-    )
-    # the assignment frame feeds bucket counts + the normal/star joins, the
-    # same multi-consumer shape as the LSH signatures
-    sigs = _persist(sigs)
-    return _verify_bucketed_pairs(
-        sigs, threshold, max_cluster_size, numeric_ids, on_oversized=on_oversized
-    )
+    return _dedup_lists(lists, threshold, max_cluster_size, numeric_ids, on_oversized)
 
 
 # ---------------------------------------------------------------------------
@@ -1326,7 +1285,7 @@ def connected_components(
     pairwise output alone cannot answer "which documents do I keep".
 
     Algorithm (r9, opt guide §2.4 "do fewer shuffle rounds"): iterated
-    PARTITION-LOCAL CONTRACTION.  Each round a ``mapInPandas`` pass runs a
+    PARTITION-LOCAL CONTRACTION.  Each round an Arrow batch pass runs a
     union-find over every edge partition and emits ``(id, local_root)``
     with the root the MINIMUM member of the partition-local component; a
     min-aggregation makes the mapping functional across partitions, both
@@ -1344,24 +1303,22 @@ def connected_components(
     the member sets they absorb -- the fixpoint labels are exactly the
     reachable minima.
 
-    Per-partition state is one dict over the partition's node set --
-    bounded by edge-partition sizing exactly like every other
-    ``mapInPandas`` kernel in this module; no driver-side data beyond the
-    per-round emptiness count.
+    Memory: each task holds one dict with an entry per distinct node of
+    its edge partition, for the whole partition -- nothing caps it, so a
+    partition's node count must fit one Python worker.  The driver holds
+    nothing beyond the per-round emptiness count.
 
     ``strict=True`` (default) raises RuntimeError if max_iter rounds did
     not converge -- silently returning partial labels would split real
     clusters; pass ``strict=False`` to accept the partial refinement.
     """
-    from pyspark.sql.types import StructField, StructType
-
     id_type = pairs.schema[src_col].dataType
     uf_schema = StructType(
         [StructField("id", id_type), StructField("component", id_type)]
     )
 
     def _local_uf(iterator):
-        import pandas as pd
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         parent: dict = {}
 
@@ -1373,8 +1330,8 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for pdf in iterator:
-            for u, v in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+        for batch in iterator:
+            for u, v in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
                 if u not in parent:
                     parent[u] = u
                 if v not in parent:
@@ -1386,8 +1343,7 @@ def connected_components(
                         ru, rv = rv, ru
                     parent[rv] = ru
         if parent:
-            ids = list(parent)
-            yield pd.DataFrame({"id": ids, "component": [find(x) for x in ids]})
+            yield rows_to_batch([(x, find(x)) for x in parent], to_arrow_schema(uf_schema))
 
     g = pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     total = None
@@ -1395,7 +1351,7 @@ def connected_components(
     converged = False
     for _ in range(max_iter):
         mapping = (
-            g.mapInPandas(_local_uf, uf_schema)
+            map_batches(g, uf_schema, _local_uf)
             .groupBy("id")
             .agg(F.min("component").alias("component"))
             .localCheckpoint(eager=True)
@@ -1487,8 +1443,11 @@ def keep_canonical_exact(
     (matching the NULL-hash exclusion of every pair emitter here) and
     survive untouched.
 
-    Provably identical output to ``keep_canonical(df, equality_pairs)``
-    (pinned by test); the win is structural -- ONE window shuffle and one
+    Precondition: ``df`` holds ONE row per ``id_col``.  Only then is the
+    output identical to ``keep_canonical(df, equality_pairs)`` (pinned by
+    test): with several rows per id, the pair form drops every row of a
+    losing id, while this window drops only the rows whose own key group
+    holds a smaller id.  The win is structural -- ONE window shuffle and one
     pass over ``df`` instead of the pair join + per-round component loop
     (an anti-join formulation would also re-run the upstream decode on
     both sides of its diamond), at any scale."""
@@ -1602,16 +1561,13 @@ def dedup_against_reference_bloom(
     per-word ``bit_or`` hash agg, map-side combined); only the finished
     ``m/64``-word table is collected (driver holds m/8 bytes -- the same
     object every executor must hold anyway).  The membership test is an
-    Arrow-batched pandas UDF over JVM-computed positions (vectorized
-    numpy gather; no per-row Python).  Driver/executor memory budget is
+    Arrow batch pass over the fingerprints (vectorized numpy nibble math
+    and gather).  Driver/executor memory budget is
     the explicit knob: ``bits_per_key * n / 8`` bytes.
 
     Spark note: SQL exposes no ``bloom_filter_agg`` in this build (it is
     an internal runtime-filter expression), hence the DataFrame-native
     assembly."""
-    import numpy as np
-    from pyspark.sql.types import BooleanType
-
     ref_fp = (
         reference.select(
             _normalized_fingerprint(ref_text_col or text_col).alias("__fp")
@@ -1709,35 +1665,34 @@ def dedup_against_reference_bloom(
         bitset[row["__word"]] = row["__bits"]
     bc = corpus.sparkSession.sparkContext.broadcast(bitset)
 
-    @F.pandas_udf(BooleanType())
-    def bloom_maybe(fp: pd.Series) -> pd.Series:
-        import numpy as _np
+    fps = corpus.select(*out_cols, _normalized_fingerprint(text_col).alias("__fp"))
+    tagged_schema = StructType([*fps.schema.fields, StructField("__maybe", BooleanType())])
+
+    def bloom_maybe(iterator):
+        import pyarrow as pa
 
         w = bc.value
-        if len(fp) == 0:
-            return pd.Series([], dtype=bool)
-        # vectorized nibble math over the md5 hex: the exact twin of the
-        # JVM conv(substring(fp, 1|17, 15), 16, 10) derivation
-        codes = _np.frombuffer(
-            fp.to_numpy(dtype="U32").tobytes(), dtype=_np.uint32
-        ).reshape(-1, 32)
-        nib = _np.where(codes >= 97, codes - 87, codes - 48).astype(_np.int64)
-        a = _np.zeros(len(fp), dtype=_np.int64)
-        b = _np.zeros(len(fp), dtype=_np.int64)
-        for j in range(15):  # 15 columns, each step vectorized across rows
-            a = (a << 4) | nib[:, j]
-            b = (b << 4) | nib[:, 16 + j]
-        a = (a & mask)[:, None]
-        b = ((b | 1) & mask)[:, None]
-        pos = (a + _np.arange(n_probes, dtype=_np.int64) * b) & mask
-        # arithmetic >> preserves the masked bit for any word sign
-        hits = (w[pos >> 6] >> (pos & 63)) & 1
-        return pd.Series(hits.all(axis=1))
+        for batch in iterator:
+            # vectorized nibble math over the md5 hex: the exact twin of the
+            # JVM conv(substring(fp, 1|17, 15), 16, 10) derivation
+            fp = np.asarray(batch.column("__fp").to_pylist(), dtype="U32")
+            codes = np.frombuffer(fp.tobytes(), dtype=np.uint32).reshape(-1, 32)
+            nib = np.where(codes >= 97, codes - 87, codes - 48).astype(np.int64)
+            a = np.zeros(len(fp), dtype=np.int64)
+            b = np.zeros(len(fp), dtype=np.int64)
+            for j in range(15):  # 15 columns, each step vectorized across rows
+                a = (a << 4) | nib[:, j]
+                b = (b << 4) | nib[:, 16 + j]
+            a = (a & mask)[:, None]
+            b = ((b | 1) & mask)[:, None]
+            pos = (a + np.arange(n_probes, dtype=np.int64) * b) & mask
+            # arithmetic >> preserves the masked bit for any word sign
+            hits = (w[pos >> 6] >> (pos & 63)) & 1
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, pa.array(hits.all(axis=1))], names=tagged_schema.names
+            )
 
-    tagged = corpus.select(
-        *out_cols,
-        _normalized_fingerprint(text_col).alias("__fp"),
-    ).withColumn("__maybe", bloom_maybe("__fp"))
+    tagged = map_batches(fps, tagged_schema, bloom_maybe)
     # definite-new branch: scan-only, zero shuffle
     definite = tagged.filter(~F.col("__maybe")).select(
         *out_cols, F.lit(False).alias("in_reference")

@@ -268,7 +268,7 @@ def parse_mp4_header(raw: bytes):
     Returns ``(major_brand, timescale, duration_ms, n_tracks)`` or ``None``
     when the payload is not BMFF.  ``duration_ms`` is None for a valid
     container without a parseable mvhd (e.g. fragmented/streamed files where
-    moov arrives elsewhere)."""
+    moov arrives elsewhere) and for a duration of 2^31 ms or more."""
     if len(raw) < 12 or raw[4:8] != b"ftyp":
         return None
     major_brand = raw[8:12].decode("latin-1", errors="replace")
@@ -314,6 +314,8 @@ def parse_mp4_header(raw: bytes):
     duration_ms = None
     if timescale and duration is not None:
         duration_ms = duration * 1000 // timescale
+        if duration_ms >= 1 << 31:  # corrupt: past the int32 duration columns
+            duration_ms = None
     return (major_brand, timescale, duration_ms, n_tracks)
 
 
@@ -383,7 +385,8 @@ def parse_wav_header(raw: bytes):
 
     Returns ``(codec, n_channels, sample_rate, bits_per_sample,
     duration_ms)`` or ``None`` when the payload is not RIFF/WAVE.
-    ``duration_ms`` is None if either chunk is missing/truncated."""
+    ``duration_ms`` is None if either chunk is missing/truncated, or if the
+    declared data size gives 2^31 ms or more."""
     if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
         return None
     n_channels = sample_rate = bits = data_len = None
@@ -404,6 +407,8 @@ def parse_wav_header(raw: bytes):
         bytes_per_sec = sample_rate * n_channels * (bits // 8)
         if bytes_per_sec:
             duration_ms = data_len * 1000 // bytes_per_sec
+            if duration_ms >= 1 << 31:  # corrupt: past the int32 duration columns
+                duration_ms = None
     return ("wav", n_channels, sample_rate, bits, duration_ms)
 
 
@@ -1047,8 +1052,9 @@ def sample_video_frames(media_df: DataFrame, every_ms: int = 1000, max_frames: i
 
     Duration comes from the BYTES when possible: ``parse_mp4_header`` reads
     mvhd timescale+duration from the container (``decoder='header:mp4'``);
-    only payloads no parser understands fall back to the input
-    ``duration_ms`` column (``decoder='stub'``).  The frame payload itself
+    only payloads no parser understands, or whose header duration is out
+    of range, fall back to the input ``duration_ms`` column
+    (``decoder='stub'``).  The frame payload itself
     is ALWAYS a deterministic stub -- the ASCII md5 of
     ``<payload hex>:<frame idx>`` -- reconstructable by a SQL oracle; a real
     ffmpeg kernel swaps only that inner function (no ffmpeg in this env)."""

@@ -14,8 +14,16 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from ..pipeline import map_batches
+from ..pipeline import map_batches, rows_to_batch
 
 
 def _as_double_vec(col):
@@ -29,6 +37,24 @@ def _cosine(vec_a, vec_b):
     na = F.sqrt(F.aggregate(vec_a, F.lit(0.0), lambda acc, x: acc + x * x))
     nb = F.sqrt(F.aggregate(vec_b, F.lit(0.0), lambda acc, x: acc + x * x))
     return dot / (na * nb)
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """The ranking tail of every top-k search: exact cosine over candidate
+    ``(query_id, corpus_id, query_vec, corpus_vec)`` pairs minus self
+    pairs, rounded to 6 places, and the first ``k`` per query by (cosine
+    desc, corpus_id asc)."""
+    scored = pairs.filter(F.col("corpus_id") != F.col("query_id")).select(
+        "query_id",
+        "corpus_id",
+        F.round(_cosine(F.col("query_vec"), F.col("corpus_vec")), 6).alias("cosine"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "corpus_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
+    )
 
 
 def brute_force_topk(
@@ -46,18 +72,7 @@ def brute_force_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double_vec(F.col(vec_col)).alias("query_vec")
     )
-    joined = c.crossJoin(F.broadcast(q)).filter(F.col("corpus_id") != F.col("query_id"))
-    scored = joined.select(
-        "query_id",
-        "corpus_id",
-        F.round(_cosine(F.col("query_vec"), F.col("corpus_vec")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _top_k(c.crossJoin(F.broadcast(q)), k)
 
 
 def _hyperplanes(dim: int, n_bits: int, seed: int = 7):
@@ -72,6 +87,45 @@ def _hyperplanes(dim: int, n_bits: int, seed: int = 7):
             row.append(((state >> 20) % 2001 - 1000) / 1000.0)  # [-1, 1]
         planes.append(row)
     return planes
+
+
+def _map_vectors(
+    df: DataFrame, id_col: str, vec_col: str, value: StructField, dim: int, values
+) -> DataFrame:
+    """The one vector-cleaning pass of the ANN and embedding-dedup kernels:
+    one Arrow pass over ``df``'s ``(id as string, vec as array<double>)``
+    that drops every row whose vector is NULL, not ``dim`` long or holds a
+    NULL (it can neither hash nor score, and must not fail the stage),
+    stacks the rest into one ``(n, dim)`` float64 matrix ``X`` and emits
+    an ``(id, vec, <value>)`` row for each entry of ``values(X)[i]``."""
+    schema = StructType(
+        [StructField("id", StringType()), StructField("vec", ArrayType(DoubleType())), value]
+    )
+
+    def batches(iterator):
+        import numpy as np
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        for batch in iterator:
+            ids = batch.column(0).to_pylist()
+            vecs = batch.column(1).to_pylist()
+            keep = [
+                i for i, v in enumerate(vecs) if v is not None and len(v) == dim and None not in v
+            ]
+            if not keep:
+                continue
+            X = np.asarray([vecs[i] for i in keep], dtype=np.float64)
+            yield rows_to_batch(
+                [(ids[i], vecs[i], v) for i, row in zip(keep, values(X)) for v in row],
+                arrow_schema,
+            )
+
+    prepared = df.select(
+        F.col(id_col).cast("string").alias("id"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
+    )
+    return map_batches(prepared, schema, batches)
 
 
 def lsh_signatures(
@@ -100,75 +154,30 @@ def lsh_signatures(
 
     Null or wrong-length vectors are dropped (they can neither hash nor
     score); a production pipeline should count them upstream."""
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     plane_rows = None if planes == "axis" else _hyperplanes(dim, n_bits)
     rows_per_band = n_bits // n_bands
     bc = df.sparkSession.sparkContext.broadcast(plane_rows)
 
-    out_schema = StructType(
-        [
-            StructField("id", StringType()),
-            StructField("vec", ArrayType(DoubleType())),
-            StructField("bucket", StringType()),
-        ]
-    )
-
-    def batches(iterator):
+    def band_keys(X):
         import numpy as np
 
-        P = None if bc.value is None else np.asarray(bc.value, dtype=np.float64)
-        for batch in iterator:
-            ids = batch.column(0).to_pylist()
-            vecs = batch.column(1).to_pylist()
-            keep = [
-                i
-                for i in range(len(ids))
-                if vecs[i] is not None
-                and len(vecs[i]) == dim
-                and not any(v is None for v in vecs[i])
+        if bc.value is None:
+            bits = X[:, :n_bits] >= 0  # axis planes: pure sign reads
+        else:
+            bits = (X @ np.asarray(bc.value, dtype=np.float64).T) >= 0  # (n, n_bits)
+        return [
+            [
+                f"{b}:"
+                + "".join(
+                    "1" if row[j] else "0"
+                    for j in range(b * rows_per_band, (b + 1) * rows_per_band)
+                )
+                for b in range(n_bands)
             ]
-            if not keep:
-                continue
-            ids = [ids[i] for i in keep]
-            vecs = [vecs[i] for i in keep]
-            X = np.asarray(vecs, dtype=np.float64)
-            if P is None:
-                bits = X[:, :n_bits] >= 0  # axis planes: pure sign reads
-            else:
-                bits = (X @ P.T) >= 0  # (n, n_bits) sign bits
-            out_ids, out_vecs, out_buckets = [], [], []
-            for i in range(len(ids)):
-                row = bits[i]
-                for b in range(n_bands):
-                    key = "".join(
-                        "1" if row[j] else "0"
-                        for j in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    )
-                    out_ids.append(ids[i])
-                    out_vecs.append(vecs[i])
-                    out_buckets.append(f"{b}:{key}")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, pa.string()),
-                    pa.array(out_vecs, pa.list_(pa.float64())),
-                    pa.array(out_buckets, pa.string()),
-                ],
-                names=["id", "vec", "bucket"],
-            )
+            for row in bits
+        ]
 
-    prepared = df.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
-    return map_batches(prepared, out_schema, batches)
+    return _map_vectors(df, id_col, vec_col, StructField("bucket", StringType()), dim, band_keys)
 
 
 def _train_ivf_centroids(corpus, n_lists, sample_size, id_col, vec_col, iters=8):
@@ -227,79 +236,23 @@ def _train_ivf_centroids(corpus, n_lists, sample_size, id_col, vec_col, iters=8)
     return C
 
 
-def _ivf_assign_schema():
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
+def _ivf_probe(df: DataFrame, cents: list, n_probe: int, id_col: str, vec_col: str) -> DataFrame:
+    """IVF list assignment: ``(id, vec, list_id)``, each vector once per
+    one of its ``n_probe`` nearest centroids (1 for corpus rows, n_probe
+    for queries and multi-probe dedup), ONE GEMM per Arrow batch."""
+    bc = df.sparkSession.sparkContext.broadcast(cents)
 
-    return StructType(
-        [
-            StructField("id", StringType()),
-            StructField("vec", ArrayType(DoubleType())),
-            StructField("list_id", IntegerType()),
-        ]
-    )
-
-
-def _ivf_assign_fn(bc, top_n: int):
-    """Arrow-batched list assignment: each vector -> its top_n nearest
-    centroids (1 for corpus rows, n_probe for queries), ONE GEMM per batch."""
-
-    def fn(iterator):
+    def nearest(X):
         import numpy as np
-        import pyarrow as pa
 
-        cents = np.asarray(bc.value, dtype=np.float64)
-        dim = cents.shape[1]
-        for batch in iterator:
-            ids = batch.column(0).to_pylist()
-            vecs = batch.column(1).to_pylist()
-            # drop null/ragged vectors instead of failing the stage
-            keep = [
-                i
-                for i in range(len(ids))
-                if vecs[i] is not None
-                and len(vecs[i]) == dim
-                and not any(v is None for v in vecs[i])
-            ]
-            if not keep:
-                continue
-            ids = [ids[i] for i in keep]
-            vecs = [vecs[i] for i in keep]
-            X = np.asarray(vecs, dtype=np.float64)
-            X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            sims = X @ cents.T
-            # stable: tied centroid similarities probe the lowest list id,
-            # deterministically, instead of quicksort's arbitrary pick
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :top_n]
-            out_ids, out_vecs, out_lists = [], [], []
-            for i, row_lists in enumerate(order):
-                for lid in row_lists:
-                    out_ids.append(ids[i])
-                    out_vecs.append(vecs[i])
-                    out_lists.append(int(lid))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, pa.string()),
-                    pa.array(out_vecs, pa.list_(pa.float64())),
-                    pa.array(out_lists, pa.int32()),
-                ],
-                names=["id", "vec", "list_id"],
-            )
+        X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+        sims = X @ np.asarray(bc.value, dtype=np.float64).T
+        # stable: tied centroid similarities probe the lowest list id,
+        # deterministically, instead of quicksort's arbitrary pick
+        return np.argsort(-sims, axis=1, kind="stable")[:, :n_probe].tolist()
 
-    return fn
-
-
-def _ivf_prep(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return df.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
+    list_id = StructField("list_id", IntegerType())
+    return _map_vectors(df, id_col, vec_col, list_id, len(cents[0]), nearest)
 
 
 @dataclass(frozen=True)
@@ -312,11 +265,18 @@ class IvfIndex:
     ``centroid_list`` is a driver-side cache of the centroid matrix (KBs):
     ivf_build fills it so same-session queries skip the collect of the
     centroids table; an index reloaded from disk leaves it None and
-    ivf_query collects the table instead."""
+    :meth:`centroid_rows` collects the table instead."""
 
     assignments: DataFrame  # (corpus_id, corpus_vec, list_id)
     centroids: DataFrame  # (list_id, centroid)
     centroid_list: list | None = None
+
+    def centroid_rows(self) -> list:
+        """The centroid matrix as lists, in list_id order."""
+        if self.centroid_list is not None:  # same-session: skip the collect
+            return self.centroid_list
+        rows = self.centroids.orderBy("list_id").collect()  # n_lists rows, KBs
+        return [list(r["centroid"]) for r in rows]
 
 
 def ivf_build(
@@ -334,23 +294,11 @@ def ivf_build(
     sample (KB-scale collect, documented tradeoff); assignment is one
     Arrow-batched GEMM pass over the corpus.
     """
-    C = _train_ivf_centroids(corpus, n_lists, sample_size, id_col, vec_col)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(C.tolist())
-    assignments = (
-        map_batches(
-            _ivf_prep(corpus, id_col, vec_col),
-            _ivf_assign_schema(),
-            _ivf_assign_fn(bc, 1),
-        )
-        .select(
-            F.col("id").alias("corpus_id"),
-            F.col("vec").alias("corpus_vec"),
-            "list_id",
-        )
+    centroid_list = _train_ivf_centroids(corpus, n_lists, sample_size, id_col, vec_col).tolist()
+    assignments = _ivf_probe(corpus, centroid_list, 1, id_col, vec_col).select(
+        F.col("id").alias("corpus_id"), F.col("vec").alias("corpus_vec"), "list_id"
     )
-    centroid_list = [list(map(float, c)) for c in C.tolist()]
-    centroids = spark.createDataFrame(
+    centroids = corpus.sparkSession.createDataFrame(
         list(enumerate(centroid_list)), "list_id int, centroid array<double>"
     )
     return IvfIndex(
@@ -370,39 +318,15 @@ def ivf_query(
     lists, exact cosine rerank inside the probed lists.  The per-query cost
     is n_probe/n_lists of the corpus; the corpus itself is never re-assigned
     (that GEMM was paid in :func:`ivf_build`)."""
-    if index.centroid_list is not None:  # same-session: skip the collect
-        cents = index.centroid_list
-    else:  # reloaded-from-disk index: n_lists rows, KBs
-        rows = index.centroids.orderBy("list_id").collect()
-        cents = [list(r["centroid"]) for r in rows]
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast(cents)
-
-    query_probes = map_batches(
-        _ivf_prep(queries, id_col, vec_col),
-        _ivf_assign_schema(),
-        _ivf_assign_fn(bc, n_probe),
-    )
-    q = query_probes.select(
+    q = _ivf_probe(queries, index.centroid_rows(), n_probe, id_col, vec_col).select(
         F.col("id").alias("query_id"), F.col("vec").alias("query_vec"), "list_id"
     )
-    joined = (
+    pairs = (
         index.assignments.join(F.broadcast(q), "list_id")
-        .filter(F.col("corpus_id") != F.col("query_id"))
         .select("query_id", "corpus_id", "query_vec", "corpus_vec")
         .dropDuplicates(["query_id", "corpus_id"])
     )
-    scored = joined.select(
-        "query_id",
-        "corpus_id",
-        F.round(_cosine(F.col("query_vec"), F.col("corpus_vec")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _top_k(pairs, k)
 
 
 def ivf_topk(
@@ -445,33 +369,19 @@ def lsh_topk(
     """Banded ANN: score only candidates sharing at least one band bucket.
     Recall < 1 by design (tunable via n_bands/n_bits); tests measure it
     against brute_force_topk.  See ``lsh_signatures`` for ``planes``."""
-    c = lsh_signatures(corpus, dim, n_bits, n_bands, id_col, vec_col, planes).select(
-        F.col("id").alias("corpus_id"),
-        _as_double_vec(F.col("vec")).alias("corpus_vec"),
-        "bucket",
-    )
-    q = lsh_signatures(queries, dim, n_bits, n_bands, id_col, vec_col, planes).select(
-        F.col("id").alias("query_id"),
-        _as_double_vec(F.col("vec")).alias("query_vec"),
-        "bucket",
-    )
-    joined = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("corpus_id") != F.col("query_id"))
+
+    def signed(df, side):
+        return lsh_signatures(df, dim, n_bits, n_bands, id_col, vec_col, planes).select(
+            F.col("id").alias(f"{side}_id"), F.col("vec").alias(f"{side}_vec"), "bucket"
+        )
+
+    pairs = (
+        signed(corpus, "corpus")
+        .join(F.broadcast(signed(queries, "query")), "bucket")
         .select("query_id", "corpus_id", "query_vec", "corpus_vec")
         .dropDuplicates(["query_id", "corpus_id"])
     )
-    scored = joined.select(
-        "query_id",
-        "corpus_id",
-        F.round(_cosine(F.col("query_vec"), F.col("corpus_vec")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _top_k(pairs, k)
 
 
 def quantize_embeddings(

@@ -539,11 +539,10 @@ def extract_from_html_bytes(
     return map_batches(df.select(*cols), OUTPUT_SCHEMA, kernel)
 
 
-def extraction_metrics(df: DataFrame) -> DataFrame:
-    """Corpus-level rollup of the per-document kernel metrics (one row):
-    throughput accounting, failure/fallback/retry counts, byte volume.
-    Feed it the OUTPUT_SCHEMA frame; runs entirely in codegen."""
-    return df.agg(
+def kernel_metric_aggs() -> tuple:
+    """The document counts and byte volume every rollup of OUTPUT_SCHEMA
+    rows carries (:func:`extraction_metrics`, the lineage manifests)."""
+    return (
         F.count("*").alias("docs"),
         F.sum(F.col("content_extracted").cast("int")).alias("docs_extracted"),
         F.sum((F.col("metrics.n_candidates") < 0).cast("int")).alias("kernel_failures"),
@@ -551,6 +550,15 @@ def extraction_metrics(df: DataFrame) -> DataFrame:
         F.sum(F.col("metrics.parse_retried").cast("int")).alias("parse_retries"),
         F.sum(F.col("metrics.truncated").cast("int")).alias("docs_truncated"),
         F.sum("metrics.in_bytes").alias("in_bytes"),
+    )
+
+
+def extraction_metrics(df: DataFrame) -> DataFrame:
+    """Corpus-level rollup of the per-document kernel metrics (one row):
+    throughput accounting, failure/fallback/retry counts, byte volume.
+    Feed it the OUTPUT_SCHEMA frame; runs entirely in codegen."""
+    return df.agg(
+        *kernel_metric_aggs(),
         F.round(F.sum("metrics.ms") / 1000.0, 3).alias("kernel_cpu_sec"),
         F.round(F.avg("metrics.ms"), 3).alias("avg_ms_per_doc"),
         F.round(F.expr("percentile_approx(metrics.ms, 0.95)"), 3).alias("p95_ms_per_doc"),

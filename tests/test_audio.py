@@ -341,7 +341,8 @@ def test_out_of_range_header_fields_are_contained(spark):
     (corrupt: the specs cap both below, and neither fits its int32 output
     column) take the undecodable tiers with NULL hashes in every media
     operator -- standalone, and the PNG as an ID3 cover -- instead of
-    failing the task."""
+    failing the task.  An MP4 or WAV header whose duration comes to 2^31
+    ms or more keeps its header tier with a NULL duration."""
     import struct
 
     from nreadspark.ops.audio import audio_cover_hashes, audio_fingerprints
@@ -352,7 +353,24 @@ def test_out_of_range_header_fields_are_contained(spark):
     png = b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR" + ihdr + bytes(4)
     wav = encode_pcm8_wav(_samples(3), rate=1 << 31)
     apic = bytes([0]) + b"image/png\x00" + bytes([3]) + b"cover\x00" + png
-    rows = [("png", "image", png), ("wav", "audio", wav), ("id3", "audio", _id3_tag(apic))]
+
+    def box(kind, body):
+        return struct.pack(">I", 8 + len(body)) + kind + body
+
+    # mvhd v0: duration 0xFFFFFFF0 at timescale 1000 (~49.7 days)
+    mvhd = bytes(12) + struct.pack(">II", 1000, 0xFFFFFFF0) + bytes(80)
+    mp4 = box(b"ftyp", b"isom" + bytes(4)) + box(b"moov", box(b"mvhd", mvhd))
+    # 1 kHz 8-bit mono declaring 4e9 data bytes (4e9 ms)
+    fmt = struct.pack("<HHIIHH", 1, 1, 1000, 1000, 1, 8)
+    long_wav = b"RIFF" + bytes(4) + b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
+    long_wav += b"data" + struct.pack("<I", 4_000_000_000) + bytes(64)
+    rows = [
+        ("png", "image", png),
+        ("wav", "audio", wav),
+        ("id3", "audio", _id3_tag(apic)),
+        ("mp4", "video", mp4),
+        ("long_wav", "audio", long_wav),
+    ]
     df = spark.createDataFrame(rows, "media_ref string, media_kind string, payload binary")
     hashes = ("ahash_hi", "ahash_lo", "ghash_hi", "ghash_lo", "phash_hi", "phash_lo")
     images = {r["media_ref"]: r for r in image_hashes(df).collect()}
@@ -368,3 +386,6 @@ def test_out_of_range_header_fields_are_contained(spark):
     assert feats["png"]["decoder"] == "stub"
     assert feats["png"]["decoded_width"] is feats["png"]["decoded_height"] is None
     assert feats["wav"]["decoder"] == "header:wav"
+    assert feats["mp4"]["decoder"] == "header:mp4"
+    assert feats["long_wav"]["decoder"] == "header:wav"
+    assert feats["mp4"]["decoded_duration_ms"] is feats["long_wav"]["decoded_duration_ms"] is None

@@ -274,6 +274,66 @@ def test_embedding_lsh_accepts_string_ids(spark):
     assert all(isinstance(r["id_a"], str) for r in out)
 
 
+# (id, vector): an exact and a scaled duplicate of id 1, a vector at cosine
+# 0.9499996 to it (rounds to 0.95) and one at 0.9499994 (rounds to
+# 0.949999), a zero vector, and an orthogonal and an opposite pair
+_COS_TABLE = [
+    (1, [1.0, 0.0, 0.0, 0.0]),
+    (2, [1.0, 0.0, 0.0, 0.0]),
+    (3, [2.0, 0.0, 0.0, 0.0]),
+    (4, [0.9499996, (1 - 0.9499996**2) ** 0.5, 0.0, 0.0]),
+    (5, [0.9499994, (1 - 0.9499994**2) ** 0.5, 0.0, 0.0]),
+    (6, [0.0, 0.0, 0.0, 0.0]),
+    (7, [0.0, 0.0, 1.0, 0.0]),
+    (8, [0.0, 0.0, -1.0, 0.0]),
+]
+
+
+def _all_pairs_cosine(rows, threshold):
+    """{(lo, hi): cosine} over every pair, cosine rounded to 6 places and
+    norms floored at 1e-300 (a zero vector scores 0.0)."""
+    import itertools
+    import math
+
+    out = {}
+    for (i, u), (j, v) in itertools.combinations(rows, 2):
+        dot = sum(x * y for x, y in zip(u, v))
+        nu = max(math.sqrt(sum(x * x for x in u)), 1e-300)
+        nv = max(math.sqrt(sum(x * x for x in v)), 1e-300)
+        cos = round(dot / (nu * nv), 6)
+        if cos >= threshold:
+            out[min(i, j), max(i, j)] = cos
+    return out
+
+
+@pytest.mark.parametrize("threshold", [0.95, 0.0])
+def test_cosine_pair_paths_match_all_pairs_reference(spark, threshold):
+    """The tile path (embedding_near_duplicates), the bucket GEMM path and
+    the hot-bucket star path (_verify_bucketed_pairs; max_bucket_size=1
+    routes the one bucket to the star) all agree with a plain-Python
+    all-pairs cosine, for numeric and string ids.  The star path pairs
+    only with the bucket minimum.  At threshold 0 the zero vector pairs
+    at 0.0 with every vector in all three paths."""
+    from nreadspark.ops.dedup import _verify_bucketed_pairs, embedding_near_duplicates
+
+    ref = _all_pairs_cosine(_COS_TABLE, threshold)
+
+    def pairs(df):
+        return {(r["id_a"], r["id_b"]): r["cosine"] for r in df.collect()}
+
+    emb = spark.createDataFrame(_COS_TABLE, "vec_id bigint, embedding array<double>")
+    assert pairs(embedding_near_duplicates(emb, threshold, block_size=3)) == ref
+    for numeric, to_id in ((True, int), (False, lambda i: f"v{i}")):
+        sigs = spark.createDataFrame(
+            [(str(to_id(i)), v, "b") for i, v in _COS_TABLE],
+            "id string, vec array<double>, bucket string",
+        )
+        want = {(to_id(a), to_id(b)): c for (a, b), c in ref.items()}
+        assert pairs(_verify_bucketed_pairs(sigs, threshold, 100, numeric)) == want
+        star = {p: c for p, c in want.items() if p[0] == to_id(1)}
+        assert pairs(_verify_bucketed_pairs(sigs, threshold, 1, numeric)) == star
+
+
 def test_ivf_centroids_survive_one_ragged_vector(spark):
     from nreadspark.ops.similarity import ivf_topk
 

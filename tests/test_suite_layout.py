@@ -88,19 +88,23 @@ def test_library_derives_arrow_schemas_from_spark_schemas():
 
 
 def test_library_has_one_arrow_crossing():
-    """Every ``mapInArrow`` kernel runs through ``pipeline.map_batches``,
-    whose task entry drops PySpark's cached zip finders; a second
-    ``mapInArrow`` call, or a ``mapInPandas`` outside ``ops/dedup.py``'s
-    group-shaped kernels, is a crossing that skips it."""
+    """Every Python kernel runs through ``pipeline.map_batches``' one
+    ``mapInArrow`` call, whose task entry drops PySpark's cached zip
+    finders; a second ``mapInArrow``, or any ``mapInPandas``,
+    ``pandas_udf`` or ``applyInPandas`` crossing, skips it.  The one
+    exception is streaming's ``applyInPandasWithState``: no Arrow state
+    API replaces it."""
     lib = os.path.join(REPO, "nreadspark")
+    pandas_apis = ("mapInPandas", "pandas_udf", "applyInPandas", "applyInPandasWithState")
     arrow, pandas = [], []
     for path in sorted(glob.glob(os.path.join(lib, "**", "*.py"), recursive=True)):
         rel = os.path.relpath(path, lib)
         tree = ast.parse(open(path, encoding="utf-8").read(), path)
         for node in ast.walk(tree):
-            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
-                if node.func.attr == "mapInArrow":
-                    arrow.append(f"{rel}:{node.lineno}")
-                elif node.func.attr == "mapInPandas" and rel != "ops/dedup.py":
-                    pandas.append(f"{rel}:{node.lineno}")
-    assert len(arrow) == 1 and pandas == [], "\n".join(arrow + pandas)
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            if name == "mapInArrow":
+                arrow.append(f"{rel}:{node.lineno}")
+            elif name in pandas_apis:
+                pandas.append(f"{rel}:{node.lineno}: {name}")
+    state = [p for p in pandas if p.startswith("streaming.py:") and p.endswith("WithState")]
+    assert len(arrow) == 1 and len(state) == 1 and pandas == state, "\n".join(arrow + pandas)
