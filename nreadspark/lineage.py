@@ -9,6 +9,10 @@ North-rule requirement: "resumable from checkpoint with per-partition lineage
 * output parquet is written ``partitionBy("bucket")`` with dynamic partition
   overwrite, so re-running a bucket **replaces** any partial data from a
   crashed attempt (idempotent);
+* the written frame is first rebalanced by bucket, so a bucket commits as
+  one file (a few, where AQE splits an oversized bucket), not one per write
+  task that held its rows -- later scans of the commit then run one task
+  per bucket-sized split, not one per tiny file;
 * after the write, one JSON **manifest** per bucket is committed atomically
   (tmp file + rename) under ``<output>/_lineage/`` with that bucket's metrics
   (docs in/out, extraction/fallback/retry/failure counts, bytes, kernel ms);
@@ -284,6 +288,16 @@ def _write_buckets(
     bucket replaces only its partition, and the caller's session
     overwrite semantics stay untouched.
 
+    The write is rebalanced by bucket (the ``rebalance`` hint: one
+    shuffle, one extra job under AQE), so every bucket lands in one
+    write task and commits as one file, not one file per task that held
+    its rows -- up to tasks x ``n_buckets`` files.  AQE merges small
+    shuffle partitions and splits an oversized one, so a commit writes
+    about ``max(n_buckets, bytes / advisoryPartitionSizeInBytes)``
+    files; with AQE off the hint is a plain hash repartition by bucket.
+    The per-bucket aggregation reads the persisted ``df``, not the
+    rebalanced write.
+
     One manifest (``aggs`` per bucket + ``committed_at``) commits for
     EVERY processed bucket, zero-row ones included with zeros typed from
     the aggregate schema: a bucket with no output rows (no ids hash to
@@ -299,7 +313,8 @@ def _write_buckets(
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         (
-            df.write.option("partitionOverwriteMode", "dynamic")
+            df.hint("rebalance", "bucket")
+            .write.option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .mode("overwrite")
             .parquet(output_path)

@@ -720,6 +720,10 @@ def embedding_near_duplicates(
     """
     import math
 
+    # a NULL vector can neither score nor pack: collect_list would skip it
+    # but keep its id, shifting every later id in its block onto the next
+    # row's vector
+    emb_df = emb_df.filter(F.col(vec_col).isNotNull())
     if n_blocks is None:
         n = emb_df.count()  # sizing fallback; pass n_blocks to skip this job
         n_blocks = max(1, math.ceil(n / block_size))

@@ -36,7 +36,9 @@ def _cosine(vec_a, vec_b):
     )
     na = F.sqrt(F.aggregate(vec_a, F.lit(0.0), lambda acc, x: acc + x * x))
     nb = F.sqrt(F.aggregate(vec_b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (na * nb)
+    # floored as in ops.dedup._norms: a zero vector scores 0.0, not a
+    # DIVIDE_BY_ZERO under ANSI mode
+    return dot / F.greatest(na * nb, F.lit(1e-300))
 
 
 def _top_k(pairs: DataFrame, k: int) -> DataFrame:

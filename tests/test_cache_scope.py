@@ -16,6 +16,9 @@ def _is_cached(df) -> bool:
 def test_inner_scope_release_leaves_outer_persists_alone(spark):
     from nreadspark.ops.dedup import _persist, cache_scope, release_caches
 
+    # earlier tests may leave frames in the default scope (curate() keeps
+    # its hand-off frames registered there); start from an empty one
+    release_caches()
     outer = _persist(spark.range(10))
     outer.count()
     assert _is_cached(outer)

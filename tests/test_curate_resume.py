@@ -4,6 +4,7 @@ completed stages, stage stats must sum correctly across the resume, and a
 partially-written stage must fill in only its missing buckets with no
 duplicate or lost doc_ids (mirrors lineage.run_extraction's contract)."""
 
+import glob
 import os
 import shutil
 
@@ -57,6 +58,14 @@ def test_kill_after_line_clean_resumes_without_recompute(spark, tmp_path, monkey
     assert os.path.isfile(os.path.join(out, "_stages", "quality", "_lineage", "_stage.json"))
     assert os.path.isfile(os.path.join(out, "_stages", "line_clean", "_lineage", "_stage.json"))
     assert not os.path.isdir(os.path.join(out, "_stages", "pairs"))
+    # a committed stage holds one file per bucket, not one per (write
+    # task, bucket)
+    quality = os.path.join(out, "_stages", "quality")
+    files = {
+        os.path.basename(d): len(glob.glob(os.path.join(d, "part-*.parquet")))
+        for d in glob.glob(os.path.join(quality, "bucket=*"))
+    }
+    assert files and set(files.values()) == {1}, files
 
     # resume: completed stages must load from checkpoint -- poison their
     # operators so any recompute fails loudly

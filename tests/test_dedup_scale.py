@@ -334,6 +334,55 @@ def test_cosine_pair_paths_match_all_pairs_reference(spark, threshold):
         assert pairs(_verify_bucketed_pairs(sigs, threshold, 1, numeric)) == star
 
 
+def test_tile_path_skips_null_vectors(spark):
+    """A NULL vector is dropped before the block pack: it must not shift
+    the ids of the vectors packed after it onto their neighbours."""
+    from nreadspark.ops.dedup import embedding_near_duplicates
+
+    rows = [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0]), (4, [0.0, 1.0]), (5, [1.0, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    out = embedding_near_duplicates(emb, threshold=0.9, n_blocks=1).collect()
+    assert {(r["id_a"], r["id_b"]) for r in out} == {(1, 5), (3, 4)}
+
+
+def test_topk_searches_score_zero_vectors_at_zero(spark):
+    """A zero vector among the scored candidates scores cosine 0.0 (norm
+    product floored at 1e-300) instead of failing the query with a
+    division by zero; brute force and an IVF probing every list both
+    match a plain-Python ranking, and every LSH candidate carries the
+    reference cosine."""
+    import math
+
+    from nreadspark.ops.similarity import brute_force_topk, ivf_topk, lsh_topk
+
+    table = _COS_TABLE + [(9, [0.0, 0.0, 0.0, 0.0])]
+    vecs = dict(table)
+
+    def cos(i, j):
+        u, v = vecs[i], vecs[j]
+        norms = math.sqrt(sum(x * x for x in u)) * math.sqrt(sum(x * x for x in v))
+        return round(sum(x * y for x, y in zip(u, v)) / max(norms, 1e-300), 6)
+
+    k, query_ids = 3, (1, 6, 7)
+    want = {}
+    for q in query_ids:
+        ranking = sorted((c for c in vecs if c != q), key=lambda c: (-cos(q, c), c))
+        want[q] = [(c, cos(q, c)) for c in ranking[:k]]
+
+    def ranked(df):  # the IVF path returns string ids
+        got = {}
+        for r in sorted(df.collect(), key=lambda r: (int(r["query_id"]), r["rank"])):
+            got.setdefault(int(r["query_id"]), []).append((int(r["corpus_id"]), r["cosine"]))
+        return got
+
+    corpus = spark.createDataFrame(table, "vec_id bigint, embedding array<double>")
+    queries = corpus.filter(corpus.vec_id.isin(*query_ids))
+    assert ranked(brute_force_topk(corpus, queries, k=k)) == want
+    assert ranked(ivf_topk(corpus, queries, dim=4, k=k, n_lists=2, n_probe=2)) == want
+    for q, hits in ranked(lsh_topk(corpus, queries, dim=4, k=k)).items():
+        assert all(c == cos(q, corpus_id) for corpus_id, c in hits)
+
+
 def test_ivf_centroids_survive_one_ragged_vector(spark):
     from nreadspark.ops.similarity import ivf_topk
 

@@ -1,6 +1,7 @@
 """Spark-level tests: kernel-through-mapInPandas equality with direct Python,
 skew partitioning, and checkpoint/resume lineage."""
 
+import glob
 import json
 import os
 import shutil
@@ -84,6 +85,14 @@ def test_extraction_plan_prunes_columns(spark, corpus_df, tmp_path):
     assert "noise" not in plan.split("ReadSchema")[-1][:400]
 
 
+def _files_per_bucket(out_dir):
+    """``part-*.parquet`` count of every ``bucket=*`` directory."""
+    return {
+        os.path.basename(d): len(glob.glob(os.path.join(d, "part-*.parquet")))
+        for d in glob.glob(os.path.join(out_dir, "bucket=*"))
+    }
+
+
 def test_lineage_run_and_resume(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     df = build_corpus_df(spark, 32, num_partitions=4)
@@ -93,6 +102,10 @@ def test_lineage_run_and_resume(spark, tmp_path):
     assert summary1["docs_computed"] == 32
     result1 = spark.read.parquet(out_dir)
     assert result1.count() == 32
+    # the commit clusters by bucket: one file per bucket, not one per
+    # (write task, bucket)
+    files = _files_per_bucket(out_dir)
+    assert files and set(files.values()) == {1}, files
 
     # full resume: nothing left to do
     summary2 = run_extraction(spark, df, out_dir, n_buckets=8)
@@ -107,6 +120,7 @@ def test_lineage_run_and_resume(spark, tmp_path):
 
     summary3 = run_extraction(spark, df, out_dir, n_buckets=8)
     assert summary3["buckets_computed"] == len(victims)
+    assert _files_per_bucket(out_dir) == files
 
     # no dup / no missing doc_ids after resume
     final = spark.read.parquet(out_dir)
