@@ -49,13 +49,10 @@ CORPUS_SEED = 42
 
 
 def _session(cpus: int):
-    from pyspark.sql import SparkSession
+    from nreadspark.pipeline import session_builder
 
-    from nreadspark.pipeline import configure_session_defaults
-
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"nreadspark-bench-{cpus}")
+    return (
+        session_builder(f"nreadspark-bench-{cpus}", f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # fixed, pre-touched heap: lazy heap growth page-faults during the
@@ -67,8 +64,8 @@ def _session(cpus: int):
         # mega-doc skew without a shuffle, without paying per-task dispatch
         # (measured: 8m beats 2m by 1.37x and 24m by 1.5x at local[16])
         .config("spark.sql.files.maxPartitionBytes", "8m")
+        .getOrCreate()
     )
-    return configure_session_defaults(builder).getOrCreate()
 
 
 def _force(df) -> int:

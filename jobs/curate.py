@@ -40,7 +40,6 @@ import hashlib
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -121,9 +120,22 @@ def curate_resumable(
     carrying the stage's stats); the final survivors commit at the output
     root the same way.  A crash mid-near-dup therefore re-pays only the
     near-dup stage: on the next run completed stages load from their
-    committed parquet (stats from the marker -- summed correctly across
-    the resume), and a PARTIALLY-written stage recomputes its global
-    aggregates but skips the bucket partitions already committed.
+    committed parquet (stats from the marker), and a PARTIALLY-written
+    stage skips the bucket partitions already committed.
+
+    Stage stats come from the commit where they can: the row counts and
+    sums of the frame a stage writes (``boilerplate_lines_removed``,
+    ``emptied_by_line_dedup``, ``near_dup_pairs``, ``surviving_docs``)
+    are Column aggregates the runner folds into its per-bucket manifest
+    aggregation and sums over every committed manifest, so they cost no
+    Spark job and stay exact when a partial stage resumes.  The rest
+    still run an action of their own, because they count frames the
+    commit does not write: ``quality`` groups its verdicts once (input
+    docs and per-reason drops, while it commits only the kept docs),
+    ``url_hygiene``, ``model_filter`` and ``decontam`` count their
+    intermediate or dropped frames, and ``pii_scrub`` builds a nested
+    per-category dict.  Those are recomputed over the whole stage input
+    when a partial stage resumes.
 
     Downstream stages always consume the RE-READ committed parquet, never
     the in-memory plan, so within a single run each stage's lineage is one
@@ -174,7 +186,6 @@ def curate_resumable(
     runner = lineage.StageRunner(
         spark, output_path, stage_names, n_buckets, resume, fail_after_stage
     )
-    stats: dict = {"resumed_stages": []}
 
     if input_fingerprint is None:
         input_fingerprint = lineage.input_fingerprint(docs)
@@ -248,8 +259,7 @@ def curate_resumable(
     done = runner.committed("final", fparams)
     if done is not None:
         final_df, fstats = done
-        stats.update(fstats)
-        stats["resumed_stages"] = stage_names
+        stats = {"resumed_stages": stage_names, **fstats}
         if clean_stages:
             # a requested cleanup must happen even on the no-work path
             # (e.g. run 1 used --keep-stages, or crashed between the
@@ -258,14 +268,10 @@ def curate_resumable(
             stats["stages_cleaned"] = True
         return final_df, stats
 
+    stats: dict = {}
+
     def stage(name, params, build, **kw):
-        t0 = time.perf_counter()
-        df, stage_stats, resumed = runner.run(name, params, build, **kw)
-        if resumed:
-            stats["resumed_stages"].append(name)
-        else:
-            # resumed stages report no wall: it describes this run's work
-            stats.setdefault("stage_wall_s", {})[name] = round(time.perf_counter() - t0, 3)
+        df, stage_stats = runner.run(name, params, build, **kw)
         stats.update(stage_stats)
         return df
 
@@ -299,20 +305,19 @@ def curate_resumable(
 
     # -- stage 1: quality filter ------------------------------------------
     def build_quality():
+        # the commit writes only the kept docs, so the input and drop
+        # counts come from one grouping of the verdicts (a NULL keep, from
+        # a NULL text, is counted as input but neither kept nor dropped)
         src = _persist(docs)
-        qstats = {"input_docs": src.count()}
         verdicts = c4_quality_filter(src, text_col=text_col, min_words=min_words)
-        reason_counts = {
-            r["reasons"]: r["n"]
-            for r in verdicts.filter(~F.col("keep"))
-            .groupBy("reasons")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        qstats["quality_dropped"] = sum(reason_counts.values())
-        qstats["quality_drop_reasons"] = reason_counts
+        groups = verdicts.groupBy("keep", "reasons").count().collect()
+        reason_counts = {r["reasons"]: r["count"] for r in groups if r["keep"] is False}
         kept = src.join(verdicts.filter("keep").select("doc_id"), "doc_id")
-        return kept.select("doc_id", text_col), qstats
+        return kept.select("doc_id", text_col), {
+            "input_docs": sum(r["count"] for r in groups),
+            "quality_dropped": sum(reason_counts.values()),
+            "quality_drop_reasons": reason_counts,
+        }
 
     kept = stage("quality", qparams, build_quality)
 
@@ -334,18 +339,16 @@ def curate_resumable(
 
     # -- stage 2: boilerplate line removal --------------------------------
     def build_line_clean():
-        cleaned = _persist(line_dedup(
+        cleaned = line_dedup(
             kept,
             text_col=text_col,
             delimiter=line_delimiter,
             min_repeats=line_min_repeats,
             keep_all_docs=True,
-        ).select("doc_id", F.col("clean_text").alias(text_col), "n_removed"))
+        ).select("doc_id", F.col("clean_text").alias(text_col), "n_removed")
         return cleaned, {
-            "boilerplate_lines_removed": int(
-                cleaned.agg(F.sum("n_removed")).collect()[0][0] or 0
-            ),
-            "emptied_by_line_dedup": cleaned.filter(F.length(text_col) == 0).count(),
+            "boilerplate_lines_removed": F.sum("n_removed"),
+            "emptied_by_line_dedup": F.count_if(F.length(text_col) == 0),
         }
 
     cleaned = stage("line_clean", lparams, build_line_clean)
@@ -395,23 +398,23 @@ def curate_resumable(
         verified = verify_jaccard(
             dedup_input, candidates, text_col=text_col, threshold=minhash_threshold
         ).select("doc_id_a", "doc_id_b")
-        return verified, {}
+        return verified, {"near_dup_pairs": F.count("*")}
 
-    pairs = stage(
-        "pairs", pparams, build_pairs, id_col="doc_id_a", rows_stat_key="near_dup_pairs"
-    )
+    pairs = stage("pairs", pparams, build_pairs, id_col="doc_id_a")
 
     # -- stage 4: survivors (final output at the root) --------------------
     def build_final():
         # the final marker carries the FULL merged stats so a completed
-        # job's rerun can short-circuit with them; resumed_stages /
-        # stage_wall_s describe a particular RUN, not the output -- they
-        # stay out of the committed marker
+        # job's rerun can short-circuit with them; the runner's
+        # resumed_stages / stage_wall_s describe a particular RUN, not the
+        # output -- they stay out of the committed marker
         return keep_canonical(cleaned.drop("n_removed"), pairs), {
-            k: v for k, v in stats.items() if k not in ("resumed_stages", "stage_wall_s")
+            **stats, "surviving_docs": F.count("*"),
         }
 
-    final_df = stage("final", fparams, build_final, rows_stat_key="surviving_docs")
+    final_df = stage("final", fparams, build_final)
+    stats = {"resumed_stages": runner.resumed_stages, **stats,
+             "stage_wall_s": runner.stage_wall_s}
     if clean_stages:
         runner.clean_stages()
         stats["stages_cleaned"] = True
@@ -570,14 +573,9 @@ def main() -> None:
     )
     args = parser.parse_args()
 
-    from pyspark.sql import SparkSession
+    from nreadspark.pipeline import session_builder
 
-    from nreadspark.pipeline import configure_session_defaults
-
-    builder = SparkSession.builder.appName("nreadspark-curate")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = configure_session_defaults(builder).getOrCreate()
+    spark = session_builder("nreadspark-curate", args.master).getOrCreate()
 
     if args.synthetic:
         from pyspark.sql import functions as F

@@ -22,11 +22,17 @@ with the same per-bucket manifests + atomic markers as the extraction
 job's bucket writer, and each stage's params fold into every DOWNSTREAM
 fingerprint: re-tuning ``max_hamming`` re-pays the pair join and
 survivors but never the decode.
+
+Stats: each stage reports its committed row count (``n_hashed``,
+``n_pairs``, ``n_survivors``), counted in the runner's per-bucket
+manifest aggregation and summed over every committed manifest, so it is
+exact across a resume and costs no Spark job; ``decoder_counts`` is one
+grouping of the committed hashes.  ``resumed_stages`` lists the stages
+loaded from checkpoint and ``stage_wall_s`` times only the stages this
+run computed.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import functions as F
 
@@ -66,21 +72,18 @@ def curate_media_resumable(
     )
     if input_fingerprint is None:
         input_fingerprint = lineage.input_fingerprint(media)
-    stats: dict = {"resumed_stages": [], "stage_wall_s": {}}
+    stats: dict = {
+        "resumed_stages": runner.resumed_stages, "stage_wall_s": runner.stage_wall_s,
+    }
     hparams = {
         "input": input_fingerprint,
         "max_decode_pixels": max_decode_pixels,
     }
 
-    def stage(name, params, build, id_col, rows_stat_key):
-        t0 = time.perf_counter()
-        df, stats[name], resumed = runner.run(
-            name, params, lambda: (build(), {}), id_col=id_col,
-            rows_stat_key=rows_stat_key,
+    def stage(name, params, build, id_col, count_key):
+        df, stats[name] = runner.run(
+            name, params, lambda: (build(), {count_key: F.count("*")}), id_col=id_col
         )
-        if resumed:
-            stats["resumed_stages"].append(name)
-        stats["stage_wall_s"][name] = round(time.perf_counter() - t0, 3)
         return df
 
     # --- stage 1: hashes (route by kind; the decode stage) ---------------

@@ -99,19 +99,14 @@ def main() -> None:
     )
     args = parser.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from nreadspark.lineage import (
         run_cdx_ingestion,
         run_extraction,
         run_warc_ingestion,
     )
-    from nreadspark.pipeline import configure_session_defaults
+    from nreadspark.pipeline import session_builder
 
-    builder = SparkSession.builder.appName("nreadspark-extract")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = configure_session_defaults(builder).getOrCreate()
+    spark = session_builder("nreadspark-extract", args.master).getOrCreate()
 
     if args.plan_output:
         if not args.cdx_glob:

@@ -34,15 +34,10 @@ def main() -> None:
     parser.add_argument("--master", default=None)
     args = parser.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    from nreadspark.pipeline import configure_session_defaults
+    from nreadspark.pipeline import session_builder
     from nreadspark.streaming import extract_stream
 
-    builder = SparkSession.builder.appName("nreadspark-extract-stream")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = configure_session_defaults(builder).getOrCreate()
+    spark = session_builder("nreadspark-extract-stream", args.master).getOrCreate()
 
     query = extract_stream(
         spark,

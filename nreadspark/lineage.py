@@ -17,7 +17,11 @@ North-rule requirement: "resumable from checkpoint with per-partition lineage
   (tmp file + rename) under ``<output>/_lineage/`` with that bucket's metrics
   (docs in/out, extraction/fallback/retry/failure counts, bytes, kernel ms);
 * resume = anti-join of the input against the set of committed manifests:
-  only buckets without a manifest are recomputed.
+  only buckets without a manifest are recomputed;
+* a job stage's (``StageRunner``) manifests also carry the stage's
+  declared row counts and sums, computed in the same per-bucket
+  aggregation; the stage stat is their sum over every committed
+  manifest, so it stays exact across a resume with no extra Spark job.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .pipeline import extract, kernel_metric_aggs
 
@@ -347,66 +351,6 @@ def _run_summary(started, done, manifests, total=("docs_computed", "docs"), **he
     }
 
 
-def commit_bucketed_stage(
-    spark,
-    df: DataFrame,
-    stage_out: str,
-    stage: str,
-    n_buckets: int,
-    stage_stats: dict,
-    resume: bool = True,
-    id_col: str = "doc_id",
-    rows_stat_key: str | None = None,
-    params: dict | None = None,
-) -> int:
-    """A job stage's bucket commit (the same :func:`_write_buckets` as
-    the extraction and ingestion jobs): write ``df`` partitioned by the
-    deterministic id bucket with one manifest per bucket, then commit an
-    atomic stage marker (stats + total rows + schema) LAST, so a marker's
-    existence proves the whole stage.
-
-    Buckets whose manifest already exists are SKIPPED (their partition is
-    already committed).  ``resume=False``, or an existing layout whose
-    ``n_buckets`` differs from the request, first CLEANS the stage's
-    data+lineage: stale partitions from a previous layout must not
-    survive into the re-read.
-
-    ``params`` fingerprints the computation that produced ``df`` (see
-    :func:`resolve_bucket_layout`): a resume under different params cleans
-    and recomputes rather than mixing configurations, and the stage marker
-    records them so readers can check too.
-
-    Returns the stage's total row count (pre-existing + new buckets)."""
-    done = resolve_bucket_layout(spark, stage_out, n_buckets, resume, params=params)
-    todo = _skip_done(df.withColumn("bucket", bucket_col(n_buckets, id_col)), done)
-    manifests = _write_buckets(
-        spark, todo, stage_out, n_buckets, done,
-        F.count("*").cast("bigint").alias("docs"),
-    )
-    total = sum(m["docs"] for m in manifests) + sum(
-        (read_marker(stage_out, f"bucket={b}.json", spark=spark) or {}).get("docs", 0)
-        for b in done
-    )
-    stage_stats = dict(stage_stats)
-    if rows_stat_key is not None:
-        stage_stats[rows_stat_key] = int(total)
-    write_marker(
-        stage_out,
-        STAGE_MARKER,
-        {
-            "stage": stage,
-            "rows": int(total),
-            "n_buckets": n_buckets,
-            "params": json.loads(json.dumps(params or {}, sort_keys=True)),
-            "schema_json": df.schema.json(),
-            "stats": stage_stats,
-            "committed_at": time.time(),
-        },
-        spark=spark,
-    )
-    return int(total)
-
-
 def read_bucketed_stage(
     spark, stage_out: str, n_buckets: int | None = None, params: dict | None = None
 ):
@@ -445,7 +389,10 @@ class StageRunner:
     stages this run executes; ``fail_after_stage`` must name one of them
     (else ValueError up front, before any work -- a typo must not turn a
     kill-and-resume test into a silent full run), and :meth:`run` raises
-    right after that stage commits."""
+    right after that stage commits.  ``resumed_stages`` lists the stages
+    loaded from checkpoint, in run order, and ``stage_wall_s`` the wall
+    seconds of each stage this run computed: a wall describes this run's
+    work, so a resumed stage has none."""
 
     def __init__(
         self, spark, output_path: str, stages, n_buckets: int,
@@ -461,6 +408,8 @@ class StageRunner:
         self.n_buckets = n_buckets
         self.resume = resume
         self.fail_after_stage = fail_after_stage
+        self.resumed_stages: list[str] = []
+        self.stage_wall_s: dict[str, float] = {}
 
     def _path(self, stage: str) -> str:
         if stage == "final":
@@ -474,34 +423,78 @@ class StageRunner:
             return None
         return read_bucketed_stage(self.spark, self._path(stage), self.n_buckets, params)
 
-    def run(
-        self, stage: str, params: dict, build, id_col: str = "doc_id",
-        rows_stat_key: str | None = None,
-    ):
-        """``(frame, stats, resumed)`` for one stage: its committed
-        checkpoint when resuming, else ``build() -> (frame, stats)`` run
-        inside its own ``cache_scope`` and committed via
-        :func:`commit_bucketed_stage`.  Either way the frame returned is
+    def run(self, stage: str, params: dict, build, id_col: str = "doc_id"):
+        """``(frame, stats)`` for one stage: its committed checkpoint when
+        resuming, else ``build() -> (frame, stats)`` run inside its own
+        ``cache_scope`` and committed.  Either way the frame returned is
         the RE-READ committed parquet, never the in-memory plan, so the
         next stage's lineage is one scan of these files -- the property
         resume relies on -- and the build's persisted intermediates are
-        all released once the commit is done."""
+        all released once the commit is done.
+
+        The commit is :func:`_write_buckets` over the deterministic bucket
+        of ``id_col`` with one manifest per bucket, under
+        :func:`resolve_bucket_layout` (a resume under another layout or
+        other ``params`` cleans and recomputes; a bucket whose manifest
+        exists is skipped), then the atomic stage marker (stats, total
+        rows, params, schema) LAST, so a marker's existence proves the
+        whole stage.
+
+        A stats value that is a Column aggregate becomes one more field of
+        every bucket manifest (a NULL aggregate counts 0), and its stage
+        stat is that field's sum over all of the stage's manifests: the
+        buckets written now plus those an interrupted run committed, so
+        it is exact across a resume and costs no Spark job of its own.  A
+        committed manifest that lacks a declared field was written before
+        the field existed: its bucket is recomputed, never summed as 0.
+        Other stats values go into the marker as given."""
         from .ops.dedup import cache_scope
 
+        started = time.perf_counter()
         out = self.committed(stage, params)
-        resumed = out is not None
-        if not resumed:
+        if out is not None:
+            self.resumed_stages.append(stage)
+        else:
+            path = self._path(stage)
             with cache_scope():
-                df, stage_stats = build()
-                commit_bucketed_stage(
-                    self.spark, df, self._path(stage), stage, self.n_buckets,
-                    stage_stats, self.resume, id_col=id_col,
-                    rows_stat_key=rows_stat_key, params=params,
+                df, stats = build()
+                aggs = {k: v for k, v in stats.items() if isinstance(v, Column)}
+                fields = ("docs", *aggs)
+                done = resolve_bucket_layout(
+                    self.spark, path, self.n_buckets, self.resume, params=params
                 )
-            out = read_bucketed_stage(self.spark, self._path(stage), self.n_buckets, params)
+                on_disk = {
+                    b: read_marker(path, f"bucket={b}.json", spark=self.spark) for b in done
+                }
+                trusted = {b: m for b, m in on_disk.items() if all(k in m for k in fields)}
+                done = set(trusted)
+                manifests = _write_buckets(
+                    self.spark,
+                    _skip_done(df.withColumn("bucket", bucket_col(self.n_buckets, id_col)), done),
+                    path, self.n_buckets, done,
+                    F.count("*").cast("bigint").alias("docs"),
+                    *(F.coalesce(agg, F.lit(0)).alias(k) for k, agg in aggs.items()),
+                ) + list(trusted.values())
+                totals = {k: sum(m[k] for m in manifests) for k in fields}
+                write_marker(
+                    path,
+                    STAGE_MARKER,
+                    {
+                        "stage": stage,
+                        "rows": totals["docs"],
+                        "n_buckets": self.n_buckets,
+                        "params": json.loads(json.dumps(params or {}, sort_keys=True)),
+                        "schema_json": df.schema.json(),
+                        "stats": {**stats, **{k: totals[k] for k in aggs}},
+                        "committed_at": time.time(),
+                    },
+                    spark=self.spark,
+                )
+            out = read_bucketed_stage(self.spark, path, self.n_buckets, params)
+            self.stage_wall_s[stage] = round(time.perf_counter() - started, 3)
         if stage == self.fail_after_stage:
             raise RuntimeError(f"injected failure after stage {stage}")
-        return out[0], out[1], resumed
+        return out
 
     def clean_stages(self) -> None:
         """Delete every checkpoint but the final output's."""

@@ -48,9 +48,9 @@ feed the pairs into ``ops.dedup.connected_components`` +
 ``dedup_survivors`` for the keep/drop decision, or cap with the minhash
 star-collapse pattern (``ops/dedup.py``) if cluster sizes are unbounded.
 
-The vendored pixel decode is the container-constraint tier (pure-stdlib
-PNG; PIL seam documented in ``ops.multimodal``); payloads past
-``max_decode_pixels`` or undecodable are tagged, never dropped.
+The vendored pure-Python decoders (PNG, JPEG, GIF) are the one pixel
+tier; payloads past ``max_decode_pixels`` or undecodable are tagged,
+never dropped.
 
 Reference parity note: NReadability has no image pipeline -- this module
 is part of the beyond-reference training-data surface (brief: multimodal
@@ -310,28 +310,20 @@ def _decode_luma(codec: str, raw: bytes, max_pixels: int | None):
         return None
 
 
-def _gated_hashes(raw: bytes, parsed, max_pixels: int | None, tier: str, native=None):
+def _gated_hashes(raw: bytes, parsed, max_pixels: int | None, tier: str):
     """``(width, height, <six hashes>, decoder)`` for an image payload whose
     header parsed as ``(codec, w, h)`` -- the one header gate of every
     perceptual-hash container: ``capped`` past ``max_pixels`` and
     ``too-small`` under the 8x8 grid (header dims, nothing decoded), else
-    decoded -- by ``native`` first when given (tagged ``native:<codec>``),
-    then the codec table -- and hashed as ``<tier>:<codec>`` with the
-    DECODED dims; a recognized codec whose pixels do not decode keeps its
-    header dims as ``header:<codec>``."""
+    decoded through the codec table and hashed as ``<tier>:<codec>`` with
+    the DECODED dims; a recognized codec whose pixels do not decode keeps
+    its header dims as ``header:<codec>``."""
     codec, w, h = parsed
     if max_pixels is not None and w * h > max_pixels:
         return (w, h, *_NO_HASH, "capped")
     if w < GRID or h < GRID:
         return (w, h, *_NO_HASH, "too-small")
-    decoded = None
-    if native is not None:
-        try:
-            decoded, tier = native(raw), "native"
-        except (ValueError, NotImplementedError):
-            pass
-    if decoded is None:
-        decoded = _decode_luma(codec, raw, max_pixels)
+    decoded = _decode_luma(codec, raw, max_pixels)
     if decoded is None:
         return (w, h, *_NO_HASH, f"header:{codec}")
     dw, dh, lumas = decoded
@@ -343,61 +335,31 @@ def image_hashes(
     ref_col: str = "media_ref",
     payload_col: str = "payload",
     max_decode_pixels: int | None = 1 << 16,
-    use_native: bool = False,
 ) -> DataFrame:
     """(media_ref, width, height, ahash_hi/lo, ghash_hi/lo, phash_hi/lo,
     decoder): perceptual hashes per payload, ONE Arrow crossing, zero
     shuffles.
 
     Decode tiers per payload (mirrors ``extract_media_features``):
-    ``native:<codec>`` when ``use_native`` and PIL imports (the
-    production path -- C decoders, every format PIL knows);
     ``pixels:png`` / ``pixels:jpeg`` / ``pixels:gif`` via the vendored
     pure-Python decoders (PNG unfilter; baseline-JPEG Huffman+IDCT in
     ``ops.jpeg``; GIF LZW); dimensions are read O(1) from the header
     FIRST, so oversized payloads cost nothing and take ``capped``, images
     smaller than the 8x8 grid take ``too-small``.  A payload whose codec
-    is recognized but whose pixels are not decodable by the active tiers
+    is recognized but whose pixels the vendored decoders cannot decode
     (WebP, a scanless progressive JPEG, ...) keeps its parsed dimensions
     with ``header:<codec>`` -- counted and cap-able rather than lumped
     ``undecodable``.  Non-hashed rows keep NULL hash columns --
     containment, never a task failure."""
-    native = _native_luma_milli if use_native else None
 
     def row(ref, raw):
         raw = raw or b""
         parsed = parse_image_header(raw)
         if parsed is None:
             return [(ref, None, None, *_NO_HASH, "undecodable")]
-        return [(ref, *_gated_hashes(raw, parsed, max_decode_pixels, "pixels", native))]
+        return [(ref, *_gated_hashes(raw, parsed, max_decode_pixels, "pixels"))]
 
     return map_rows(media_df, [ref_col, payload_col], HASH_SCHEMA, row)
-
-
-def _native_luma_milli(raw: bytes):
-    """PIL-backed twin of the vendored luma decoders: ``(w, h, lumas)``
-    at scale 1000 from PIL's ``L`` conversion (``decode_image_real``
-    seam made hash-compatible).  On grayscale sources and DC-only JPEGs
-    PIL's integer L plane equals the vendored decode exactly, which is
-    what the availability-gated parity test pins; RGB sources differ
-    only by PIL's L rounding (``(299R+587G+114B+500)//1000`` vs our
-    exact scale-1000 sum) -- within 1 unit at scale 1, i.e. within the
-    hash family's designed tolerance.  Raises ``NotImplementedError``
-    when PIL is absent (the caller falls through to the vendored
-    tiers)."""
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError as exc:  # pragma: no cover - env has no PIL
-        raise NotImplementedError("pillow not installed") from exc
-    img = Image.open(io.BytesIO(raw))  # pragma: no cover - env has no PIL
-    gray = img.convert("L")  # pragma: no cover
-    return (  # pragma: no cover
-        gray.width,
-        gray.height,
-        [v * 1000 for v in gray.tobytes()],
-    )
 
 
 def video_keyframe_hashes(

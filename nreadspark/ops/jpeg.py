@@ -24,8 +24,8 @@ bit-exact cross-decoder contract for arbitrary payloads.  The oracle
 strategy therefore uses DC-ONLY images (every 8x8 block constant): for
 those, any compliant IDCT reproduces the block value EXACTLY (the DC
 basis function is flat), so a closed-form SQL oracle can recompute
-hashes without touching JPEG bytes, and a PIL/libjpeg parity test is
-exact as well (``tests/test_images.py``; gated on PIL availability).
+hashes without touching JPEG bytes, and any other compliant decoder
+(libjpeg, PIL) would agree with it exactly.
 The numpy matrix IDCT here keeps float error ~1e-13 on DC-only blocks
 -- far below the round-to-nearest threshold.  Progressive gets a second
 exactness lever: successive approximation is LOSSLESS once all scans
@@ -35,8 +35,8 @@ round-trip tests through two entirely different entropy paths.
 
 Throughput: the entropy loop is pure Python (same vendored-tier
 trade as the PNG unfilter, measured and documented in
-BENCH/BASELINE.md); production swaps in the ``decode_image_real`` PIL
-seam via ``image_hashes(use_native=True)``.
+BENCH/BASELINE.md); the ``max_decode_pixels`` caps of the callers bound
+its cost per payload.
 
 Public-spec provenance: marker structure, zigzag order, canonical
 Huffman construction (F.2.2.3 MINCODE/MAXCODE/VALPTR) and the Annex K

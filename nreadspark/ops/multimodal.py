@@ -5,11 +5,10 @@ crossing (:func:`nreadspark.pipeline.map_rows`, which every media kernel in
 
 Decode strategy (three tiers, best available wins):
 
-1. **PIL pixel decode** -- real decompression, gated behind an import guard
-   (``pillow`` is not in this container; the seam is ``decode_image_real``).
-   For complete PNGs the vendored pure-stdlib pixel decoder
-   (``decode_png_pixels``: zlib inflate + spec unfilter incl. Paeth) runs
-   the SAME mean-luma feature path without pillow (``decoder='pixels:png'``).
+1. **Pixel decode** -- the vendored pure-Python decoders for complete
+   PNGs (``decode_png_pixels``: zlib inflate + spec unfilter incl.
+   Paeth), JPEGs (``ops.jpeg``) and GIFs (LZW) feed the mean-luma feature
+   path (``decoder='pixels:<codec>'``), below a pixel cap.
 2. **Header parse** -- real, spec-compliant stdlib parsers for PNG / GIF /
    JPEG image headers (``parse_image_header``) and ISO BMFF / MP4 video
    containers (``parse_mp4_header``: box walk, mvhd timescale+duration,
@@ -28,7 +27,6 @@ real code path AND an external SQL engine can reconstruct the exact bytes
 
 from __future__ import annotations
 
-import functools
 import hashlib
 import struct
 
@@ -412,16 +410,6 @@ def parse_wav_header(raw: bytes):
     return ("wav", n_channels, sample_rate, bits, duration_ms)
 
 
-@functools.cache
-def _pil_available() -> bool:
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
@@ -558,10 +546,9 @@ def _unfilter_region(data, start: int, w: int, h: int, ch: int):
 def decode_png_pixels(raw: bytes):
     """Vendored pure-stdlib PNG PIXEL decoder: chunk walk, zlib inflate of
     the IDAT stream, per-scanline unfilter (None/Sub/Up/Average/Paeth as
-    the PNG spec defines them), palette lookup -- the runnable twin of the
-    PIL tier, so the mean-pixel path is exercised even where pillow is not
-    installed.  Supports the common 8-bit-depth, non-interlaced formats
-    (gray / RGB / palette / gray+alpha / RGBA).
+    the PNG spec defines them), palette lookup -- the PNG pixel tier of
+    the mean-luma feature path.  Supports the common 8-bit-depth,
+    non-interlaced formats (gray / RGB / palette / gray+alpha / RGBA).
 
     Returns ``(codec, width, height, mean_pixel)`` where mean_pixel is the
     mean ITU-R 601 luma (the formula behind PIL's ``convert('L')``), alpha
@@ -864,25 +851,6 @@ def encode_gif(
     return bytes(body)
 
 
-def decode_image_real(payload: bytes):
-    """Full pixel decode via PIL (import-guarded; pillow is absent in this
-    container).  Returns ``(codec, width, height, mean_pixel)``."""
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError as exc:  # pragma: no cover - env has no PIL
-        raise NotImplementedError(
-            "pixel decoding requires pillow; the header-parse tier "
-            "(parse_image_header) covers dimensions without it"
-        ) from exc
-    img = Image.open(io.BytesIO(payload))  # pragma: no cover - env has no PIL
-    import numpy as np  # pragma: no cover
-
-    arr = np.asarray(img.convert("L"), dtype=np.float64)  # pragma: no cover
-    return (img.format or "?").lower(), img.width, img.height, float(arr.mean())  # pragma: no cover
-
-
 def _fake_features(payload: bytes, n: int = 8) -> list[float]:
     """Deterministic stand-in for a decoded-image feature vector."""
     digest = hashlib.sha256(payload or b"").digest()
@@ -890,15 +858,14 @@ def _fake_features(payload: bytes, n: int = 8) -> list[float]:
 
 
 def extract_media_features(
-    media_df: DataFrame, allow_pil: bool = True, max_decode_pixels: int | None = 1 << 16
+    media_df: DataFrame, max_decode_pixels: int | None = 1 << 16
 ) -> DataFrame:
     """Arrow-batched feature/metadata extraction over binary payloads.
 
-    Per payload: sizes + hashes always; then the decode tiers -- PIL pixel
-    decode when importable (``decoder='pil'``), else the vendored
-    pure-Python pixel decoders for complete PNGs / baseline+progressive
-    JPEGs / GIFs (``decoder='pixels:<codec>'``, same mean-luma feature as
-    the PIL tier), else the stdlib header parse
+    Per payload: sizes + hashes always; then the decode tiers -- the
+    vendored pure-Python pixel decoders for complete PNGs /
+    baseline+progressive JPEGs / GIFs (``decoder='pixels:<codec>'``, the
+    mean luma as the feature vector), else the stdlib header parse
     (``decoder='header:<codec>'``), else the deterministic stub
     (``decoder='stub'``).  ``payload_md5`` is md5 of the lowercase hex of
     the bytes (SQL engines generally hash strings, not blobs).
@@ -912,23 +879,15 @@ def extract_media_features(
     tagged ``decoder='header:png:capped'`` (dimensions real, features the
     deterministic stub) so consumers can distinguish them from genuinely
     undecodable header-only payloads.  Default 65 536 pixels (256x256);
-    pass ``None`` to opt in to full decode at any size (or install PIL,
-    whose C loops need no cap)."""
+    pass ``None`` to opt in to full decode at any size."""
 
     def row(ref, kind, raw):
         raw = raw or b""
         w = h = feats = dur_ms = None
         decoder = "stub"
-        if allow_pil and _pil_available():  # pragma: no cover - env has no PIL
-            try:
-                _, w, h, mean_pixel = decode_image_real(raw)
-                decoder = "pil"
-                feats = [mean_pixel / 255.0] * 8
-            except Exception:
-                w = h = None
-        parsed = parse_image_header(raw) if w is None else None
+        parsed = parse_image_header(raw)
         png_capped = False
-        if w is None and parsed is not None and parsed[0] in ("png", "jpeg", "gif"):
+        if parsed is not None and parsed[0] in ("png", "jpeg", "gif"):
             # vendored pure-Python pixel tiers (PNG unfilter, T.81 JPEG, GIF
             # LZW) -- only below the pixel cap, sized from the O(1) header
             # parse above
@@ -995,15 +954,15 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def resize_images(media_df: DataFrame, target_w: int, target_h: int, allow_pil: bool = True) -> DataFrame:
+def resize_images(media_df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Resize plumbing: binary-in/binary-out Arrow-batched kernel.
 
-    With PIL importable this is a real resample + re-encode (seam gated);
-    without it, payloads whose *header parses as an image* get a structural
-    resize -- a rebuilt PNG prefix carrying the target dimensions plus a
-    deterministic filler sized to the target pixel count (the batch shape,
-    schema and metadata flow are exactly what the PIL kernel uses).
-    Non-image payloads pass through unchanged with ``resized=false``."""
+    Payloads whose *header parses as an image* get a structural resize --
+    a rebuilt PNG prefix carrying the target dimensions plus a
+    deterministic filler sized to the target pixel count (the batch
+    shape, schema and metadata flow a real resample + re-encode kernel
+    would use).  Non-image payloads pass through unchanged with
+    ``resized=false``."""
     filler_len = max(16, (target_w * target_h) // 256)
     resized_png = (
         bytes.fromhex(_PNG_SIG_HEX + _PNG_IHDR_PRE_HEX)
@@ -1014,18 +973,6 @@ def resize_images(media_df: DataFrame, target_w: int, target_h: int, allow_pil: 
 
     def row(ref, kind, raw):
         raw = raw or b""
-        if allow_pil and _pil_available():  # pragma: no cover - env has no PIL
-            try:
-                import io
-
-                from PIL import Image
-
-                img = Image.open(io.BytesIO(raw)).resize((target_w, target_h))
-                buf = io.BytesIO()
-                img.save(buf, format="PNG")
-                return [(ref, kind, buf.getvalue(), target_w, target_h, True)]
-            except Exception:
-                pass
         if parse_image_header(raw) is not None:
             return [(ref, kind, resized_png, target_w, target_h, True)]
         return [(ref, kind, raw, None, None, False)]

@@ -580,3 +580,16 @@ def configure_session_defaults(builder):
         # not over-fragment, and collapsing tiny shuffles to 1 partition
         # loses more parallelism than its task-dispatch savings return.
     )
+
+
+def session_builder(app_name: str, master: str | None):
+    """The one session builder of the jobs and ``bench.py``: ``app_name``,
+    ``master`` when given (else spark-submit's ``--master``) and
+    :func:`configure_session_defaults`.  Callers add their own confs and
+    call ``getOrCreate()``."""
+    from pyspark.sql import SparkSession
+
+    builder = SparkSession.builder.appName(app_name)
+    if master:
+        builder = builder.master(master)
+    return configure_session_defaults(builder)

@@ -18,6 +18,8 @@ streaming dedup (``dedup_stream``, applyInPandasWithState).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .pipeline import SPAN_TYPE, extract
@@ -60,10 +62,9 @@ def extract_stream(
     stream = reader.parquet(input_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import json
-        import os
         import time as _time
 
+        from .lineage import write_marker
         from .pipeline import extraction_metrics
 
         started = _time.time()
@@ -75,18 +76,19 @@ def extract_stream(
             # replaces its partial output instead of duplicating it
             batch_dir = f"{output_path}/batch_id={batch_id}"
             out.write.mode("overwrite").parquet(batch_dir)
-            # per-batch metrics manifest (the streaming twin of the batch
-            # pipeline's per-bucket lineage manifests)
+            # per-batch metrics manifest beside the batch pipeline's
+            # per-bucket ones, committed the same way (local or Hadoop FS)
             try:
                 row = extraction_metrics(out).collect()[0]
                 manifest = {**row.asDict(), "batch_id": batch_id, "wall_sec": round(_time.time() - started, 3)}
-                os.makedirs(f"{output_path}/_metrics", exist_ok=True)
-                tmp = f"{output_path}/_metrics/.batch_{batch_id}.tmp"
-                with open(tmp, "w") as f:
-                    json.dump(manifest, f)
-                os.replace(tmp, f"{output_path}/_metrics/batch_{batch_id}.json")
-            except Exception:
-                pass  # metrics are advisory; never fail the batch for them
+                write_marker(
+                    output_path, f"batch_{batch_id}.json", manifest,
+                    spark=batch_df.sparkSession,
+                )
+            except Exception:  # metrics are advisory: never fail the batch
+                logging.getLogger(__name__).warning(
+                    "batch %d: metrics manifest not written", batch_id, exc_info=True
+                )
         finally:
             out.unpersist()
 

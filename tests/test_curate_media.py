@@ -56,6 +56,7 @@ def test_curate_media_end_to_end_and_resume(spark, tmp_path):
     stats = cm.curate_media_resumable(spark, media, out, max_hamming=0, n_buckets=4)
     # the decode stage must NOT be re-paid
     assert stats["resumed_stages"] == ["hashes"]
+    assert set(stats["stage_wall_s"]) == {"pairs", "final"}
     dc = stats["decoder_counts"]
     assert dc["unsupported-kind"] == 2
     assert dc["pixels:jpeg"] == 10 and dc["keyframe:jpeg"] == 10 and dc["cover:jpeg"] == 10
@@ -81,6 +82,8 @@ def test_curate_media_end_to_end_and_resume(spark, tmp_path):
     # full resume: everything short-circuits
     stats2 = cm.curate_media_resumable(spark, media, out, max_hamming=0, n_buckets=4)
     assert set(stats2["resumed_stages"]) == {"hashes", "pairs", "final"}
+    # a wall describes this run's work: resumed stages report none
+    assert stats2["stage_wall_s"] == {}
 
     # re-tuning the radius re-pays pairs+final but never the decode
     stats3 = cm.curate_media_resumable(spark, media, out, max_hamming=2, n_buckets=4)

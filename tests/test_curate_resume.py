@@ -5,6 +5,7 @@ partially-written stage must fill in only its missing buckets with no
 duplicate or lost doc_ids (mirrors lineage.run_extraction's contract)."""
 
 import glob
+import json
 import os
 import shutil
 
@@ -130,6 +131,85 @@ def test_partial_final_stage_fills_missing_buckets_only(spark, tmp_path):
     assert set(got_stats["resumed_stages"]) == {"quality", "line_clean", "pairs"}
     for n in survivors:  # intact bucket manifests were not rewritten
         assert os.path.getmtime(os.path.join(lineage_dir, n)) == mtimes[n]
+
+
+def _crash_after_line_clean(spark, docs, out):
+    """Crash after line_clean, then drop its stage marker as if the crash
+    had come before the marker committed.  Returns the stage's lineage
+    dir and its manifests by file name."""
+    with pytest.raises(RuntimeError, match="injected failure after stage line_clean"):
+        _run(spark, docs, out, fail_after_stage="line_clean")
+    lineage_dir = os.path.join(out, "_stages", "line_clean", "_lineage")
+    os.remove(os.path.join(lineage_dir, "_stage.json"))
+    manifests = {}
+    for name in os.listdir(lineage_dir):
+        if name.startswith("bucket="):
+            with open(os.path.join(lineage_dir, name), encoding="utf-8") as fh:
+                manifests[name] = json.load(fh)
+    return lineage_dir, manifests
+
+
+def _run_stats(stats):
+    """The stats that describe the output, without the per-run keys."""
+    return {k: v for k, v in stats.items() if k not in ("resumed_stages", "stage_wall_s")}
+
+
+def test_partial_stage_sums_stats_over_committed_manifests(spark, tmp_path):
+    """A partially-written stage's commit-counted stats sum the buckets it
+    writes now and the manifests an earlier run committed: losing one
+    line_clean bucket resumes to the uninterrupted run's stats, and the
+    intact manifests are not rewritten."""
+    docs = _docs(spark)
+    _, ref_stats = _run(spark, docs, str(tmp_path / "clean"))
+    out = str(tmp_path / "curated")
+    lineage_dir, manifests = _crash_after_line_clean(spark, docs, out)
+    victim = max(manifests, key=lambda n: manifests[n]["boilerplate_lines_removed"])
+    assert manifests[victim]["docs"] > 0
+    assert manifests[victim]["boilerplate_lines_removed"] > 0
+    os.remove(os.path.join(lineage_dir, victim))
+    bucket = victim[len("bucket=") : -len(".json")]
+    shutil.rmtree(os.path.join(out, "_stages", "line_clean", f"bucket={bucket}"))
+    intact = {
+        n: os.path.getmtime(os.path.join(lineage_dir, n)) for n in manifests if n != victim
+    }
+
+    got_df, got_stats = _run(spark, docs, out)
+    assert got_stats["resumed_stages"] == ["quality"]
+    for key in ("boilerplate_lines_removed", "emptied_by_line_dedup", "input_docs",
+                "quality_dropped"):
+        assert got_stats[key] == ref_stats[key], key
+    assert _run_stats(got_stats) == _run_stats(ref_stats)
+    assert {r["doc_id"] for r in got_df.select("doc_id").collect()} == {"1", "4"}
+    for n, mtime in intact.items():
+        assert os.path.getmtime(os.path.join(lineage_dir, n)) == mtime, n
+    assert os.path.isfile(os.path.join(lineage_dir, victim))
+
+
+def test_manifest_missing_a_stat_field_is_recomputed(spark, tmp_path):
+    """A committed manifest without a declared stat field (written before
+    the field existed) must not count as 0: its bucket is recomputed and
+    the resumed stats equal the uninterrupted run's."""
+    docs = _docs(spark)
+    _, ref_stats = _run(spark, docs, str(tmp_path / "clean"))
+    out = str(tmp_path / "curated")
+    lineage_dir, manifests = _crash_after_line_clean(spark, docs, out)
+    victim = max(manifests, key=lambda n: manifests[n]["boilerplate_lines_removed"])
+    assert manifests[victim]["boilerplate_lines_removed"] > 0
+    stripped = {k: v for k, v in manifests[victim].items() if k != "boilerplate_lines_removed"}
+    with open(os.path.join(lineage_dir, victim), "w", encoding="utf-8") as fh:
+        json.dump(stripped, fh)
+    intact = {
+        n: os.path.getmtime(os.path.join(lineage_dir, n)) for n in manifests if n != victim
+    }
+
+    _, got_stats = _run(spark, docs, out)
+    assert got_stats["resumed_stages"] == ["quality"]
+    assert _run_stats(got_stats) == _run_stats(ref_stats)
+    with open(os.path.join(lineage_dir, victim), encoding="utf-8") as fh:
+        rewritten = json.load(fh)
+    assert rewritten["boilerplate_lines_removed"] == manifests[victim]["boilerplate_lines_removed"]
+    for n, mtime in intact.items():
+        assert os.path.getmtime(os.path.join(lineage_dir, n)) == mtime, n
 
 
 def test_zero_pair_stage_resumes_from_empty_schema(spark, tmp_path):

@@ -1,7 +1,6 @@
 """Vendored baseline JPEG decoder (nreadspark/ops/jpeg.py): DC-only
-exactness, general round trips, subsampling/restart/containment, the
-image_hashes jpeg + header tiers, and vendored-vs-native parity (gated
-on PIL availability)."""
+exactness, general round trips, subsampling/restart/containment, and
+the image_hashes jpeg + header tiers."""
 
 import random
 
@@ -119,23 +118,6 @@ def test_image_hashes_jpeg_and_header_tiers(spark):
         spark.createDataFrame([Row(media_ref="g", payload=gif)])
     ).collect()[0]
     assert g["decoder"] == "header:gif" and (g["width"], g["height"]) == (20, 30)
-
-
-def test_native_parity_when_pil_available():
-    """Vendored-vs-native hash parity, gated on PIL: exact on grayscale
-    PNGs (PIL's L plane is the gray sample) and on DC-only JPEGs (flat
-    blocks decode exactly under libjpeg too)."""
-    pytest.importorskip("PIL")
-    from nreadspark.ops.images import _native_luma_milli, encode_gray_png
-    from nreadspark.ops.multimodal import png_luma_milli
-
-    px = bytes((37 * 3 + 13 * x + 29 * y) % 256 for y in range(16) for x in range(16))
-    png = encode_gray_png(16, 16, px)
-    assert _native_luma_milli(png) == png_luma_milli(png)
-
-    vals = _blocky_vals(4)
-    jpg = encode_blocky_jpeg(8, 8, vals)
-    assert _native_luma_milli(jpg) == decode_jpeg_luma_milli(jpg)
 
 
 def test_gif_lzw_round_trip_and_interlace():

@@ -270,7 +270,8 @@ def test_synthetic_wav_payload_round_trips():
 
 def test_extract_features_decodes_real_images(spark):
     """A real PNG flowing through the Spark kernel gets real dimensions and
-    a 'real decoder' tag (pil when importable, header parse otherwise)."""
+    a 'real decoder' tag (pixel decode when complete, header parse
+    otherwise)."""
     from nreadspark.ops.multimodal import extract_media_features
 
     rows = [
@@ -284,9 +285,9 @@ def test_extract_features_decodes_real_images(spark):
     df = spark.createDataFrame(rows, MEDIA_SCHEMA)
     out = {r["media_ref"]: r for r in extract_media_features(df).collect()}
     assert (out["png1"]["decoded_width"], out["png1"]["decoded_height"]) == (12, 34)
-    # a COMPLETE png pixel-decodes (pil or the vendored stdlib twin); the
+    # a COMPLETE png pixel-decodes through the vendored stdlib decoder; the
     # all-zero test image must surface mean luma 0 through the feature vec
-    assert out["png1"]["decoder"] in ("pil", "pixels:png")
+    assert out["png1"]["decoder"] == "pixels:png"
     assert out["png1"]["features"] == [0.0] * 8
     assert (out["gif1"]["decoded_width"], out["gif1"]["decoded_height"]) == (5, 6)
     assert (out["jpg1"]["decoded_width"], out["jpg1"]["decoded_height"]) == (7, 8)
@@ -375,7 +376,7 @@ def test_png_pixel_tier_capped_by_pixel_count(spark):
         [("big", "image", big, 400, 400, 0), ("small", "image", small, 12, 34, 0)],
         MEDIA_SCHEMA,
     )
-    out = {r["media_ref"]: r for r in extract_media_features(df, allow_pil=False).collect()}
+    out = {r["media_ref"]: r for r in extract_media_features(df).collect()}
     # ':capped' marks cap-skipped (stub features) vs genuinely header-only
     assert out["big"]["decoder"] == "header:png:capped"
     assert (out["big"]["decoded_width"], out["big"]["decoded_height"]) == (400, 400)
@@ -383,7 +384,7 @@ def test_png_pixel_tier_capped_by_pixel_count(spark):
     # opt-in uncapped: the big PNG pixel-decodes (all-zero image -> luma 0)
     out2 = {
         r["media_ref"]: r
-        for r in extract_media_features(df, allow_pil=False, max_decode_pixels=None).collect()
+        for r in extract_media_features(df, max_decode_pixels=None).collect()
     }
     assert out2["big"]["decoder"] == "pixels:png"
     assert out2["big"]["features"] == [0.0] * 8
@@ -410,9 +411,7 @@ def test_media_features_jpeg_and_gif_pixel_tiers(spark):
     ]
     got = {
         r["media_ref"]: r
-        for r in extract_media_features(
-            spark.createDataFrame(rows), allow_pil=False
-        ).collect()
+        for r in extract_media_features(spark.createDataFrame(rows)).collect()
     }
     mean = sum(px) / len(px) / 255.0
     assert got["j"]["decoder"] == "pixels:jpeg"

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 
 import pytest
@@ -208,6 +210,15 @@ def test_debug_html_column(spark):
     assert rows["d2"] is None
 
 
+def _streamed_manifest_docs(outp):
+    """Documents counted by the committed per-batch manifests."""
+    total = 0
+    for path in glob.glob(os.path.join(outp, "_lineage", "batch_*.json")):
+        with open(path, encoding="utf-8") as fh:
+            total += json.load(fh)["docs"]
+    return total
+
+
 def test_streaming_extract_exactly_once(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -225,6 +236,7 @@ def test_streaming_extract_exactly_once(spark, tmp_path):
     q.awaitTermination(120)
     got1 = read_extracted(spark, outp)
     assert got1.count() == 20
+    assert _streamed_manifest_docs(outp) == 20
 
     # land more files; a fresh availableNow run picks up ONLY the new ones
     corpus.filter(F.col("doc_id") >= "doc_00000020").write.mode("append").parquet(inp)
@@ -233,6 +245,7 @@ def test_streaming_extract_exactly_once(spark, tmp_path):
     got2 = read_extracted(spark, outp)
     assert got2.count() == 40
     assert got2.select("doc_id").distinct().count() == 40  # no duplicates
+    assert _streamed_manifest_docs(outp) == 40
 
     # batch-kernel equality on a sample doc
     from nreadspark.pipeline import extract as batch_extract
