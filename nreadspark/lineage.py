@@ -97,13 +97,6 @@ def _manifest_buckets(names) -> set[int]:
     return done
 
 
-def completed_buckets(output_path: str) -> set[int]:
-    lineage_path = os.path.join(output_path, LINEAGE_DIR)
-    if not os.path.isdir(lineage_path):
-        return set()
-    return _manifest_buckets(os.listdir(lineage_path))
-
-
 def _is_local_path(path: str) -> bool:
     return "://" not in path or path.startswith("file:")
 
@@ -115,12 +108,16 @@ def _hadoop_fs(spark, path_str: str):
     return fs, path, jvm
 
 
-def completed_buckets_fs(spark, output_path: str) -> set[int]:
-    """completed_buckets over any Hadoop-compatible filesystem (hdfs://,
-    s3a://, gs://, ...) via the JVM FileSystem API; local paths use the
-    cheaper os.listdir."""
-    if _is_local_path(output_path):
-        return completed_buckets(output_path.removeprefix("file:"))
+def completed_buckets(output_path: str, spark=None) -> set[int]:
+    """Buckets with a committed manifest under ``<output>/_lineage/``:
+    local paths by os.listdir, any Hadoop-compatible filesystem (hdfs://,
+    s3a://, gs://, ...) through the JVM FileSystem API -- the dispatch of
+    :func:`write_marker` and :func:`read_marker`."""
+    if spark is None or _is_local_path(output_path):
+        lineage_path = os.path.join(output_path.removeprefix("file:"), LINEAGE_DIR)
+        if not os.path.isdir(lineage_path):
+            return set()
+        return _manifest_buckets(os.listdir(lineage_path))
     fs, _, jvm = _hadoop_fs(spark, output_path)
     lineage = jvm.org.apache.hadoop.fs.Path(output_path + "/" + LINEAGE_DIR)
     if not fs.exists(lineage):
@@ -256,14 +253,14 @@ def resolve_bucket_layout(
     if layout is None:
         # manifests without a layout marker: unknowable provenance -- the
         # one-time recompute beats trusting a possibly-mismatched layout
-        stale = bool(completed_buckets_fs(spark, output_path))
+        stale = bool(completed_buckets(output_path, spark=spark))
     else:
         stale = layout.get("n_buckets") != n_buckets or layout.get("params", {}) != params
     if not resume or stale:
         clean_bucketed_output(spark, output_path)
         done: set[int] = set()
     else:
-        done = completed_buckets_fs(spark, output_path)
+        done = completed_buckets(output_path, spark=spark)
     if layout is None or stale or not resume:
         write_marker(
             output_path, LAYOUT_MARKER,

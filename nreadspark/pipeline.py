@@ -7,10 +7,11 @@ Design (Spark-first, not a port of the reference's single-document loop):
   ``concat_ws``) inside whole-stage codegen -- only ``(doc_id, html[, url])``
   crosses the Arrow boundary, never the span structs.
 * **The kernel runs in Arrow-native ``mapInArrow``** (no per-row Python
-  UDFs): one Python worker processes a whole record batch per call; output
-  span sequences are built as flat columnar arrays (``ListArray`` of
-  ``StructArray``) with zero per-span Python objects; regexes are compiled
-  once per worker at module import.
+  UDFs): one Python worker processes a whole record batch per call through
+  :func:`map_rows`; the extraction row turns one document into its output
+  tuple (spans as ``(kind, text, media_ref, offset)`` tuples) and
+  :func:`rows_to_batch` builds each batch's Arrow output, nested columns
+  included; regexes are compiled once per worker at module import.
 * **Skew**: mega-documents (FIXTURES.md `mega_doc` family, reference corpus
   max 448KB) are defused by (a) hashing docs uniformly across many more
   partitions than cores (`repartition_for_extraction`), and (b) capping the
@@ -24,6 +25,7 @@ Design (Spark-first, not a port of the reference's single-document loop):
 
 from __future__ import annotations
 
+import functools
 import sys
 import time
 import zipimport
@@ -157,172 +159,104 @@ def map_rows(df: DataFrame, in_cols: list, schema: StructType, row_fn) -> DataFr
     return map_batches(df.select(*in_cols), schema, batches)
 
 
-def _extract_batches(iterator, max_doc_bytes: int | None = None):
-    """mapInArrow kernel: (doc_id, __html[, __url]) -> OUTPUT_SCHEMA
-    batches.
+def _empty_row(
+    doc_id, started: float, n_candidates: int, in_bytes: int, truncated: bool
+) -> tuple:
+    """An OUTPUT_SCHEMA row with no spans: a blank document
+    (``n_candidates`` 0) or a failed one (-1)."""
+    ms = (time.perf_counter() - started) * 1000.0
+    metrics = (n_candidates, 0.0, False, False, in_bytes, ms, truncated)
+    return (doc_id, [], None, False, None, metrics)
 
-    Arrow-native on both sides: the per-document span sequences are written
-    into flat columnar builders (kind/text/media_ref/offset + list offsets)
-    and wrapped as ``ListArray(StructArray)`` directly -- no per-span Python
-    dicts, no pandas block manager.  This halves the Python-side overhead vs
-    a mapInPandas list-of-dict encoding.  The per-task cost outside the
-    kernel, though, was measured to come mostly from PySpark re-reading its
-    zip archives on every task, not from the Arrow exchange; see
-    :func:`map_batches`.
+
+def _extract_row(doc_id, html, url, max_doc_bytes: int | None) -> list:
+    """The extraction row: one document -> ``[OUTPUT_SCHEMA tuple]``, its
+    spans as ``(kind, text, media_ref, offset)`` tuples and its metrics in
+    METRICS_TYPE order.  A NULL or blank document short-circuits to an
+    empty row without running the kernel.
 
     ``max_doc_bytes`` is the per-document byte budget (see :func:`extract`):
-    documents over it are truncated to exactly that many UTF-8 bytes before
-    the kernel runs and their row is flagged ``metrics.truncated`` -- a
+    a document over it is truncated to exactly that many UTF-8 bytes before
+    the kernel runs and its row is flagged ``metrics.truncated`` -- a
     pathological mega-document can therefore never hold a task beyond the
-    budget's parse cost.  Upstream chopping (``_budget_col``) keeps
+    budget's parse cost.  Upstream chopping (:func:`_extract_html`) keeps
     ``max_doc_bytes + 1`` chars so the over-budget signal survives the
-    capped transfer.
-    """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
+    capped transfer."""
+    from . import spans
+    from .kernel import transcode
 
-    from .kernel import Options, transcode
-    from .spans import extract_spans_flat
-
-    opts = Options()
-    schema = to_arrow_schema(OUTPUT_SCHEMA)
-    span_type = schema.field("spans").type.value_type
-    metrics_type = schema.field("metrics").type
-
-    for batch in iterator:
-        names = batch.schema.names
-        n = batch.num_rows
-        doc_ids = batch.column(names.index("doc_id"))
-        htmls = batch.column(names.index("__html")).to_pylist()
-        urls = (
-            batch.column(names.index("__url")).to_pylist()
-            if "__url" in names
-            else [None] * n
+    started = time.perf_counter()
+    if html is None or html.strip() == "":
+        return [_empty_row(doc_id, started, 0, 0, False)]
+    truncated = False
+    if max_doc_bytes is not None:
+        # chars <= utf-8 bytes: more chars than the budget (the JVM chop
+        # keeps budget+1 chars exactly so this signal survives) means the
+        # original exceeded it in bytes
+        truncated = len(html) > max_doc_bytes
+        # the encode pass is skipped for everything comfortably under
+        if truncated or len(html) * 4 > max_doc_bytes:
+            encoded = html.encode("utf-8", errors="replace")
+            if len(encoded) > max_doc_bytes:
+                html = encoded[:max_doc_bytes].decode("utf-8", errors="ignore")
+                truncated = True
+    try:
+        result = transcode(html, url)
+        columns: tuple = ([], [], [], [])
+        spans.extract_spans_flat(result.article_content, *columns)
+        m = result.metrics
+        metrics = (
+            int(m.get("n_candidates", 0)),
+            float(m.get("top_score", 0.0)),
+            bool(m.get("fallback_rerun", False)),
+            bool(m.get("parse_retried", False)),
+            int(m.get("in_bytes", 0)),
+            float(m.get("ms", 0.0)),
+            truncated,
         )
-
-        # flat span builders (one set for the whole batch)
-        s_kind: list = []
-        s_text: list = []
-        s_ref: list = []
-        s_off: list = []
-        list_offsets = [0]
-
-        titles: list = [None] * n
-        extracted = [False] * n
-        next_urls: list = [None] * n
-        m_cand = [0] * n
-        m_top = [0.0] * n
-        m_fall = [False] * n
-        m_retry = [False] * n
-        m_bytes = [0] * n
-        m_ms = [0.0] * n
-        m_trunc = [False] * n
-
-        for i in range(n):
-            html = htmls[i]
-            started = time.perf_counter()
-            if html is None or html.strip() == "":
-                list_offsets.append(len(s_kind))
-                m_ms[i] = (time.perf_counter() - started) * 1000.0
-                continue
-            if max_doc_bytes is not None:
-                # chars <= utf-8 bytes: more chars than the budget (the JVM
-                # chop keeps budget+1 chars exactly so this signal survives)
-                # means the original exceeded it in bytes
-                truncated = len(html) > max_doc_bytes
-                # the encode pass is skipped for everything comfortably under
-                if truncated or len(html) * 4 > max_doc_bytes:
-                    encoded = html.encode("utf-8", errors="replace")
-                    if len(encoded) > max_doc_bytes:
-                        html = encoded[:max_doc_bytes].decode("utf-8", errors="ignore")
-                        truncated = True
-                m_trunc[i] = truncated
-            base = len(s_kind)
-            try:
-                result = transcode(html, urls[i], opts)
-                extract_spans_flat(result.article_content, s_kind, s_text, s_ref, s_off)
-                titles[i] = result.title
-                extracted[i] = result.content_extracted
-                next_urls[i] = result.next_page_url
-                m = result.metrics
-                m_cand[i] = int(m.get("n_candidates", 0))
-                m_top[i] = float(m.get("top_score", 0.0))
-                m_fall[i] = bool(m.get("fallback_rerun", False))
-                m_retry[i] = bool(m.get("parse_retried", False))
-                m_bytes[i] = int(m.get("in_bytes", 0))
-                m_ms[i] = float(m.get("ms", 0.0))
-            except Exception:
-                # a poisoned document must never kill a 10^12-doc job: emit an
-                # empty, clearly-flagged row instead (content_extracted=False,
-                # n_candidates=-1 marks kernel failure for the lineage metrics).
-                # Roll back what it appended to the shared span builders: a
-                # partial span would misalign the struct's children.
-                for builder in (s_kind, s_text, s_ref, s_off):
-                    del builder[base:]
-                titles[i], extracted[i], next_urls[i] = None, False, None
-                m_top[i], m_fall[i], m_retry[i] = 0.0, False, False
-                m_cand[i] = -1
-                m_bytes[i] = len(html.encode("utf-8", errors="replace"))
-                m_ms[i] = (time.perf_counter() - started) * 1000.0
-            list_offsets.append(len(s_kind))
-
-        span_struct = pa.StructArray.from_arrays(
-            [
-                pa.array(s_kind, pa.string()),
-                pa.array(s_text, pa.string()),
-                pa.array(s_ref, pa.string()),
-                pa.array(s_off, pa.int32()),
-            ],
-            fields=list(span_type),
-        )
-        spans_arr = pa.ListArray.from_arrays(
-            pa.array(list_offsets, pa.int32()), span_struct
-        )
-        metrics_arr = pa.StructArray.from_arrays(
-            [
-                pa.array(m_cand, pa.int32()),
-                pa.array(m_top, pa.float64()),
-                pa.array(m_fall, pa.bool_()),
-                pa.array(m_retry, pa.bool_()),
-                pa.array(m_bytes, pa.int64()),
-                pa.array(m_ms, pa.float64()),
-                pa.array(m_trunc, pa.bool_()),
-            ],
-            fields=list(metrics_type),
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                doc_ids,
-                spans_arr,
-                pa.array(titles, pa.string()),
-                pa.array(extracted, pa.bool_()),
-                pa.array(next_urls, pa.string()),
-                metrics_arr,
-            ],
-            schema=schema,
-        )
+        return [
+            (doc_id, list(zip(*columns)), result.title, result.content_extracted,
+             result.next_page_url, metrics)
+        ]
+    except Exception:
+        # a poisoned document must never kill a 10^12-doc job: emit an
+        # empty, clearly-flagged row instead (content_extracted=False,
+        # n_candidates=-1 marks kernel failure for the lineage metrics)
+        in_bytes = len(html.encode("utf-8", errors="replace"))
+        return [_empty_row(doc_id, started, -1, in_bytes, truncated)]
 
 
-def _budget_col(html_col, max_doc_bytes: int | None):
-    """Budgeted html expression: the JVM pre-chops to ``max_doc_bytes + 1``
+def _optional_col(name: str | None, alias: str):
+    """``name`` as ``alias``, or a typed NULL when the caller has no such
+    column, so every extraction row has one fixed signature."""
+    return (F.col(name) if name else F.lit(None).cast("string")).alias(alias)
+
+
+def _extract_html(
+    df: DataFrame, html_expr, url_col: str | None, max_doc_bytes: int | None
+) -> DataFrame:
+    """:func:`_extract_row` over ``(doc_id, html_expr, url_col)``.
+
+    With a budget the JVM pre-chops the html to ``max_doc_bytes + 1``
     CHARS, bounding the shuffle/Arrow transfer of a mega-document at ~4x
     the budget worst-case instead of its full (possibly GB) size.  The +1
     makes the over-budget signal survive the chop: one UTF-8 char is >= 1
     byte, so ``len(chopped) > max_doc_bytes`` chars implies the original
     exceeded the budget in bytes -- no second evaluation of the (possibly
     expensive) reassembly expression for an ``octet_length`` flag column,
-    and the projection stays a single codegen pass.  The kernel then
+    and the projection stays a single codegen pass.  The row then
     measures exact bytes and lands the cut on a UTF-8 boundary."""
-    if max_doc_bytes is None:
-        return html_col
-    return F.substring(html_col, 1, max_doc_bytes + 1)
+    if max_doc_bytes is not None:
+        html_expr = F.substring(html_expr, 1, max_doc_bytes + 1)
+    cols = [F.col("doc_id"), html_expr.alias("__html"), _optional_col(url_col, "__url")]
+    row = functools.partial(_extract_row, max_doc_bytes=max_doc_bytes)
+    return map_rows(df, cols, OUTPUT_SCHEMA, row)
 
 
 def extract(
     df: DataFrame,
     url_col: str | None = None,
     spans_col: str = "spans",
-    repartition: bool = False,
     max_doc_bytes: int | None = None,
 ) -> DataFrame:
     """Extract main content for every document of an interleaved-spans table.
@@ -342,15 +276,7 @@ def extract(
     usable).  The chop happens JVM-side first, so the oversized payload
     never crosses the exchange at full size.
     """
-    html_col = _budget_col(html_from_spans_col(spans_col), max_doc_bytes)
-    cols = [F.col("doc_id"), html_col.alias("__html")]
-    if url_col:
-        cols.append(F.col(url_col).alias("__url"))
-    prepared = df.select(*cols)
-    if repartition:
-        prepared = repartition_for_extraction(prepared)
-    kernel = lambda it: _extract_batches(it, max_doc_bytes)  # noqa: E731
-    return map_batches(prepared, OUTPUT_SCHEMA, kernel)
+    return _extract_html(df, html_from_spans_col(spans_col), url_col, max_doc_bytes)
 
 
 def extract_from_html(
@@ -360,12 +286,7 @@ def extract_from_html(
     max_doc_bytes: int | None = None,
 ) -> DataFrame:
     """Same kernel over a plain (doc_id, html[, url]) table."""
-    html_expr = _budget_col(F.col(html_col), max_doc_bytes)
-    cols = [F.col("doc_id"), html_expr.alias("__html")]
-    if url_col:
-        cols.append(F.col(url_col).alias("__url"))
-    kernel = lambda it: _extract_batches(it, max_doc_bytes)  # noqa: E731
-    return map_batches(df.select(*cols), OUTPUT_SCHEMA, kernel)
+    return _extract_html(df, F.col(html_col), url_col, max_doc_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -473,41 +394,6 @@ def decode_html_bytes(
     return raw.decode(charset or fallback_encoding, errors="replace")
 
 
-def _decode_bytes_batches(iterator, fallback_encoding: str):
-    """Arrow-batch adaptor: (doc_id, __bytes[, __url, __ctype, __cenc]) ->
-    (doc_id, __html[, __url]) batches, feeding the extraction kernel in the
-    SAME Python worker pass (one Arrow boundary crossing total)."""
-    import pyarrow as pa
-
-    for batch in iterator:
-        names = batch.schema.names
-        n = batch.num_rows
-        doc_ids = batch.column(names.index("doc_id"))
-        raws = batch.column(names.index("__bytes")).to_pylist()
-        ctypes = (
-            batch.column(names.index("__ctype")).to_pylist()
-            if "__ctype" in names
-            else [None] * n
-        )
-        cencs = (
-            batch.column(names.index("__cenc")).to_pylist()
-            if "__cenc" in names
-            else [None] * n
-        )
-        htmls = []
-        for raw, ct, ce in zip(raws, ctypes, cencs):
-            try:
-                htmls.append(decode_html_bytes(raw, ct, ce, fallback_encoding))
-            except Exception:
-                htmls.append("")  # undecodable body -> flagged empty row
-        arrays = [doc_ids, pa.array(htmls, pa.string())]
-        out_names = ["doc_id", "__html"]
-        if "__url" in names:
-            arrays.append(batch.column(names.index("__url")))
-            out_names.append("__url")
-        yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-
 def extract_from_html_bytes(
     df: DataFrame,
     bytes_col: str = "content",
@@ -518,25 +404,30 @@ def extract_from_html_bytes(
     max_doc_bytes: int | None = None,
 ) -> DataFrame:
     """Extraction over a raw-bytes crawl table: decompress + charset-sniff +
-    transcode in ONE ``mapInArrow`` pass (the decode generator feeds the
-    kernel generator inside the same worker -- bytes cross the Arrow
-    boundary once, strings never do).  ``max_doc_bytes`` applies to the
-    DECODED text (post-decompression -- the guard that matters for
-    deflate-bombed bodies); see :func:`extract`."""
-    cols = [F.col("doc_id"), F.col(bytes_col).alias("__bytes")]
-    if url_col:
-        cols.append(F.col(url_col).alias("__url"))
-    if content_type_col:
-        cols.append(F.col(content_type_col).alias("__ctype"))
-    if content_encoding_col:
-        cols.append(F.col(content_encoding_col).alias("__cenc"))
+    transcode in ONE row per document (bytes cross the Arrow boundary once,
+    strings never do).  A body :func:`decode_html_bytes` cannot decode (a
+    gzip-labelled body that is not gzip, ...) is a failed row:
+    ``n_candidates`` -1 and ``in_bytes`` the raw body's length.
+    ``max_doc_bytes`` applies to the DECODED text (post-decompression --
+    the guard that matters for deflate-bombed bodies); see
+    :func:`extract`."""
 
-    def kernel(iterator):
-        return _extract_batches(
-            _decode_bytes_batches(iterator, fallback_encoding), max_doc_bytes
-        )
+    def row(doc_id, raw, url, content_type, content_encoding):
+        started = time.perf_counter()
+        try:
+            html = decode_html_bytes(raw, content_type, content_encoding, fallback_encoding)
+        except Exception:
+            return [_empty_row(doc_id, started, -1, len(raw), False)]
+        return _extract_row(doc_id, html, url, max_doc_bytes)
 
-    return map_batches(df.select(*cols), OUTPUT_SCHEMA, kernel)
+    cols = [
+        F.col("doc_id"),
+        F.col(bytes_col).alias("__bytes"),
+        _optional_col(url_col, "__url"),
+        _optional_col(content_type_col, "__ctype"),
+        _optional_col(content_encoding_col, "__cenc"),
+    ]
+    return map_rows(df, cols, OUTPUT_SCHEMA, row)
 
 
 def kernel_metric_aggs() -> tuple:

@@ -133,3 +133,28 @@ def test_quoted_header_charset_and_meta_fallback_after_bad_header():
     )
     raw2 = meta_body.encode("cp1251")
     assert decode_html_bytes(raw2, "text/html; charset=bogus-enc") == meta_body
+
+
+def test_undecodable_body_is_a_kernel_failure(spark):
+    """A body the decoder cannot decode -- labelled gzip but not gzip -- is a
+    failed row (``n_candidates`` -1, ``in_bytes`` of the raw body) that
+    ``extraction_metrics`` counts, not an empty document."""
+    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+
+    from nreadspark.pipeline import extract_from_html_bytes, extraction_metrics
+
+    raw = PAGE.format(cs="utf-8").encode()
+    schema = StructType(
+        [
+            StructField("doc_id", StringType()),
+            StructField("content", BinaryType()),
+            StructField("cenc", StringType()),
+        ]
+    )
+    df = spark.createDataFrame([("d1", raw, "gzip")], schema)
+    out = extract_from_html_bytes(df, content_encoding_col="cenc")
+    row = out.collect()[0]
+    assert row["metrics"]["n_candidates"] == -1
+    assert row["metrics"]["in_bytes"] == len(raw)
+    assert row["content_extracted"] is False and row["spans"] == []
+    assert extraction_metrics(out).collect()[0]["kernel_failures"] == 1

@@ -79,11 +79,11 @@ def _corpus(spark, n_normal=64):
 
 
 def test_mega_doc_completes_within_budget(spark):
-    from nreadspark.pipeline import extract, extraction_metrics
+    from nreadspark.pipeline import extract, extraction_metrics, repartition_for_extraction
 
     docs = _corpus(spark)
     started = time.perf_counter()
-    out = extract(docs, repartition=True, max_doc_bytes=BUDGET)
+    out = extract(repartition_for_extraction(docs), max_doc_bytes=BUDGET)
     rows = {r["doc_id"]: r for r in out.collect()}
     wall_s = time.perf_counter() - started
 

@@ -56,7 +56,7 @@ def test_lineage_manifests_via_hadoop_fs(spark, tmp_path, monkeypatch):
     out = "file://" + str(tmp_path)
     L._write_manifest(out, 7, {"docs": 3}, spark=spark)
     L._write_manifest(out, 7, {"docs": 4}, spark=spark)  # overwrite-safe
-    assert L.completed_buckets_fs(spark, out) == {7}
+    assert L.completed_buckets(out, spark=spark) == {7}
     assert json.load(open(tmp_path / "_lineage" / "bucket=7.json"))["docs"] == 4
 
 

@@ -156,21 +156,98 @@ def test_poisoned_document_does_not_kill_job(spark):
     assert out["null_spans"]["content_extracted"] is False
 
 
-def _run_kernel(htmls):
-    """The extraction kernel over one in-process batch, as rows."""
+_STORY = (
+    "<html><head><title>Story</title></head><body><div>"
+    "<p>Paragraph {}, with words, commas, and text about Straße.</p>"
+    "</div></body></html>"
+)
+# (doc_id, html, url): the url of "poisoned" makes the kernel raise
+_ENTRY_DOCS = [
+    ("null", None, None),
+    ("empty", "", None),
+    ("blank", " \n\t ", None),
+    ("page", _STORY.replace("{}", "one"), "http://example.com/a"),
+    ("over", _STORY.replace("{}", "two, über " * 400), None),
+    ("poisoned", _STORY.replace("{}", "three"), "http://[bad/a"),
+]
+_BUDGET = 2_000
+
+
+def _entry_rows(spark, entry):
+    """``_ENTRY_DOCS`` through one extraction entry point, by doc_id, with
+    ``metrics.ms`` dropped."""
+    from pyspark.sql.types import ArrayType
+
+    from nreadspark.pipeline import SPAN_TYPE, extract_from_html, extract_from_html_bytes
+
+    if entry == "extract":
+        df = spark.createDataFrame(
+            [(d, [("text", h, None, 0)], u) for d, h, u in _ENTRY_DOCS],
+            f"doc_id string, spans {ArrayType(SPAN_TYPE).simpleString()}, url string",
+        )
+        out = extract(df, url_col="url", max_doc_bytes=_BUDGET)
+    elif entry == "extract_from_html":
+        df = spark.createDataFrame(_ENTRY_DOCS, "doc_id string, html string, url string")
+        out = extract_from_html(df, url_col="url", max_doc_bytes=_BUDGET)
+    else:
+        df = spark.createDataFrame(
+            [(d, None if h is None else h.encode("utf-8"), u) for d, h, u in _ENTRY_DOCS],
+            "doc_id string, content binary, url string",
+        )
+        out = extract_from_html_bytes(df, url_col="url", max_doc_bytes=_BUDGET)
+    rows = {}
+    for r in out.collect():
+        r = r.asDict(recursive=True)
+        del r["metrics"]["ms"]
+        rows[r["doc_id"]] = r
+    return rows
+
+
+@pytest.mark.parametrize("entry", ["extract", "extract_from_html_bytes"])
+def test_entry_points_share_one_extraction_row(spark, entry):
+    """The spans table (one text span per document), the html table and the
+    UTF-8 bytes table give identical rows, apart from ``metrics.ms``, for
+    NULL, empty, blank, normal, over-budget and poisoned documents."""
+    reference = _entry_rows(spark, "extract_from_html")
+    assert _entry_rows(spark, entry) == reference
+    for blank in ("null", "empty", "blank"):
+        assert reference[blank]["spans"] == []
+        assert reference[blank]["metrics"]["n_candidates"] == 0
+        assert reference[blank]["metrics"]["in_bytes"] == 0
+    assert reference["page"]["content_extracted"] is True
+    assert reference["page"]["spans"] != []
+    assert reference["page"]["metrics"]["truncated"] is False
+    assert reference["over"]["metrics"]["truncated"] is True
+    assert reference["over"]["metrics"]["in_bytes"] <= _BUDGET
+    poisoned = reference["poisoned"]
+    assert poisoned["spans"] == [] and poisoned["content_extracted"] is False
+    assert poisoned["metrics"]["n_candidates"] == -1
+    assert poisoned["metrics"]["in_bytes"] == len(_ENTRY_DOCS[-1][1].encode("utf-8"))
+
+
+def _html_batch(htmls):
+    """An ``extract_from_html`` task's input batch: (doc_id, __html, __url)."""
     import pyarrow as pa
 
-    from nreadspark.pipeline import _extract_batches
-
-    batch = pa.RecordBatch.from_pydict(
-        {"doc_id": [f"d{i}" for i in range(len(htmls))], "__html": htmls}
+    return pa.RecordBatch.from_pydict(
+        {
+            "doc_id": [f"d{i}" for i in range(len(htmls))],
+            "__html": pa.array(htmls, pa.string()),
+            "__url": pa.array([None] * len(htmls), pa.string()),
+        }
     )
-    (out,) = _extract_batches(iter([batch]))
+
+
+def _run_kernel(htmls):
+    """The extraction task over one in-process batch, as rows."""
+    from nreadspark.pipeline import extract_from_html
+
+    (out,) = extract_from_html(_CapturedCrossing()).task(iter([_html_batch(htmls)]))
     return out.to_pylist()
 
 
 @pytest.mark.parametrize("appended", ["kind", "span"])
-def test_failed_document_leaves_an_empty_row(monkeypatch, appended):
+def test_failed_document_leaves_an_empty_row(spark, monkeypatch, appended):
     """A document whose span emission raises after appending part of a span
     (``kind``) or a whole one (``span``) leaves an empty flagged row, and the
     documents around it keep their spans."""
@@ -222,11 +299,11 @@ class _CapturedCrossing:
         return self
 
 
-def test_kernel_drops_cached_zip_finders(monkeypatch, tmp_path):
+def test_kernel_drops_cached_zip_finders(spark, monkeypatch, tmp_path):
     """PySpark calls importlib.invalidate_caches() on every task; a cached
     zipimporter re-reads its whole archive then.  After a task entered
-    through ``map_batches`` -- the extraction kernel's, and a ``map_rows``
-    kernel's (``image_hashes``) -- no zip finder is left to re-read, and the
+    through ``map_batches`` -- the extraction task's and ``image_hashes``',
+    both ``map_rows`` kernels -- no zip finder is left to re-read, and the
     zip still imports."""
     import importlib
     import sys
@@ -236,7 +313,7 @@ def test_kernel_drops_cached_zip_finders(monkeypatch, tmp_path):
     import pyarrow as pa
 
     from nreadspark.ops.images import image_hashes
-    from nreadspark.pipeline import OUTPUT_SCHEMA, _extract_batches, map_batches
+    from nreadspark.pipeline import extract_from_html
 
     archive = tmp_path / "zpkg.zip"
     with zipfile.ZipFile(archive, "w") as zf:
@@ -246,10 +323,7 @@ def test_kernel_drops_cached_zip_finders(monkeypatch, tmp_path):
             zf.writestr(f"zpkg/second{i}.py", f"VALUE = {i}\n")
     html = "<html><body><p>One paragraph of text, long enough.</p></body></html>"
     tasks = [
-        (
-            map_batches(_CapturedCrossing(), OUTPUT_SCHEMA, _extract_batches).task,
-            pa.RecordBatch.from_pydict({"doc_id": ["d0"], "__html": [html]}),
-        ),
+        (extract_from_html(_CapturedCrossing()).task, _html_batch([html])),
         (
             image_hashes(_CapturedCrossing()).task,
             pa.RecordBatch.from_pydict({"media_ref": ["m0"], "payload": [b"\x89PNG"]}),

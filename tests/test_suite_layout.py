@@ -1,8 +1,9 @@
 """The suite's shared set-up lives in conftest.py only: one SparkSession for
 the whole run, the jobs/ directory on sys.path, and no absolute path into a
 particular checkout (a test must exercise the tree it sits in).  Library
-kernels state their Arrow output schema once, as a Spark StructType, and
-cross into Python through one ``mapInArrow`` call."""
+kernels state their Arrow output schema once, as a Spark StructType, build
+nested output columns through ``rows_to_batch`` only, and cross into Python
+through one ``mapInArrow`` call."""
 
 import ast
 import glob
@@ -83,6 +84,26 @@ def test_library_derives_arrow_schemas_from_spark_schemas():
             for node in ast.walk(tree)
             if isinstance(node, ast.Call)
             and ast.unparse(node.func) in ("pa.schema", "pyarrow.schema")
+        ]
+    assert found == [], "\n".join(found)
+
+
+def test_library_builds_nested_arrow_columns_through_rows_to_batch():
+    """A hand-built ``pa.ListArray.from_arrays`` or
+    ``pa.StructArray.from_arrays`` is a second builder of a nested output
+    column, aligned by hand to offsets that can drift from its children;
+    kernels build nested columns from per-row tuples through
+    ``pipeline.rows_to_batch``."""
+    found = []
+    for path in sorted(glob.glob(os.path.join(REPO, "nreadspark", "**", "*.py"), recursive=True)):
+        tree = ast.parse(open(path, encoding="utf-8").read(), path)
+        found += [
+            f"{os.path.relpath(path, REPO)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and ast.unparse(node.func)
+            in ("pa.ListArray.from_arrays", "pa.StructArray.from_arrays",
+                "pyarrow.ListArray.from_arrays", "pyarrow.StructArray.from_arrays")
         ]
     assert found == [], "\n".join(found)
 
