@@ -27,9 +27,10 @@ Stats: each stage reports its committed row count (``n_hashed``,
 ``n_pairs``, ``n_survivors``), counted in the runner's per-bucket
 manifest aggregation and summed over every committed manifest, so it is
 exact across a resume and costs no Spark job; ``decoder_counts`` is one
-grouping of the committed hashes.  ``resumed_stages`` lists the stages
-loaded from checkpoint and ``stage_wall_s`` times only the stages this
-run computed.
+grouping of the committed hashes, run inside the ``final`` build and kept
+in that stage's marker, so a full resume reads it back without a job.
+``resumed_stages`` lists the stages loaded from checkpoint and
+``stage_wall_s`` times only the stages this run computed.
 """
 
 from __future__ import annotations
@@ -80,9 +81,11 @@ def curate_media_resumable(
         "max_decode_pixels": max_decode_pixels,
     }
 
-    def stage(name, params, build, id_col, count_key):
+    def stage(name, params, build, id_col, count_key, plain_stats=dict):
         df, stats[name] = runner.run(
-            name, params, lambda: (build(), {count_key: F.count("*")}), id_col=id_col
+            name, params,
+            lambda: (build(), {count_key: F.count("*"), **plain_stats()}),
+            id_col=id_col,
         )
         return df
 
@@ -112,10 +115,12 @@ def curate_media_resumable(
         return hdf
 
     hdf = stage("hashes", hparams, build_hashes, "media_ref", "n_hashed")
-    stats["decoder_counts"] = {
-        r["decoder"]: r["n"]
-        for r in hdf.groupBy("decoder").agg(F.count("*").alias("n")).collect()
-    }
+
+    def decoder_counts():
+        return {
+            r["decoder"]: r["n"]
+            for r in hdf.groupBy("decoder").agg(F.count("*").alias("n")).collect()
+        }
 
     # --- stage 2: banded near-dup pairs ----------------------------------
     pparams = {**hparams, "which": which, "max_hamming": max_hamming, "n_bands": n_bands}
@@ -135,5 +140,11 @@ def curate_media_resumable(
         )
         return hdf.join(survivors, "media_ref", "left_semi")
 
-    stage("final", pparams, build_final, "media_ref", "n_survivors")
+    stage(
+        "final", pparams, build_final, "media_ref", "n_survivors",
+        lambda: {"decoder_counts": decoder_counts()},
+    )
+    # a final marker committed before it carried the counts: group once
+    counts = stats["final"].pop("decoder_counts", None)
+    stats["decoder_counts"] = decoder_counts() if counts is None else counts
     return stats

@@ -22,9 +22,10 @@ This module implements that path end to end:
   leading ``www.`` dropped, host labels REVERSED and comma-joined
   (``com,example``), default ports off, ``)`` separator, fragment off,
   query params sorted.  Python reference and Spark column mirror each
-  other token for token (the ``canonical_url`` discipline), with the
-  parsing layers staged as child projections (the multiply-referenced-
-  expression rule).
+  other token for token (the ``canonical_url`` discipline); the column
+  is assembled from the library's one staged URL parse
+  (``ops.urls._url_parts``, shared with ``with_canonical_url`` and
+  ``with_registrable_domain``), adding only what is SURT's own.
 * :func:`cdx_lines` -- parse raw CDXJ lines into typed columns, JVM-side
   (``split + from_json``), malformed lines contained as error rows.
 * :func:`plan_fetches` -- prefix-select captures (e.g. one domain),
@@ -70,6 +71,7 @@ from .urlutil import (
     _SCHEME_RE,
     _ABSOLUTE_RE,
 )
+from .ops.urls import _ABSOLUTE_PATTERN, _path_or_root, _prefixed, with_url_parts
 
 # ---------------------------------------------------------------------------
 # SURT
@@ -122,96 +124,37 @@ def surt_key(url: str) -> str:
     return out
 
 
+def _surt_key(url: Column) -> tuple:
+    host = F.col("__u_sk_host")
+    rev = F.when(host.startswith("["), host).otherwise(
+        F.array_join(F.reverse(F.split(host, r"\.")), ",")
+    )
+    key = F.concat(
+        rev,
+        _prefixed(":", "__u_port"),
+        F.lit(")"),
+        F.lower(_path_or_root("__u_path")),
+        _prefixed("?", "__u_sk_q"),
+    )
+    return (
+        {
+            "__u_sk_host": F.regexp_replace("__u_host", r"^www\.", ""),
+            # lowercase each kept param BEFORE sorting: '?B=1&a=2' sorts
+            # differently otherwise
+            "__u_sk_q": F.array_join(
+                F.sort_array(F.transform("__u_params", lambda p: F.lower(p))), "&"
+            ),
+        },
+        F.when(url.rlike(_ABSOLUTE_PATTERN), key).otherwise(url),
+    )
+
+
 def surt_key_col(df: DataFrame, url_col: str = "url", out_col: str = "urlkey") -> DataFrame:
-    """Add ``out_col`` = :func:`surt_key` of ``url_col`` -- whole-stage
-    codegen string surgery with each parsing layer staged as a child
-    projection (the re-inlined single-Column form re-runs the authority
-    chain per layer; see ``ops.urls.with_canonical_url``)."""
-    from .colmemo import memo_cols
-
-    def build():
-        url = F.col(url_col)
-        staged = {
-            "__sk_scheme": F.lower(
-                F.regexp_extract(url, r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://", 1)
-            ),
-            "__sk_rest": F.regexp_replace(
-                url, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://", ""
-            ),
-        }
-        staged2 = {
-            "__sk_auth": F.regexp_extract("__sk_rest", r"^([^/?#]*)", 1),
-        }
-        staged3 = {
-            "__sk_tail": F.col("__sk_rest").substr(
-                F.length("__sk_auth") + 1, F.length("__sk_rest")
-            ),
-            "__sk_host0": F.lower(
-                F.regexp_extract("__sk_auth", r"^(?:[^@]*@)?(\[[^\]]*\]|[^:]*)", 1)
-            ),
-            "__sk_port0": F.regexp_extract("__sk_auth", r":([0-9]+)$", 1),
-        }
-        default_port = (
-            F.when(F.col("__sk_scheme") == "http", "80")
-            .when(F.col("__sk_scheme") == "https", "443")
-            .otherwise("")
-        )
-        staged4 = {
-            "__sk_host": F.regexp_replace("__sk_host0", r"^www\.", ""),
-            "__sk_port": F.when(
-                F.col("__sk_port0") == default_port, F.lit("")
-            ).otherwise(F.col("__sk_port0")),
-            "__sk_tailnf": F.lower(F.regexp_extract("__sk_tail", r"^([^#]*)", 1)),
-        }
-        staged5 = {
-            "__sk_path0": F.regexp_replace(
-                F.regexp_extract("__sk_tailnf", r"^([^?]*)", 1), r"/+$", ""
-            ),
-            "__sk_query": F.regexp_extract("__sk_tailnf", r"\?(.*)", 1),
-        }
-
-        def keep(p):
-            key = F.element_at(F.split(p, "="), 1)
-            tracking = key.isin(*sorted(TRACKING_PARAMS)) | key.startswith("utm_")
-            return (F.length(p) > 0) & ~tracking
-
-        q = F.array_join(
-            F.sort_array(F.filter(F.split("__sk_query", "&"), keep)), "&"
-        )
-        rev = F.when(
-            F.col("__sk_host").startswith("["), F.col("__sk_host")
-        ).otherwise(F.array_join(F.reverse(F.split("__sk_host", r"\.")), ","))
-        key = F.concat(
-            rev,
-            F.when(
-                F.col("__sk_port") != "", F.concat(F.lit(":"), F.col("__sk_port"))
-            ).otherwise(F.lit("")),
-            F.lit(")"),
-            F.when(F.col("__sk_path0") == "", F.lit("/")).otherwise(
-                F.col("__sk_path0")
-            ),
-            F.when(q != "", F.concat(F.lit("?"), q)).otherwise(F.lit("")),
-        )
-        final = F.when(
-            url.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+"), key
-        ).otherwise(url)
-        return (staged, staged2, staged3, staged4, staged5, final)
-
-    # the whole staged-column bundle is a pure function of url_col --
-    # memoized per SparkContext (colmemo); the withColumns batches also
-    # cut the per-withColumn analyzer passes the old 12-call chain paid
-    staged, staged2, staged3, staged4, staged5, final = memo_cols(
-        ("surt_key", url_col), build
-    )
-    out = (
-        df.withColumns(staged)
-        .withColumns(staged2)
-        .withColumns(staged3)
-        .withColumns(staged4)
-        .withColumns(staged5)
-        .withColumn(out_col, final)
-    )
-    return out.drop(*[c for c in out.columns if c.startswith("__sk_")])
+    """Add ``out_col`` = :func:`surt_key` of ``url_col``, assembled from the
+    library's one staged URL parse (:func:`nreadspark.ops.urls.with_url_parts`,
+    the parts ``canonical_url`` uses too): ``www.`` stripping and host-label
+    reversal are SURT-only; the path and the kept params are lowercased."""
+    return with_url_parts(df, url_col, out_col, _surt_key)
 
 
 # ---------------------------------------------------------------------------

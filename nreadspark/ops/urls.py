@@ -8,7 +8,11 @@ dedup stages.
 
 Everything is whole-stage-codegen string surgery (regexp_extract /
 higher-order array functions) -- no Python, no UDF, no shuffle until the
-final hash aggregation -- and each step mirrors
+final hash aggregation.  :func:`_url_parts` is the library's one Column
+URL parse; the canonical URL (:func:`with_canonical_url`), the SURT key
+(:func:`nreadspark.cdx.surt_key_col`) and the registrable domain
+(:func:`with_registrable_domain`) are assembled from its staged parts by
+:func:`with_url_parts`.  Each step mirrors
 :func:`nreadspark.urlutil.canonical_url` token for token so the Python
 reference, the Spark column and the DuckDB oracle agree byte-for-byte.
 """
@@ -25,122 +29,122 @@ from ..urlutil import TRACKING_PARAMS
 
 # same absolute-URL test as urlutil._ABSOLUTE_RE
 _ABSOLUTE_PATTERN = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+"
+_SCHEME_PATTERN = r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://"
 
 
-def canonical_url_col(url) -> Column:
-    """Column expression computing :func:`nreadspark.urlutil.canonical_url`
-    (lowercase scheme/host, default ports off, fragment off, tracking
-    params off, remaining params sorted, trailing path slashes collapsed;
-    non-absolute URLs pass through)."""
-    url = F.col(url) if isinstance(url, str) else url
-    scheme = F.lower(F.regexp_extract(url, r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://", 1))
-    rest = F.regexp_replace(url, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://", "")
-    authority = F.regexp_extract(rest, r"^([^/?#]*)", 1)
-    tail = rest.substr(F.length(authority) + 1, F.length(rest))
-    # bracketed IPv6/IPvFuture literal wins over stop-at-first-colon
-    # (mirrors urlutil._HOST_RE -- '[2001:db8::1]:8080' keeps the literal)
-    host = F.lower(F.regexp_extract(authority, r"^(?:[^@]*@)?(\[[^\]]*\]|[^:]*)", 1))
-    port0 = F.regexp_extract(authority, r":([0-9]+)$", 1)
-    default_port = (
-        F.when(scheme == "http", "80").when(scheme == "https", "443").otherwise("")
-    )
-    port = F.when(port0 == default_port, F.lit("")).otherwise(port0)
-    # fragment first (mirrors urlutil): a '?' inside '#...' is fragment,
-    # not query (SPA hash routes)
-    tail_nf = F.regexp_extract(tail, r"^([^#]*)", 1)
-    path0 = F.regexp_replace(F.regexp_extract(tail_nf, r"^([^?]*)", 1), r"/+$", "")
-    path = F.when(path0 == "", F.lit("/")).otherwise(path0)
-    query = F.regexp_extract(tail_nf, r"\?(.*)", 1)
+def _url_parts(url_col: str) -> tuple:
+    """The staged parse of ``url_col``: child-projection stages (dicts of
+    ``__u_*`` Columns, each stage reading only earlier ones) holding the
+    lowercased ``scheme``, the ``auth``-ority, the lowercased ``host``
+    (userinfo-aware; a bracketed IPv6 literal is the whole host), the
+    ``port`` with the scheme's default dropped, the ``tailnf`` (the tail
+    after the authority, fragment cut), the ``path`` without trailing
+    slashes and the query ``params`` with tracking params removed
+    (unsorted, case kept).  Each layer read more than once is a column
+    that later layers reference instead of re-inlining its regex chain
+    (an inlined chain re-runs the authority extraction at every
+    reference); each stage is one analyzed projection on the driver, so
+    a layer read once stays inline.  Non-absolute URLs parse to junk parts;
+    consumers gate on :data:`_ABSOLUTE_PATTERN`.  Memoized per
+    SparkContext on ``url_col`` (:func:`..colmemo.memo_cols`)."""
 
     def keep(p):
         key = F.lower(F.element_at(F.split(p, "="), 1))
         tracking = key.isin(*sorted(TRACKING_PARAMS)) | key.startswith("utm_")
         return (F.length(p) > 0) & ~tracking
 
-    q = F.array_join(F.sort_array(F.filter(F.split(query, "&"), keep)), "&")
-    canon = F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        F.when(port != "", F.concat(F.lit(":"), port)).otherwise(F.lit("")),
-        path,
-        F.when(q != "", F.concat(F.lit("?"), q)).otherwise(F.lit("")),
+    def build():
+        url = F.col(url_col)
+        scheme, port0 = F.col("__u_scheme"), F.col("__u_port0")
+        tail = F.col("__u_rest").substr(F.length("__u_auth") + 1, F.length("__u_rest"))
+        default_port = (
+            F.when(scheme == "http", "80").when(scheme == "https", "443").otherwise("")
+        )
+        return (
+            {
+                "__u_scheme": F.lower(F.regexp_extract(url, _SCHEME_PATTERN, 1)),
+                "__u_rest": F.regexp_replace(url, _SCHEME_PATTERN, ""),
+            },
+            {"__u_auth": F.regexp_extract("__u_rest", r"^([^/?#]*)", 1)},
+            {
+                "__u_host": F.lower(
+                    F.regexp_extract("__u_auth", r"^(?:[^@]*@)?(\[[^\]]*\]|[^:]*)", 1)
+                ),
+                "__u_port0": F.regexp_extract("__u_auth", r":([0-9]+)$", 1),
+                # fragment first: a '?' inside '#...' is fragment, not query
+                # (SPA hash routes)
+                "__u_tailnf": F.regexp_extract(tail, r"^([^#]*)", 1),
+            },
+            {
+                "__u_port": F.when(port0 == default_port, F.lit("")).otherwise(port0),
+                "__u_path": F.regexp_replace(
+                    F.regexp_extract("__u_tailnf", r"^([^?]*)", 1), r"/+$", ""
+                ),
+                "__u_params": F.filter(
+                    F.split(F.regexp_extract("__u_tailnf", r"\?(.*)", 1), "&"), keep
+                ),
+            },
+        )
+
+    return memo_cols(("url_parts", url_col), build)
+
+
+def with_url_parts(df: DataFrame, url_col: str, out_col: str, assemble) -> DataFrame:
+    """Add ``out_col`` assembled from the staged parse of ``url_col``:
+    the :func:`_url_parts` stages, then the stages and final Column that
+    the module-level function ``assemble(url)`` returns (its own ``__u_*``
+    stages first, the final Column last; memoized per SparkContext under
+    ``(assemble, url_col)``).  One projection chain, zero shuffles; every
+    ``__u_*`` column is dropped."""
+    *stages, final = _url_parts(url_col) + memo_cols(
+        (assemble, url_col), lambda: assemble(F.col(url_col))
     )
-    return F.when(url.rlike(_ABSOLUTE_PATTERN), canon).otherwise(url)
+    for stage in stages:
+        df = df.withColumns(stage)
+    df = df.withColumn(out_col, final)
+    return df.drop(*[c for c in df.columns if c.startswith("__u_")])
+
+
+def _prefixed(prefix: str, col: str) -> Column:
+    """``prefix`` + ``col``, or '' where ``col`` is empty."""
+    c = F.col(col)
+    return F.when(c != "", F.concat(F.lit(prefix), c)).otherwise(F.lit(""))
+
+
+def _path_or_root(col: str) -> Column:
+    """The staged path, '' read as '/'."""
+    return F.when(F.col(col) == "", F.lit("/")).otherwise(F.col(col))
+
+
+def _canonical_url(url: Column) -> tuple:
+    canon = F.concat(
+        F.col("__u_scheme"),
+        F.lit("://"),
+        F.col("__u_host"),
+        _prefixed(":", "__u_port"),
+        _path_or_root("__u_path"),
+        _prefixed("?", "__u_q"),
+    )
+    return (
+        {"__u_q": F.array_join(F.sort_array("__u_params"), "&")},
+        F.when(url.rlike(_ABSOLUTE_PATTERN), canon).otherwise(url),
+    )
+
+
+def _absolute_host(url: Column) -> tuple:
+    return (F.when(url.rlike(_ABSOLUTE_PATTERN), F.col("__u_host")),)
 
 
 def with_canonical_url(
     df: DataFrame, url_col: str = "url", out_col: str = "canonical_url"
 ) -> DataFrame:
-    """Add ``out_col`` = canonical form of ``url_col`` -- the FAST form of
-    :func:`canonical_url_col`: each parsing layer (scheme, authority,
-    host, port, tail, path, query) lands in its own child-projection
-    column, so downstream layers read column refs instead of textually
-    re-inlining the upstream regex chain (the single-Column form re-runs
-    the authority extraction ~6x; measured ~2.5x slower at 10^6 rows).
-    CollapseProject keeps the multiply-referenced non-cheap expressions
-    staged; the whole thing is still one codegen stage, zero shuffles,
-    and byte-identical to :func:`nreadspark.urlutil.canonical_url`."""
-    url = F.col(url_col)
-    df = df.withColumn(
-        "__cu_scheme",
-        F.lower(F.regexp_extract(url, r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://", 1)),
-    )
-    df = df.withColumn(
-        "__cu_rest", F.regexp_replace(url, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://", "")
-    )
-    df = df.withColumn("__cu_auth", F.regexp_extract("__cu_rest", r"^([^/?#]*)", 1))
-    df = df.withColumn(
-        "__cu_tail",
-        F.col("__cu_rest").substr(F.length("__cu_auth") + 1, F.length("__cu_rest")),
-    )
-    df = df.withColumn(
-        "__cu_host",
-        F.lower(F.regexp_extract("__cu_auth", r"^(?:[^@]*@)?(\[[^\]]*\]|[^:]*)", 1)),
-    )
-    df = df.withColumn("__cu_port0", F.regexp_extract("__cu_auth", r":([0-9]+)$", 1))
-    default_port = (
-        F.when(F.col("__cu_scheme") == "http", "80")
-        .when(F.col("__cu_scheme") == "https", "443")
-        .otherwise("")
-    )
-    df = df.withColumn(
-        "__cu_port",
-        F.when(F.col("__cu_port0") == default_port, F.lit("")).otherwise(
-            F.col("__cu_port0")
-        ),
-    )
-    # fragment first: a '?' inside '#...' is fragment, not query
-    df = df.withColumn("__cu_tailnf", F.regexp_extract("__cu_tail", r"^([^#]*)", 1))
-    df = df.withColumn(
-        "__cu_path0",
-        F.regexp_replace(F.regexp_extract("__cu_tailnf", r"^([^?]*)", 1), r"/+$", ""),
-    )
-    df = df.withColumn("__cu_query", F.regexp_extract("__cu_tailnf", r"\?(.*)", 1))
-
-    def keep(p):
-        key = F.lower(F.element_at(F.split(p, "="), 1))
-        tracking = key.isin(*sorted(TRACKING_PARAMS)) | key.startswith("utm_")
-        return (F.length(p) > 0) & ~tracking
-
-    df = df.withColumn(
-        "__cu_q",
-        F.array_join(F.sort_array(F.filter(F.split("__cu_query", "&"), keep)), "&"),
-    )
-    canon = F.concat(
-        F.col("__cu_scheme"),
-        F.lit("://"),
-        F.col("__cu_host"),
-        F.when(F.col("__cu_port") != "", F.concat(F.lit(":"), F.col("__cu_port")))
-        .otherwise(F.lit("")),
-        F.when(F.col("__cu_path0") == "", F.lit("/")).otherwise(F.col("__cu_path0")),
-        F.when(F.col("__cu_q") != "", F.concat(F.lit("?"), F.col("__cu_q")))
-        .otherwise(F.lit("")),
-    )
-    df = df.withColumn(
-        out_col, F.when(url.rlike(_ABSOLUTE_PATTERN), canon).otherwise(url)
-    )
-    return df.drop(*[c for c in df.columns if c.startswith("__cu_")])
+    """Add ``out_col`` = :func:`nreadspark.urlutil.canonical_url` of
+    ``url_col``, byte for byte: lowercase scheme/host, default ports off,
+    fragment off, tracking params off, remaining params sorted, trailing
+    path slashes collapsed; non-absolute URLs pass through.  Assembled
+    from the staged parse (:func:`with_url_parts`), so it is one codegen
+    stage and zero shuffles."""
+    return with_url_parts(df, url_col, out_col, _canonical_url)
 
 
 def dedup_by_url(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -279,100 +283,6 @@ def load_psl(include_private: bool = True):
     )
 
 
-def host_col(url) -> Column:
-    """Lowercased host of an absolute URL (userinfo-aware, bracket-aware
-    for IPv6 literals, port stripped) -- the shared extraction step of
-    :func:`canonical_url_col`; non-absolute URLs yield NULL."""
-    url = F.col(url) if isinstance(url, str) else url
-    rest = F.regexp_replace(url, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://", "")
-    authority = F.regexp_extract(rest, r"^([^/?#]*)", 1)
-    host = F.lower(F.regexp_extract(authority, r"^(?:[^@]*@)?(\[[^\]]*\]|[^:]*)", 1))
-    return F.when(url.rlike(_ABSOLUTE_PATTERN), host)
-
-
-def _domain_from_parts(
-    host: Column, labels: Column, extra_suffixes=(), include_private: bool = True
-) -> Column:
-    """eTLD+1 decision given already-computed host + label-array columns,
-    implementing the PSL prevailing-rule algorithm over the vendored
-    snapshot (:func:`load_psl`): among matching rules the longest wins,
-    ``*.parent`` wildcards match exactly one extra label, and
-    ``!exception`` rules beat everything (the exception's own labels ARE
-    the registrable domain -- e.g. ``!city.kawasaki.jp`` under
-    ``*.kawasaki.jp``).  ``extra_suffixes`` adds per-call exact rules of
-    any label count.
-
-    Documented divergence from a strict PSL library: a host that IS a
-    public suffix (``co.uk`` itself, ``anything.ck`` under ``*.ck``,
-    deeper suffixes like ``pvt.k12.ma.us`` too -- the n==k branches
-    below, ADVICE r7) has no registrable domain per spec; this column
-    passes the host through instead of yielding NULL -- grouping by NULL
-    would merge every such host into one bucket, the opposite of what
-    blocklist/cap/PageRank tiers need.  IP literals (v4 dotted quads,
-    bracketed v6) and single-label hosts also pass through whole."""
-    exact, wildcards, exceptions = load_psl(include_private)
-    exact = {k: set(v) for k, v in exact.items()}
-    for s in extra_suffixes:
-        exact.setdefault(len(s.split(".")), set()).add(s.lower())
-
-    n = F.size(labels)
-
-    def lastk(k: int) -> Column:
-        return _lastk_col(labels, k)
-
-    # (priority, condition, result): exceptions outrank all, then rules
-    # by suffix length descending; ties between an exact k-suffix and a
-    # wildcard with (k-1)-label parent resolve to the same registrable
-    # length, so ordering within a length is immaterial
-    branches: list[tuple[int, Column, Column]] = []
-    for k, rules in exceptions.items():
-        branches.append(((k + 100), (n >= k) & lastk(k).isin(*sorted(rules)), lastk(k)))
-    for k, rules in exact.items():
-        if rules:
-            branches.append((k, (n >= k + 1) & lastk(k).isin(*sorted(rules)), lastk(k + 1)))
-            # host IS the suffix: pass through whole (divergence above)
-            branches.append((k, (n == k) & host.isin(*sorted(rules)), host))
-    for k, parents in wildcards.items():
-        # *.parent denotes a (k+1)-label suffix -> registrable has k+2
-        branches.append((k + 1, (n >= k + 2) & lastk(k).isin(*sorted(parents)), lastk(k + 2)))
-        # host IS the (k+1)-label wildcard suffix: pass through whole
-        branches.append((k + 1, (n == k + 1) & lastk(k).isin(*sorted(parents)), host))
-    branches.sort(key=lambda b: -b[0])
-
-    decision: Column = F.when(n <= 2, host).otherwise(lastk(2))  # default rule
-    for _, cond, result in reversed(branches):
-        decision = F.when(cond, result).otherwise(decision)
-
-    is_ip = host.rlike(r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$") | host.startswith("[")
-    # outer guard: concat_ws SKIPS null args, so without it a NULL host
-    # (non-absolute URL) would yield '' instead of staying NULL
-    return F.when(
-        host.isNotNull(), F.when(is_ip, host).otherwise(decision)
-    )
-
-
-def registrable_domain_col(url, extra_suffixes=()) -> Column:
-    """Registrable domain (eTLD+1) of an absolute URL as a pure Column
-    expression over the vendored PSL snapshot (rule CASE via
-    :func:`_domain_from_parts`).  IP literals (v4 dotted quads,
-    bracketed v6) and single-label hosts pass through whole -- grouping
-    by a truncated IP would merge unrelated servers.  Non-absolute URLs
-    yield NULL.
-
-    Composability note: as a single Column expression the host regex is
-    textually re-inlined at every reference (the eTLD+1 CASE reads it
-    ~10x, and codegen subexpression elimination does NOT rescue it --
-    measured 7.4x slower than the staged form at 10^6 rows), and the
-    rule CASE itself approaches the JVM 64 KB codegen ceiling (r8: it
-    OVERFLOWED when instantiated twice in one stage).  Hot paths must
-    use :func:`with_registrable_domain` -- the broadcast suffix-rule
-    join form whose expression size is independent of rule count; this
-    column form exists for single-expression convenience on small rule
-    sets only."""
-    host = host_col(url)
-    return _domain_from_parts(host, F.split(host, r"\."), extra_suffixes)
-
-
 def _lastk_col(labels: Column, k: int) -> Column:
     """Last ``k`` host labels as one dotted string.  ``try_element_at``
     (not ``element_at``: ANSI mode throws on out-of-range) yields NULL
@@ -448,30 +358,44 @@ def with_registrable_domain(
     extra_suffixes=(),
     include_private: bool = True,
 ) -> DataFrame:
-    """Add ``out_col`` = registrable domain of ``url_col`` -- the FAST
-    form, and the ONLY form that scales to the full ~10k-rule upstream
-    PSL: host + label array land in child projections, the host's
-    last-k-label strings (one per rule length present in the list)
-    probe per-length BROADCAST rule tables, and the prevailing rule is
-    picked by one O(K) ``greatest`` over (priority, domain) structs --
-    the same priorities as :func:`_domain_from_parts` (exceptions
-    ``100+k`` > wildcards ``k+1`` > exact ``k`` > the default last-2
-    rule), same pass-through divergences.
+    """Add ``out_col`` = registrable domain (eTLD+1) of ``url_col``'s host
+    under the PSL prevailing-rule algorithm over the vendored snapshot
+    (:func:`load_psl`): among matching rules the longest wins,
+    ``*.parent`` wildcards match exactly one extra label, and
+    ``!exception`` rules beat everything (the exception's own labels ARE
+    the registrable domain -- ``!city.kawasaki.jp`` under
+    ``*.kawasaki.jp``).  ``extra_suffixes`` adds per-call exact rules of
+    any label count.  Priorities: exceptions ``100+k`` > wildcards
+    ``k+1`` > exact ``k`` > the default last-2 rule.
 
-    Why a join and not the rule CASE (r8): a literal ``isin``-CASE over
-    the 254-rule snapshot already blows the JVM's 64 KB method limit
-    when instantiated twice in one stage (judge-caught ``ERROR
-    CodeGenerator`` in ``domain_pagerank`` -- the stage silently ran
-    interpreted), and the full upstream list cannot be expressed that
-    way at all.  The join form keeps expression size O(K), K = distinct
-    rule label counts (<= 5); each per-length table is KBs, the probes
-    are BroadcastHashJoins fused into the same whole-stage-codegen
-    pipeline -- the corpus never shuffles, identical to before."""
+    Documented divergences from a strict PSL library: a host that IS a
+    public suffix (``co.uk`` itself, ``anything.ck`` under ``*.ck``,
+    deeper suffixes like ``pvt.k12.ma.us`` too) has no registrable domain
+    per spec; it passes through whole instead of yielding NULL --
+    grouping by NULL would merge every such host into one bucket, the
+    opposite of what blocklist/cap/PageRank tiers need.  IP literals (v4
+    dotted quads, bracketed v6) and single-label hosts also pass through
+    whole -- grouping by a truncated IP would merge unrelated servers.
+    Non-absolute URLs yield NULL.
+
+    Shape: the host comes from the staged URL parse
+    (:func:`with_url_parts`) and the label array lands in a child
+    projection; the host's last-k-label strings (one per rule length
+    present in the list) probe per-length BROADCAST rule tables, and the
+    prevailing rule is picked by one O(K) ``greatest`` over (priority,
+    domain) structs.  Why a join and not a rule CASE (r8): a literal
+    ``isin``-CASE over the 254-rule snapshot already blew the JVM's 64
+    KB method limit when instantiated twice in one stage (the stage
+    silently ran interpreted), and the full ~10k-rule upstream list
+    cannot be expressed that way at all.  The join form keeps expression
+    size O(K), K = distinct rule label counts (<= 5); each per-length
+    table is KBs, the probes are BroadcastHashJoins fused into the same
+    whole-stage-codegen pipeline -- the corpus never shuffles."""
     spark = df.sparkSession
     renamed, key_cols, decision, ks = _psl_join_bundle(
         spark, tuple(sorted({s.lower() for s in extra_suffixes})), include_private
     )
-    d = df.withColumn("__rd_host", host_col(url_col)).withColumn(
+    d = with_url_parts(df, url_col, "__rd_host", _absolute_host).withColumn(
         "__rd_labels", F.split("__rd_host", r"\.")
     )
     d = d.withColumns(key_cols)

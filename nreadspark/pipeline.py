@@ -339,6 +339,10 @@ def _charset_from_content_type(content_type: str | None) -> str | None:
     return None
 
 
+# the meta-charset sniff reads this many leading body bytes
+_SNIFF_BYTES = 4096
+
+
 def decode_html_bytes(
     raw: bytes,
     content_type: str | None = None,
@@ -350,22 +354,54 @@ def decode_html_bytes(
     the Content-Type header (GuessEncoding, :197-240), else the meta-tag
     sniff over an ASCII view (GetEncodingFromMetaTag, :95-112), else the
     fallback.  BOM detection runs first -- a BOM is authoritative."""
+    return _decode_body(raw, content_type, content_encoding, fallback_encoding, None)
+
+
+def _inflate_stream(raw: bytes, wbits: int, limit: int | None) -> bytes:
+    """One zlib (``wbits`` 15) or raw deflate (-15) stream, at most
+    ``limit`` bytes of it; a stream that ends short of both its end
+    marker and the limit fails as ``zlib.decompress`` does."""
+    import zlib
+
+    stream = zlib.decompressobj(wbits)
+    out = stream.decompress(raw, limit or 0)
+    if not stream.eof and (limit is None or len(out) < limit):
+        raise zlib.error("incomplete or truncated stream")  # as zlib.decompress
+    return out
+
+
+def _inflate(raw: bytes, content_encoding: str, limit: int | None) -> bytes:
+    """Undo a gzip or deflate Content-Encoding; any other passes through.
+    With ``limit``, at most that many bytes are inflated, in bounded
+    steps, so a deflate bomb costs the limit and not its inflated size
+    (corruption past the cut then goes unseen)."""
+    enc = content_encoding.lower()
+    if "gzip" in enc:
+        import gzip
+        import io
+
+        # member after member, as gzip.decompress
+        with gzip.GzipFile(fileobj=io.BytesIO(raw)) as body:
+            return body.read(-1 if limit is None else limit)
+    if "deflate" in enc:
+        import zlib
+
+        try:
+            return _inflate_stream(raw, zlib.MAX_WBITS, limit)
+        except zlib.error:
+            return _inflate_stream(raw, -zlib.MAX_WBITS, limit)  # raw deflate (.NET style)
+    return raw
+
+
+def _decode_body(
+    raw, content_type, content_encoding, fallback_encoding, limit: int | None
+) -> str:
+    """:func:`decode_html_bytes`, inflating at most ``limit`` bytes."""
     if raw is None:
         return ""
     raw = bytes(raw)
     if content_encoding:
-        enc = content_encoding.lower()
-        if "gzip" in enc:
-            import gzip
-
-            raw = gzip.decompress(raw)
-        elif "deflate" in enc:
-            import zlib
-
-            try:
-                raw = zlib.decompress(raw)
-            except zlib.error:
-                raw = zlib.decompress(raw, -15)  # raw deflate (.NET style)
+        raw = _inflate(raw, content_encoding, limit)
 
     for bom, codec in _BOMS:
         if raw.startswith(bom):
@@ -387,7 +423,7 @@ def decode_html_bytes(
     if charset is None:
         # header absent OR named an unusable charset: the meta tag is the
         # next-best signal either way
-        head = raw[:4096]
+        head = raw[:_SNIFF_BYTES]
         m = _META_CHARSET_RE.search(head) or _META_CHARSET_MODERN_RE.search(head)
         if m:
             charset = _valid(m.group("charset").decode("ascii", errors="replace"))
@@ -408,14 +444,19 @@ def extract_from_html_bytes(
     strings never do).  A body :func:`decode_html_bytes` cannot decode (a
     gzip-labelled body that is not gzip, ...) is a failed row:
     ``n_candidates`` -1 and ``in_bytes`` the raw body's length.
-    ``max_doc_bytes`` applies to the DECODED text (post-decompression --
-    the guard that matters for deflate-bombed bodies); see
-    :func:`extract`."""
+    ``max_doc_bytes`` applies to the DECODED text (post-decompression);
+    a compressed body is inflated in bounded steps only as far as the
+    budget can reach, so a deflate bomb costs the budget, not its
+    inflated size; see :func:`extract`."""
+    # 4 raw bytes per char (the widest fixed-width charset) plus a 4-byte
+    # BOM, past the budget: the UTF-8 cut and ``truncated`` come out as
+    # from the whole body.  Never below the meta-charset sniff window.
+    limit = None if max_doc_bytes is None else max(4 * max_doc_bytes + 8, _SNIFF_BYTES)
 
     def row(doc_id, raw, url, content_type, content_encoding):
         started = time.perf_counter()
         try:
-            html = decode_html_bytes(raw, content_type, content_encoding, fallback_encoding)
+            html = _decode_body(raw, content_type, content_encoding, fallback_encoding, limit)
         except Exception:
             return [_empty_row(doc_id, started, -1, len(raw), False)]
         return _extract_row(doc_id, html, url, max_doc_bytes)

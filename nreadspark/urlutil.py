@@ -89,8 +89,9 @@ def canonical_url(url: str) -> str:
       different content).
 
     Non-absolute URLs pass through unchanged.  Parsing is regex-based --
-    deliberately mirroring ``ops.urls.canonical_url_col`` token for token
-    so the Python reference, the Spark column and the DuckDB oracle agree
+    deliberately mirroring ``ops.urls.with_canonical_url`` (the Column
+    form, assembled from ``ops.urls._url_parts``) token for token so the
+    Python reference, the Spark column and the DuckDB oracle agree
     byte-for-byte (urlsplit normalizes differently).
 
     Out of scope (by design -- each risks merging distinct resources):

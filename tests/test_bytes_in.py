@@ -6,6 +6,8 @@ extractions to the pre-decoded string path."""
 import gzip
 import zlib
 
+import pytest
+
 from nreadspark.pipeline import decode_html_bytes
 
 PAGE = (
@@ -158,3 +160,88 @@ def test_undecodable_body_is_a_kernel_failure(spark):
     assert row["metrics"]["in_bytes"] == len(raw)
     assert row["content_extracted"] is False and row["spans"] == []
     assert extraction_metrics(out).collect()[0]["kernel_failures"] == 1
+
+
+def _bytes_task_rows(bodies, max_doc_bytes):
+    """The ``extract_from_html_bytes`` task over one in-process batch of
+    ``(body, content_encoding)`` pairs, as rows."""
+    import pyarrow as pa
+
+    from nreadspark.pipeline import extract_from_html_bytes
+    from tests.test_spark_pipeline import _CapturedCrossing
+
+    n = len(bodies)
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "doc_id": [f"d{i}" for i in range(n)],
+            "__bytes": pa.array([b for b, _ in bodies], pa.binary()),
+            "__url": pa.array([None] * n, pa.string()),
+            "__ctype": pa.array([None] * n, pa.string()),
+            "__cenc": pa.array([enc for _, enc in bodies], pa.string()),
+        }
+    )
+    task = extract_from_html_bytes(_CapturedCrossing(), max_doc_bytes=max_doc_bytes).task
+    (out,) = task(iter([batch]))
+    return out.to_pylist()
+
+
+def _whole_body_rows(bodies, max_doc_bytes):
+    """Rows from decoding each WHOLE body first, then the budget cut."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from nreadspark.pipeline import OUTPUT_SCHEMA, _extract_row, rows_to_batch
+
+    rows = []
+    for i, (body, enc) in enumerate(bodies):
+        rows += _extract_row(f"d{i}", decode_html_bytes(body, None, enc), None, max_doc_bytes)
+    return rows_to_batch(rows, to_arrow_schema(OUTPUT_SCHEMA)).to_pylist()
+
+
+def _without_ms(rows):
+    return [{**r, "metrics": {**r["metrics"], "ms": None}} for r in rows]
+
+
+def test_deflate_bomb_inflates_only_as_far_as_the_budget(spark):
+    """A gzip bomb under a 1000-byte budget: the row inflates a few KB,
+    not the 16 MB body, and equals the row of the whole-body decode."""
+    import tracemalloc
+
+    bomb = gzip.compress(b"<html><body><p>" + b"a" * 16_000_000 + b"</p></body></html>")
+    _bytes_task_rows([(gzip.compress(PAGE.format(cs="utf-8").encode()), "gzip")], 1000)
+    tracemalloc.start()
+    try:
+        rows = _bytes_task_rows([(bomb, "gzip")], 1000)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 4_000_000, peak
+    assert rows[0]["metrics"]["truncated"] is True
+    assert _without_ms(rows) == _without_ms(_whole_body_rows([(bomb, "gzip")], 1000))
+
+
+@pytest.mark.parametrize("max_doc_bytes", [None, 1000, 10_000])
+def test_compressed_bodies_match_the_whole_body_decode(spark, max_doc_bytes):
+    """gzip, zlib deflate, raw deflate and two-member gzip bodies, under
+    and over the budget, give the rows of the whole-body decode; so does
+    an ASCII page in UTF-32, whose 4 bytes per char and 4-byte BOM are the
+    widest case the bounded inflate has to cover."""
+    page = PAGE.format(cs="utf-8")
+    big = page.replace("</div>", "<p>Ein Absatz über Größe.</p>" * 400 + "</div>").encode()
+    co = zlib.compressobj(wbits=-15)
+    raw_deflate = co.compress(big) + co.flush()
+    ascii32 = (
+        "<html><body><div><p>" + "plain ascii words, " * 600 + "</p></div></body></html>"
+    ).encode("utf-32")
+    bodies = [
+        (gzip.compress(page.encode()), "gzip"),
+        (gzip.compress(big), "gzip"),
+        (zlib.compress(big), "deflate"),
+        (raw_deflate, "deflate"),
+        (gzip.compress(big[:7000]) + gzip.compress(big[7000:]), "x-gzip"),
+        (gzip.compress(ascii32), "gzip"),
+    ]
+    got = _bytes_task_rows(bodies, max_doc_bytes)
+    assert _without_ms(got) == _without_ms(_whole_body_rows(bodies, max_doc_bytes))
+    assert all(r["content_extracted"] for r in got)
+    if max_doc_bytes == 1000:
+        assert all(r["metrics"]["truncated"] for r in got[1:])

@@ -47,12 +47,23 @@ def test_build_warc_with_index_offsets_are_exact():
 
 
 def test_surt_col_matches_python_twin(spark):
+    """``surt_key_col`` equals the Python twin on the SURT table, the
+    canonical-URL test's 200 generated messy URLs, and mixed-case param
+    orders (params are lowercased BEFORE sorting, so ``?B=1&a=2`` keys as
+    ``?a=2&b=1``)."""
     from pyspark.sql import Row
     from nreadspark.cdx import surt_key_col
+    from tests.test_url_canonical import messy_urls
 
-    urls = list(SURT_CASES) + ["http://u:p@host.org:8443/X/Y?z=1&a"]
-    df = spark.createDataFrame([Row(url=u) for u in urls])
+    urls = list(SURT_CASES) + ["http://u:p@host.org:8443/X/Y?z=1&a"] + messy_urls() + [
+        "http://Ex.com/A?B=1&a=2",
+        "http://ex.com/?B=1&a=2&UTM_x=3",
+        "HTTP://WWW.EX.COM/X/Y/?Zeta=1&alpha=2&Fbclid=z#F",
+        "https://ex.com:443/p?b&B&a=&A=1",
+    ]
+    df = spark.createDataFrame([Row(url=u) for u in dict.fromkeys(urls)])
     got = {r["url"]: r["urlkey"] for r in surt_key_col(df).collect()}
+    assert got["http://ex.com/?B=1&a=2&UTM_x=3"] == "com,ex)/?a=2&b=1"
     for u in urls:
         assert got[u] == surt_key(u), u
 

@@ -41,6 +41,17 @@ def _media(spark, tmp_path):
     return spark.read.parquet(path)
 
 
+def _jobs_of(spark, fn):
+    """``(fn(), number of Spark jobs it scheduled)``, counted in a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup("curate_media_resume", "curate_media_resume")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup("curate_media_resume"))
+
+
 def test_curate_media_end_to_end_and_resume(spark, tmp_path):
     import curate_media as cm
 
@@ -79,9 +90,17 @@ def test_curate_media_end_to_end_and_resume(spark, tmp_path):
             "no-cover", "no-id3"} <= tiers
     assert len(rows) == 6 + 8  # 6 cluster survivors + 8 unhashable rows
 
-    # full resume: everything short-circuits
-    stats2 = cm.curate_media_resumable(spark, media, out, max_hamming=0, n_buckets=4)
+    # full resume: everything short-circuits, decoder_counts included (it
+    # is read back from the final stage's marker, not regrouped)
+    stats2, n_jobs = _jobs_of(
+        spark, lambda: cm.curate_media_resumable(spark, media, out, max_hamming=0, n_buckets=4)
+    )
     assert set(stats2["resumed_stages"]) == {"hashes", "pairs", "final"}
+    assert stats2["decoder_counts"] == dc
+    assert stats2["final"] == stats["final"] == {"n_survivors": 14}
+    # one job per stage re-read (parquet schema discovery); regrouping the
+    # committed hashes on every call made it 5
+    assert n_jobs <= 3, n_jobs
     # a wall describes this run's work: resumed stages report none
     assert stats2["stage_wall_s"] == {}
 

@@ -93,11 +93,13 @@ DOMAIN_CASES = [
 
 
 def test_registrable_domain_col(spark):
-    from nreadspark.ops.urls import registrable_domain_col
+    from nreadspark.ops.urls import with_registrable_domain
 
-    df = spark.createDataFrame([(u,) for u, _ in DOMAIN_CASES], "url string")
-    got = [r["d"] for r in df.select(registrable_domain_col("url").alias("d")).collect()]
-    assert got == [want for _, want in DOMAIN_CASES]
+    df = spark.createDataFrame(
+        [(i, u) for i, (u, _) in enumerate(DOMAIN_CASES)], "doc_id long, url string"
+    )
+    got = {r["doc_id"]: r["domain"] for r in with_registrable_domain(df).collect()}
+    assert [got[i] for i in range(len(DOMAIN_CASES))] == [want for _, want in DOMAIN_CASES]
 
 
 def test_blocklist_tag_and_drop(spark):

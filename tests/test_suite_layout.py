@@ -3,7 +3,7 @@ the whole run, the jobs/ directory on sys.path, and no absolute path into a
 particular checkout (a test must exercise the tree it sits in).  Library
 kernels state their Arrow output schema once, as a Spark StructType, build
 nested output columns through ``rows_to_batch`` only, and cross into Python
-through one ``mapInArrow`` call."""
+through one ``mapInArrow`` call; Column code splits a URL in one place."""
 
 import ast
 import glob
@@ -129,3 +129,19 @@ def test_library_has_one_arrow_crossing():
                 pandas.append(f"{rel}:{node.lineno}: {name}")
     state = [p for p in pandas if p.startswith("streaming.py:") and p.endswith("WithState")]
     assert len(arrow) == 1 and len(state) == 1 and pandas == state, "\n".join(arrow + pandas)
+
+
+def test_library_has_one_column_url_parse():
+    """``ops.urls._url_parts`` is the one Column-tier URL parse: the
+    canonical URL, the SURT key and the registrable domain are assembled
+    from its staged parts.  A second copy of its authority split can
+    drift from the first."""
+    found = []
+    for path in sorted(glob.glob(os.path.join(REPO, "nreadspark", "**", "*.py"), recursive=True)):
+        tree = ast.parse(open(path, encoding="utf-8").read(), path)
+        found += [
+            f"{os.path.relpath(path, REPO)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant) and node.value == r"^([^/?#]*)"
+        ]
+    assert len(found) == 1, "\n".join(found)

@@ -1,4 +1,4 @@
-"""URL canonicalization (urlutil.canonical_url + ops/urls.py column twin):
+"""URL canonicalization (urlutil.canonical_url + ops/urls.py column form):
 case/port/fragment/tracking-param/trailing-slash normalization against a
 hand-written expectation table, byte-for-byte Python-vs-Spark agreement on
 generated messy URLs, and the dedup/survivor compositions."""
@@ -60,11 +60,10 @@ def test_canonical_url_reference_table():
         assert canonical_url(raw) == want, raw
 
 
-def test_spark_column_matches_python_reference(spark):
-    """Byte-for-byte agreement between the JVM column expression and the
-    Python reference on the unit table AND on generated messy URLs."""
-    from nreadspark.ops.urls import canonical_url_col
-
+def messy_urls():
+    """The unit table's inputs plus 200 generated messy URLs: scheme and
+    host case, userinfo, default and other ports, trailing slashes,
+    tracking and reordered params, fragments."""
     messy = [raw for raw, _ in CASES]
     for i in range(200):
         g = i % 13
@@ -74,10 +73,20 @@ def test_spark_column_matches_python_reference(spark):
         q = "" if i % 5 == 4 else f"?z=9&utm_x=1&id={g}" if i % 2 else f"?id={g}&z=9"
         frag = "#s" if i % 4 == 0 else ""
         messy.append(f"{scheme}://UsEr@Host{g}.ORG{port}{path}{q}{frag}")
-    df = spark.createDataFrame([(u,) for u in messy], "url string")
-    got = [r["c"] for r in df.select(canonical_url_col("url").alias("c")).collect()]
-    for raw, spark_c in zip(messy, got):
-        assert spark_c == canonical_url(raw), raw
+    return messy
+
+
+def test_spark_column_matches_python_reference(spark):
+    """Byte-for-byte agreement between ``with_canonical_url`` and the
+    Python reference on the unit table AND on generated messy URLs."""
+    from nreadspark.ops.urls import with_canonical_url
+
+    messy = messy_urls()
+    df = spark.createDataFrame(list(enumerate(messy)), "i long, url string")
+    got = {r["i"]: r["canonical_url"] for r in with_canonical_url(df).collect()}
+    assert len(got) == len(messy)
+    for i, raw in enumerate(messy):
+        assert got[i] == canonical_url(raw), raw
 
 
 def test_dedup_by_url_groups(spark):
