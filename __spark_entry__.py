@@ -36,9 +36,9 @@ def _par(
     CPU-bound per-row kernels (extraction, media decode, per-doc scoring):
     each sf table is ONE small parquet file whose single row group arrives
     as ONE scan split, so without this the kernel runs on a single core.
-    Repartition only when the scan yields fewer splits than the target --
-    at production scale inputs already carry >= cores splits and this
-    inserts nothing (no shuffle, no plan change).
+    Every input is a filter or projection of one such file, so the input
+    always holds fewer splits than a target above 1, and the repartition
+    runs without probing the input's split count first.
 
     ``rows`` (when the query caps the input, e.g. ``doc_id < 500``) bounds
     the target so tasks keep >= ``per_task`` rows: over-fragmenting a
@@ -50,9 +50,14 @@ def _par(
     exchange (measured: it costs them ~0.1-0.4 s each)."""
     n_cores = spark.sparkContext.defaultParallelism
     n = n_cores if rows is None else max(1, min(n_cores, rows // per_task))
-    if n > 1 and df.rdd.getNumPartitions() < n:
-        df = df.repartition(n)
-    return df
+    return df.repartition(n) if n > 1 else df
+
+
+def _first_docs(spark: SparkSession, sf_dir: str, n: int, per_task: int = 40) -> DataFrame:
+    """The documents with ``doc_id < n``, spread by :func:`_par` over tasks
+    of at least ``per_task`` rows."""
+    docs = _table(spark, sf_dir, "documents").filter(F.col("doc_id") < n)
+    return _par(docs, spark, rows=n, per_task=per_task)
 
 
 def _memo_cols(name: str, builder):
@@ -799,12 +804,7 @@ def _q_multipage_extract(spark, sf_dir):
     the DOM merge kernel is not SQL-expressible)."""
     from nreadspark.multipage import extract_multipage
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 90),
-        spark,
-        rows=90,
-        per_task=30,
-    )
+    docs = _first_docs(spark, sf_dir, 90, per_task=30)
     chain = (F.col("doc_id") / 3).cast("bigint")
     page = F.pmod(F.col("doc_id"), F.lit(3))
     url = F.concat(F.lit("http://ex.com/s"), chain, F.lit("?page="), page)
@@ -859,11 +859,7 @@ def _q_debug_html(spark, sf_dir):
     """
     from nreadspark.serialize import transcode_to_html_column
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200),
-        spark,
-        rows=200,
-    )
+    docs = _first_docs(spark, sf_dir, 200)
     html = F.concat(
         F.lit("<html><head><title>Doc "),
         F.col("doc_id"),
@@ -1586,11 +1582,7 @@ def _q_pdf_images(spark, sf_dir):
     from nreadspark.ops.jpeg import encode_blocky_jpeg
     from nreadspark.pdf import make_pdf
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300),
-        spark,
-        rows=300,
-    )
+    docs = _first_docs(spark, sf_dir, 300)
     src = docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
 
     def synth(it):
@@ -1860,11 +1852,7 @@ def _q_multimodal_phash(spark, sf_dir):
     truncated payloads exercising the containment tier."""
     from nreadspark.ops.images import image_hashes, synthesize_png_corpus
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500),
-        spark,
-        rows=500,
-    )
+    docs = _first_docs(spark, sf_dir, 500)
     media = synthesize_png_corpus(docs.select("doc_id"))
     return image_hashes(media).select(
         "media_ref",
@@ -1892,11 +1880,7 @@ def _q_multimodal_phash_jpeg(spark, sf_dir):
     the header:jpeg counted-not-dropped tier."""
     from nreadspark.ops.images import image_hashes, synthesize_jpeg_corpus
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500),
-        spark,
-        rows=500,
-    )
+    docs = _first_docs(spark, sf_dir, 500)
     media = synthesize_jpeg_corpus(docs.select("doc_id"))
     return image_hashes(media).select(
         "media_ref",
@@ -1920,11 +1904,7 @@ def _q_multimodal_phash_gif(spark, sf_dir):
     hashes equal img://X's, the cross-codec dedup property."""
     from nreadspark.ops.images import image_hashes, synthesize_gif_corpus
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500),
-        spark,
-        rows=500,
-    )
+    docs = _first_docs(spark, sf_dir, 500)
     media = synthesize_gif_corpus(docs.select("doc_id"))
     return image_hashes(media).select(
         "media_ref",
@@ -1952,11 +1932,7 @@ def _q_multimodal_keyframes(spark, sf_dir):
     is hashed)."""
     from nreadspark.ops.images import synthesize_mp4_corpus, video_keyframe_hashes
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500),
-        spark,
-        rows=500,
-    )
+    docs = _first_docs(spark, sf_dir, 500)
     media = synthesize_mp4_corpus(docs.select("doc_id"))
     return video_keyframe_hashes(media).select(
         "media_ref",
@@ -1983,11 +1959,7 @@ def _q_audio_cover_art(spark, sf_dir):
     (no-cover), %89==11 rows are WAVs (no-id3)."""
     from nreadspark.ops.audio import audio_cover_hashes, synthesize_id3_corpus
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300),
-        spark,
-        rows=300,
-    )
+    docs = _first_docs(spark, sf_dir, 300)
     media = synthesize_id3_corpus(docs.select("doc_id"))
     return audio_cover_hashes(media).select(
         "media_ref",
@@ -2019,11 +1991,7 @@ def _q_dedup_cross_container(spark, sf_dir):
         video_keyframe_hashes,
     )
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300),
-        spark,
-        rows=300,
-    ).select("doc_id")
+    docs = _first_docs(spark, sf_dir, 300).select("doc_id")
     # eager localCheckpoint: the banded pair join consumes the hash frame
     # on BOTH sides of its self-join, and exchange reuse does not kick in
     # across the AQE stage boundary -- without this the synth + decode
@@ -2052,11 +2020,7 @@ def _q_dedup_media_survivors(spark, sf_dir):
         video_keyframe_hashes,
     )
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300),
-        spark,
-        rows=300,
-    ).select("doc_id")
+    docs = _first_docs(spark, sf_dir, 300).select("doc_id")
     hdf = image_hashes(synthesize_jpeg_corpus(docs)).unionByName(
         video_keyframe_hashes(synthesize_mp4_corpus(docs))
     )
@@ -2084,11 +2048,7 @@ def _q_dedup_image_phash(spark, sf_dir):
         synthesize_png_corpus,
     )
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500),
-        spark,
-        rows=500,
-    )
+    docs = _first_docs(spark, sf_dir, 500)
     # eager localCheckpoint: the banded self-join would otherwise run the
     # synth + PNG decode pipeline once per join side (no exchange reuse
     # across the AQE stage boundary)
@@ -2114,11 +2074,7 @@ def _q_dedup_image_survivors(spark, sf_dir):
         synthesize_png_corpus,
     )
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500),
-        spark,
-        rows=500,
-    )
+    docs = _first_docs(spark, sf_dir, 500)
     # eager localCheckpoint: hdf feeds BOTH the pair join and the node set;
     # without it the node-set branch re-runs the synth + PNG decode (two
     # mapInArrow crossings -- measured as ~half this query's cost, the
@@ -2158,11 +2114,7 @@ def _q_multimodal_afp(spark, sf_dir):
     truncated payloads exercising containment."""
     from nreadspark.ops.audio import audio_fingerprints, synthesize_wav_corpus
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500),
-        spark,
-        rows=500,
-    )
+    docs = _first_docs(spark, sf_dir, 500)
     media = synthesize_wav_corpus(docs.select("doc_id"))
     return audio_fingerprints(media).select(
         "media_ref",
@@ -2184,11 +2136,7 @@ def _q_multimodal_afp16(spark, sf_dir):
     struct-unpack decode path is verified against ground truth."""
     from nreadspark.ops.audio import audio_fingerprints, synthesize_wav_corpus
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500),
-        spark,
-        rows=500,
-    )
+    docs = _first_docs(spark, sf_dir, 500)
     media = synthesize_wav_corpus(docs.select("doc_id"), bits=16)
     return audio_fingerprints(media).select(
         "media_ref",
@@ -2210,11 +2158,7 @@ def _q_dedup_audio_afp(spark, sf_dir):
     from nreadspark.ops.audio import audio_fingerprints, synthesize_wav_corpus
     from nreadspark.ops.images import near_dup_image_pairs
 
-    docs = _par(
-        _table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500),
-        spark,
-        rows=500,
-    )
+    docs = _first_docs(spark, sf_dir, 500)
     # eager localCheckpoint: the banded self-join would otherwise run the
     # WAV synth + PCM decode pipeline once per join side
     fdf = audio_fingerprints(

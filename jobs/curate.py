@@ -78,50 +78,46 @@ def curate_resumable(
       is given together with any of ``blocked_domains`` (iterable or
       single-column DataFrame; PSL registrable-domain broadcast
       membership), ``max_docs_per_domain`` (anti-domination window cap),
-      ``url_dedup=True`` (canonical-URL keep-minimum-doc_id).  The
-      fingerprint carries the blocklist md5 / cap / dedup flag, so
-      changing any of them recomputes everything downstream.
-
+      ``url_dedup=True`` (canonical-URL keep-minimum-doc_id).
     * ``quality_model`` (an ``ops.quality_model.QualityModel``): model
       scoring right after the rule filter -- drops docs with
-      ``logit <= model_threshold`` (stage ``model_filter``; its params
-      fingerprint includes an md5 of the weights, so swapping models
-      invalidates the checkpoint).
+      ``logit <= model_threshold`` (stage ``model_filter``, keyed by an
+      md5 of the weights).
     * ``decontam_eval`` (a ``(eval_id, <text_col>)`` DataFrame): eval-set
       decontamination right after line cleaning -- strips docs sharing any
-      ``decontam_n``-gram with the eval set (stage ``decontam``;
-      fingerprinted by the eval frame's file listing).
-
+      ``decontam_n``-gram with the eval set (stage ``decontam``, keyed by
+      the eval frame's file listing).
     * ``pii=True``: PII scrubbing (ops.pii fixed-order redaction chain)
       right before the pair graph, so near-dup hashing sees the text that
-      will actually ship (stage ``pii_scrub``; its presence alone is the
-      fingerprint key -- the pattern table is part of the code).
+      will actually ship (stage ``pii_scrub``; the pattern table is part
+      of the code).
 
-    Stage order: quality -> [model_filter] -> line_clean -> [decontam] ->
-    [pii_scrub] -> pairs -> final.  Every stage (optional ones included) commits through
-    the same bucketed parquet + manifest + marker protocol, and each
-    stage's params fold into every DOWNSTREAM fingerprint, so toggling or
-    re-tuning an optional stage recomputes exactly the stages after it.
+    Stage order: [url_hygiene] -> quality -> [model_filter] -> line_clean
+    -> [decontam] -> [pii_scrub] -> pairs -> final.  The stage table below
+    declares each stage's own knobs once; :class:`nreadspark.lineage.StageRunner`
+    derives the checkpoint fingerprints from it and commits every stage.
 
-    ``input_fingerprint`` identifies the INPUT corpus inside every stage's
-    params fingerprint, so rerunning into the same ``--output`` with a
-    different input recomputes instead of short-circuiting on the old
-    corpus's markers.  Defaults to :func:`nreadspark.lineage.input_fingerprint`
-    of ``docs`` (md5 of its source-file listing); pass an explicit string
-    for in-memory inputs with no file lineage (the CLI passes
-    ``synthetic:<n>`` for ``--synthetic``).  ``None`` + no file lineage
-    keeps the pre-round-5 identity-blind behavior (documented gap: two
-    distinct in-memory frames are indistinguishable).
+    ``input_fingerprint`` identifies the INPUT corpus, so rerunning into
+    the same ``--output`` with a different input recomputes instead of
+    short-circuiting on the old corpus's markers.  Defaults to
+    :func:`nreadspark.lineage.input_fingerprint` of ``docs`` (md5 of its
+    source-file listing); pass an explicit string for in-memory inputs
+    with no file lineage (the CLI passes ``synthetic:<n>`` for
+    ``--synthetic``).  ``None`` + no file lineage keeps the identity-blind
+    behavior (documented gap: two distinct in-memory frames are
+    indistinguishable).
 
     Each stage hand-off (quality-kept docs, line-cleaned text, verified
     pairs) is committed under ``<output>/_stages/<stage>/`` exactly like
     the extract job's output (parquet partitioned by the deterministic
     doc-id bucket + one manifest per bucket + an atomic stage marker
-    carrying the stage's stats); the final survivors commit at the output
-    root the same way.  A crash mid-near-dup therefore re-pays only the
+    carrying the stats); the final survivors commit at the output root
+    the same way.  A crash mid-near-dup therefore re-pays only the
     near-dup stage: on the next run completed stages load from their
     committed parquet (stats from the marker), and a PARTIALLY-written
-    stage skips the bucket partitions already committed.
+    stage skips the bucket partitions already committed.  A COMPLETED job
+    returns its committed survivors and stats from the final marker
+    without running any stage.
 
     Stage stats come from the commit where they can: the row counts and
     sums of the frame a stage writes (``boilerplate_lines_removed``,
@@ -137,17 +133,13 @@ def curate_resumable(
     per-category dict.  Those are recomputed over the whole stage input
     when a partial stage resumes.
 
-    Downstream stages always consume the RE-READ committed parquet, never
-    the in-memory plan, so within a single run each stage's lineage is one
-    scan of its predecessor's files -- the same property resume relies on.
-
-    ``fail_after_stage`` ('url_hygiene' | 'quality' | 'model_filter' |
-    'line_clean' | 'decontam' | 'pii_scrub' | 'pairs' | 'final') injects a
-    crash right after that stage's marker commits -- the kill-and-resume
-    test hook; a stage this run does not execute is a ValueError before
-    any work.  Returns ``(surviving_df, stats)`` like :func:`curate`,
-    with ``stats['resumed_stages']`` listing the stages loaded from
-    checkpoint.
+    ``fail_after_stage`` (any stage name of this run) injects a crash
+    right after that stage's marker commits -- the kill-and-resume test
+    hook; a stage this run does not execute is a ValueError before any
+    work.  Returns ``(surviving_df, stats)`` like :func:`curate`, with
+    ``stats['resumed_stages']`` listing the stages loaded from checkpoint
+    and ``stats['stage_wall_s']`` the wall of each stage this run
+    computed.
 
     ``clean_stages=True`` deletes ``<output>/_stages/`` after the final
     marker commits: the checkpoints total roughly three corpus-sized
@@ -174,106 +166,59 @@ def curate_resumable(
         or max_docs_per_domain is not None
         or url_dedup
     )
-    stage_names = (
-        (["url_hygiene"] if hygiene_enabled else [])
-        + ["quality"]
-        + (["model_filter"] if quality_model is not None else [])
-        + ["line_clean"]
-        + (["decontam"] if decontam_eval is not None else [])
-        + (["pii_scrub"] if pii else [])
-        + ["pairs", "final"]
-    )
-    runner = lineage.StageRunner(
-        spark, output_path, stage_names, n_buckets, resume, fail_after_stage
-    )
-
-    if input_fingerprint is None:
-        input_fingerprint = lineage.input_fingerprint(docs)
-    if quality_model is not None:
-        model_fp = hashlib.md5(
-            (",".join(f"{w:.17g}" for w in quality_model.weights)
-             + f"|{quality_model.bias:.17g}|{quality_model.hash_fn}").encode()
-        ).hexdigest()
+    if blocked_domains is None:
+        blocklist_fp = None
+    elif hasattr(blocked_domains, "schema"):  # a DataFrame blocklist
+        blocklist_fp = lineage.input_fingerprint(blocked_domains) or "df"
     else:
-        model_fp = None
-    eval_fp = lineage.input_fingerprint(decontam_eval) if decontam_eval is not None else None
-    uparams = None
-    if hygiene_enabled:
-        if blocked_domains is None:
-            bl_fp = None
-        elif hasattr(blocked_domains, "schema"):  # a DataFrame blocklist
-            bl_fp = lineage.input_fingerprint(blocked_domains) or "df"
-        else:
-            bl_fp = hashlib.md5(
-                "\n".join(sorted(str(d).lower() for d in blocked_domains)).encode()
-            ).hexdigest()
-        uparams = {
-            "url_col": url_col,
-            "blocklist": bl_fp,
-            "url_cap": max_docs_per_domain,
-            "url_dedup": int(url_dedup),
-        }
-        if input_fingerprint is not None:
-            uparams["input"] = input_fingerprint
-    qparams = {"min_words": min_words, "text_col": text_col}
-    # hygiene params fold into EVERY downstream fingerprint only when the
-    # stage is enabled (same conditional-key rule as the other optional
-    # stages: disabled -> byte-identical to the historical chain)
-    if hygiene_enabled:
-        qparams["url_hygiene"] = {
-            k: uparams[k] for k in ("url_col", "blocklist", "url_cap", "url_dedup")
-        }
-    # the input-identity key joins the chain ONLY when a fingerprint
-    # exists: for lineage-less in-memory inputs the params stay
-    # byte-identical to the pre-fingerprint era's, so genuinely
-    # pre-upgrade checkpoints (whose markers lack the key) still resume
-    if input_fingerprint is not None:
-        qparams["input"] = input_fingerprint
-    # optional-stage keys appear in the fingerprint chain ONLY when the
-    # stage is enabled: with both stages off the fingerprints are
-    # byte-identical to the 4-stage pipeline's, so pre-existing checkpoints
-    # resume, and an idle --model-threshold cannot spuriously invalidate
-    # downstream stages
-    mparams = (
-        {**qparams, "model": model_fp, "model_threshold": model_threshold}
-        if quality_model is not None
-        else qparams
+        blocklist_fp = hashlib.md5(
+            "\n".join(sorted(str(d).lower() for d in blocked_domains)).encode()
+        ).hexdigest()
+    model_fp = None if quality_model is None else hashlib.md5(
+        (",".join(f"{w:.17g}" for w in quality_model.weights)
+         + f"|{quality_model.bias:.17g}|{quality_model.hash_fn}").encode()
+    ).hexdigest()
+    eval_fp = None if decontam_eval is None else lineage.input_fingerprint(decontam_eval)
+    stage_table = [
+        ("url_hygiene", hygiene_enabled, {"url_hygiene": {
+            "url_col": url_col, "blocklist": blocklist_fp,
+            "url_cap": max_docs_per_domain, "url_dedup": int(url_dedup),
+        }}),
+        ("quality", True, {"min_words": min_words, "text_col": text_col}),
+        ("model_filter", quality_model is not None,
+         {"model": model_fp, "model_threshold": model_threshold}),
+        ("line_clean", True,
+         {"line_delimiter": line_delimiter, "line_min_repeats": line_min_repeats}),
+        ("decontam", decontam_eval is not None, {"eval": eval_fp, "decontam_n": decontam_n}),
+        ("pii_scrub", pii, {"pii": 1}),
+        ("pairs", True, {"minhash_threshold": minhash_threshold}),
+        ("final", True, {}),
+    ]
+    runner = lineage.StageRunner(
+        spark, output_path,
+        [(name, own) for name, enabled, own in stage_table if enabled],
+        n_buckets, resume, fail_after_stage,
+        input_id=input_fingerprint if input_fingerprint is not None
+        else lineage.input_fingerprint(docs),
     )
-    lparams = {**mparams, "line_delimiter": line_delimiter,
-               "line_min_repeats": line_min_repeats}
-    dparams = (
-        {**lparams, "eval": eval_fp, "decontam_n": decontam_n}
-        if decontam_eval is not None
-        else lparams
-    )
-    sparams = {**dparams, "pii": 1} if pii else dparams
-    pparams = {**sparams, "minhash_threshold": minhash_threshold}
-    fparams = pparams  # keep_canonical adds no knobs of its own
 
-    # short-circuit: a COMPLETED job (final marker present, matching
-    # layout) returns its committed survivors immediately -- without this,
-    # rerunning after the default stage cleanup would recompute all three
-    # upstream stages at full corpus cost and then discard the result
-    # (every final bucket manifest already exists, so nothing would be
-    # written).  The final marker carries the full merged stats dict.
-    done = runner.committed("final", fparams)
-    if done is not None:
-        final_df, fstats = done
-        stats = {"resumed_stages": stage_names, **fstats}
+    def result(final_df, stage_stats, resumed_stages):
+        stats = {"resumed_stages": resumed_stages, "stage_wall_s": runner.stage_wall_s}
+        for own in stage_stats.values():
+            stats.update(own)
         if clean_stages:
-            # a requested cleanup must happen even on the no-work path
-            # (e.g. run 1 used --keep-stages, or crashed between the
-            # final marker and its own cleanup)
+            # a requested cleanup happens on the no-work path too (run 1
+            # used --keep-stages, or crashed before its own cleanup)
             runner.clean_stages()
             stats["stages_cleaned"] = True
         return final_df, stats
 
-    stats: dict = {}
-
-    def stage(name, params, build, **kw):
-        df, stage_stats = runner.run(name, params, build, **kw)
-        stats.update(stage_stats)
-        return df
+    # a COMPLETED job returns its committed survivors: without this,
+    # rerunning after the default stage cleanup would recompute every
+    # upstream stage at full corpus cost and then write nothing
+    done = runner.committed("final")
+    if done is not None:
+        return result(*done, list(runner.params))
 
     # -- optional stage 0: URL hygiene (r7) -------------------------------
     # the cheapest drops run FIRST, before any text-shaped work: blocklist
@@ -301,7 +246,7 @@ def curate_resumable(
                 # the kept count folds into the commit's own row stat
             return cur.select("doc_id", text_col), ustats
 
-        docs = stage("url_hygiene", uparams, build_url_hygiene)
+        docs = runner.run("url_hygiene", build_url_hygiene)
 
     # -- stage 1: quality filter ------------------------------------------
     def build_quality():
@@ -319,7 +264,7 @@ def curate_resumable(
             "quality_drop_reasons": reason_counts,
         }
 
-    kept = stage("quality", qparams, build_quality)
+    kept = runner.run("quality", build_quality)
 
     # -- optional stage: model-based quality filter -----------------------
     if quality_model is not None:
@@ -335,7 +280,7 @@ def curate_resumable(
             filtered = kept.join(scored.filter("keep").select("doc_id"), "doc_id")
             return filtered, {"model_dropped": scored.filter(~F.col("keep")).count()}
 
-        kept = stage("model_filter", mparams, build_model_filter)
+        kept = runner.run("model_filter", build_model_filter)
 
     # -- stage 2: boilerplate line removal --------------------------------
     def build_line_clean():
@@ -351,7 +296,7 @@ def curate_resumable(
             "emptied_by_line_dedup": F.count_if(F.length(text_col) == 0),
         }
 
-    cleaned = stage("line_clean", lparams, build_line_clean)
+    cleaned = runner.run("line_clean", build_line_clean)
 
     # -- optional stage: eval-set decontamination -------------------------
     if decontam_eval is not None:
@@ -367,7 +312,7 @@ def curate_resumable(
             stripped = cleaned.join(bad_ids, "doc_id", "left_anti")
             return stripped, {"decontaminated_dropped": bad_ids.count()}
 
-        cleaned = stage("decontam", dparams, build_decontam)
+        cleaned = runner.run("decontam", build_decontam)
 
     # -- optional stage: PII scrubbing ------------------------------------
     if pii:
@@ -387,7 +332,7 @@ def curate_resumable(
             return replaced, {"pii_redactions": {name: int(totals[name] or 0)
                                                  for name, _, _ in PII_PATTERNS}}
 
-        cleaned = stage("pii_scrub", sparams, build_pii_scrub)
+        cleaned = runner.run("pii_scrub", build_pii_scrub)
 
     # -- stage 3: near-dup pair verification ------------------------------
     def build_pairs():
@@ -400,25 +345,14 @@ def curate_resumable(
         ).select("doc_id_a", "doc_id_b")
         return verified, {"near_dup_pairs": F.count("*")}
 
-    pairs = stage("pairs", pparams, build_pairs, id_col="doc_id_a")
+    pairs = runner.run("pairs", build_pairs, id_col="doc_id_a")
 
     # -- stage 4: survivors (final output at the root) --------------------
-    def build_final():
-        # the final marker carries the FULL merged stats so a completed
-        # job's rerun can short-circuit with them; the runner's
-        # resumed_stages / stage_wall_s describe a particular RUN, not the
-        # output -- they stay out of the committed marker
-        return keep_canonical(cleaned.drop("n_removed"), pairs), {
-            **stats, "surviving_docs": F.count("*"),
-        }
-
-    final_df = stage("final", fparams, build_final)
-    stats = {"resumed_stages": runner.resumed_stages, **stats,
-             "stage_wall_s": runner.stage_wall_s}
-    if clean_stages:
-        runner.clean_stages()
-        stats["stages_cleaned"] = True
-    return final_df, stats
+    final_df = runner.run("final", lambda: (
+        keep_canonical(cleaned.drop("n_removed"), pairs),
+        {"surviving_docs": F.count("*")},
+    ))
+    return result(final_df, runner.stats, runner.resumed_stages)
 
 
 def curate(

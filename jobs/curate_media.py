@@ -19,16 +19,16 @@ oracle-checked operator chain from __spark_entry__.py:
 Every stage runs through ``lineage.StageRunner``, the stage runner the
 text-curation job uses too: it commits under ``<output>/_stages/<stage>/``
 with the same per-bucket manifests + atomic markers as the extraction
-job's bucket writer, and each stage's params fold into every DOWNSTREAM
-fingerprint: re-tuning ``max_hamming`` re-pays the pair join and
-survivors but never the decode.
+job's bucket writer, and derives each stage's fingerprint from the stage
+table below: re-tuning ``max_hamming`` re-pays the pair join and
+survivors but never the decode.  A finished run returns its stats from
+the final marker without running any stage.
 
 Stats: each stage reports its committed row count (``n_hashed``,
 ``n_pairs``, ``n_survivors``), counted in the runner's per-bucket
 manifest aggregation and summed over every committed manifest, so it is
 exact across a resume and costs no Spark job; ``decoder_counts`` is one
-grouping of the committed hashes, run inside the ``final`` build and kept
-in that stage's marker, so a full resume reads it back without a job.
+grouping of the committed hashes, run inside the ``final`` build.
 ``resumed_stages`` lists the stages loaded from checkpoint and
 ``stage_wall_s`` times only the stages this run computed.
 """
@@ -68,26 +68,28 @@ def curate_media_resumable(
     )
 
     runner = lineage.StageRunner(
-        spark, output_path, ("hashes", "pairs", "final"), n_buckets, resume,
-        fail_after_stage,
+        spark, output_path,
+        [
+            ("hashes", {"max_decode_pixels": max_decode_pixels}),
+            ("pairs", {"which": which, "max_hamming": max_hamming, "n_bands": n_bands}),
+            ("final", {}),
+        ],
+        n_buckets, resume, fail_after_stage,
+        input_id=input_fingerprint if input_fingerprint is not None
+        else lineage.input_fingerprint(media),
     )
-    if input_fingerprint is None:
-        input_fingerprint = lineage.input_fingerprint(media)
-    stats: dict = {
-        "resumed_stages": runner.resumed_stages, "stage_wall_s": runner.stage_wall_s,
-    }
-    hparams = {
-        "input": input_fingerprint,
-        "max_decode_pixels": max_decode_pixels,
-    }
 
-    def stage(name, params, build, id_col, count_key, plain_stats=dict):
-        df, stats[name] = runner.run(
-            name, params,
-            lambda: (build(), {count_key: F.count("*"), **plain_stats()}),
-            id_col=id_col,
-        )
-        return df
+    def result(stage_stats, resumed_stages):
+        final = dict(stage_stats["final"])
+        counts = final.pop("decoder_counts")
+        return {
+            "resumed_stages": resumed_stages, "stage_wall_s": runner.stage_wall_s,
+            **stage_stats, "final": final, "decoder_counts": counts,
+        }
+
+    done = runner.committed("final")
+    if done is not None:
+        return result(done[1], list(runner.params))
 
     # --- stage 1: hashes (route by kind; the decode stage) ---------------
     def build_hashes():
@@ -112,24 +114,18 @@ def curate_media_resumable(
         hdf = routed[0]
         for r in routed[1:] + [other]:
             hdf = hdf.unionByName(r)
-        return hdf
+        return hdf, {"n_hashed": F.count("*")}
 
-    hdf = stage("hashes", hparams, build_hashes, "media_ref", "n_hashed")
-
-    def decoder_counts():
-        return {
-            r["decoder"]: r["n"]
-            for r in hdf.groupBy("decoder").agg(F.count("*").alias("n")).collect()
-        }
+    hdf = runner.run("hashes", build_hashes, id_col="media_ref")
 
     # --- stage 2: banded near-dup pairs ----------------------------------
-    pparams = {**hparams, "which": which, "max_hamming": max_hamming, "n_bands": n_bands}
-    pairs = stage(
-        "pairs", pparams,
-        lambda: near_dup_image_pairs(
-            hdf, max_hamming=max_hamming, which=which, n_bands=n_bands
+    pairs = runner.run(
+        "pairs",
+        lambda: (
+            near_dup_image_pairs(hdf, max_hamming=max_hamming, which=which, n_bands=n_bands),
+            {"n_pairs": F.count("*")},
         ),
-        "ref_a", "n_pairs",
+        id_col="ref_a",
     )
 
     # --- stage 3: survivors (final) ---------------------------------------
@@ -138,13 +134,11 @@ def curate_media_resumable(
             hdf.select("media_ref"), pairs,
             id_col="media_ref", src_col="ref_a", dst_col="ref_b",
         )
-        return hdf.join(survivors, "media_ref", "left_semi")
+        counts = hdf.groupBy("decoder").agg(F.count("*").alias("n")).collect()
+        return hdf.join(survivors, "media_ref", "left_semi"), {
+            "n_survivors": F.count("*"),
+            "decoder_counts": {r["decoder"]: r["n"] for r in counts},
+        }
 
-    stage(
-        "final", pparams, build_final, "media_ref", "n_survivors",
-        lambda: {"decoder_counts": decoder_counts()},
-    )
-    # a final marker committed before it carried the counts: group once
-    counts = stats["final"].pop("decoder_counts", None)
-    stats["decoder_counts"] = decoder_counts() if counts is None else counts
-    return stats
+    runner.run("final", build_final, id_col="media_ref")
+    return result(runner.stats, runner.resumed_stages)

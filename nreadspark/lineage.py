@@ -21,7 +21,10 @@ North-rule requirement: "resumable from checkpoint with per-partition lineage
 * a job stage's (``StageRunner``) manifests also carry the stage's
   declared row counts and sums, computed in the same per-bucket
   aggregation; the stage stat is their sum over every committed
-  manifest, so it stays exact across a resume with no extra Spark job.
+  manifest, so it stays exact across a resume with no extra Spark job;
+* ``StageRunner`` derives every stage's checkpoint fingerprint from the
+  job's declared stage table (the previous stage's fingerprint plus the
+  stage's own knobs), so no job builds its chain by hand.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ import time
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .ops.sampling import md5_bucket
 from .pipeline import extract, kernel_metric_aggs
 
 LINEAGE_DIR = "_lineage"
@@ -78,11 +82,7 @@ def md5_bucket_col(n_buckets: int, doc_id_col: str = "doc_id"):
     exactly (DuckDB: ``('0x'||substring(md5(id),1,8))::BIGINT % n``).  The
     same convention as the MinHash md5 mode; use only where oracle parity
     matters -- xxhash64 is the JVM-native production default."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(F.col(doc_id_col).cast("string")), 1, 8), 16, 10)
-        .cast("bigint"),
-        F.lit(n_buckets),
-    ).cast("int")
+    return md5_bucket(F.col(doc_id_col).cast("string"), n_buckets).cast("int")
 
 
 def _manifest_buckets(names) -> set[int]:
@@ -227,6 +227,12 @@ STAGE_MARKER = "_stage.json"
 LAYOUT_MARKER = "_layout.json"
 
 
+def _normalized(params: dict) -> dict:
+    """``params`` as a stored marker returns it (tuples -> lists, sorted
+    keys, float round-trip)."""
+    return json.loads(json.dumps(params, sort_keys=True))
+
+
 def resolve_bucket_layout(
     spark, output_path: str, n_buckets: int, resume: bool, params: dict | None = None
 ) -> set[int]:
@@ -247,9 +253,7 @@ def resolve_bucket_layout(
     manifests present with NO layout marker at all (a pre-layout-marker
     legacy dir whose bucketing we cannot verify)."""
     layout = read_marker(output_path, LAYOUT_MARKER, spark=spark)
-    # normalize through json so the comparison sees exactly what a stored
-    # marker would return (tuples -> lists, key order, float round-trip)
-    params = json.loads(json.dumps(params or {}, sort_keys=True))
+    params = _normalized(params or {})
     if layout is None:
         # manifests without a layout marker: unknowable provenance -- the
         # one-time recompute beats trusting a possibly-mismatched layout
@@ -348,63 +352,55 @@ def _run_summary(started, done, manifests, total=("docs_computed", "docs"), **he
     }
 
 
-def read_bucketed_stage(
-    spark, stage_out: str, n_buckets: int | None = None, params: dict | None = None
-):
-    """(DataFrame, stats) for a COMPLETED stage (marker committed), else
-    None.  A marker recorded under a different ``n_buckets`` layout -- or,
-    when ``params`` is given, under a different computation fingerprint --
-    is treated as not-committed (the rerun recomputes and cleans).
-    Zero-row stages rebuild an empty frame from the recorded schema (an
-    empty partitioned parquet dir has no footers to infer from)."""
-    from pyspark.sql.types import StructType
-
-    marker = read_marker(stage_out, STAGE_MARKER, spark=spark)
-    if marker is None:
-        return None
-    if n_buckets is not None and marker.get("n_buckets") != n_buckets:
-        return None
-    if params is not None:
-        want = json.loads(json.dumps(params, sort_keys=True))
-        if marker.get("params", {}) != want:
-            return None
-    if marker["rows"] == 0:
-        schema = StructType.fromJson(json.loads(marker["schema_json"]))
-        return spark.createDataFrame([], schema), marker["stats"]
-    return spark.read.parquet(stage_out).drop("bucket"), marker["stats"]
-
-
 STAGES_DIR = "_stages"
 
 
 class StageRunner:
     """The per-stage checkpoint cycle of a multi-stage job (the text and
-    media curation jobs), written once.
+    media curation jobs), written once, and the one owner of its stage
+    chain.
+
+    ``stages`` is the ordered stage table of ``(name, own_params)`` this
+    run executes.  A stage's fingerprint is the previous stage's merged
+    with its own params, and the chain is seeded with ``{"input":
+    input_id}`` when ``input_id`` is not None: a fingerprint holds every
+    knob upstream of its stage, so re-tuning, adding or dropping a stage
+    recomputes exactly the stages from it on, and a different input
+    recomputes all of them.
 
     Stage ``final`` commits at ``output_path`` itself, every other stage
-    under ``<output_path>/_stages/<stage>/``.  ``stages`` lists the
-    stages this run executes; ``fail_after_stage`` must name one of them
-    (else ValueError up front, before any work -- a typo must not turn a
-    kill-and-resume test into a silent full run), and :meth:`run` raises
-    right after that stage commits.  ``resumed_stages`` lists the stages
-    loaded from checkpoint, in run order, and ``stage_wall_s`` the wall
-    seconds of each stage this run computed: a wall describes this run's
-    work, so a resumed stage has none."""
+    under ``<output_path>/_stages/<stage>/``.  ``fail_after_stage`` must
+    name a stage of the table (else ValueError up front, before any work
+    -- a typo must not turn a kill-and-resume test into a silent full
+    run), and :meth:`run` raises right after that stage commits.
+    ``stats`` maps every stage run so far to its stats, and each stage's
+    marker records that map up to the stage, so the ``final`` marker
+    holds a finished run's stats whole.  ``resumed_stages`` lists the
+    stages loaded from checkpoint, in run order, and ``stage_wall_s`` the
+    wall seconds of each stage this run computed: a wall describes this
+    run's work, so a resumed stage has none."""
 
     def __init__(
         self, spark, output_path: str, stages, n_buckets: int,
         resume: bool = True, fail_after_stage: str | None = None,
+        input_id: str | None = None,
     ):
-        if fail_after_stage is not None and fail_after_stage not in stages:
+        chain = {} if input_id is None else {"input": input_id}
+        self.params: dict[str, dict] = {}
+        for name, own in stages:
+            chain = {**chain, **own}
+            self.params[name] = _normalized(chain)
+        if fail_after_stage is not None and fail_after_stage not in self.params:
             raise ValueError(
                 f"fail_after_stage={fail_after_stage!r} is not a stage of this "
-                f"run: {list(stages)}"
+                f"run: {list(self.params)}"
             )
         self.spark = spark
         self.output_path = output_path
         self.n_buckets = n_buckets
         self.resume = resume
         self.fail_after_stage = fail_after_stage
+        self.stats: dict[str, dict] = {}
         self.resumed_stages: list[str] = []
         self.stage_wall_s: dict[str, float] = {}
 
@@ -413,16 +409,37 @@ class StageRunner:
             return self.output_path
         return os.path.join(self.output_path, STAGES_DIR, stage)
 
-    def committed(self, stage: str, params: dict):
-        """(frame, stats) of ``stage`` committed under ``params`` and this
-        layout, else None -- always None when not resuming."""
-        if not self.resume:
-            return None
-        return read_bucketed_stage(self.spark, self._path(stage), self.n_buckets, params)
+    def committed(self, stage: str):
+        """``(frame, stats)`` of ``stage`` committed under its fingerprint
+        and this layout, else None -- always None when not resuming.
+        ``stats`` maps the stage and every stage before it to its stats."""
+        return self._read(stage) if self.resume else None
 
-    def run(self, stage: str, params: dict, build, id_col: str = "doc_id"):
-        """``(frame, stats)`` for one stage: its committed checkpoint when
-        resuming, else ``build() -> (frame, stats)`` run inside its own
+    def _read(self, stage: str):
+        """The committed checkpoint of ``stage``, or None when its marker is
+        missing, records another layout or fingerprint, or predates the
+        per-stage stats map.  A zero-row stage rebuilds an empty frame
+        from the recorded schema (an empty partitioned parquet dir has no
+        footers to infer from)."""
+        from pyspark.sql.types import StructType
+
+        path = self._path(stage)
+        marker = read_marker(path, STAGE_MARKER, spark=self.spark)
+        if (
+            marker is None
+            or marker.get("n_buckets") != self.n_buckets
+            or marker.get("params", {}) != self.params[stage]
+            or stage not in marker["stats"]
+        ):
+            return None
+        if marker["rows"] == 0:
+            schema = StructType.fromJson(json.loads(marker["schema_json"]))
+            return self.spark.createDataFrame([], schema), marker["stats"]
+        return self.spark.read.parquet(path).drop("bucket"), marker["stats"]
+
+    def run(self, stage: str, build, id_col: str = "doc_id") -> DataFrame:
+        """The frame of one stage: its committed checkpoint when resuming,
+        else ``build() -> (frame, stats)`` run inside its own
         ``cache_scope`` and committed.  Either way the frame returned is
         the RE-READ committed parquet, never the in-memory plan, so the
         next stage's lineage is one scan of these files -- the property
@@ -432,9 +449,9 @@ class StageRunner:
         The commit is :func:`_write_buckets` over the deterministic bucket
         of ``id_col`` with one manifest per bucket, under
         :func:`resolve_bucket_layout` (a resume under another layout or
-        other ``params`` cleans and recomputes; a bucket whose manifest
-        exists is skipped), then the atomic stage marker (stats, total
-        rows, params, schema) LAST, so a marker's existence proves the
+        fingerprint cleans and recomputes; a bucket whose manifest exists
+        is skipped), then the atomic stage marker (stats, total rows,
+        fingerprint, schema) LAST, so a marker's existence proves the
         whole stage.
 
         A stats value that is a Column aggregate becomes one more field of
@@ -448,7 +465,7 @@ class StageRunner:
         from .ops.dedup import cache_scope
 
         started = time.perf_counter()
-        out = self.committed(stage, params)
+        out = self.committed(stage)
         if out is not None:
             self.resumed_stages.append(stage)
         else:
@@ -458,7 +475,7 @@ class StageRunner:
                 aggs = {k: v for k, v in stats.items() if isinstance(v, Column)}
                 fields = ("docs", *aggs)
                 done = resolve_bucket_layout(
-                    self.spark, path, self.n_buckets, self.resume, params=params
+                    self.spark, path, self.n_buckets, self.resume, params=self.params[stage]
                 )
                 on_disk = {
                     b: read_marker(path, f"bucket={b}.json", spark=self.spark) for b in done
@@ -473,6 +490,7 @@ class StageRunner:
                     *(F.coalesce(agg, F.lit(0)).alias(k) for k, agg in aggs.items()),
                 ) + list(trusted.values())
                 totals = {k: sum(m[k] for m in manifests) for k in fields}
+                self.stats[stage] = {**stats, **{k: totals[k] for k in aggs}}
                 write_marker(
                     path,
                     STAGE_MARKER,
@@ -480,18 +498,19 @@ class StageRunner:
                         "stage": stage,
                         "rows": totals["docs"],
                         "n_buckets": self.n_buckets,
-                        "params": json.loads(json.dumps(params or {}, sort_keys=True)),
+                        "params": self.params[stage],
                         "schema_json": df.schema.json(),
-                        "stats": {**stats, **{k: totals[k] for k in aggs}},
+                        "stats": self.stats,
                         "committed_at": time.time(),
                     },
                     spark=self.spark,
                 )
-            out = read_bucketed_stage(self.spark, path, self.n_buckets, params)
+            out = self._read(stage)
             self.stage_wall_s[stage] = round(time.perf_counter() - started, 3)
+        df, self.stats = out
         if stage == self.fail_after_stage:
             raise RuntimeError(f"injected failure after stage {stage}")
-        return out
+        return df
 
     def clean_stages(self) -> None:
         """Delete every checkpoint but the final output's."""

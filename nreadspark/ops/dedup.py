@@ -32,6 +32,8 @@ from pyspark.sql.types import (
 )
 
 from ..pipeline import map_batches, rows_to_batch
+from .sampling import md5_bucket
+from .textstats import text_fingerprint
 
 # -- persisted-intermediate registry ----------------------------------------
 # Several operators persist frames consumed by 2+ downstream subplans (band
@@ -150,9 +152,8 @@ def _seeds(n: int, salt: int):
 def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact dedup on the normalized-text md5: returns one row per duplicate
     group (hash, group size, canonical doc_id = min)."""
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     return (
-        df.select(F.md5(normalized).alias("text_hash"), "doc_id")
+        df.select(text_fingerprint(text_col).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
@@ -205,13 +206,7 @@ def minhash_signatures(
         # n_hashes * hashing
         seeds = _seeds(n_hashes, salt=k)
         if hash_fn == "md5":
-            hashed = F.transform(
-                "__shingles",
-                lambda s: F.pmod(
-                    F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint"),
-                    F.lit(1 << 31),
-                ),
-            )
+            hashed = F.transform("__shingles", lambda s: md5_bucket(s, 1 << 31))
         else:
             hashed = F.transform(
                 "__shingles", lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 31))
@@ -1488,14 +1483,6 @@ def keep_canonical_exact(
 # ---------------------------------------------------------------------------
 
 
-def _normalized_fingerprint(text_col: str):
-    """md5 of the case-folded, whitespace-normalized text -- the
-    :func:`..textstats.fingerprint` definition, shared so the cross-
-    snapshot join and the single-corpus fingerprint agree byte-for-byte
-    (and the DuckDB oracle can reproduce both)."""
-    return F.md5(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "))
-
-
 def dedup_against_reference(
     corpus: DataFrame,
     reference: DataFrame,
@@ -1516,7 +1503,7 @@ def dedup_against_reference(
     corpus shuffle."""
     ref_fp = (
         reference.select(
-            _normalized_fingerprint(ref_text_col or text_col).alias("__fp")
+            text_fingerprint(ref_text_col or text_col).alias("__fp")
         )
         .distinct()
         .withColumn("__in_ref", F.lit(True))
@@ -1524,7 +1511,7 @@ def dedup_against_reference(
     if broadcast:
         ref_fp = F.broadcast(ref_fp)
     return (
-        corpus.select("doc_id", _normalized_fingerprint(text_col).alias("__fp"))
+        corpus.select("doc_id", text_fingerprint(text_col).alias("__fp"))
         .join(ref_fp, "__fp", "left")
         .select(
             "doc_id", F.coalesce("__in_ref", F.lit(False)).alias("in_reference")
@@ -1574,7 +1561,7 @@ def dedup_against_reference_bloom(
     assembly."""
     ref_fp = (
         reference.select(
-            _normalized_fingerprint(ref_text_col or text_col).alias("__fp")
+            text_fingerprint(ref_text_col or text_col).alias("__fp")
         )
         # NULL reference texts fingerprint to NULL; the exact twin tolerates
         # them via join semantics (NULL never equi-joins), but here a NULL
@@ -1669,7 +1656,7 @@ def dedup_against_reference_bloom(
         bitset[row["__word"]] = row["__bits"]
     bc = corpus.sparkSession.sparkContext.broadcast(bitset)
 
-    fps = corpus.select(*out_cols, _normalized_fingerprint(text_col).alias("__fp"))
+    fps = corpus.select(*out_cols, text_fingerprint(text_col).alias("__fp"))
     tagged_schema = StructType([*fps.schema.fields, StructField("__maybe", BooleanType())])
 
     def bloom_maybe(iterator):

@@ -33,13 +33,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .sampling import md5_bucket
+
 
 def _bucket_col(token, n_buckets: int, hash_fn: str):
     if hash_fn == "md5":
-        return F.pmod(
-            F.conv(F.substring(F.md5(token), 1, 8), 16, 10).cast("bigint"),
-            F.lit(n_buckets),
-        )
+        return md5_bucket(token, n_buckets)
     if hash_fn == "xxhash64":
         return F.pmod(F.xxhash64(token), F.lit(n_buckets))
     raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")

@@ -18,17 +18,22 @@ from a decimal-arithmetic twin.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 _BUCKETS = 1_000_000
 
 
+def md5_bucket(col: Column, n: int) -> Column:
+    """Bigint bucket in [0, n) from the first 8 md5 hex chars of ``col``:
+    the engine-portable hash bucket (DuckDB:
+    ``('0x'||substring(md5(x),1,8))::BIGINT % n``) of sampling, the md5
+    modes of MinHash and the quality model, and lineage's md5 bucketing."""
+    return F.pmod(F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint"), F.lit(n))
+
+
 def _hash_bucket(id_col: str, salt: str):
     """Uniform bucket in [0, 10^6) from md5(salt || id) -- engine-portable."""
-    h = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    return F.pmod(
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint"), F.lit(_BUCKETS)
-    )
+    return md5_bucket(F.concat(F.lit(salt), F.col(id_col).cast("string")), _BUCKETS)
 
 
 def deterministic_sample(

@@ -454,11 +454,17 @@ def lang_id_eval(
     )
 
 
+def text_fingerprint(text_col: str):
+    """md5 of the case-folded, whitespace-normalized text: the one
+    definition behind :func:`fingerprint`, exact dedup and the
+    cross-snapshot join, so they agree byte-for-byte (md5 agrees across
+    Spark and DuckDB, making each oracle-checkable)."""
+    return F.md5(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "))
+
+
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Document fingerprint: md5 of the case-folded, whitespace-normalized
-    text (md5 agrees across Spark and DuckDB, making this oracle-checkable)."""
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    return df.select("doc_id", F.md5(normalized).alias("fingerprint"))
+    """Document fingerprint: :func:`text_fingerprint` per document."""
+    return df.select("doc_id", text_fingerprint(text_col).alias("fingerprint"))
 
 
 def repetition_stats(

@@ -145,3 +145,40 @@ def test_library_has_one_column_url_parse():
             if isinstance(node, ast.Constant) and node.value == r"^([^/?#]*)"
         ]
     assert len(found) == 1, "\n".join(found)
+
+
+def _library_calls(match):
+    """``path:line`` of every call under ``nreadspark/`` that ``match`` accepts."""
+    found = []
+    for path in sorted(glob.glob(os.path.join(REPO, "nreadspark", "**", "*.py"), recursive=True)):
+        tree = ast.parse(open(path, encoding="utf-8").read(), path)
+        found += [
+            f"{os.path.relpath(path, REPO)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and match(node)
+        ]
+    return found
+
+
+def test_library_has_one_md5_prefix_bucket():
+    """``ops.sampling.md5_bucket`` is the one engine-portable bucket on the
+    first 8 md5 hex chars; sampling, lineage and the md5 modes of MinHash
+    and the quality model call it.  A second ``substring(..., 1, 8)`` is a
+    second copy that can drift from the DuckDB oracles' convention."""
+    found = _library_calls(
+        lambda call: ast.unparse(call.func) == "F.substring"
+        and [ast.unparse(a) for a in call.args[1:]] == ["1", "8"]
+    )
+    assert len(found) == 1, "\n".join(found)
+
+
+def test_library_has_one_normalized_text_fingerprint():
+    """``ops.textstats.text_fingerprint`` is the one normalized-text md5:
+    the document fingerprint, exact dedup and the cross-snapshot join must
+    agree byte-for-byte."""
+    found = _library_calls(
+        lambda call: ast.unparse(call.func) == "F.regexp_replace"
+        and "F.lower" in ast.unparse(call.args[0])
+        and "F.trim" in ast.unparse(call.args[0])
+    )
+    assert len(found) == 1, "\n".join(found)
