@@ -34,8 +34,8 @@ This module implements that path end to end:
   slice only; the full index is touched by a scan with the prefix
   filter pushed down.
 * :func:`warc_records_from_ranges` -- execute the plan against local
-  ``.warc.gz`` files: seek to each offset, inflate that single member,
-  parse that single record (per-record containment as everywhere in
+  ``.warc.gz`` files: seek to each offset, stream that single member up
+  to its first record (per-record containment as everywhere in
   ``nreadspark.warc``).  One ``mapInArrow`` pass; plans are grouped per
   file by a partition-local sort so each file opens once per partition.
 
@@ -49,8 +49,6 @@ the crawl-scale ingestion tier in front of it, sibling to
 from __future__ import annotations
 
 import json
-import re
-import zlib
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
@@ -63,14 +61,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .urlutil import (
-    TRACKING_PARAMS,
-    _DEFAULT_PORTS,
-    _HOST_RE,
-    _PORT_RE,
-    _SCHEME_RE,
-    _ABSOLUTE_RE,
-)
+from .urlutil import _url_split
 from .ops.urls import _ABSOLUTE_PATTERN, _path_or_root, _prefixed, with_url_parts
 
 # ---------------------------------------------------------------------------
@@ -88,40 +79,17 @@ def surt_key(url: str) -> str:
     unlike ``canonical_url``, which preserves path case for dedup
     safety; an index key only has to be *consistent*), and userinfo is
     dropped with the port rules of ``canonical_url``."""
-    m = _SCHEME_RE.match(url or "")
-    if not m or not _ABSOLUTE_RE.match(url):
+    parts = _url_split(url)
+    if parts is None:
         return url
-    scheme = m.group(1).lower()
-    rest = url[m.end() :]
-    slash = re.search(r"[/?#]", rest)
-    authority, tail = (rest, "") if slash is None else (
-        rest[: slash.start()], rest[slash.start() :]
-    )
-    host = _HOST_RE.match(authority).group(1).lower()
-    if host.startswith("www."):
-        host = host[4:]
-    pm = _PORT_RE.search(authority)
-    port = pm.group(1) if pm else ""
-    if port == _DEFAULT_PORTS.get(scheme, ""):
-        port = ""
-    # fragment first (a '?' inside '#...' is fragment, not query)
-    tail_nf = re.match(r"^([^#]*)", tail).group(1).lower()
-    path = re.match(r"^([^?]*)", tail_nf).group(1)
-    qm = re.search(r"\?(.*)", tail_nf)
-    query = qm.group(1) if qm else ""
-    path = re.sub(r"/+$", "", path) or "/"
-    kept = sorted(
-        p
-        for p in query.split("&")
-        if p and p.split("=", 1)[0] not in TRACKING_PARAMS
-        and not p.startswith("utm_")
-    )
+    _, host, port, path, params = parts
+    host = host[4:] if host.startswith("www.") else host
     # bracketed IPv6 literals don't label-reverse; keep them verbatim
     rev = host if host.startswith("[") else ",".join(reversed(host.split(".")))
-    out = rev + (f":{port}" if port else "") + ")" + path
-    if kept:
-        out += "?" + "&".join(kept)
-    return out
+    out = rev + (f":{port}" if port else "") + ")" + (path or "/").lower()
+    # lowercase each kept param BEFORE sorting, as the column does
+    kept = sorted(p.lower() for p in params)
+    return out + "?" + "&".join(kept) if kept else out
 
 
 def _surt_key(url: Column) -> tuple:
@@ -288,7 +256,8 @@ def warc_records_from_ranges(
     plans_df: DataFrame, base_dir: str | None = None
 ) -> DataFrame:
     """Execute a fetch plan against local ``.warc.gz`` files: seek to each
-    (offset, length), inflate that ONE gzip member, parse that ONE record.
+    (offset, length), stream that ONE member (gzip or plain) through the
+    streaming WARC parser and stop after its first record.
 
     Scale shape: `repartition` on filename? No -- plans are sorted
     WITHIN each partition by (filename, offset) so a partition's ranges
@@ -325,12 +294,14 @@ def warc_records_from_ranges(
                             fh = open(path, "rb")
                             open_name = path
                         fh.seek(off)
-                        member = fh.read(length)
-                        blob = zlib.decompress(member, zlib.MAX_WBITS | 16)
-                        recs = list(iter_warc_records(blob))
-                        if not recs:
+                        # the member's length comes from the index: stream
+                        # it and stop after its first record, so a member
+                        # that inflates far past that record never
+                        # materializes whole
+                        rec = next(iter_warc_records(fh.read(length)), None)
+                        if rec is None:
                             raise ValueError("no record in member")
-                        hdrs, block, err = recs[0]
+                        hdrs, block, err = rec
                         if err:
                             raise ValueError(err)
                         wtype = (hdrs.get("warc-type") or "").lower()

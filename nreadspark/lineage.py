@@ -418,9 +418,9 @@ class StageRunner:
     def _read(self, stage: str):
         """The committed checkpoint of ``stage``, or None when its marker is
         missing, records another layout or fingerprint, or predates the
-        per-stage stats map.  A zero-row stage rebuilds an empty frame
-        from the recorded schema (an empty partitioned parquet dir has no
-        footers to infer from)."""
+        per-stage stats map.  The files are read with the schema the
+        marker records: inferring it would read a footer in a Spark job of
+        its own, and a zero-row stage has no footer to infer from."""
         from pyspark.sql.types import StructType
 
         path = self._path(stage)
@@ -432,10 +432,8 @@ class StageRunner:
             or stage not in marker["stats"]
         ):
             return None
-        if marker["rows"] == 0:
-            schema = StructType.fromJson(json.loads(marker["schema_json"]))
-            return self.spark.createDataFrame([], schema), marker["stats"]
-        return self.spark.read.parquet(path).drop("bucket"), marker["stats"]
+        schema = StructType.fromJson(json.loads(marker["schema_json"]))
+        return self.spark.read.schema(schema).parquet(path).drop("bucket"), marker["stats"]
 
     def run(self, stage: str, build, id_col: str = "doc_id") -> DataFrame:
         """The frame of one stage: its committed checkpoint when resuming,

@@ -11,6 +11,14 @@ Scale notes (the point of doing this in Spark):
   with array_intersect/array_union (still JVM);
 * embedding near-dup brute force is for small/verification scale -- the LSH
   path in similarity.py is the 100TB route.
+
+Each mechanism the operators share is built once: :func:`_hot_split` (the
+per-bucket size + canonical minimum id that routes oversized buckets off
+the all-pairs path -- MinHash banding, the reference MinHash join, the
+overflow metric and the embedding bucket verification), :func:`_token_sets`
++ :func:`_jaccard` (the token-set Jaccard), :func:`_reference_fps` (the
+reference snapshot's fingerprint set), :func:`_boilerplate_keys` (the
+repeated-line set) and :func:`_key` (the hashed-or-exact join key).
 """
 
 from __future__ import annotations
@@ -166,6 +174,40 @@ def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("__tokens", F.split(F.trim(F.col(text_col)), r"\s+"))
 
 
+def _token_sets(df: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, token_set): each document's distinct whitespace tokens."""
+    return tokenize(df, text_col).select(
+        "doc_id", F.array_distinct("__tokens").alias("token_set")
+    )
+
+
+def _jaccard(a: str, b: str):
+    """Exact Jaccard of two token-set columns, rounded to 6 places."""
+    return F.round(F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)), 6)
+
+
+def _key(exact: bool):
+    """The line / n-gram join key: the value itself with ``exact``, else
+    its 64-bit ``xxhash64`` (fixed-width keys; a birthday collision is
+    expected once the key space nears ~2^32 distinct values)."""
+    return (lambda c: c) if exact else F.xxhash64
+
+
+def _hot_split(df: DataFrame, keys: list[str], id_expr, max_size: int):
+    """``(normal, hot)``: ``df`` without the rows of buckets (``keys``)
+    holding more than ``max_size`` rows, and one row per such bucket with
+    its size ``__n`` and canonical (minimum ``id_expr``) id ``__canon``.
+    The per-bucket count is partially aggregated (map-side combine), so a
+    hot key never concentrates raw rows anywhere; the hot list is tiny by
+    construction and joins as a broadcast."""
+    hot = (
+        df.groupBy(*keys)
+        .agg(F.count("*").alias("__n"), F.min(id_expr).alias("__canon"))
+        .filter(F.col("__n") > max_size)
+    )
+    return df.join(F.broadcast(hot.select(*keys)), keys, "left_anti"), hot
+
+
 def shingles_col(tokens_col: str, k: int = 3):
     """k-token shingles via JVM higher-order functions: for each start
     position, slice k tokens and join."""
@@ -296,16 +338,7 @@ def minhash_lsh_candidates(
     banded = _persist(_banded_signatures(df, text_col, k, n_hashes, n_bands, hash_fn))
 
     if max_bucket_size is not None:
-        # per-bucket size + canonical doc: partial-aggregated (map-side
-        # combine), so the hot key never concentrates raw rows anywhere
-        counts = banded.groupBy("band", "band_key").agg(
-            F.count("*").alias("__n"), F.min("doc_id").alias("__canon")
-        )
-        hot = counts.filter(F.col("__n") > max_bucket_size)
-        # hot-bucket list is tiny by construction -> broadcast both uses
-        normal = banded.join(
-            F.broadcast(hot.select("band", "band_key")), ["band", "band_key"], "left_anti"
-        )
+        normal, hot = _hot_split(banded, ["band", "band_key"], "doc_id", max_bucket_size)
         star = (
             banded.join(F.broadcast(hot), ["band", "band_key"])
             .filter(F.col("doc_id") != F.col("__canon"))
@@ -340,11 +373,8 @@ def lsh_bucket_overflow(
     """Monitoring metric for the hot-bucket guard: one row per oversized
     band bucket with its member count (empty when no bucket overflows)."""
     banded = _banded_signatures(df, text_col, k, n_hashes, n_bands, hash_fn)
-    return (
-        banded.groupBy("band", "band_key")
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket_size)
-    )
+    _, hot = _hot_split(banded, ["band", "band_key"], "doc_id", max_bucket_size)
+    return hot.select("band", "band_key", F.col("__n").cast("bigint").alias("n_docs"))
 
 
 def verify_jaccard(
@@ -354,17 +384,12 @@ def verify_jaccard(
 
     The token-set frame is consumed by BOTH join sides, so it is persisted
     once instead of re-tokenizing the corpus per side."""
-    toks = _persist(tokenize(df, text_col).select(
-        "doc_id", F.array_distinct("__tokens").alias("token_set")
-    ))
+    toks = _persist(_token_sets(df, text_col))
     a = toks.select(F.col("doc_id").alias("doc_id_a"), F.col("token_set").alias("set_a"))
     b = toks.select(F.col("doc_id").alias("doc_id_b"), F.col("token_set").alias("set_b"))
     joined = candidates.join(a, "doc_id_a").join(b, "doc_id_b")
-    jaccard = F.size(F.array_intersect("set_a", "set_b")) / F.size(
-        F.array_union("set_a", "set_b")
-    )
     return (
-        joined.select("doc_id_a", "doc_id_b", F.round(jaccard, 6).alias("jaccard"))
+        joined.select("doc_id_a", "doc_id_b", _jaccard("set_a", "set_b").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -372,22 +397,14 @@ def verify_jaccard(
 def ngram_jaccard_adjacent(df: DataFrame, text_col: str = "text") -> DataFrame:
     """SQL-checkable n-gram Jaccard: similarity of each doc with its
     successor (doc_id + 1) over distinct token sets."""
-    toks = tokenize(df, text_col).select(
-        "doc_id", F.array_distinct("__tokens").alias("token_set")
-    )
+    toks = _token_sets(df, text_col)
     a = toks.select(F.col("doc_id").alias("doc_id_a"), F.col("token_set").alias("set_a"))
     b = toks.select(
         (F.col("doc_id") - 1).alias("doc_id_a"), F.col("token_set").alias("set_b")
     )
-    jaccard = F.size(F.array_intersect("set_a", "set_b")) / F.size(
-        F.array_union("set_a", "set_b")
-    )
-    return (
-        a.join(b, "doc_id_a")
-        .select(
-            F.col("doc_id_a").cast("bigint").alias("doc_id"),
-            F.round(jaccard, 6).alias("jaccard_next"),
-        )
+    return a.join(b, "doc_id_a").select(
+        F.col("doc_id_a").cast("bigint").alias("doc_id"),
+        _jaccard("set_a", "set_b").alias("jaccard_next"),
     )
 
 
@@ -618,10 +635,7 @@ def _verify_bucketed_pairs(
     # -- hot-bucket pre-split: count first (map-side combine), so oversized
     # buckets are routed to the star path BEFORE any collect_list sees them
     key = F.col("id").cast("long") if numeric_ids else F.col("id")
-    counts = sigs.groupBy("bucket").agg(
-        F.count("*").alias("__n"), F.min(key).alias("__canon")
-    )
-    hot = counts.filter(F.col("__n") > max_bucket_size)
+    normal, hot = _hot_split(sigs, ["bucket"], key, max_bucket_size)
     if on_oversized == "error":
         # eager check (one pass over the persisted sigs): failing loudly
         # beats silently losing every non-canonical pair in the bucket
@@ -652,7 +666,6 @@ def _verify_bucketed_pairs(
         .filter(key != F.col("canon_id"))
         .select(F.col("canon_id"), key.alias("member_id"), "vec", "canon_vec")
     )
-    normal = sigs.join(F.broadcast(hot.select("bucket")), ["bucket"], "left_anti")
     packed = normal.groupBy("bucket").agg(
         F.collect_list(key).alias("ids"), F.collect_list("vec").alias("vecs")
     )
@@ -901,6 +914,18 @@ def _line_explode(df: DataFrame, text_col: str, delimiter: str) -> DataFrame:
     ).filter(F.length("line") > 0)
 
 
+def _boilerplate_keys(lines: DataFrame, exact: bool, min_repeats: int) -> DataFrame:
+    """(line_key): the :func:`_key` of every line of ``lines`` (``doc_id,
+    line``) that appears in >= ``min_repeats`` DISTINCT documents -- a
+    hash aggregation with map-side combine."""
+    return (
+        lines.groupBy(_key(exact)(F.col("line")).alias("line_key"))
+        .agg(F.count_distinct("doc_id").alias("n_docs"))
+        .filter(F.col("n_docs") >= min_repeats)
+        .select("line_key")
+    )
+
+
 def line_boilerplate_set_size(
     df: DataFrame,
     text_col: str = "text",
@@ -911,12 +936,7 @@ def line_boilerplate_set_size(
     row ``(boilerplate_set_size bigint)`` = number of distinct lines repeated
     across >= min_repeats documents; line_dedup measures the same set
     before choosing between the broadcast and the shuffle membership join."""
-    lines = _line_explode(df, text_col, delimiter)
-    boiler = (
-        lines.groupBy(F.xxhash64("line").alias("line_key"))
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_repeats)
-    )
+    boiler = _boilerplate_keys(_line_explode(df, text_col, delimiter), False, min_repeats)
     return boiler.agg(F.count("*").cast("bigint").alias("boilerplate_set_size"))
 
 
@@ -965,24 +985,14 @@ def line_dedup(
     """
     lines = _line_explode(df, text_col, delimiter)
 
-    # boilerplate = lines appearing in >= min_repeats DISTINCT documents;
-    # key on the 64-bit hash by default (smaller broadcast), or the string
-    # itself in exact mode
-    key_of = (lambda c: F.col(c)) if exact else (lambda c: F.xxhash64(c))
-    boiler = (
-        lines.groupBy(key_of("line").alias("line_key"))
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_repeats)
-        .select("line_key")
-    )
-
-    # measure-then-choose: the set is persisted so the measuring count and
-    # the membership join share one corpus aggregation pass (registered:
-    # release_caches() frees it after the caller materializes the result)
-    boiler = _persist(boiler)
+    # measure-then-choose: the boilerplate set is persisted so the
+    # measuring count and the membership join share one corpus aggregation
+    # pass (registered: release_caches() frees it after the caller
+    # materializes the result)
+    boiler = _persist(_boilerplate_keys(lines, exact, min_repeats))
     right = F.broadcast(boiler) if boiler.count() <= broadcast_limit else boiler
 
-    flagged = lines.join(right, key_of("line") == boiler["line_key"], "left")
+    flagged = lines.join(right, _key(exact)(F.col("line")) == boiler["line_key"], "left")
 
     # collect_list drops NULLs: removed lines contribute to n_lines but not
     # to the kept-struct list, so one aggregation yields everything
@@ -1140,15 +1150,11 @@ def ngram_duplicate_stats(
     nears ~2^32 distinct n-grams).  Pass ``exact=True`` to key on the gram
     STRING instead -- exact at any scale, at the cost of wide shuffle keys.
     """
-    if exact:
-        gram_key = lambda g: g  # noqa: E731
-    else:
-        gram_key = F.xxhash64  # fixed-width shuffle keys
     # the exploded n-gram frame feeds the doc-frequency aggregation AND the
     # join back -- materialize once instead of rebuilding the (slice +
     # concat_ws + hash) n-gram construction per consumer
     exploded = _persist(
-        _exploded_grams(df.select("doc_id", text_col), text_col, n, gram_key, "h")
+        _exploded_grams(df.select("doc_id", text_col), text_col, n, _key(exact), "h")
     )
 
     docfreq = exploded.groupBy("h").agg(F.count_distinct("doc_id").alias("nd"))
@@ -1223,7 +1229,7 @@ def decontaminate(
     STRING -- exact at any scale, wider join keys.
     """
     eval_text_col = eval_text_col or text_col
-    gram_key = (lambda g: g) if exact else F.xxhash64
+    gram_key = _key(exact)
     eval_grams = _exploded_grams(
         eval_df.select(eval_text_col), eval_text_col, n, gram_key, "__eval_g"
     ).distinct()
@@ -1483,6 +1489,21 @@ def keep_canonical_exact(
 # ---------------------------------------------------------------------------
 
 
+def _reference_fps(reference: DataFrame, text_col: str) -> DataFrame:
+    """(__fp, __in_ref=True): the reference's distinct normalized-text
+    fingerprints.  NULL texts fingerprint to NULL and are dropped: a NULL
+    never equi-joins, and in the Bloom bitset it would flow through the
+    probe explode into a (__word=NULL, __bits=NULL) group and crash the
+    driver-side gather; dropping it first also sizes the bitset on real
+    keys only."""
+    return (
+        reference.select(text_fingerprint(text_col).alias("__fp"))
+        .filter(F.col("__fp").isNotNull())
+        .distinct()
+        .withColumn("__in_ref", F.lit(True))
+    )
+
+
 def dedup_against_reference(
     corpus: DataFrame,
     reference: DataFrame,
@@ -1501,13 +1522,7 @@ def dedup_against_reference(
     payload shuffle.  ``broadcast=True`` opts small references (eval
     sets, licensed lists; MBs of hashes) into a broadcast join with zero
     corpus shuffle."""
-    ref_fp = (
-        reference.select(
-            text_fingerprint(ref_text_col or text_col).alias("__fp")
-        )
-        .distinct()
-        .withColumn("__in_ref", F.lit(True))
-    )
+    ref_fp = _reference_fps(reference, ref_text_col or text_col)
     if broadcast:
         ref_fp = F.broadcast(ref_fp)
     return (
@@ -1559,22 +1574,10 @@ def dedup_against_reference_bloom(
     Spark note: SQL exposes no ``bloom_filter_agg`` in this build (it is
     an internal runtime-filter expression), hence the DataFrame-native
     assembly."""
-    ref_fp = (
-        reference.select(
-            text_fingerprint(ref_text_col or text_col).alias("__fp")
-        )
-        # NULL reference texts fingerprint to NULL; the exact twin tolerates
-        # them via join semantics (NULL never equi-joins), but here a NULL
-        # __fp would flow through h1h2/explode into a (__word=NULL,
-        # __bits=NULL) group and crash the driver-side bitset gather
-        # (bitset[None] = None).  Drop BEFORE the count so the bitset is
-        # sized on real keys only.  Corpus-side NULLs stay safe on either
-        # branch: a NULL probe set can only send the row to the exact join,
-        # where NULL __fp matches nothing -> in_reference=False.
-        .filter(F.col("__fp").isNotNull())
-        .distinct()
-        .withColumn("__in_ref", F.lit(True))
-    )
+    # corpus-side NULL texts stay safe on either branch: a NULL probe set
+    # can only send the row to the exact join, where a NULL __fp matches
+    # nothing -> in_reference=False
+    ref_fp = _reference_fps(reference, ref_text_col or text_col)
     out_cols = [c for c in corpus.columns if c == "doc_id"] or [corpus.columns[0]]
     if expected_ref_count is None:
         # sized by an UNPERSISTED count: persisting ref_fp here would pin
@@ -1751,15 +1754,12 @@ def minhash_near_dups_against_reference(
     ).withColumnRenamed("doc_id", "ref_doc_id"))
 
     if max_ref_bucket_size is not None:
-        counts = ref_bands.groupBy("band", "band_key").agg(
-            F.count("*").alias("__n"), F.min("ref_doc_id").alias("__canon")
+        normal, hot = _hot_split(
+            ref_bands, ["band", "band_key"], "ref_doc_id", max_ref_bucket_size
         )
-        hot = counts.filter(F.col("__n") > max_ref_bucket_size)
-        ref_side = ref_bands.join(
-            F.broadcast(hot.select("band", "band_key")), ["band", "band_key"], "left_anti"
-        ).unionByName(
-            # representative-only rows for hot buckets (canon was removed
-            # by the anti-join above, so no duplicate row)
+        # representative-only rows for hot buckets (canon was removed by
+        # the anti-join, so no duplicate row)
+        ref_side = normal.unionByName(
             hot.select("band", "band_key", F.col("__canon").alias("ref_doc_id"))
         )
     else:
@@ -1770,20 +1770,14 @@ def minhash_near_dups_against_reference(
         .select("doc_id", "ref_doc_id")
         .distinct()
     )
-
-    toks_new = tokenize(corpus, text_col).select(
-        "doc_id", F.array_distinct("__tokens").alias("set_a")
-    )
-    toks_ref = tokenize(ref.withColumnRenamed("ref_doc_id", "doc_id"), text_col).select(
-        F.col("doc_id").alias("ref_doc_id"), F.array_distinct("__tokens").alias("set_b")
-    )
-    jaccard = F.size(F.array_intersect("set_a", "set_b")) / F.size(
-        F.array_union("set_a", "set_b")
+    toks_new = _token_sets(corpus, text_col).withColumnRenamed("token_set", "set_a")
+    toks_ref = _token_sets(ref.withColumnRenamed("ref_doc_id", "doc_id"), text_col).select(
+        F.col("doc_id").alias("ref_doc_id"), F.col("token_set").alias("set_b")
     )
     return (
         cand.join(toks_new, "doc_id")
         .join(toks_ref, "ref_doc_id")
-        .select("doc_id", "ref_doc_id", F.round(jaccard, 6).alias("jaccard"))
+        .select("doc_id", "ref_doc_id", _jaccard("set_a", "set_b").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 

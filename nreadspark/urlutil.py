@@ -73,6 +73,40 @@ def _is_tracking_param(param: str) -> bool:
     return key in TRACKING_PARAMS or key.startswith("utm_")
 
 
+def _url_split(url: str):
+    """``(scheme, host, port, path, params)`` of an absolute URL, else
+    None: scheme and host lowercased (userinfo-aware; a bracketed IPv6
+    literal is the whole host), the scheme's default port dropped, the
+    fragment cut (everything after '#' is fragment per RFC 3986, so a
+    '?' inside it -- SPA hash routes like '#/search?q=x' -- is not a
+    query), trailing slashes off the path (case kept), and the non-empty
+    query params with tracking params removed, unsorted, case kept.  The
+    Python counterpart of ``ops.urls._url_parts``, token for token."""
+    m = _SCHEME_RE.match(url or "")
+    if not m or not _ABSOLUTE_RE.match(url):
+        return None
+    scheme = m.group(1).lower()
+    rest = url[m.end() :]
+    slash = re.search(r"[/?#]", rest)
+    cut = len(rest) if slash is None else slash.start()
+    authority, tail_nf = rest[:cut], re.match(r"^([^#]*)", rest[cut:]).group(1)
+    pm = _PORT_RE.search(authority)
+    port = pm.group(1) if pm else ""
+    if port == _DEFAULT_PORTS.get(scheme, ""):
+        port = ""
+    qm = re.search(r"\?(.*)", tail_nf)
+    params = [
+        p for p in (qm.group(1) if qm else "").split("&") if p and not _is_tracking_param(p)
+    ]
+    return (
+        scheme,
+        _HOST_RE.match(authority).group(1).lower(),
+        port,
+        re.sub(r"/+$", "", re.match(r"^([^?]*)", tail_nf).group(1)),
+        params,
+    )
+
+
 def canonical_url(url: str) -> str:
     """Canonicalize a URL for crawl-level deduplication -- the cheapest
     first-pass dedup a pipeline runs before any content hashing:
@@ -99,33 +133,12 @@ def canonical_url(url: str) -> str:
     dot-segment resolution ('/a/../b'), and 'www.' stripping.  For
     dedup purposes unmerged near-equal URLs only cost a content-dedup
     comparison later; a wrong merge LOSES a document."""
-    m = _SCHEME_RE.match(url or "")
-    if not m or not _ABSOLUTE_RE.match(url):
+    parts = _url_split(url)
+    if parts is None:
         return url
-    scheme = m.group(1).lower()
-    rest = url[m.end() :]
-    slash = re.search(r"[/?#]", rest)
-    authority, tail = (rest, "") if slash is None else (
-        rest[: slash.start()], rest[slash.start() :]
-    )
-    host = _HOST_RE.match(authority).group(1).lower()
-    pm = _PORT_RE.search(authority)
-    port = pm.group(1) if pm else ""
-    if port == _DEFAULT_PORTS.get(scheme, ""):
-        port = ""
-    # fragment first: everything after '#' is fragment per RFC 3986, so a
-    # '?' INSIDE the fragment (SPA hash routes like '#/search?q=x') must
-    # not be read as a query
-    tail_nf = re.match(r"^([^#]*)", tail).group(1)
-    path = re.match(r"^([^?]*)", tail_nf).group(1)
-    qm = re.search(r"\?(.*)", tail_nf)
-    query = qm.group(1) if qm else ""
-    path = re.sub(r"/+$", "", path) or "/"
-    kept = sorted(p for p in query.split("&") if p and not _is_tracking_param(p))
-    out = f"{scheme}://{host}" + (f":{port}" if port else "") + path
-    if kept:
-        out += "?" + "&".join(kept)
-    return out
+    scheme, host, port, path, params = parts
+    out = f"{scheme}://{host}" + (f":{port}" if port else "") + (path or "/")
+    return out + "?" + "&".join(sorted(params)) if params else out
 
 
 def find_base_url(url: str) -> str:

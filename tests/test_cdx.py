@@ -154,6 +154,64 @@ def test_plan_and_ranged_read_end_to_end(spark, tmp_path):
     assert any("page 0 body" in t for t in texts.values())
 
 
+def _ranged_rows(path, ranges):
+    """Rows of ``warc_records_from_ranges`` over ``ranges`` of ``path``, its
+    task run in-process, and the task's peak traced allocation in bytes."""
+    import tracemalloc
+
+    import pyarrow as pa
+
+    from nreadspark.cdx import warc_records_from_ranges
+    from tests.test_spark_pipeline import _CapturedCrossing
+
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "urlkey": ["k"] * len(ranges),
+            "url": ["http://s.com/p"] * len(ranges),
+            "filename": [str(path)] * len(ranges),
+            "offset": [off for off, _ in ranges],
+            "length": [length for _, length in ranges],
+        }
+    )
+    task = warc_records_from_ranges(_CapturedCrossing()).task
+    tracemalloc.start()
+    try:
+        (out,) = task(iter([batch]))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    return out.to_pylist(), peak
+
+
+def test_ranged_read_stops_after_its_one_record(tmp_path):
+    """A ranged read parses the member's first record and stops: a member
+    whose record is followed by 64 MB of zeros (about 64 KB compressed --
+    its length comes from the index, outside input) gives the same row as
+    the bare record, without inflating the tail.  A plain (uncompressed)
+    range parses too."""
+    from nreadspark.warc import _gzip_member, build_http_response, build_warc_record
+
+    payload = b"<html><body><p>ranged</p></body></html>"
+    record = build_warc_record(
+        "response", build_http_response(payload), target_uri="http://s.com/p"
+    )
+    co = zlib.compressobj(9, zlib.DEFLATED, 16 + zlib.MAX_WBITS)
+    padded = co.compress(record) + b"".join(co.compress(bytes(1 << 20)) for _ in range(64))
+    padded += co.flush()
+    bare = _gzip_member(record)
+    path = tmp_path / "r.warc.gz"
+    path.write_bytes(bare + padded + record)
+    ranges = [(0, len(bare)), (len(bare), len(padded)), (len(bare) + len(padded), len(record))]
+    (row,), _ = _ranged_rows(path, ranges[:1])
+    assert row["error"] is None and bytes(row["payload"]) == payload
+    assert row["http_status"] == 200 and row["target_uri"] == "http://s.com/p"
+    (tailed,), peak = _ranged_rows(path, ranges[1:2])
+    assert {**tailed, "offset": 0} == {**row, "offset": 0}
+    assert peak < 16 << 20, peak
+    (plain,), _ = _ranged_rows(path, ranges[2:])
+    assert {**plain, "offset": 0} == {**row, "offset": 0}
+
+
 def test_schedule_frontier_politeness_slots(spark):
     """Per-domain quota: within any slot a domain never exceeds the
     quota; slot order is deterministic; other domains stay in slot 0."""

@@ -294,6 +294,9 @@ class _CapturedCrossing:
     def select(self, *cols):
         return self
 
+    def sortWithinPartitions(self, *cols):
+        return self
+
     def mapInArrow(self, task, schema):
         self.task = task
         return self

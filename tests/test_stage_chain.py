@@ -138,16 +138,17 @@ def test_media_chain_fingerprints_are_pinned(spark, tmp_path):
     }
 
 
-def _jobs_of(spark, fn):
-    """``(fn(), number of Spark jobs it scheduled)``.  The job group is this
-    module's own: the status tracker keeps a group's jobs across calls."""
+def _jobs_of(spark, fn, group="stage_chain_resume"):
+    """``(fn(), number of Spark jobs it scheduled)``.  Each test counts in
+    a job group of its own: the status tracker keeps a group's jobs across
+    calls."""
     sc = spark.sparkContext
-    sc.setJobGroup("stage_chain_resume", "stage_chain_resume")
+    sc.setJobGroup(group, group)
     try:
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup("stage_chain_resume"))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_finished_media_run_reads_back_from_the_final_marker(spark, tmp_path):
@@ -170,3 +171,30 @@ def test_finished_media_run_reads_back_from_the_final_marker(spark, tmp_path):
     assert again["decoder_counts"] == {"unsupported-kind": 2}
     assert again["final"] == {"n_survivors": 2}
     assert n_jobs < 2, n_jobs
+
+
+def test_committed_stage_is_read_with_its_recorded_schema(spark, tmp_path):
+    """Resuming a committed stage schedules no Spark job: its files are read
+    with the schema its marker records, not a footer-inferred one.  A
+    zero-row stage reads back empty with that schema too."""
+    from pyspark.sql import functions as F
+
+    from nreadspark.lineage import StageRunner
+
+    stages = [("full", {"k": 1}), ("empty", {})]
+    df = spark.createDataFrame(
+        [(str(i), i * 1.5, [i]) for i in range(6)], "doc_id string, score double, ids array<int>"
+    )
+
+    def run(runner):
+        full = runner.run("full", lambda: (df, {"docs": F.count("*")}))
+        return full, runner.run("empty", lambda: (full.limit(0), {}))
+
+    run(StageRunner(spark, str(tmp_path / "run"), stages, n_buckets=4))
+    runner = StageRunner(spark, str(tmp_path / "run"), stages, n_buckets=4)
+    (full, empty), n_jobs = _jobs_of(spark, lambda: run(runner), group="stage_read")
+    assert runner.resumed_stages == ["full", "empty"]
+    assert n_jobs == 0, n_jobs
+    assert full.schema == df.schema and empty.schema == df.schema
+    assert sorted(full.collect()) == sorted(df.collect())
+    assert empty.count() == 0 and runner.stats["full"] == {"docs": 6}

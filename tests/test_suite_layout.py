@@ -9,6 +9,8 @@ import ast
 import glob
 import os
 
+import pytest
+
 TESTS = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(TESTS)
 
@@ -182,3 +184,27 @@ def test_library_has_one_normalized_text_fingerprint():
         and "F.trim" in ast.unparse(call.args[0])
     )
     assert len(found) == 1, "\n".join(found)
+
+
+@pytest.mark.parametrize(
+    "mechanism, match",
+    [
+        # ops.dedup._jaccard: the token-set Jaccard
+        ("F.array_union", lambda call: ast.unparse(call.func) == "F.array_union"),
+        # ops.dedup._hot_split: the per-bucket size and canonical member
+        (
+            "alias('__canon')",
+            lambda call: ast.unparse(call.func).endswith(".alias")
+            and [ast.unparse(a) for a in call.args] == ["'__canon'"],
+        ),
+        # urlutil._url_split: the Python URL split
+        ("_HOST_RE.match", lambda call: ast.unparse(call.func) == "_HOST_RE.match"),
+    ],
+)
+def test_library_builds_each_dedup_and_url_mechanism_once(mechanism, match):
+    """The near-duplicate core builds each shared mechanism in one helper
+    of ``ops.dedup`` (the hot-bucket split, the token-set Jaccard), and
+    ``canonical_url`` and ``surt_key`` share one Python URL split.  A
+    second copy of any of them can drift from the first."""
+    found = _library_calls(match)
+    assert len(found) == 1, f"{mechanism}:\n" + "\n".join(found)
