@@ -33,11 +33,14 @@ This module implements that path end to end:
   length) fetch plan.  Shuffle profile: ONE window over the SELECTED
   slice only; the full index is touched by a scan with the prefix
   filter pushed down.
-* :func:`warc_records_from_ranges` -- execute the plan against local
-  ``.warc.gz`` files: seek to each offset, stream that single member up
-  to its first record (per-record containment as everywhere in
-  ``nreadspark.warc``).  One ``mapInArrow`` pass; plans are grouped per
-  file by a partition-local sort so each file opens once per partition.
+* :func:`warc_records_from_ranges` -- execute the plan against the
+  ``.warc.gz`` files: open each range through ``warc._open_warc_path``,
+  seek to its offset and stream at most ``length`` bytes of that single
+  member up to its first record.  The range is a third source of
+  ``nreadspark.warc``'s one record loop, beside blobs and file paths, so
+  parsing, the response split, per-input containment and bounded batches
+  are shared; plans are sorted within partitions by (filename, offset)
+  so each file reads in ascending-seek order.
 
 Format background is public: ISO 28500 (WARC), the pywb / OpenWayback
 CDXJ conventions, and Internet Archive SURT documentation.  No reference
@@ -252,99 +255,50 @@ _RANGE_SCHEMA = StructType(
 )
 
 
+def _range_row(values, idx: int, hdrs, split, err) -> tuple:
+    """A :data:`_RANGE_SCHEMA` row for one planned range ``(urlkey, url,
+    filename, offset, length)``: a response record carries its HTTP status,
+    sorted ``'name: value'`` header lines, content type and encoding, any
+    other record its whole block; a failed range keeps only its plan
+    columns and the error."""
+    if err is not None:
+        return (*values[:4], *(None,) * 7, err)
+    status, http, payload = split
+    http = http or {}
+    return (
+        *values[:4], (hdrs.get("warc-type") or "").lower(),
+        hdrs.get("warc-target-uri"), payload, status,
+        sorted(f"{k}: {v}" for k, v in http.items()),
+        http.get("content-type"), http.get("content-encoding"), None,
+    )
+
+
 def warc_records_from_ranges(
     plans_df: DataFrame, base_dir: str | None = None
 ) -> DataFrame:
-    """Execute a fetch plan against local ``.warc.gz`` files: seek to each
-    (offset, length), stream that ONE member (gzip or plain) through the
-    streaming WARC parser and stop after its first record.
+    """Execute a fetch plan against ``.warc.gz`` files: open each range's
+    file through ``warc._open_warc_path``, seek to its offset and stream at
+    most ``length`` bytes -- that ONE member, gzip or plain -- through
+    WARC's one record loop (``warc._read_records``), stopping after its
+    first record.  ``length`` comes from the index, outside input, so it
+    bounds the bytes read, never a buffer: the task holds one record at a
+    time whatever the index claims.
 
-    Scale shape: `repartition` on filename? No -- plans are sorted
-    WITHIN each partition by (filename, offset) so a partition's ranges
-    per file read in ascending-seek order and each file opens once per
-    partition per run of consecutive rows; the task never holds more
-    than one record decompressed (the round-5 streaming-WARC
-    discipline).  Per-range containment: a bad offset/member yields an
-    ``error`` row, never a task failure.  ``base_dir`` prefixes relative
-    filenames (Common Crawl indexes carry segment-relative paths)."""
-    from .pipeline import map_batches, rows_to_batch
-    from .warc import iter_warc_records, parse_http_response
+    Plans are sorted within each partition by (filename, offset), so a
+    partition's ranges read each file in ascending-seek order.
+    Per-range containment: a bad offset/member yields an ``error`` row,
+    never a task failure.  ``base_dir`` prefixes relative filenames
+    (Common Crawl indexes carry segment-relative paths); a ``file:`` URI
+    works as it does for the file-path source."""
+    from .warc import _RangeReader, _read_records
+
+    def open_range(urlkey, url, filename, offset, length):
+        path = f"{base_dir.rstrip('/')}/{filename}" if base_dir else filename
+        return _RangeReader(path, offset, length)
 
     plans = plans_df.select("urlkey", "url", "filename", "offset", "length")
     plans = plans.sortWithinPartitions("filename", "offset")
-
-    def batches(iterator):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        open_name, fh = None, None
-
-        def rows():
-            nonlocal open_name, fh
-            for batch in iterator:
-                for urlkey, url, fname, off, length in zip(
-                    *(c.to_pylist() for c in batch.columns)
-                ):
-                    path = (
-                        f"{base_dir.rstrip('/')}/{fname}" if base_dir else fname
-                    )
-                    try:
-                        if open_name != path:
-                            if fh is not None:
-                                fh.close()
-                            fh = open(path, "rb")
-                            open_name = path
-                        fh.seek(off)
-                        # the member's length comes from the index: stream
-                        # it and stop after its first record, so a member
-                        # that inflates far past that record never
-                        # materializes whole
-                        rec = next(iter_warc_records(fh.read(length)), None)
-                        if rec is None:
-                            raise ValueError("no record in member")
-                        hdrs, block, err = rec
-                        if err:
-                            raise ValueError(err)
-                        wtype = (hdrs.get("warc-type") or "").lower()
-                        status, http_hdrs, payload = None, [], block
-                        ctype = cenc = None
-                        if wtype == "response":
-                            status, hdr_map, payload = parse_http_response(block)
-                            http_hdrs = sorted(
-                                f"{k}: {v}" for k, v in hdr_map.items()
-                            )
-                            ctype = hdr_map.get("content-type")
-                            cenc = hdr_map.get("content-encoding")
-                        yield (
-                            urlkey, url, fname, off, wtype,
-                            hdrs.get("warc-target-uri"), payload, status,
-                            http_hdrs, ctype, cenc, None,
-                        )
-                    except Exception as exc:  # per-range containment
-                        yield (
-                            urlkey, url, fname, off, *(None,) * 7,
-                            f"{type(exc).__name__}: {exc}"[:200],
-                        )
-
-        arrow_schema = to_arrow_schema(_RANGE_SCHEMA)
-        # try/finally, not a trailing close: if Spark abandons the iterator
-        # early (limit/take, task kill, downstream error) the generator gets
-        # GeneratorExit instead of running to completion, and the open file
-        # handle would otherwise leak until GC -- pinning the WARC file on
-        # some filesystems.
-        buf = []
-        try:
-            for r in rows():
-                buf.append(r)
-                if len(buf) >= 256:
-                    yield rows_to_batch(buf, arrow_schema)
-                    buf = []
-            if buf:
-                yield rows_to_batch(buf, arrow_schema)
-        finally:
-            if fh is not None:
-                fh.close()
-
-    return map_batches(plans, _RANGE_SCHEMA, batches)
+    return _read_records(plans, _RANGE_SCHEMA, open_range, _range_row, first_only=True)
 
 
 def schedule_frontier(
@@ -385,33 +339,19 @@ def extract_cdx_ranges(
     max_doc_bytes: int | None = None,
 ) -> DataFrame:
     """Fetch plan -> extracted span table: the full index-driven path
-    (:func:`plan_fetches` output in, readability spans out).  Keeps
-    HTTP-200 response records and feeds payload bytes + HTTP charset/
-    encoding + target URI into the bytes-extraction tier, exactly the
-    ``extract_warc`` composition.  ``doc_id`` is
+    (:func:`plan_fetches` output in, readability spans out), through the
+    same record-to-extraction step as ``extract_warc``.  ``doc_id`` is
     ``<filename>#<offset>`` -- stable and collision-free (one member per
-    offset), resumable by re-planning minus already-committed ids."""
-    from .pipeline import extract_from_html_bytes
+    offset), resumable by re-planning minus already-committed ids; the URL
+    is the record's target URI, or the plan's."""
+    from .warc import _extract_from_records
 
-    recs = warc_records_from_ranges(plans_df, base_dir=base_dir)
-    pages = recs.filter(
-        F.col("error").isNull()
-        & (F.col("warc_type") == "response")
-        & (F.col("http_status") == 200)
-    ).select(
-        F.concat_ws("#", "filename", F.col("offset").cast("string")).alias("doc_id"),
-        F.coalesce("target_uri", "url").alias("url"),
-        F.col("payload").alias("content"),
-        "content_type",
-        "content_encoding",
-    )
-    return extract_from_html_bytes(
-        pages,
-        bytes_col="content",
-        url_col="url",
-        content_type_col="content_type",
-        content_encoding_col="content_encoding",
-        max_doc_bytes=max_doc_bytes,
+    return _extract_from_records(
+        warc_records_from_ranges(plans_df, base_dir=base_dir),
+        max_doc_bytes,
+        doc_id=("filename", "offset"),
+        url=("target_uri", "url"),
+        payload="payload",
     )
 
 

@@ -690,7 +690,7 @@ def run_cdx_ingestion(
     plan = plan_fetches(cdx_lines(lines), urlkey_prefixes)
     todo = _skip_done(plan.withColumn("bucket", bucket_col(n_buckets, "filename")), done)
     # spread plans across cores; warc_records_from_ranges sorts within
-    # partitions so each file still opens once per partition
+    # partitions so each file's ranges read in ascending-seek order
     todo = todo.drop("bucket").repartition(
         max(n_buckets, spark.sparkContext.defaultParallelism), "filename"
     )

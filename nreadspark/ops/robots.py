@@ -75,7 +75,7 @@ def robots_meta(df: DataFrame, html_col: str = "html") -> DataFrame:
 def _x_robots_values(headers: Column) -> Column:
     """``X-Robots-Tag`` header values from an ``array<string>`` of
     ``'name: value'`` response-header lines (the shape
-    ``warc_records_from_ranges`` / ``parse_http_response`` emit)."""
+    ``warc_records_from_ranges`` emits)."""
     return F.transform(
         F.filter(
             F.coalesce(headers, F.array().cast("array<string>")),
@@ -89,8 +89,10 @@ def x_robots_flags(df: DataFrame, headers_col: str = "http_headers") -> DataFram
     """(doc_id, noindex, nofollow) from archived ``X-Robots-Tag``
     response headers -- the HTTP half of the robots opt-out protocol,
     which the batch engine CAN honor without a fetcher whenever the
-    ingestion path preserves response headers (the WARC/CDX tiers do:
-    ``http_headers`` on every response record).
+    ingestion path preserves response headers (the CDX ranged tier does:
+    ``http_headers`` on every response record of
+    ``cdx.warc_records_from_ranges``; the blob and file-path WARC record
+    tables keep only the content type and encoding).
 
     Directive parsing matches :func:`robots_meta`'s token rule; multiple
     headers union.  Agent-SCOPED directives (``X-Robots-Tag: somebot:

@@ -18,10 +18,20 @@ charset and content-encoding ride in the HTTP headers.
 The parsers are pure stdlib (``zlib``) with per-record error
 containment: a malformed record yields an ``error``-tagged row and
 parsing continues at the next record boundary -- one poisoned record must
-never kill a 100 TB scan.  The Spark surface is ONE ``mapInArrow`` pass
-(`warc_records`), and :func:`extract_warc` pipes the response payloads
-straight into :func:`nreadspark.pipeline.extract_from_html_bytes` --
-bytes cross the Arrow boundary once, strings never do.
+never kill a 100 TB scan.
+
+The Spark surface is ONE record loop (:func:`_read_records`, one
+``mapInArrow`` pass) behind three sources that differ only in how they
+open a byte stream: a blob column (:func:`warc_records`, an in-memory
+stream), a file-path column (:func:`warc_records_from_paths`, through
+:func:`_open_warc_path`) and a CDX fetch plan
+(``cdx.warc_records_from_ranges``: the same opener, a seek, and a reader
+capped at the range's length, stopping after its first record).  The loop
+parses lazily, splits response blocks once, contains errors per input
+and flushes bounded Arrow batches.  :func:`extract_warc` and its path and
+range twins pipe the response payloads straight into
+:func:`nreadspark.pipeline.extract_from_html_bytes` -- bytes cross the
+Arrow boundary once, strings never do.
 
 No reference counterpart (the reference transcodes one in-memory page);
 this is the ingestion tier in front of it at crawl scale.
@@ -30,7 +40,9 @@ this is the ingestion tier in front of it at crawl scale.
 from __future__ import annotations
 
 import hashlib
+import io
 import zlib
+from contextlib import closing
 
 from pyspark.sql.types import (
     BinaryType,
@@ -216,9 +228,9 @@ def _iter_decompressed(read):
 def iter_warc_records_stream(stream):
     """Yield ``(headers: dict[str,str], block: bytes, error: str|None)``
     per record from a FILE-LIKE object (anything with ``.read(n)``) --
-    the streamed twin of :func:`iter_warc_records`, and what the
-    file-path source uses so a ~1 GB ``.warc.gz`` is never materialized
-    (neither compressed nor decompressed) in task memory.
+    the streamed twin of :func:`iter_warc_records`, and what the record
+    loop parses every source with, so a ~1 GB ``.warc.gz`` is never
+    materialized (neither compressed nor decompressed) in task memory.
 
     Buffering is bounded by one complete record (Content-Length framing
     means a record can't be parsed with less) plus one read chunk; the
@@ -342,8 +354,6 @@ def iter_warc_records(blob: bytes):
     a time through the streaming parser): the compressed bytes are already
     resident as a column value, but the 3-5x larger decompressed form
     never materializes whole."""
-    import io
-
     yield from iter_warc_records_stream(io.BytesIO(blob))
 
 
@@ -388,59 +398,10 @@ WARC_RECORDS_SCHEMA = StructType(
 )
 
 
-def _record_row(did, idx: int, hdrs, block, err) -> tuple:
-    """One parsed WARC record as a :data:`WARC_RECORDS_SCHEMA` row (response
-    blocks split into HTTP headers; non-response records -- resource,
-    conversion, warcinfo, request, metadata -- keep their whole block with
-    the WARC-level content type: this table is the reusable routing
-    surface, so no record's bytes are dropped).  With ``err`` set the row
-    carries no payload; ``_record_row(did, -1, {}, b"", err)`` is the
-    failure row of a blob or file that raised."""
-    wtype = hdrs.get("warc-type")
-    status, ctype, cenc, payload = None, None, None, None
-    if err is None and wtype == "response":
-        status, http_hdrs, payload = parse_http_response(block)
-        ctype = http_hdrs.get("content-type")
-        cenc = http_hdrs.get("content-encoding")
-    elif err is None:
-        payload = block
-        ctype = hdrs.get("content-type")
-    return (
-        str(did), idx, wtype, hdrs.get("warc-target-uri"), status, ctype, cenc,
-        payload, err,
-    )
-
-
-def _error(exc: Exception) -> str:
-    return f"{type(exc).__name__}: {exc}"
-
-
-def warc_records(df, warc_col: str = "warc", doc_id_col: str = "doc_id"):
-    """Explode WARC blobs into records: one ``mapInArrow`` pass, one output
-    row per record (response blocks split into HTTP headers -> the
-    ``content_type``/``content_encoding`` columns -- and raw payload
-    bytes).  Malformed records surface as ``error`` rows instead of
-    failing the task.  No shuffle: records inherit the blob partitioning,
-    exactly like the PDF tier."""
-    from .pipeline import map_rows
-
-    def row(did, blob):
-        raw = bytes(blob) if blob is not None else b""
-        rows = []
-        try:
-            for idx, (hdrs, block, err) in enumerate(iter_warc_records(raw)):
-                rows.append(_record_row(did, idx, hdrs, block, err))
-        except Exception as exc:  # blob-level containment
-            rows.append(_record_row(did, -1, {}, b"", _error(exc)))
-        return rows
-
-    return map_rows(df, [doc_id_col, warc_col], WARC_RECORDS_SCHEMA, row)
-
-
-# records per output batch from the file-path source; payload bytes are
-# capped separately so mega-records flush early
-_PATH_BATCH_RECORDS = 512
-_PATH_BATCH_BYTES = 64 << 20
+# output rows per Arrow batch of the record loop; payload bytes are capped
+# separately so mega-records flush early
+_BATCH_RECORDS = 512
+_BATCH_BYTES = 64 << 20
 
 
 def _open_warc_path(path: str):
@@ -448,8 +409,9 @@ def _open_warc_path(path: str):
     ``binaryFile`` source (``file:`` URIs or bare paths).  On a real
     cluster against an object store this is the one hook to swap for the
     store's streaming client (an S3/GCS ranged-GET reader, or Hadoop's
-    ``FileSystem.open`` surfaced through a JVM-side source); everything
-    downstream only needs ``.read(n)``."""
+    ``FileSystem.open`` surfaced through a JVM-side source); the file and
+    range sources open through it, and everything downstream only needs
+    ``.read(n)`` (plus ``.seek`` for a ranged read)."""
     if path.startswith("file:"):
         local = path[5:]
         while local.startswith("//"):
@@ -461,6 +423,116 @@ def _open_warc_path(path: str):
             "(hook _open_warc_path to the cluster's object-store client)"
         )
     return open(path, "rb")
+
+
+class _RangeReader:
+    """At most ``length`` bytes of ``path`` from ``offset``, handed out in
+    the parser's read-chunk pieces: a ranged read's memory is bounded by
+    the record it parses, not by a length an index claims."""
+
+    def __init__(self, path: str, offset: int, length: int):
+        self._left = max(length, 0)
+        self._fh = _open_warc_path(path)
+        try:
+            self._fh.seek(offset)
+        except BaseException:
+            self._fh.close()
+            raise
+
+    def read(self, n: int) -> bytes:
+        data = self._fh.read(min(n, self._left))
+        self._left -= len(data)
+        return data
+
+    def close(self) -> None:
+        self._fh.close()
+
+
+def _read_records(df, schema, open_input, row, first_only: bool = False):
+    """The one WARC record loop, behind the blob, file-path and CDX-range
+    sources: one ``mapInArrow`` pass in which ``open_input(*values)`` opens
+    each input row as a byte stream, :func:`iter_warc_records_stream`
+    parses it lazily, response blocks split into HTTP status, headers and
+    payload, and ``row(values, idx, hdrs, split, err)`` shapes each record
+    into a ``schema`` row.  ``split`` is ``(status, http_headers,
+    payload)`` -- ``http_headers`` None for a non-response record, whose
+    block is the payload -- and None on an error row.
+
+    Per-input containment: an input that fails to open or to read ends
+    with the row ``row(values, -1, {}, None, "<Type>: <message>")``,
+    never a task failure.  ``first_only`` (a ranged read) keeps the
+    stream's first record, and an empty stream becomes an error row.
+    Rows flush in Arrow batches of at most :data:`_BATCH_RECORDS` rows or
+    :data:`_BATCH_BYTES` payload bytes, so neither a million-record file
+    nor a blob of mega-records accumulates in the task."""
+    from .pipeline import map_batches, rows_to_batch
+
+    def records(values):
+        try:
+            with closing(open_input(*values)) as stream:
+                recs = iter_warc_records_stream(stream)
+                if first_only:
+                    recs = [next(recs, ({}, b"", "no record in member"))]
+                for idx, (hdrs, block, err) in enumerate(recs):
+                    if err is not None:
+                        yield row(values, idx, hdrs, None, err), 0
+                        continue
+                    split = (None, None, block)
+                    if (hdrs.get("warc-type") or "").lower() == "response":
+                        split = parse_http_response(block)
+                    yield row(values, idx, hdrs, split, None), len(split[2])
+        except Exception as exc:  # per-input containment
+            yield row(values, -1, {}, None, f"{type(exc).__name__}: {exc}"), 0
+
+    def batches(iterator):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        rows, pending_bytes = [], 0
+        for batch in iterator:
+            for values in zip(*(c.to_pylist() for c in batch.columns)):
+                for out, nbytes in records(values):
+                    rows.append(out)
+                    pending_bytes += nbytes
+                    if len(rows) >= _BATCH_RECORDS or pending_bytes >= _BATCH_BYTES:
+                        yield rows_to_batch(rows, arrow_schema)
+                        rows, pending_bytes = [], 0
+        if rows:
+            yield rows_to_batch(rows, arrow_schema)
+
+    return map_batches(df, schema, batches)
+
+
+def _record_row(values, idx: int, hdrs, split, err) -> tuple:
+    """A :data:`WARC_RECORDS_SCHEMA` row keyed by the input's first value
+    (a blob's doc id or a file path): a response record carries its HTTP
+    status, content type and encoding, any other record its whole block
+    with the WARC-level content type (this table is the reusable routing
+    surface, so no record's bytes are dropped); an error row carries no
+    payload."""
+    status, http, payload = split or (None, {}, None)
+    if http is None:
+        http = {"content-type": hdrs.get("content-type")}
+    return (
+        str(values[0]), idx, hdrs.get("warc-type"), hdrs.get("warc-target-uri"),
+        status, http.get("content-type"), http.get("content-encoding"),
+        payload, err,
+    )
+
+
+def warc_records(df, warc_col: str = "warc", doc_id_col: str = "doc_id"):
+    """Explode WARC blobs into records through the one record loop
+    (:func:`_read_records`): one output row per record (response blocks
+    split into HTTP headers -> the ``content_type``/``content_encoding``
+    columns -- and raw payload bytes).  Malformed records surface as
+    ``error`` rows instead of failing the task.  No shuffle: records
+    inherit the blob partitioning, exactly like the PDF tier."""
+    return _read_records(
+        df.select(doc_id_col, warc_col),
+        WARC_RECORDS_SCHEMA,
+        lambda did, blob: io.BytesIO(blob or b""),
+        _record_row,
+    )
 
 
 def warc_path_table(spark, pattern, glob_filter: str | None = None):
@@ -487,49 +559,16 @@ def warc_path_table(spark, pattern, glob_filter: str | None = None):
 
 
 def warc_records_from_paths(paths_df, path_col: str = "path"):
-    """File-path WARC source: one ``mapInArrow`` pass over PATHS; each
-    task opens its files and STREAMS records through
-    :func:`iter_warc_records_stream`, so neither the compressed ~1 GB
+    """File-path WARC source: each task opens its files through
+    :func:`_open_warc_path` and STREAMS records through the one record
+    loop (:func:`_read_records`), so neither the compressed ~1 GB
     ``.warc.gz`` nor its ~3-5 GB inflation ever materializes in task
-    memory -- peak is one record + one read chunk.  Output rows flush in
-    bounded Arrow batches (:data:`_PATH_BATCH_RECORDS` rows /
-    :data:`_PATH_BATCH_BYTES` payload bytes) so a million-record file
-    doesn't accumulate either.  ``doc_id`` is the file path (composite
+    memory -- peak is one record + one read chunk, and output rows flush
+    in bounded Arrow batches.  ``doc_id`` is the file path (composite
     ``<path>#<idx>`` ids downstream stay collision-free across files)."""
-    from .pipeline import map_batches, rows_to_batch
-
-    def batches(iterator):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(WARC_RECORDS_SCHEMA)
-        for batch in iterator:
-            rows, pending_bytes = [], 0
-            for path in batch.column(0).to_pylist():
-                try:
-                    fh = _open_warc_path(path)
-                except Exception as exc:
-                    rows.append(_record_row(path, -1, {}, b"", _error(exc)))
-                    continue
-                try:
-                    with fh:
-                        for idx, (hdrs, block, err) in enumerate(
-                            iter_warc_records_stream(fh)
-                        ):
-                            row = _record_row(path, idx, hdrs, block, err)
-                            rows.append(row)
-                            pending_bytes += len(row[7] or b"")  # content
-                            if (
-                                len(rows) >= _PATH_BATCH_RECORDS
-                                or pending_bytes >= _PATH_BATCH_BYTES
-                            ):
-                                yield rows_to_batch(rows, arrow_schema)
-                                rows, pending_bytes = [], 0
-                except Exception as exc:  # file-level containment
-                    rows.append(_record_row(path, -1, {}, b"", _error(exc)))
-            if rows:
-                yield rows_to_batch(rows, arrow_schema)
-
-    return map_batches(paths_df.select(path_col), WARC_RECORDS_SCHEMA, batches)
+    return _read_records(
+        paths_df.select(path_col), WARC_RECORDS_SCHEMA, _open_warc_path, _record_row
+    )
 
 
 def extract_warc(
@@ -621,19 +660,31 @@ def extract_warc_paths(paths_df, path_col: str = "path", max_doc_bytes: int | No
     )
 
 
-def _extract_from_records(recs, max_doc_bytes: int | None):
+def _extract_from_records(
+    recs,
+    max_doc_bytes: int | None,
+    doc_id: tuple[str, str] = ("doc_id", "record_idx"),
+    url: tuple[str, ...] = ("url",),
+    payload: str = "content",
+):
+    """Record rows -> extracted span table, for every record source: keep
+    HTTP-200 response records and feed the ``payload`` bytes + HTTP
+    charset/encoding + URL (the first non-NULL of the ``url`` columns) into
+    the bytes-extraction tier.  The output ``doc_id`` is ``<key>#<index>``
+    of the ``doc_id`` column pair."""
     from pyspark.sql import functions as F
 
     from .pipeline import extract_from_html_bytes
 
+    key, index = doc_id
     pages = recs.filter(
         F.col("error").isNull()
         & (F.col("warc_type") == "response")
         & (F.col("http_status") == 200)
     ).select(
-        F.concat_ws("#", "doc_id", F.col("record_idx").cast("string")).alias("doc_id"),
-        F.col("url"),
-        "content",
+        F.concat_ws("#", key, F.col(index).cast("string")).alias("doc_id"),
+        F.coalesce(*url).alias("url"),
+        F.col(payload).alias("content"),
         "content_type",
         "content_encoding",
     )

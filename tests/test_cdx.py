@@ -210,6 +210,12 @@ def test_ranged_read_stops_after_its_one_record(tmp_path):
     assert peak < 16 << 20, peak
     (plain,), _ = _ranged_rows(path, ranges[2:])
     assert {**plain, "offset": 0} == {**row, "offset": 0}
+    # an index length far past the member bounds the bytes read, not a
+    # buffer: 256 MB and 2^40 give the exact-length row in bounded memory
+    for length in (256 << 20, 1 << 40):
+        (over,), peak = _ranged_rows(path, [(0, length)])
+        assert over == row
+        assert peak < 16 << 20, (length, peak)
 
 
 def test_schedule_frontier_politeness_slots(spark):
@@ -333,6 +339,15 @@ def test_run_cdx_ingestion_with_per_file_resume(spark, tmp_path):
     assert s4["buckets_skipped"] == 0
     assert s4["docs_computed"] == 5
     assert spark.read.parquet(out).count() == 5
+
+    # a file: URI base dir opens through the file-path source's opener and
+    # ingests every doc (not an error row per range committed as done)
+    out_uri = str(tmp_path / "out_uri")
+    s5 = run_cdx_ingestion(
+        spark, str(idx), prefixes, out_uri, warc_base_dir=crawl.as_uri(), n_buckets=4
+    )
+    assert s5["docs_computed"] == 30
+    assert spark.read.parquet(out_uri).filter("content_extracted").count() == 30
 
 
 def test_plan_fetches_status_filter_and_all_captures(spark):

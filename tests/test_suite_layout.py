@@ -199,12 +199,33 @@ def test_library_has_one_normalized_text_fingerprint():
         ),
         # urlutil._url_split: the Python URL split
         ("_HOST_RE.match", lambda call: ast.unparse(call.func) == "_HOST_RE.match"),
+        # warc._read_records: the response split of every WARC record source
+        (
+            "parse_http_response",
+            lambda call: ast.unparse(call.func).endswith("parse_http_response"),
+        ),
     ],
 )
 def test_library_builds_each_dedup_and_url_mechanism_once(mechanism, match):
     """The near-duplicate core builds each shared mechanism in one helper
-    of ``ops.dedup`` (the hot-bucket split, the token-set Jaccard), and
-    ``canonical_url`` and ``surt_key`` share one Python URL split.  A
-    second copy of any of them can drift from the first."""
+    of ``ops.dedup`` (the hot-bucket split, the token-set Jaccard),
+    ``canonical_url`` and ``surt_key`` share one Python URL split, and the
+    blob, file-path and CDX-range WARC sources share one response split.
+    A second copy of any of them can drift from the first."""
     found = _library_calls(match)
     assert len(found) == 1, f"{mechanism}:\n" + "\n".join(found)
+
+
+def test_cdx_reads_ranges_through_the_one_warc_record_loop():
+    """``warc._read_records`` is the one WARC record loop: blobs, file paths
+    and CDX ranges differ only in how they open a byte stream.  A batch
+    loop of the CDX tier's own would bring back its own flush, file-handle
+    cache and error rows."""
+    tree = ast.parse(open(os.path.join(REPO, "nreadspark", "cdx.py"), encoding="utf-8").read())
+    found = [
+        f"cdx.py:{node.lineno}: {name}"
+        for node in ast.walk(tree)
+        for name in [getattr(node, "attr", None) or getattr(node, "id", None)]
+        if name in ("map_batches", "rows_to_batch")
+    ]
+    assert found == [], "\n".join(found)

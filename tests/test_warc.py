@@ -86,6 +86,24 @@ def test_spark_record_explode_and_error_containment(spark):
     assert "d" not in by_doc or all(r["error"] for r in by_doc["d"])
 
 
+def test_blob_records_flush_in_bounded_batches():
+    """A blob's records leave the task in batches of at most 512 rows, as a
+    file's do: the blob source runs the same record loop, its task run
+    in-process here."""
+    import pyarrow as pa
+
+    from nreadspark.warc import warc_records
+    from tests.test_spark_pipeline import _CapturedCrossing
+
+    blob = build_warc([(f"http://ex.com/{i}", b"<p>x</p>", "text/html") for i in range(700)])
+    batch = pa.RecordBatch.from_pydict({"doc_id": ["a"], "warc": [blob]})
+    out = list(warc_records(_CapturedCrossing()).task(iter([batch])))
+    assert [b.num_rows for b in out] == [512, 512, 377]  # 1401 records
+    rows = [r for b in out for r in b.to_pylist()]
+    assert [r["record_idx"] for r in rows] == list(range(1401))
+    assert all(r["error"] is None for r in rows)
+
+
 def test_extract_warc_end_to_end_with_header_charset(spark):
     """Multi-record blobs through the full composition: HTTP-200 responses
     extracted under the HTTP-header charset (latin-1 'café' survives), 404
