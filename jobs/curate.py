@@ -68,7 +68,8 @@ def curate_resumable(
     max_docs_per_domain: int | None = None,
     url_dedup: bool = False,
 ):
-    """:func:`curate` with per-stage, per-bucket checkpointed lineage.
+    """The curation chain with per-stage, per-bucket checkpointed lineage
+    (:func:`curate` runs the same chain in memory, without checkpoints).
 
     OPTIONAL stages complete the modern pipeline (all default off, so
     the rule-based 4-stage shape is unchanged):
@@ -149,17 +150,7 @@ def curate_resumable(
     downstream parameters need the upstream stages intact.  The CLI
     defaults to cleaning (pass ``--keep-stages`` to retain).
     """
-    from pyspark.sql import functions as F
-
     from nreadspark import lineage
-    from nreadspark.ops.dedup import (
-        _persist,
-        keep_canonical,
-        line_dedup,
-        minhash_lsh_candidates,
-        verify_jaccard,
-    )
-    from nreadspark.ops.textstats import c4_quality_filter
 
     hygiene_enabled = url_col is not None and (
         blocked_domains is not None
@@ -220,12 +211,51 @@ def curate_resumable(
     if done is not None:
         return result(*done, list(runner.params))
 
+    final_df = _chain(
+        runner.run, docs, text_col, min_words, minhash_threshold, line_min_repeats,
+        line_delimiter, hygiene=hygiene_enabled, url_col=url_col,
+        blocked_domains=blocked_domains, max_docs_per_domain=max_docs_per_domain,
+        url_dedup=url_dedup, quality_model=quality_model,
+        model_threshold=model_threshold, decontam_eval=decontam_eval,
+        decontam_n=decontam_n, pii=pii,
+    )
+    return result(final_df, runner.stats, runner.resumed_stages)
+
+
+def _chain(
+    run, docs, text_col, min_words, minhash_threshold, line_min_repeats,
+    line_delimiter, hygiene=False, url_col=None, blocked_domains=None,
+    max_docs_per_domain=None, url_dedup=False, quality_model=None,
+    model_threshold=0.0, decontam_eval=None, decontam_n=13, pii=False,
+):
+    """The curation chain, written once: every stage build and its order.
+
+    Each stage is ``run(stage, build, id_col) -> DataFrame``, where
+    ``build() -> (frame, stats)`` computes the stage from the frames
+    ``run`` returned for the stages before it; a stats value that is a
+    Column aggregate is ``run``'s to evaluate over the frame.
+    :func:`curate_resumable` passes ``StageRunner.run`` (checkpointed
+    commits), :func:`curate` an in-memory run.  ``hygiene`` turns the
+    url_hygiene stage on; each other optional stage runs when its argument
+    is given (see :func:`curate_resumable`).  Returns the final stage's
+    frame."""
+    from pyspark.sql import functions as F
+
+    from nreadspark.ops.dedup import (
+        _persist,
+        keep_canonical,
+        line_dedup,
+        minhash_lsh_candidates,
+        verify_jaccard,
+    )
+    from nreadspark.ops.textstats import c4_quality_filter
+
     # -- optional stage 0: URL hygiene (r7) -------------------------------
     # the cheapest drops run FIRST, before any text-shaped work: blocklist
     # membership is a broadcast join, the domain cap is one window over
     # (domain, doc_id), URL dedup is one canonical-url aggregation -- all
     # scan-stage string surgery on the (usually short) url column
-    if hygiene_enabled:
+    if hygiene:
         from nreadspark.ops.urls import (
             cap_per_domain,
             drop_blocked_domains,
@@ -246,7 +276,7 @@ def curate_resumable(
                 # the kept count folds into the commit's own row stat
             return cur.select("doc_id", text_col), ustats
 
-        docs = runner.run("url_hygiene", build_url_hygiene)
+        docs = run("url_hygiene", build_url_hygiene)
 
     # -- stage 1: quality filter ------------------------------------------
     def build_quality():
@@ -264,7 +294,7 @@ def curate_resumable(
             "quality_drop_reasons": reason_counts,
         }
 
-    kept = runner.run("quality", build_quality)
+    kept = run("quality", build_quality)
 
     # -- optional stage: model-based quality filter -----------------------
     if quality_model is not None:
@@ -280,7 +310,7 @@ def curate_resumable(
             filtered = kept.join(scored.filter("keep").select("doc_id"), "doc_id")
             return filtered, {"model_dropped": scored.filter(~F.col("keep")).count()}
 
-        kept = runner.run("model_filter", build_model_filter)
+        kept = run("model_filter", build_model_filter)
 
     # -- stage 2: boilerplate line removal --------------------------------
     def build_line_clean():
@@ -296,7 +326,7 @@ def curate_resumable(
             "emptied_by_line_dedup": F.count_if(F.length(text_col) == 0),
         }
 
-    cleaned = runner.run("line_clean", build_line_clean)
+    cleaned = run("line_clean", build_line_clean)
 
     # -- optional stage: eval-set decontamination -------------------------
     if decontam_eval is not None:
@@ -312,7 +342,7 @@ def curate_resumable(
             stripped = cleaned.join(bad_ids, "doc_id", "left_anti")
             return stripped, {"decontaminated_dropped": bad_ids.count()}
 
-        cleaned = runner.run("decontam", build_decontam)
+        cleaned = run("decontam", build_decontam)
 
     # -- optional stage: PII scrubbing ------------------------------------
     if pii:
@@ -332,7 +362,7 @@ def curate_resumable(
             return replaced, {"pii_redactions": {name: int(totals[name] or 0)
                                                  for name, _, _ in PII_PATTERNS}}
 
-        cleaned = runner.run("pii_scrub", build_pii_scrub)
+        cleaned = run("pii_scrub", build_pii_scrub)
 
     # -- stage 3: near-dup pair verification ------------------------------
     def build_pairs():
@@ -345,14 +375,13 @@ def curate_resumable(
         ).select("doc_id_a", "doc_id_b")
         return verified, {"near_dup_pairs": F.count("*")}
 
-    pairs = runner.run("pairs", build_pairs, id_col="doc_id_a")
+    pairs = run("pairs", build_pairs, id_col="doc_id_a")
 
     # -- stage 4: survivors (final output at the root) --------------------
-    final_df = runner.run("final", lambda: (
+    return run("final", lambda: (
         keep_canonical(cleaned.drop("n_removed"), pairs),
         {"surviving_docs": F.count("*")},
     ))
-    return result(final_df, runner.stats, runner.resumed_stages)
 
 
 def curate(
@@ -363,80 +392,42 @@ def curate(
     line_min_repeats: int = 2,
     line_delimiter: str = "\n",
 ):
-    """The pipeline as a reusable function: (surviving_df, stats dict).
+    """The in-memory reference run of the same chain: (surviving_df, stats).
 
-    ``docs`` needs (doc_id, <text_col>).  Stages run in quality -> line-dedup
-    -> near-dup order so the expensive MinHash pass sees only surviving,
-    boilerplate-free text.  ``line_delimiter`` defaults to newline -- real
-    extracted text is line-structured; pass ',' for clause-structured
-    corpora like the synthetic test tables.
-
-    Caching contract: ``cleaned`` and ``verified`` stay persisted because
-    the RETURNED surviving frame is computed from them (the caller's write
-    reuses the cache); the input frame is unpersisted as soon as the
-    line-dedup stage has materialized.  One curate() call per session is
-    the intended shape (it is a job, not a library primitive).
+    ``docs`` needs (doc_id, <text_col>).  The core stages (quality ->
+    line_clean -> pairs -> final) run the builds of
+    :func:`curate_resumable`, so the survivors and every shared stats key
+    match a checkpointed run's.  Each stage's frame is materialized once
+    (``localCheckpoint``, inside the stage's own ``cache_scope``, which
+    releases the build's persisted intermediates) and its Column aggregate
+    stats come from one ``agg`` over that frame.  Nothing goes through
+    ``StageRunner`` or the bucket writer and no file is written or read:
+    this is the checkpoint-free reference a resumed run is compared with.
+    ``line_delimiter`` defaults to newline -- real extracted text is
+    line-structured; pass ',' for clause-structured corpora like the
+    synthetic test tables.
     """
-    from pyspark import StorageLevel
+    from pyspark.sql import Column
     from pyspark.sql import functions as F
 
-    from nreadspark.ops.dedup import (
-        keep_canonical,
-        line_dedup,
-        minhash_lsh_candidates,
-        verify_jaccard,
+    from nreadspark.ops.dedup import cache_scope
+
+    stats: dict = {}
+
+    def run(stage, build, id_col="doc_id"):
+        with cache_scope():
+            df, own = build()
+            df = df.localCheckpoint()
+            aggs = {k: v for k, v in own.items() if isinstance(v, Column)}
+            if aggs:
+                totals = df.agg(*(F.coalesce(v, F.lit(0)).alias(k) for k, v in aggs.items()))
+                own = {**own, **totals.first().asDict()}
+            stats.update(own)
+        return df
+
+    surviving = _chain(
+        run, docs, text_col, min_words, minhash_threshold, line_min_repeats, line_delimiter
     )
-    from nreadspark.ops.textstats import c4_quality_filter
-
-    # each stage's output feeds both the next stage AND its stats action --
-    # persist the hand-off frames so no stage recomputes its predecessors
-    docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    stats: dict = {"input_docs": docs.count()}
-
-    # 1. rule-based quality filter
-    verdicts = c4_quality_filter(docs, text_col=text_col, min_words=min_words)
-    reason_counts = {
-        r["reasons"]: r["n"]
-        for r in verdicts.filter(~F.col("keep"))
-        .groupBy("reasons")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    kept = docs.join(verdicts.filter("keep").select("doc_id"), "doc_id")
-    stats["quality_dropped"] = sum(reason_counts.values())
-    stats["quality_drop_reasons"] = reason_counts
-
-    # 2. cross-document boilerplate line removal (keep every doc: a doc
-    # whose text was ALL boilerplate still flows to the dedup stage)
-    cleaned = line_dedup(
-        kept, text_col=text_col, delimiter=line_delimiter,
-        min_repeats=line_min_repeats, keep_all_docs=True
-    ).select(
-        "doc_id", F.col("clean_text").alias(text_col), "n_removed"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    stats["boilerplate_lines_removed"] = (
-        cleaned.agg(F.sum("n_removed")).collect()[0][0] or 0
-    )
-    docs.unpersist()  # cleaned is materialized; the input cache is done
-    cleaned = cleaned.drop("n_removed")
-
-    # 3. near-dup: candidates -> exact verify -> components -> survivors.
-    # Documents EMPTIED by line dedup are excluded from the pair graph: all
-    # empty texts tokenize identically (Jaccard 1.0), so leaving them in
-    # would cluster mutually unrelated documents as "duplicates" of each
-    # other.  They bypass dedup and survive (stats expose the count so a
-    # caller can drop them).
-    dedup_input = cleaned.filter(F.length(text_col) > 0)
-    stats["emptied_by_line_dedup"] = stats["input_docs"] - stats[
-        "quality_dropped"
-    ] - dedup_input.count()
-    candidates = minhash_lsh_candidates(dedup_input, text_col=text_col)
-    verified = verify_jaccard(
-        dedup_input, candidates, text_col=text_col, threshold=minhash_threshold
-    ).select("doc_id_a", "doc_id_b").persist(StorageLevel.MEMORY_AND_DISK)
-    surviving = keep_canonical(cleaned, verified)
-    stats["near_dup_pairs"] = verified.count()
-    stats["surviving_docs"] = surviving.count()
     return surviving, stats
 
 

@@ -16,9 +16,6 @@ def _is_cached(df) -> bool:
 def test_inner_scope_release_leaves_outer_persists_alone(spark):
     from nreadspark.ops.dedup import _persist, cache_scope, release_caches
 
-    # earlier tests may leave frames in the default scope (curate() keeps
-    # its hand-off frames registered there); start from an empty one
-    release_caches()
     outer = _persist(spark.range(10))
     outer.count()
     assert _is_cached(outer)
@@ -101,6 +98,24 @@ def test_curate_internal_releases_do_not_drain_caller_cache(spark, tmp_path):
 
     assert _is_cached(mine)
     assert release_caches() == 1
+
+
+def test_curate_leaves_the_default_scope_empty(spark):
+    """curate() materializes each stage inside its own cache_scope, so no
+    persisted frame of its stages stays registered in the caller's default
+    scope."""
+    from curate import curate
+
+    from nreadspark.ops.dedup import release_caches
+
+    docs = spark.createDataFrame(
+        [("1", "a perfectly reasonable sentence, with some words, ending well."),
+         ("2", "another quite reasonable sentence, with other words, also ends.")],
+        "doc_id string, text string",
+    )
+    surviving, _ = curate(docs, min_words=3)
+    assert surviving.count() == 2
+    assert release_caches() == 0
 
 
 def test_colmemo_memoizes_and_evicts(spark):

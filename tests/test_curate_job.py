@@ -67,3 +67,52 @@ def test_curate_emptied_docs_are_not_cross_clustered(spark):
     assert stats["emptied_by_line_dedup"] == 3
     assert stats["near_dup_pairs"] == 0  # empties never enter the graph
     assert {r["doc_id"] for r in surviving.collect()} == {"a", "b", "c", "d"}
+
+
+def test_curate_matches_a_fresh_checkpointed_run(spark, tmp_path):
+    """curate() is the in-memory run of curate_resumable's chain: on one
+    corpus both return the same survivors and the same value for every
+    stat they share.  NULL-text documents are input but neither kept nor
+    dropped by the quality filter, so they never count as emptied by line
+    dedup."""
+    from curate import curate, curate_resumable
+
+    body = (
+        "this article has plenty of decent words, proper length, and it "
+        "even terminates with punctuation."
+    )
+    banner = ", Read more here."
+    rows = [
+        ("n1", None),
+        ("n2", None),
+        # near-identical trio -> one survivor (doc 1)
+        ("1", body + banner),
+        ("2", body + " tiny tail." + banner),
+        ("3", body + " other tail." + banner),
+        ("4", "a completely different story, told with other words, ends well" + banner),
+        # only the banner: emptied by line dedup, bypasses the pair graph
+        ("e", "Read more here."),
+        # quality reject
+        ("r", "short"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    kw = dict(min_words=2, minhash_threshold=0.5, line_min_repeats=4, line_delimiter=",")
+
+    surviving, stats = curate(docs, **kw)
+    resumed, rstats = curate_resumable(
+        spark, docs, str(tmp_path / "out"), n_buckets=2, resume=False, **kw
+    )
+
+    def rows_of(df):
+        return {(r["doc_id"], r["text"]) for r in df.collect()}
+
+    assert {d for d, _ in rows_of(surviving)} == {"1", "4", "e"}
+    assert rows_of(surviving) == rows_of(resumed)
+    shared = set(stats) & set(rstats)
+    assert shared == {
+        "input_docs", "quality_dropped", "quality_drop_reasons",
+        "boilerplate_lines_removed", "emptied_by_line_dedup",
+        "near_dup_pairs", "surviving_docs",
+    }
+    assert {k: stats[k] for k in shared} == {k: rstats[k] for k in shared}
+    assert stats["emptied_by_line_dedup"] == 1

@@ -3,7 +3,8 @@ the whole run, the jobs/ directory on sys.path, and no absolute path into a
 particular checkout (a test must exercise the tree it sits in).  Library
 kernels state their Arrow output schema once, as a Spark StructType, build
 nested output columns through ``rows_to_batch`` only, and cross into Python
-through one ``mapInArrow`` call; Column code splits a URL in one place."""
+through one ``mapInArrow`` call; Column code splits a URL in one place;
+the curation job writes its stage chain once."""
 
 import ast
 import glob
@@ -229,3 +230,15 @@ def test_cdx_reads_ranges_through_the_one_warc_record_loop():
         if name in ("map_batches", "rows_to_batch")
     ]
     assert found == [], "\n".join(found)
+
+
+def test_curation_job_builds_its_chain_once():
+    """``jobs/curate.py`` writes its stage builds once (``_chain``):
+    ``curate_resumable`` runs them through the stage runner and ``curate``
+    in memory.  A second call of a stage operator is a second copy of the
+    chain, which can drift from the first."""
+    tree = ast.parse(open(os.path.join(REPO, "jobs", "curate.py"), encoding="utf-8").read())
+    calls = [ast.unparse(node.func) for node in ast.walk(tree) if isinstance(node, ast.Call)]
+    ops = ("c4_quality_filter", "line_dedup", "minhash_lsh_candidates", "verify_jaccard",
+           "keep_canonical")
+    assert {op: calls.count(op) for op in ops} == dict.fromkeys(ops, 1)
