@@ -50,7 +50,7 @@ from pyspark.sql.types import (
 
 from ..pipeline import map_rows
 from .images import _NO_HASH, GRID, HASH_SCHEMA, _block_values, _gated_hashes, _pack
-from .multimodal import _synthesize_media, parse_image_header
+from .multimodal import _riff_chunks, _synthesize_media, parse_image_header
 
 N_WINDOWS = GRID * GRID  # 64 windows -> 64-bit hashes, shared band math
 
@@ -71,26 +71,22 @@ AFP_SCHEMA = StructType(
 def wav_pcm_samples(raw: bytes):
     """(sample_rate, bits, data: bytes) from a RIFF/WAVE payload holding
     8- or 16-bit mono PCM -- the two layouts that cover nearly all real
-    PCM WAV files.  Word-aligned chunk walk (same conventions as
-    ``ops.multimodal.parse_wav_header``); ``ValueError`` for anything
-    else (stereo, float, ADPCM, MP3-in-WAV, truncated chunks) -- the
-    caller's containment tier."""
+    PCM WAV files.  Walks the chunks with ``ops.multimodal._riff_chunks``,
+    the walker ``parse_wav_header`` reads too, but unlike that header
+    parse refuses a chunk shorter than its declared length;
+    ``ValueError`` for anything else (stereo, float, ADPCM, MP3-in-WAV,
+    truncated chunks) -- the caller's containment tier."""
     if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
-    i = 12
     fmt = None
     data = None
-    while i + 8 <= len(raw):
-        ctype = raw[i : i + 4]
-        clen = int.from_bytes(raw[i + 4 : i + 8], "little")
-        body = raw[i + 8 : i + 8 + clen]
+    for ctype, clen, body in _riff_chunks(raw):
         if len(body) < clen:
             raise ValueError("truncated chunk")
         if ctype == b"fmt ":
             fmt = body
         elif ctype == b"data":
             data = body
-        i += 8 + clen + (clen & 1)  # chunks are word-aligned
     if fmt is None or data is None:
         raise ValueError("missing fmt/data chunk")
     if len(fmt) < 16:

@@ -49,13 +49,13 @@ feed the pairs into ``ops.dedup.connected_components`` +
 star-collapse pattern (``ops/dedup.py``) if cluster sizes are unbounded.
 
 The vendored pure-Python decoders (PNG, JPEG, GIF) are the one pixel
-tier; payloads past ``max_decode_pixels`` or undecodable are tagged,
-never dropped.
+tier, reached through ``ops.multimodal``'s codec table (``_decode_luma``)
+that ``extract_media_features`` decodes through too; payloads past
+``max_decode_pixels`` or undecodable are tagged, never dropped.
 
 Reference parity note: NReadability has no image pipeline -- this module
 is part of the beyond-reference training-data surface (brief: multimodal
-columns as first-class); the decode-tier strategy mirrors
-``ops/multimodal.py``.
+columns as first-class).
 """
 
 from __future__ import annotations
@@ -74,15 +74,13 @@ from pyspark.sql.types import (
 )
 
 from ..pipeline import map_rows
-from .jpeg import decode_jpeg_luma_milli
 from .multimodal import (
+    _decode_luma,
     _synthesize_media,
     encode_gif,
     extract_mp4_keyframe,
-    gif_luma_milli,
     parse_image_header,
     parse_mp4_header,
-    png_luma_milli,
 )
 
 GRID = 8  # 8x8 blocks -> 64-bit hashes; fixed so band math stays exact
@@ -284,30 +282,7 @@ def hash_six(w: int, h: int, lumas: list[int]) -> tuple[int, int, int, int, int,
     )
 
 
-# The vendored pixel tiers, by the codec ``parse_image_header`` names: each
-# returns ``(w, h, lumas)`` at scale 1000 or raises ValueError.  JPEG and
-# GIF take the pixel cap THROUGH (defense in depth): the header gate reads
-# the first SOFn / the logical screen, and a corrupt payload could desync
-# that from the frame the decoder actually uses.
-_LUMA_DECODERS = {
-    "png": lambda raw, max_pixels: png_luma_milli(raw),
-    "jpeg": lambda raw, max_pixels: decode_jpeg_luma_milli(raw, max_pixels=max_pixels),
-    "gif": lambda raw, max_pixels: gif_luma_milli(raw, max_pixels=max_pixels),
-}
-
 _NO_HASH = (None,) * 6
-
-
-def _decode_luma(codec: str, raw: bytes, max_pixels: int | None):
-    """``(w, h, lumas)`` through the codec table, or None when the codec
-    has no vendored decoder or its decoder refuses the payload."""
-    decode = _LUMA_DECODERS.get(codec)
-    if decode is None:
-        return None
-    try:
-        return decode(raw, max_pixels)
-    except ValueError:
-        return None
 
 
 def _gated_hashes(raw: bytes, parsed, max_pixels: int | None, tier: str):
@@ -315,9 +290,10 @@ def _gated_hashes(raw: bytes, parsed, max_pixels: int | None, tier: str):
     header parsed as ``(codec, w, h)`` -- the one header gate of every
     perceptual-hash container: ``capped`` past ``max_pixels`` and
     ``too-small`` under the 8x8 grid (header dims, nothing decoded), else
-    decoded through the codec table and hashed as ``<tier>:<codec>`` with
-    the DECODED dims; a recognized codec whose pixels do not decode keeps
-    its header dims as ``header:<codec>``."""
+    decoded through the codec table (``multimodal._decode_luma``) and
+    hashed as ``<tier>:<codec>`` with the DECODED dims; a recognized codec
+    whose pixels do not decode keeps its header dims as
+    ``header:<codec>``."""
     codec, w, h = parsed
     if max_pixels is not None and w * h > max_pixels:
         return (w, h, *_NO_HASH, "capped")
@@ -340,14 +316,16 @@ def image_hashes(
     decoder): perceptual hashes per payload, ONE Arrow crossing, zero
     shuffles.
 
-    Decode tiers per payload (mirrors ``extract_media_features``):
-    ``pixels:png`` / ``pixels:jpeg`` / ``pixels:gif`` via the vendored
-    pure-Python decoders (PNG unfilter; baseline-JPEG Huffman+IDCT in
-    ``ops.jpeg``; GIF LZW); dimensions are read O(1) from the header
-    FIRST, so oversized payloads cost nothing and take ``capped``, images
-    smaller than the 8x8 grid take ``too-small``.  A payload whose codec
-    is recognized but whose pixels the vendored decoders cannot decode
-    (WebP, a scanless progressive JPEG, ...) keeps its parsed dimensions
+    Decode tiers per payload: ``pixels:png`` / ``pixels:jpeg`` /
+    ``pixels:gif`` via the vendored pure-Python decoders (PNG unfilter;
+    baseline+progressive JPEG in ``ops.jpeg``; GIF LZW), through the one
+    codec table ``extract_media_features`` also decodes with
+    (``multimodal._decode_luma``, the cap passed through); dimensions are
+    read O(1) from the header FIRST, so oversized payloads cost nothing
+    and take ``capped``, images smaller than the 8x8 grid take
+    ``too-small``.  A payload whose codec is recognized but whose pixels
+    the vendored decoders cannot decode (WebP, a scanless progressive
+    JPEG, a frame with no pixels, ...) keeps its parsed dimensions
     with ``header:<codec>`` -- counted and cap-able rather than lumped
     ``undecodable``.  Non-hashed rows keep NULL hash columns --
     containment, never a task failure."""

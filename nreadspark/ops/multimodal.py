@@ -6,13 +6,17 @@ crossing (:func:`nreadspark.pipeline.map_rows`, which every media kernel in
 Decode strategy (three tiers, best available wins):
 
 1. **Pixel decode** -- the vendored pure-Python decoders for complete
-   PNGs (``decode_png_pixels``: zlib inflate + spec unfilter incl.
-   Paeth), JPEGs (``ops.jpeg``) and GIFs (LZW) feed the mean-luma feature
-   path (``decoder='pixels:<codec>'``), below a pixel cap.
+   PNGs (``png_luma_milli``: zlib inflate + spec unfilter incl. Paeth),
+   JPEGs (``ops.jpeg``) and GIFs (LZW), all returning integer scale-1000
+   luma through one codec table (``_LUMA_DECODERS`` / ``_decode_luma``),
+   feed the mean-luma feature path (``decoder='pixels:<codec>'``) and
+   the perceptual hashes of ``ops.images``, below one pixel cap.
 2. **Header parse** -- real, spec-compliant stdlib parsers for PNG / GIF /
-   JPEG image headers (``parse_image_header``) and ISO BMFF / MP4 video
-   containers (``parse_mp4_header``: box walk, mvhd timescale+duration,
-   trak count).  This runs everywhere and is what a 100 TB metadata sweep
+   JPEG image headers (``parse_image_header``), ISO BMFF / MP4 video
+   containers (``parse_mp4_header``: mvhd timescale+duration, trak count)
+   and RIFF/WAVE audio (``parse_wav_header``); each container has one
+   walker (``_bmff_boxes``, ``_riff_chunks``) that its other readers
+   share.  This runs everywhere and is what a 100 TB metadata sweep
    would use anyway (full decode of every payload is rarely the goal).
 3. **Stub** -- deterministic sha256-derived fake features for payloads no
    parser understands; video FRAME payloads are always deterministic stubs
@@ -44,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from ..pipeline import map_rows
+from .jpeg import decode_jpeg_luma_milli
 
 MEDIA_SCHEMA = StructType(
     [
@@ -257,11 +262,33 @@ def parse_image_header(raw: bytes):
     return None
 
 
+def _bmff_boxes(raw: bytes, start: int, end: int):
+    """``(box_type, body_start, box_end)`` of each ISO BMFF box in
+    ``raw[start:end]``, as ISO 14496-12 defines the header: a big-endian
+    u32 size, a u64 largesize when that size is 1, and a box running to
+    ``end`` when it is 0.  Stops at a box that undercuts its own header
+    or overruns ``end`` (malformed/truncated: the boxes before it stand)."""
+    i = start
+    while i + 8 <= end:
+        size = int.from_bytes(raw[i : i + 4], "big")
+        hdr = 8
+        if size == 1:  # 64-bit largesize
+            if i + 16 > end:
+                return
+            size = int.from_bytes(raw[i + 8 : i + 16], "big")
+            hdr = 16
+        elif size == 0:  # box runs to the end of its parent
+            size = end - i
+        if size < hdr or i + size > end:
+            return
+        yield raw[i + 4 : i + 8], i + hdr, i + size
+        i += size
+
+
 def parse_mp4_header(raw: bytes):
     """Spec-compliant stdlib ISO BMFF (MP4) metadata parse: a top-level box
-    walk (ftyp / moov / trak / mdat) reading the fields exactly as ISO
-    14496-12 defines them -- big-endian u32 box sizes (u64 when size==1),
-    mvhd version 0/1 timescale+duration, one count per trak box.
+    walk (:func:`_bmff_boxes`; ftyp / moov / trak / mdat) reading mvhd
+    version 0/1 timescale+duration and one count per trak box.
 
     Returns ``(major_brand, timescale, duration_ms, n_tracks)`` or ``None``
     when the payload is not BMFF.  ``duration_ms`` is None for a valid
@@ -275,26 +302,13 @@ def parse_mp4_header(raw: bytes):
 
     def walk(start: int, end: int, depth: int) -> None:
         nonlocal timescale, duration, n_tracks
-        i = start
-        while i + 8 <= end:
-            size = int.from_bytes(raw[i : i + 4], "big")
-            btype = raw[i + 4 : i + 8]
-            hdr = 8
-            if size == 1:  # 64-bit largesize
-                if i + 16 > end:
-                    return
-                size = int.from_bytes(raw[i + 8 : i + 16], "big")
-                hdr = 16
-            elif size == 0:  # box extends to end of file
-                size = end - i
-            if size < hdr or i + size > end:
-                return  # malformed/truncated: stop, keep what we have
+        for btype, body_start, box_end in _bmff_boxes(raw, start, end):
             if btype == b"moov" and depth == 0:
-                walk(i + hdr, i + size, depth + 1)
+                walk(body_start, box_end, depth + 1)
             elif btype == b"trak":
                 n_tracks += 1
             elif btype == b"mvhd":
-                body = raw[i + hdr : i + size]
+                body = raw[body_start:box_end]
                 version = body[0] if body else None
                 # a truncated v1 body must NOT fall through to the v0 field
                 # offsets (that would read the middle of the u64 timestamps
@@ -306,7 +320,6 @@ def parse_mp4_header(raw: bytes):
                 elif version == 0 and len(body) >= 20:
                     timescale = int.from_bytes(body[12:16], "big")
                     duration = int.from_bytes(body[16:20], "big")
-            i += size
 
     walk(0, len(raw), 0)
     duration_ms = None
@@ -320,8 +333,8 @@ def parse_mp4_header(raw: bytes):
 def extract_mp4_keyframe(raw: bytes, max_scan: int = 1 << 22) -> bytes | None:
     """First embedded JPEG frame of an ISO BMFF payload, or None.
 
-    Two box-aware sources (ISO 14496-12 walk, same containment contract
-    as :func:`parse_mp4_header`): ``mdat`` bodies -- an MJPEG track's
+    Two box-aware sources (the :func:`_bmff_boxes` walk of
+    :func:`parse_mp4_header`): ``mdat`` bodies -- an MJPEG track's
     samples are raw ITU-T T.81 frames, so the first SOI..EOI run IS the
     first keyframe -- and ``moov/udta/meta/ilst/covr`` ``data`` bodies
     (cover art).  Inside valid entropy-coded data ``FFD9`` can only be
@@ -344,42 +357,40 @@ def extract_mp4_keyframe(raw: bytes, max_scan: int = 1 << 22) -> bytes | None:
             return None
         return body[j : k + 2]
 
-    found: list[bytes] = []
-
-    def walk(start: int, end: int, depth: int) -> None:
-        i = start
-        while i + 8 <= end and not found:
-            size = int.from_bytes(raw[i : i + 4], "big")
-            btype = raw[i + 4 : i + 8]
-            hdr = 8
-            if size == 1:
-                if i + 16 > end:
-                    return
-                size = int.from_bytes(raw[i + 8 : i + 16], "big")
-                hdr = 16
-            elif size == 0:
-                size = end - i
-            if size < hdr or i + size > end:
-                return
+    def walk(start: int, end: int, depth: int) -> bytes | None:
+        for btype, body_start, box_end in _bmff_boxes(raw, start, end):
+            hit = None
             if btype == b"mdat" or (btype == b"data" and depth > 0):
-                hit = scan_jpeg(raw[i + hdr : min(i + size, i + hdr + max_scan)])
-                if hit is not None:
-                    found.append(hit)
+                hit = scan_jpeg(raw[body_start : min(box_end, body_start + max_scan)])
             elif btype in (b"moov", b"udta", b"ilst", b"covr") and depth < 6:
-                walk(i + hdr, i + size, depth + 1)
+                hit = walk(body_start, box_end, depth + 1)
             elif btype == b"meta" and depth < 6:
                 # FullBox: 4 bytes of version+flags precede the children
-                walk(i + hdr + 4, i + size, depth + 1)
-            i += size
+                hit = walk(body_start + 4, box_end, depth + 1)
+            if hit is not None:
+                return hit
+        return None
 
-    walk(0, len(raw), 0)
-    return found[0] if found else None
+    return walk(0, len(raw), 0)
+
+
+def _riff_chunks(raw: bytes):
+    """``(chunk_type, declared_len, body)`` of each RIFF chunk after the
+    12-byte ``RIFF <size> <form>`` header: little-endian u32 lengths,
+    word-aligned chunks.  ``body`` is short when the payload ends inside
+    the chunk; each caller keeps its own rule for that."""
+    i = 12
+    while i + 8 <= len(raw):
+        clen = int.from_bytes(raw[i + 4 : i + 8], "little")
+        yield raw[i : i + 4], clen, raw[i + 8 : i + 8 + clen]
+        i += 8 + clen + (clen & 1)  # chunks are word-aligned
 
 
 def parse_wav_header(raw: bytes):
-    """Spec-compliant stdlib RIFF/WAVE metadata parse: chunk walk reading
-    the fmt chunk (channels, sample rate, bits) and the data chunk size,
-    exactly as the RIFF container defines them (little-endian u16/u32).
+    """Spec-compliant stdlib RIFF/WAVE metadata parse: a chunk walk
+    (:func:`_riff_chunks`) reading the fmt chunk (channels, sample rate,
+    bits) and the data chunk's declared size, exactly as the RIFF
+    container defines them (little-endian u16/u32).
 
     Returns ``(codec, n_channels, sample_rate, bits_per_sample,
     duration_ms)`` or ``None`` when the payload is not RIFF/WAVE.
@@ -388,18 +399,13 @@ def parse_wav_header(raw: bytes):
     if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
         return None
     n_channels = sample_rate = bits = data_len = None
-    i, end = 12, len(raw)
-    while i + 8 <= end:
-        ctype = raw[i : i + 4]
-        clen = int.from_bytes(raw[i + 4 : i + 8], "little")
-        body = raw[i + 8 : i + 8 + clen]
+    for ctype, clen, body in _riff_chunks(raw):
         if ctype == b"fmt " and len(body) >= 16:
             n_channels = int.from_bytes(body[2:4], "little")
             sample_rate = int.from_bytes(body[4:8], "little")
             bits = int.from_bytes(body[14:16], "little")
         elif ctype == b"data":
             data_len = clen  # declared size, even if payload is truncated
-        i += 8 + clen + (clen & 1)  # chunks are word-aligned
     duration_ms = None
     if data_len is not None and n_channels and sample_rate and bits:
         bytes_per_sec = sample_rate * n_channels * (bits // 8)
@@ -422,13 +428,13 @@ def _paeth(a: int, b: int, c: int) -> int:
 
 
 def _png_unfilter(raw: bytes):
-    """Chunk walk + zlib inflate + per-scanline unfilter shared by
-    :func:`decode_png_pixels` (mean-luma feature tier) and
-    :func:`png_luma_milli` (perceptual-hash tier, ``ops.images``).
+    """Chunk walk + zlib inflate + per-scanline unfilter (None/Sub/Up/
+    Average/Paeth as the PNG spec defines them, Adam7 de-interlaced) of
+    :func:`png_luma_milli`.
 
     Returns ``(w, h, color_type, plte, out)`` where ``out`` is the raw
     unfiltered sample bytes (``w*h*channels``).  Raises ``ValueError``
-    for anything that is not a decodable 8-bit non-interlaced PNG."""
+    for anything that is not a decodable 8-bit PNG."""
     import zlib
 
     if len(raw) < 8 or raw[:8] != b"\x89PNG\r\n\x1a\n":
@@ -543,53 +549,17 @@ def _unfilter_region(data, start: int, w: int, h: int, ch: int):
     return out, h * (stride + 1)
 
 
-def decode_png_pixels(raw: bytes):
-    """Vendored pure-stdlib PNG PIXEL decoder: chunk walk, zlib inflate of
-    the IDAT stream, per-scanline unfilter (None/Sub/Up/Average/Paeth as
-    the PNG spec defines them), palette lookup -- the PNG pixel tier of
-    the mean-luma feature path.  Supports the common 8-bit-depth,
-    non-interlaced formats (gray / RGB / palette / gray+alpha / RGBA).
-
-    Returns ``(codec, width, height, mean_pixel)`` where mean_pixel is the
-    mean ITU-R 601 luma (the formula behind PIL's ``convert('L')``), alpha
-    ignored.  Raises ``ValueError`` for anything that is not a decodable
-    PNG (the caller's tier logic falls back to the header parse)."""
-    w, h, color_type, plte, out = _png_unfilter(raw)
-    # mean ITU-R 601 luma, alpha ignored (what PIL's convert('L') computes)
-    if color_type == 0:
-        total = sum(out)
-        n_px = w * h
-    elif color_type == 4:  # gray + alpha: luma channel only
-        total = sum(out[0::2])
-        n_px = w * h
-    else:
-        if color_type == 3:
-            if plte is None:
-                raise ValueError("palette PNG without PLTE")
-            # out-of-range indices would slice short/empty entries and
-            # corrupt the luma loop -- keep the documented ValueError contract
-            if max(out, default=0) * 3 + 3 > len(plte):
-                raise ValueError("palette index out of PLTE range")
-            rgb = bytearray()
-            for idx in out:
-                rgb += plte[idx * 3 : idx * 3 + 3]
-            out = rgb
-        total = 0.0
-        for i in range(0, len(out), 3 if color_type in (2, 3) else 4):
-            total += (out[i] * 299 + out[i + 1] * 587 + out[i + 2] * 114) / 1000
-        n_px = w * h
-    return ("png", w, h, total / n_px)
-
-
 def png_luma_milli(raw: bytes):
-    """Decode a PNG to an INTEGER per-pixel luma matrix: ``(w, h, lumas)``
-    with ``lumas`` a row-major list of ``r*299 + g*587 + b*114`` values
-    (gray samples count as ``v*1000``, alpha ignored) -- the ITU-R 601
-    luma of :func:`decode_png_pixels` held at scale 1000 WITHOUT the
-    float division, so every downstream consumer (perceptual hashes in
-    ``ops.images``) stays integer-exact and an external SQL oracle can
-    reproduce the arithmetic bit for bit.  Same format support and
-    ``ValueError`` contract as :func:`decode_png_pixels`."""
+    """Vendored pure-stdlib PNG pixel decoder: ``(w, h, lumas)`` with
+    ``lumas`` a row-major list of INTEGER ``r*299 + g*587 + b*114``
+    values (the ITU-R 601 luma behind PIL's ``convert('L')`` at scale
+    1000; gray samples count as ``v*1000``, palettes are looked up, alpha
+    is ignored), so every consumer (the mean-luma features, the
+    perceptual hashes in ``ops.images``) stays integer-exact and an
+    external SQL oracle can reproduce the arithmetic bit for bit.
+    8-bit gray / RGB / palette / gray+alpha / RGBA, interlaced or not;
+    ``ValueError`` for anything else (the caller's tier logic falls back
+    to the header parse)."""
     w, h, color_type, plte, out = _png_unfilter(raw)
     if color_type == 0:
         return w, h, [v * 1000 for v in out]
@@ -762,6 +732,33 @@ def gif_luma_milli(raw: bytes, max_pixels: int | None = None):
     raise ValueError("no image frame")
 
 
+# The vendored pixel tiers, by the codec ``parse_image_header`` names: each
+# returns ``(w, h, lumas)`` at scale 1000 or raises ValueError.  JPEG and
+# GIF take the pixel cap THROUGH (defense in depth): the header gate reads
+# the first SOFn / the logical screen, and a corrupt payload could desync
+# that from the frame the decoder actually uses.
+_LUMA_DECODERS = {
+    "png": lambda raw, max_pixels: png_luma_milli(raw),
+    "jpeg": lambda raw, max_pixels: decode_jpeg_luma_milli(raw, max_pixels=max_pixels),
+    "gif": lambda raw, max_pixels: gif_luma_milli(raw, max_pixels=max_pixels),
+}
+
+
+def _decode_luma(codec: str, raw: bytes, max_pixels: int | None):
+    """``(w, h, lumas)`` through the codec table -- the one pixel decode of
+    the feature and hash tiers -- or None when the codec has no vendored
+    decoder, its decoder refuses the payload, or the frame has no pixels
+    (a 0-wide frame has no mean and no hash grid)."""
+    decode = _LUMA_DECODERS.get(codec)
+    if decode is None:
+        return None
+    try:
+        decoded = decode(raw, max_pixels)
+    except ValueError:
+        return None
+    return decoded if decoded[0] * decoded[1] else None
+
+
 def encode_gif(
     w: int,
     h: int,
@@ -864,8 +861,10 @@ def extract_media_features(
 
     Per payload: sizes + hashes always; then the decode tiers -- the
     vendored pure-Python pixel decoders for complete PNGs /
-    baseline+progressive JPEGs / GIFs (``decoder='pixels:<codec>'``, the
-    mean luma as the feature vector), else the stdlib header parse
+    baseline+progressive JPEGs / GIFs, through the codec table the
+    perceptual-hash tiers of ``ops.images`` use (``_decode_luma``;
+    ``decoder='pixels:<codec>'``, the mean luma ``sum(lumas) / 1000 /
+    (w*h)`` as the feature vector), else the stdlib header parse
     (``decoder='header:<codec>'``), else the deterministic stub
     (``decoder='stub'``).  ``payload_md5`` is md5 of the lowercase hex of
     the bytes (SQL engines generally hash strings, not blobs).
@@ -873,10 +872,12 @@ def extract_media_features(
     ``max_decode_pixels`` caps the VENDORED pixel tier: the stdlib PNG
     unfilter is a pure-Python per-pixel loop, O(width*height*channels), so
     a single camera photo would cost tens of millions of Python iterations
-    and dominate a metadata sweep.  The header (IHDR) dimensions are read
-    first -- O(1) -- and payloads beyond the cap take the header tier
-    instead, keeping header-only sweeps header-speed.  Cap-skipped PNGs are
-    tagged ``decoder='header:png:capped'`` (dimensions real, features the
+    and dominate a metadata sweep.  The header dimensions are read first
+    -- O(1) -- and payloads beyond the cap take the header tier instead,
+    keeping header-only sweeps header-speed; the cap also reaches the JPEG
+    and GIF decoders, so a frame larger than its header claims stops at
+    the cap and keeps the header tier.  Cap-skipped payloads are tagged
+    ``decoder='header:<codec>:capped'`` (dimensions real, features the
     deterministic stub) so consumers can distinguish them from genuinely
     undecodable header-only payloads.  Default 65 536 pixels (256x256);
     pass ``None`` to opt in to full decode at any size."""
@@ -886,44 +887,29 @@ def extract_media_features(
         w = h = feats = dur_ms = None
         decoder = "stub"
         parsed = parse_image_header(raw)
-        png_capped = False
-        if parsed is not None and parsed[0] in ("png", "jpeg", "gif"):
-            # vendored pure-Python pixel tiers (PNG unfilter, T.81 JPEG, GIF
-            # LZW) -- only below the pixel cap, sized from the O(1) header
-            # parse above
-            if max_decode_pixels is None or parsed[1] * parsed[2] <= max_decode_pixels:
-                try:
-                    if parsed[0] == "png":
-                        _, w, h, mean_pixel = decode_png_pixels(raw)
-                    elif parsed[0] == "jpeg":
-                        from .jpeg import decode_jpeg_luma_milli
-
-                        w, h, lumas = decode_jpeg_luma_milli(raw)
-                        mean_pixel = sum(lumas) / 1000 / (w * h)
-                    else:
-                        w, h, lumas = gif_luma_milli(raw)
-                        mean_pixel = sum(lumas) / 1000 / (w * h)
-                    decoder = f"pixels:{parsed[0]}"
-                    feats = [mean_pixel / 255.0] * 8
-                except Exception:
-                    w = h = None
-            else:
+        if parsed is not None:
+            codec, w, h = parsed
+            decoder = f"header:{codec}"
+            capped = max_decode_pixels is not None and w * h > max_decode_pixels
+            if codec in _LUMA_DECODERS and capped:
                 # the cap (not undecodability) skipped the pixel tier:
                 # surface that in the decoder tag so callers can tell capped
                 # payloads (stub features, not mean-luma) from genuinely
                 # header-only ones
-                png_capped = True
-        if w is None:
-            if parsed is not None:
-                codec, w, h = parsed
-                decoder = f"header:{codec}:capped" if png_capped else f"header:{codec}"
-            else:  # container metadata tiers
-                mp4 = parse_mp4_header(raw)
-                wav = None if mp4 else parse_wav_header(raw)
-                if mp4 is not None:
-                    decoder, dur_ms = "header:mp4", mp4[2]
-                elif wav is not None:
-                    decoder, dur_ms = "header:wav", wav[4]
+                decoder += ":capped"
+            else:
+                decoded = _decode_luma(codec, raw, max_decode_pixels)
+                if decoded is not None:
+                    w, h, lumas = decoded
+                    decoder = f"pixels:{codec}"
+                    feats = [sum(lumas) / 1000 / (w * h) / 255.0] * 8
+        else:  # container metadata tiers
+            mp4 = parse_mp4_header(raw)
+            wav = None if mp4 else parse_wav_header(raw)
+            if mp4 is not None:
+                decoder, dur_ms = "header:mp4", mp4[2]
+            elif wav is not None:
+                decoder, dur_ms = "header:wav", wav[4]
         return [
             (
                 ref,

@@ -12,7 +12,7 @@ from nreadspark.ops.images import (
     ghash64,
     synth_pixel,
 )
-from nreadspark.ops.multimodal import decode_png_pixels, png_luma_milli
+from nreadspark.ops.multimodal import png_luma_milli
 
 
 def _lumas(base: int, size: int = 16):
@@ -45,7 +45,8 @@ def _unpack(hi, lo):
 
 def test_round_trip_and_luma_consistency():
     """encode_gray_png -> png_luma_milli recovers the exact pixels, and
-    the integer luma agrees with decode_png_pixels' float mean."""
+    the feature tier's mean ``sum(lumas) / 1000 / (w*h)`` is exactly the
+    pixels' mean."""
     size = 16
     for base in (0, 5, 42, 96):
         px = bytes(
@@ -55,8 +56,7 @@ def test_round_trip_and_luma_consistency():
         w, h, lumas = png_luma_milli(raw)
         assert (w, h) == (size, size)
         assert lumas == [p * 1000 for p in px]
-        _, _, _, mean = decode_png_pixels(raw)
-        assert abs(mean - sum(lumas) / 1000 / (size * size)) < 1e-9
+        assert sum(lumas) / 1000 / (size * size) == sum(px) / (size * size)
 
 
 def test_hash_bits_match_brute_force_including_odd_sizes():

@@ -275,6 +275,9 @@ def test_decoder_containment_fuzz():
         (gif_luma_milli, encode_gif(32, 32, px, pal), {"max_pixels": 1 << 16}),
         (png_luma_milli, encode_gray_png(32, 32, px, interlaced=True), {}),
         (png_luma_milli, encode_gray_png(32, 32, px), {}),
+        # uncapped, as extract_media_features(max_decode_pixels=None) runs them
+        (decode_jpeg_luma_milli, encode_gray_jpeg(32, 32, px), {"max_pixels": None}),
+        (gif_luma_milli, encode_gif(32, 32, px, pal), {"max_pixels": None}),
     ]
 
     def mutate(base):

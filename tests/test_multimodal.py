@@ -113,44 +113,49 @@ def make_png_pixels(rows: list[bytes], ch: int, color_type: int, filters: list[i
     return b"\x89PNG\r\n\x1a\n" + chunks
 
 
+def png_mean(raw: bytes):
+    """``(w, h, mean ITU-R 601 luma)`` of a PNG through ``png_luma_milli``
+    -- the feature tier's ``sum(lumas) / 1000 / (w*h)``."""
+    from nreadspark.ops.multimodal import png_luma_milli
+
+    w, h, lumas = png_luma_milli(raw)
+    return w, h, sum(lumas) / 1000 / (w * h)
+
+
 def test_png_pixel_decode_all_filters():
     """The vendored decoder must invert every PNG filter type (incl. Paeth)."""
-    from nreadspark.ops.multimodal import decode_png_pixels
-
     rows = [bytes((x * 13 + y * 41) % 256 for x in range(6)) for y in range(5)]
     expected = sum(sum(r) for r in rows) / 30
     for filters in ([0] * 5, [1] * 5, [0, 2, 2, 2, 2], [3] * 5, [0, 4, 4, 4, 4], [0, 1, 2, 3, 4]):
         png = make_png_pixels(rows, ch=1, color_type=0, filters=filters)
-        assert decode_png_pixels(png) == ("png", 6, 5, expected), filters
+        assert png_mean(png) == (6, 5, expected), filters
 
 
 def test_png_pixel_decode_color_formats():
-    from nreadspark.ops.multimodal import decode_png_pixels
-
     # RGB 2x1: red + blue -> mean luma = (299/1000*255 + 114/1000*255) / 2
     rgb = make_png_pixels([bytes([255, 0, 0, 0, 0, 255])], ch=3, color_type=2, filters=[0])
-    _, w, h, mean = decode_png_pixels(rgb)
+    w, h, mean = png_mean(rgb)
     assert (w, h) == (2, 1) and abs(mean - (0.299 * 255 + 0.114 * 255) / 2) < 1e-9
     # RGBA: alpha ignored
     rgba = make_png_pixels([bytes([255, 0, 0, 7, 0, 0, 255, 9])], ch=4, color_type=6, filters=[0])
-    assert abs(decode_png_pixels(rgba)[3] - mean) < 1e-9
+    assert abs(png_mean(rgba)[2] - mean) < 1e-9
     # palette: index 0 -> white, index 1 -> black
     pal = make_png_pixels([bytes([0, 1])], ch=1, color_type=3, filters=[0], plte=bytes([255, 255, 255, 0, 0, 0]))
-    assert abs(decode_png_pixels(pal)[3] - 127.5) < 1e-9
+    assert abs(png_mean(pal)[2] - 127.5) < 1e-9
     # gray+alpha: luma channel only
     ga = make_png_pixels([bytes([100, 3, 200, 5])], ch=2, color_type=4, filters=[0])
-    assert decode_png_pixels(ga)[3] == 150.0
+    assert png_mean(ga)[2] == 150.0
 
 
 def test_png_pixel_decode_rejects_incomplete():
-    from nreadspark.ops.multimodal import decode_png_pixels
+    from nreadspark.ops.multimodal import png_luma_milli
 
     # the synthetic header-only prefixes must NOT pixel-decode
     hx = "89504e470d0a1a0a0000000d49484452" + format(10, "08x") + format(4, "08x") + "080600000000000000" + "abcdef"
     with pytest.raises(ValueError):
-        decode_png_pixels(bytes.fromhex(hx))
+        png_luma_milli(bytes.fromhex(hx))
     with pytest.raises(ValueError):
-        decode_png_pixels(b"GIF89a" + b"\x00" * 16)
+        png_luma_milli(b"GIF89a" + b"\x00" * 16)
     # palette index beyond the PLTE table: documented ValueError, not an
     # IndexError escaping the contract (nor a silently wrong mean)
     bad_pal = make_png_pixels(
@@ -158,7 +163,7 @@ def test_png_pixel_decode_rejects_incomplete():
         plte=bytes([255, 255, 255, 0, 0, 0]),
     )
     with pytest.raises(ValueError):
-        decode_png_pixels(bad_pal)
+        png_luma_milli(bad_pal)
 
 
 def make_mp4(duration_ms: int, timescale: int = 1000, n_tracks: int = 1, version: int = 0) -> bytes:
@@ -420,3 +425,44 @@ def test_media_features_jpeg_and_gif_pixel_tiers(spark):
     assert abs(got["g"]["features"][0] - mean) < 1e-9
     assert (got["j"]["decoded_width"], got["g"]["decoded_height"]) == (64, 64)
     assert got["jh"]["decoder"] == "header:jpeg"
+
+
+def test_media_features_cap_reaches_the_frame_decoder(spark):
+    """``extract_media_features`` decodes through the hash tiers' codec
+    table, so the pixel cap reaches the GIF decoder: a GIF whose logical
+    screen says 16x16 but whose frame is 2048x2048 stops at the cap and
+    keeps the header tier, the tier ``image_hashes`` gives the same bytes.
+    Zero-pixel images (a 0x4 PNG, a 0x3 GIF) have no mean and keep their
+    header tier too; a zero-pixel frame behind an 8x8-or-larger screen
+    keeps ``header:gif`` in the hash tier instead of failing the task."""
+    from nreadspark.ops.images import encode_gray_png, image_hashes
+    from nreadspark.ops.multimodal import MEDIA_SCHEMA, encode_gif, extract_media_features
+
+    def screen(gif: bytes, w: int, h: int) -> bytes:
+        return gif[:6] + struct.pack("<HH", w, h) + gif[10:]
+
+    big_frame = screen(encode_gif(2048, 2048, bytes(2048 * 2048), bytes(6)), 16, 16)
+    empty_gif = encode_gif(0, 3, b"", bytes(6))
+    rows = [
+        ("crafted", "image", big_frame, None, None, 0),
+        ("png0x4", "image", encode_gray_png(0, 4, b""), None, None, 0),
+        ("gif0x3", "image", empty_gif, None, None, 0),
+        ("gif16-0x3", "image", screen(empty_gif, 16, 16), None, None, 0),
+    ]
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    feats = {
+        r["media_ref"]: (r["decoder"], r["decoded_width"], r["decoded_height"])
+        for r in extract_media_features(df).collect()
+    }
+    hashes = {
+        r["media_ref"]: (r["decoder"], r["width"], r["height"])
+        for r in image_hashes(df).collect()
+    }
+    assert feats == {
+        "crafted": ("header:gif", 16, 16),
+        "png0x4": ("header:png", 0, 4),
+        "gif0x3": ("header:gif", 0, 3),
+        "gif16-0x3": ("header:gif", 16, 16),
+    }
+    assert hashes["crafted"] == feats["crafted"]
+    assert hashes["gif16-0x3"] == feats["gif16-0x3"]

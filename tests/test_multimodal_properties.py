@@ -3,16 +3,13 @@ trips over randomized inputs, and total-function behavior (None or a
 well-formed tuple, never an unhandled crash) on arbitrary byte garbage --
 crawl payloads are adversarial, so the parsers must be total."""
 
-import struct
-import zlib
-
 from hypothesis import assume, given, settings, strategies as st
 
 from nreadspark.ops.multimodal import (
-    decode_png_pixels,
     parse_image_header,
     parse_mp4_header,
     parse_wav_header,
+    png_luma_milli,
 )
 from tests.test_multimodal import make_mp4, make_png_pixels, make_wav
 
@@ -29,9 +26,9 @@ def test_png_pixel_roundtrip_gray_any_filters(w, h, data):
     ]
     filters = [data.draw(st.integers(0, 4)) for _ in range(h)]
     png = make_png_pixels(rows, ch=1, color_type=0, filters=filters)
-    codec, dw, dh, mean = decode_png_pixels(png)
-    assert (codec, dw, dh) == ("png", w, h)
-    assert abs(mean - sum(sum(r) for r in rows) / (w * h)) < 1e-9
+    dw, dh, lumas = png_luma_milli(png)
+    assert (dw, dh) == (w, h)
+    assert abs(sum(lumas) / 1000 / (w * h) - sum(sum(r) for r in rows) / (w * h)) < 1e-9
 
 
 @settings(max_examples=40, deadline=None)
@@ -46,8 +43,9 @@ def test_png_pixel_roundtrip_rgb_any_filters(w, h, data):
     ]
     filters = [data.draw(st.integers(0, 4)) for _ in range(h)]
     png = make_png_pixels(rows, ch=3, color_type=2, filters=filters)
-    codec, dw, dh, mean = decode_png_pixels(png)
-    assert (codec, dw, dh) == ("png", w, h)
+    dw, dh, lumas = png_luma_milli(png)
+    assert (dw, dh) == (w, h)
+    mean = sum(lumas) / 1000 / (w * h)
     expect = sum(
         (r[i] * 299 + r[i + 1] * 587 + r[i + 2] * 114) / 1000
         for r in rows
@@ -86,11 +84,9 @@ def test_parsers_total_on_garbage(raw):
         out = fn(raw)
         assert out is None or isinstance(out, tuple)
     try:
-        decode_png_pixels(raw)
+        png_luma_milli(raw)
     except ValueError:
         pass  # the documented rejection path
-    except zlib.error:
-        pass  # corrupt IDAT inside a structurally plausible PNG
 
 
 @settings(max_examples=120, deadline=None)
@@ -116,6 +112,6 @@ def test_parsers_total_on_mutated_valid_payloads(data, raw):
         out = fn(mutated)
         assert out is None or isinstance(out, tuple)
     try:
-        decode_png_pixels(mutated)
-    except (ValueError, zlib.error):
+        png_luma_milli(mutated)
+    except ValueError:
         pass

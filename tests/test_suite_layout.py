@@ -4,11 +4,13 @@ particular checkout (a test must exercise the tree it sits in).  Library
 kernels state their Arrow output schema once, as a Spark StructType, build
 nested output columns through ``rows_to_batch`` only, and cross into Python
 through one ``mapInArrow`` call; Column code splits a URL in one place;
-the curation job writes its stage chain once."""
+the curation job writes its stage chain once; the media tiers decode each
+image codec and walk each container format in one place."""
 
 import ast
 import glob
 import os
+import re
 
 import pytest
 
@@ -242,3 +244,40 @@ def test_curation_job_builds_its_chain_once():
     ops = ("c4_quality_filter", "line_dedup", "minhash_lsh_candidates", "verify_jaccard",
            "keep_canonical")
     assert {op: calls.count(op) for op in ops} == dict.fromkeys(ops, 1)
+
+
+def test_media_tiers_decode_each_codec_and_container_once():
+    """``ops.multimodal._LUMA_DECODERS`` is the one codec table: the
+    feature tier and every perceptual-hash tier decode through it, so the
+    pixel cap reaches each decoder the same way.  ``_bmff_boxes`` and
+    ``_riff_chunks`` are the one ISO-BMFF box walk and the one RIFF chunk
+    walk.  A second call of a pixel decoder, a second decode of a RIFF
+    chunk header or a BMFF largesize, or a second PNG pixel decoder, is a
+    second copy that can drift from the first."""
+    path = os.path.join(REPO, "nreadspark", "ops", "multimodal.py")
+    tree = ast.parse(open(path, encoding="utf-8").read(), path)
+    table = next(
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.Assign) and ast.unparse(node.targets[0]) == "_LUMA_DECODERS"
+    )
+    for name in ("png_luma_milli", "gif_luma_milli", "decode_jpeg_luma_milli"):
+        found = _library_calls(lambda call: ast.unparse(call.func) == name)
+        in_table = [
+            f"nreadspark/ops/multimodal.py:{node.lineno}"
+            for node in ast.walk(table)
+            if isinstance(node, ast.Call) and ast.unparse(node.func) == name
+        ]
+        assert len(found) == 1 and found == in_table, f"{name}:\n" + "\n".join(found)
+    for mechanism, pattern in [
+        ("RIFF chunk length", r"int\.from_bytes\(\w+\[\w+ \+ 4:\w+ \+ 8\], 'little'\)"),
+        ("BMFF largesize", r"int\.from_bytes\(\w+\[\w+ \+ 8:\w+ \+ 16\], 'big'\)"),
+    ]:
+        found = _library_calls(lambda call: re.fullmatch(pattern, ast.unparse(call)) is not None)
+        assert len(found) == 1, f"{mechanism}:\n" + "\n".join(found)
+    defs = [
+        f"{os.path.relpath(p, REPO)}:{node.lineno}"
+        for p in sorted(glob.glob(os.path.join(REPO, "nreadspark", "**", "*.py"), recursive=True))
+        for node in ast.walk(ast.parse(open(p, encoding="utf-8").read(), p))
+        if isinstance(node, ast.FunctionDef) and node.name == "decode_png_pixels"
+    ]
+    assert defs == [], "\n".join(defs)
